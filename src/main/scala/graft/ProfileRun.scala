@@ -9,7 +9,12 @@ import scala.collection.mutable
   * SparkListener that attributes every completed stage to the query that
   * was running, then prints per-query job/stage counts, summed stage wall
   * time, and the top stages by duration. Not part of any gate — a
-  * measurement tool only.
+  * measurement tool only. An unknown query name is skipped with a message.
+  *
+  * Attribution is approximate: the listener reads the `@volatile current`
+  * name when an event arrives on the asynchronous listener bus, so a stage
+  * that completes after `current` flips to "between" is counted under
+  * "between" (or the next query), which can understate a query's stageSum.
   *
   * Usage: SPARK_GRAFT_SF_DIR=... sbt "runMain graft.ProfileRun q1 q2 ..."
   */
@@ -60,23 +65,26 @@ object ProfileRun {
     spark.catalog.clearCache(); System.gc()
 
     args.foreach { name =>
-      val fn = SparkEntry.queries(name)
-      // one untimed pass (indexes/codegen), then the measured pass
-      try fn(spark, sfDir).count() catch { case e: Throwable =>
-        System.err.println(s"$name FAILED: ${e.getMessage}") }
-      spark.catalog.clearCache(); System.gc()
-      current = name
-      val t0 = System.nanoTime()
-      fn(spark, sfDir).count()
-      val wall = (System.nanoTime() - t0) / 1e9
-      current = "between"
-      spark.catalog.clearCache(); System.gc()
-      val ss = stages.synchronized { stages.filter(_.query == name).toSeq }
-      println(f"== $name wall=$wall%.3f s jobs=${jobs(name)} stages=${ss.size} " +
-        f"stageSum=${ss.map(_.ms).sum / 1000.0}%.3f s")
-      ss.sortBy(-_.ms).take(12).foreach { r =>
-        println(f"   ${r.ms}%6d ms t=${r.tasks}%3d r=${r.shuffleReadMB}%7.1fMB " +
-          f"w=${r.shuffleWriteMB}%7.1fMB  ${r.name}")
+      SparkEntry.queries.get(name) match {
+        case None => System.err.println(s"$name: unknown query, skipped")
+        case Some(fn) =>
+          // one untimed pass (indexes/codegen), then the measured pass
+          try fn(spark, sfDir).count() catch { case e: Throwable =>
+            System.err.println(s"$name FAILED: ${e.getMessage}") }
+          spark.catalog.clearCache(); System.gc()
+          current = name
+          val t0 = System.nanoTime()
+          fn(spark, sfDir).count()
+          val wall = (System.nanoTime() - t0) / 1e9
+          current = "between"
+          spark.catalog.clearCache(); System.gc()
+          val ss = stages.synchronized { stages.filter(_.query == name).toSeq }
+          println(f"== $name wall=$wall%.3f s jobs=${jobs(name)} stages=${ss.size} " +
+            f"stageSum=${ss.map(_.ms).sum / 1000.0}%.3f s")
+          ss.sortBy(-_.ms).take(12).foreach { r =>
+            println(f"   ${r.ms}%6d ms t=${r.tasks}%3d r=${r.shuffleReadMB}%7.1fMB " +
+              f"w=${r.shuffleWriteMB}%7.1fMB  ${r.name}")
+          }
       }
     }
     spark.stop()

@@ -1,5 +1,6 @@
 package graft.flowlog
 
+import graft.store.SigStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -242,35 +243,20 @@ object FlowLogQueries {
       .unionByName(junk)
   }
 
-  /** Signature-keyed fixture dir — the fmtDir/annIndexDir
-    * (name, size, mtime) discipline on events.parquet, so a regenerated
-    * fixture is never answered from stale derived data. */
-  private def sigDir(d: String, tag: String): String = {
-    val src = new java.io.File(s"$d/events.parquet")
-    val files = Option(src.listFiles()).map(_.toSeq).getOrElse(Seq.empty)
-    val sig = files.filter(_.isFile)
-      .map(f => s"${f.getName}:${f.length}:${f.lastModified}").sorted.mkString("|")
-    val h = Integer.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(s"$d|$tag|$sig"))
-    s"${System.getProperty("java.io.tmpdir")}/graft_$tag$h"
-  }
-
-  /** Envelope-fixture dir. The version token bumps whenever the LINE
-    * POPULATION changes (v2: the %11 reverse mirrors joined; v3: the
-    * %10=4 ids became v7 ECS lines; v4: %8=6 rows carry a NAT-unwrapped
-    * pkt_srcaddr; v5: %16∈{0,8} rows carry a pkt_dst_aws_service; v6:
-    * %8=2 rows carry a translated pkt_dstaddr, %16∈{4,12} a
-    * pkt_src_aws_service, %24=18 a sublocation) — a stale cached fixture
-    * must never answer for a changed population. */
-  private def envDir(d: String): String = sigDir(d, "flowlog_env_v6_")
+  /** Envelope-fixture store (SigStore keyed on events.parquet). The
+    * version token bumps whenever the LINE POPULATION changes (v2: the %11
+    * reverse mirrors joined; v3: the %10=4 ids became v7 ECS lines; v4:
+    * %8=6 rows carry a NAT-unwrapped pkt_srcaddr; v5: %16∈{0,8} rows carry
+    * a pkt_dst_aws_service; v6: %8=2 rows carry a translated pkt_dstaddr,
+    * %16∈{4,12} a pkt_src_aws_service, %24=18 a sublocation) — a stale
+    * cached fixture must never answer for a changed population. */
+  private val PopulationVersion = "v6"
 
   /** The decoded event stream: envelope fixture (written once per source
     * signature) through the real gunzip + from_json + explode path. */
   private[flowlog] def decodedFlow(s: SparkSession, d: String): DataFrame = {
-    val dir = envDir(d)
-    if (!new java.io.File(s"$dir/_SUCCESS").exists()) {
-      syntheticEnvelopes(graft.Tables.events(s, d))
-        .write.mode("overwrite").parquet(dir)
+    val dir = SigStore.getOrBuild(d, "events", s"flowlog_env_$PopulationVersion") {
+      syntheticEnvelopes(graft.Tables.events(s, d)).write.mode("overwrite").parquet(_)
     }
     FlowLog.decodeEnvelopes(s.read.parquet(dir))
   }
@@ -289,20 +275,18 @@ object FlowLogQueries {
     * fixture-honesty choice that priced the same pass 14 times (~1.4-2.2 s
     * each at sf0.1, 11% of the bench). Parse is a deterministic pure
     * function of the envelope fixture, so a rebuild over unchanged data
-    * recreates the identical table (the minhashBase discipline; the dir
-    * name derives from [[envDir]], so a line-population bump invalidates
-    * both together). The decode path itself stays PRICED and
+    * recreates the identical table (the minhashBase discipline; the store
+    * name carries [[PopulationVersion]], so a line-population bump
+    * invalidates both together). The decode path itself stays PRICED and
     * oracle-pinned on the provenance queries that keep reading it raw:
     * flowlog_top_talkers (the headline representative),
     * flowlog_quarantine_report (all four statuses),
     * flowlog_envelope_stats (the decode layer itself) and the
     * partitioned-sink build. */
-  private[flowlog] def parsedFlowP(s: SparkSession, d: String): DataFrame = {
-    val dir = envDir(d).replace("flowlog_env_", "flowlog_parsed_")
-    if (!new java.io.File(s"$dir/_SUCCESS").exists())
-      parsedFlow(s, d).write.mode("overwrite").parquet(dir)
-    s.read.parquet(dir)
-  }
+  private[flowlog] def parsedFlowP(s: SparkSession, d: String): DataFrame =
+    s.read.parquet(SigStore.getOrBuild(d, "events", s"flowlog_parsed_$PopulationVersion") {
+      parsedFlow(s, d).write.mode("overwrite").parquet(_)
+    })
 
   val queries: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
 
@@ -626,13 +610,12 @@ object FlowLogQueries {
     // inference types dt as DATE and hr as INT on read — the layout's
     // contract, pinned here cross-engine.
     "flowlog_partitioned_sink_read" -> { (s, d) =>
-      // _v5: the sink is DERIVED from the line population (envDir v6), so
-      // its cache tag bumps with it even though the readback aggregate is
+      // _v5: the sink is DERIVED from the line population (v6), so its
+      // store tag bumps with it even though the readback aggregate is
       // version-independent — a stale sink must not contradict parsedFlow
-      val dir = sigDir(d, "flowlog_sink_v5_")
-      if (!new java.io.File(s"$dir/_SUCCESS").exists())
-        FlowLog.writePartitioned(
-          FlowLog.withDatePartitions(parsedFlow(s, d)), dir)
+      val dir = SigStore.getOrBuild(d, "events", "flowlog_sink_v5") {
+        FlowLog.writePartitioned(FlowLog.withDatePartitions(parsedFlow(s, d)), _)
+      }
       s.read.parquet(dir)
         // day 1 / hours 01–08: the only day every fixture scale populates
         // (start offsets are (event_id·37) mod 259200 — sf0.001's 1000

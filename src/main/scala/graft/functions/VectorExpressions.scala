@@ -524,17 +524,20 @@ case class SortedIntersectCountLong(left: Expression, right: Expression) extends
 }
 
 /** Merge-intersection ELEMENTS of two sorted long arrays (see
-  * [[VectorKernels.sortedIntersectArrLong]]). */
+  * [[VectorKernels.sortedIntersectArrLong]]). The kernel reads primitive
+  * longs, so an array type whose elements may be null is rejected at
+  * analysis instead of reading each null as 0. */
 case class SortedIntersectArrLong(left: Expression, right: Expression) extends BinaryExpression {
   override def dataType: DataType = ArrayType(org.apache.spark.sql.types.LongType, containsNull = false)
   override def nullIntolerant: Boolean = true
   override def checkInputDataTypes(): TypeCheckResult = {
     val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(org.apache.spark.sql.types.LongType, _) => true
+      case ArrayType(org.apache.spark.sql.types.LongType, false) => true
       case _ => false
     })
     if (ok) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure("graft_sorted_intersect_arr expects two array<bigint>")
+    else TypeCheckResult.TypeCheckFailure(
+      "graft_sorted_intersect_arr expects two array<bigint> without null elements")
   }
   override def nullSafeEval(a: Any, b: Any): Any =
     VectorKernels.sortedIntersectArrLong(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
@@ -701,7 +704,14 @@ case class HoltWintersStates(left: Expression, right: Expression) extends Binary
 object VectorFunctions {
   /** Register the vector kernels in the session's function registry so
     * query closures can call them via `expr("graft_dot(a, b)")`. Idempotent;
-    * works on harness-built sessions (no SparkSessionExtensions needed). */
+    * works on harness-built sessions (no SparkSessionExtensions needed).
+    *
+    * Input precondition of the merge kernels (`graft_sorted_intersect*`):
+    * every id array is sorted ascending and DISTINCT, e.g.
+    * `sort_array(collect_set(..))`. Unsorted input gives a wrong answer
+    * without an error. Duplicates are not removed: a value present m
+    * times in one array and n times in the other counts min(m, n) times,
+    * where `array_intersect` keeps it once. */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     reg.createOrReplaceTempFunction(

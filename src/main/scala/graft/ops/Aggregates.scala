@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.Tables
 import graft.Tables.{dsumD, dec2}
+import graft.store.SigStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -218,9 +219,9 @@ object Aggregates {
       def inlinePartials =
         partial(o.filter(col("o_orderdate") < split), 0)
           .unionByName(partial(o.filter(col("o_orderdate") >= split), 1))
-      val dir = sketchDir(d)
-      if (!new java.io.File(s"$dir/_SUCCESS").exists())
-        inlinePartials.write.mode("overwrite").parquet(dir)
+      val dir = SigStore.getOrBuild(d, "orders", "hllsketch_partials") {
+        inlinePartials.write.mode("overwrite").parquet(_)
+      }
       def mergeEst(partials: DataFrame, out: String) =
         partials.groupBy(col("o_orderpriority"))
           .agg(hll_sketch_estimate(hll_union_agg(col("sk"))).as(out))
@@ -266,9 +267,9 @@ object Aggregates {
       def inlinePartials =
         partial(o.filter(col("o_orderdate") < split), 0)
           .unionByName(partial(o.filter(col("o_orderdate") >= split), 1))
-      val dir = sketchDir(d, "thetasketch")
-      if (!new java.io.File(s"$dir/_SUCCESS").exists())
-        inlinePartials.write.mode("overwrite").parquet(dir)
+      val dir = SigStore.getOrBuild(d, "orders", "thetasketch_partials") {
+        inlinePartials.write.mode("overwrite").parquet(_)
+      }
       def merged(partials: DataFrame, out: String) =
         partials.groupBy(col("o_orderpriority"))
           .agg(ThetaSketch.thetaUnionAgg(col("sk")).as(out))
@@ -320,11 +321,11 @@ object Aggregates {
           .withColumn("bkt", expr(HdrHistogram.bucketSql("v")))
           .groupBy(col("p"), col("bkt")).agg(count(lit(1)).as("cnt"))
           .withColumn("half", lit(half))
-      val dir = sketchDir(d, "hdrhist")
-      if (!new java.io.File(s"$dir/_SUCCESS").exists())
+      val dir = SigStore.getOrBuild(d, "orders", "hdrhist_partials") {
         partial(o.filter(col("o_orderdate") < split), 0)
           .unionByName(partial(o.filter(col("o_orderdate") >= split), 1))
-          .write.mode("overwrite").parquet(dir)
+          .write.mode("overwrite").parquet(_)
+      }
       val mergedHist = s.read.parquet(dir)
         .groupBy(col("p"), col("bkt")).agg(sum(col("cnt")).as("cnt"))
       val cum = mergedHist
@@ -702,20 +703,6 @@ object Aggregates {
         .orderBy(col("source").asc)
     }
   )
-
-  /** Signature-keyed cache dir for the persisted HLL partials — the
-    * Sources.fmtDir / LlmOps.annIndexDir discipline: keyed on the source
-    * files' (name, size, mtime) so a regenerated fixture never merges
-    * stale sketches. */
-  private[ops] def sketchDir(d: String, salt: String = "hllsketch"): String = {
-    val src = new java.io.File(s"$d/orders.parquet")
-    val files = Option(src.listFiles()).map(_.toSeq).getOrElse(Seq.empty)
-    val sig = files.filter(_.isFile)
-      .map(f => s"${f.getName}:${f.length}:${f.lastModified}").sorted.mkString("|")
-    val h = Integer.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(s"$d|$salt|$sig"))
-    s"${System.getProperty("java.io.tmpdir")}/graft_${salt}_partials_$h"
-  }
 
   val oracles: Seq[(String, String)] = Seq(
     "agg_filtered_revenue_q6" ->

@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.Tables
 import graft.Tables.{dec2, rate2, oneD}
+import graft.store.SigStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -168,8 +169,7 @@ object Basics {
     // zOrderKey test above it). The layout moves bytes, never rows:
     // the oracle is the identical box on the unclustered table.
     "scale_zorder_skipping" -> { (s, d) =>
-      val dir = Sources.fmtDir(d, "events", "hilbert32")
-      if (!new java.io.File(s"$dir/_SUCCESS").exists()) {
+      val dir = SigStore.getOrBuild(d, "events", "fmt_events_hilbert32") { out =>
         val q = Tables.events(s, d)
           .withColumn("q_user", Scale.zQuantize(col("user_id"), 0.0, 1500.0, bits = 8))
           .withColumn("q_val", Scale.zQuantize(col("value"), 0.0, 600.0, bits = 8))
@@ -177,7 +177,7 @@ object Basics {
           .repartitionByRange(32, col("hkey"))
           .sortWithinPartitions(col("hkey"))
           .drop("q_user", "q_val", "hkey")
-          .write.mode("overwrite").parquet(dir)
+          .write.mode("overwrite").parquet(out)
       }
       s.read.parquet(dir)
         .filter(col("user_id") <= 9 &&

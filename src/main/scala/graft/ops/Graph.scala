@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables
+import graft.store.SigStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -452,20 +453,6 @@ object Graph {
       .orderBy(col("m2").asc)
   }
 
-  /** Signature-keyed cache dir for the materialized co-occurrence edge
-    * list, keyed on lineitem's (name, size, mtime) files — the
-    * sketchDir/annIndexDir discipline, so a regenerated fixture never
-    * answers from stale edges. */
-  private[ops] def edgeDir(d: String): String = {
-    val src = new java.io.File(s"$d/lineitem.parquet")
-    val files = Option(src.listFiles()).map(_.toSeq).getOrElse(Seq.empty)
-    val sig = files.filter(_.isFile)
-      .map(f => s"${f.getName}:${f.length}:${f.lastModified}").sorted.mkString("|")
-    val h = Integer.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(s"$d|$sig"))
-    s"${System.getProperty("java.io.tmpdir")}/graft_coedges_$h"
-  }
-
   /** The weighted co-occurrence edge list, MATERIALIZED once per dataset
     * signature — the adjacency-table discipline every graph deployment
     * at scale uses (derive edges in a scheduled job, amortize over every
@@ -479,20 +466,18 @@ object Graph {
     * consumer is partitioning-independent by design, persisting is
     * result-invisible (the DuckDB oracles still recompute edges from the
     * fact table inline). */
-  private[ops] def coEdgesWeightedP(s: SparkSession, d: String): DataFrame = {
-    val dir = edgeDir(d)
-    if (!new java.io.File(s"$dir/_SUCCESS").exists())
-      // Advisory-sized write (guide §6 output sizing, StoreWrite): the
-      // edge aggregate otherwise lands as one sub-MB file per shuffle
-      // partition (~10 × 0.6 MB at sf0.1), and every downstream scan then
-      // pays one task per tiny file — profiled as t=20 probe stages in
-      // each pagerank/sssp round, ~0.5 s per query of task-launch floor.
-      // Row order within the table may differ from the unhinted write;
-      // every consumer is partitioning- and order-independent by design
-      // (scaladoc above).
-      StoreWrite.rebalanced(coEdgesWeighted(s, d), dir)
-    s.read.parquet(dir)
-  }
+  private[ops] def coEdgesWeightedP(s: SparkSession, d: String): DataFrame =
+    // Advisory-sized write (guide §6 output sizing, SigStore.rebalanced):
+    // the edge aggregate otherwise lands as one sub-MB file per shuffle
+    // partition (~10 × 0.6 MB at sf0.1), and every downstream scan then
+    // pays one task per tiny file — profiled as t=20 probe stages in each
+    // pagerank/sssp round, ~0.5 s per query of task-launch floor. Row
+    // order within the table may differ from the unhinted write; every
+    // consumer is partitioning- and order-independent by design
+    // (scaladoc above).
+    s.read.parquet(SigStore.getOrBuild(d, "lineitem", "coedges") {
+      SigStore.rebalanced(coEdgesWeighted(s, d), _)
+    })
 
   /** Persisted-table form of [[coEdges]]. */
   private[ops] def coEdgesP(s: SparkSession, d: String): DataFrame =
@@ -510,18 +495,15 @@ object Graph {
     * persisted parquet. Correctness is untouched — the labels are a pure
     * function of the edge set (min reachable id), so a rebuild over
     * unchanged data recreates the identical table. */
-  private[ops] def componentLabelsP(s: SparkSession, d: String): DataFrame = {
-    val dir = edgeDir(d).replace("graft_coedges_", "graft_cclabels_")
-    if (!new java.io.File(s"$dir/_SUCCESS").exists()) {
+  private[ops] def componentLabelsP(s: SparkSession, d: String): DataFrame =
+    s.read.parquet(SigStore.getOrBuild(d, "lineitem", "cclabels") { dir =>
       val bb = backboneP(s, d)
       val verts = bb.select(col("a").as("doc_id"))
         .unionAll(bb.select(col("b").as("doc_id"))).distinct()
       LlmOps.labelPropagate(verts,
           bb.select(col("a").as("doc_a"), col("b").as("doc_b")))
         .write.mode("overwrite").parquet(dir)
-    }
-    s.read.parquet(dir)
-  }
+    })
 
   /** The strong-tie backbone: co-occurrence edges with multiplicity ≥ 2
     * (parts that appeared together in at least two orders). Thresholding
@@ -764,17 +746,14 @@ object Graph {
     * which would otherwise re-run, per query, the exact sweep
     * graph_louvain_step already prices fresh on every invocation (the
     * move-phase query IS the retrain sibling carrying the cold cost). */
-  private[ops] def louvainL1P(s: SparkSession, d: String): DataFrame = {
-    val dir = edgeDir(d).replace("graft_coedges_", "graft_louvl1_")
-    if (!new java.io.File(s"$dir/_SUCCESS").exists()) {
+  private[ops] def louvainL1P(s: SparkSession, d: String): DataFrame =
+    s.read.parquet(SigStore.getOrBuild(d, "lineitem", "louvl1") { dir =>
       val edges = backboneP(s, d).withColumn("w", lit(1L))
-      val mW = louvainW(s"${edgeDir(d)}|unw", backboneP(s, d).count())
+      val mW = louvainW(d, "unw", backboneP(s, d).count())
       val (und, deg) = louvainPrep(edges)
       louvainSweep(und, deg, mW, 4)
         .write.mode("overwrite").parquet(dir)
-    }
-    s.read.parquet(dir)
-  }
+    })
 
   /** Persisted WEIGHTED move-phase labels (v, c) on the w ≥ 2 weighted
     * backbone — the [[louvainL1P]] discipline applied to the weighted
@@ -788,27 +767,24 @@ object Graph {
     * run once per ingest, not once per report; the UNWEIGHTED sweep
     * stays fresh-priced every run in graph_louvain_step, which remains
     * the honest cost representative of the move phase. */
-  private[ops] def louvainWL1P(s: SparkSession, d: String): DataFrame = {
-    val dir = edgeDir(d).replace("graft_coedges_", "graft_louvwl1_")
-    if (!new java.io.File(s"$dir/_SUCCESS").exists()) {
+  private[ops] def louvainWL1P(s: SparkSession, d: String): DataFrame =
+    s.read.parquet(SigStore.getOrBuild(d, "lineitem", "louvwl1") { dir =>
       val wb = coEdgesWeightedP(s, d).filter(col("w") >= 2)
-      val mW = louvainW(s"${edgeDir(d)}|w",
-        wb.agg(sum(col("w"))).head().getLong(0))
+      val mW = louvainW(d, "w", wb.agg(sum(col("w"))).head().getLong(0))
       val (und, deg) = louvainPrep(wb)
       louvainSweep(und, deg, mW, 4)
         .write.mode("overwrite").parquet(dir)
-    }
-    s.read.parquet(dir)
-  }
+    })
 
-  /** Memoized Σw scalars for the louvain queries, keyed on the SAME
-    * lineitem signature as the persisted edge tables ([[edgeDir]]) — the
-    * corpusSizeMemo discipline: a regenerated fixture invalidates the
+  /** Memoized Σw scalars for the louvain queries (`variant` = unw | w),
+    * keyed on the SAME lineitem signature as the persisted edge table —
+    * the corpusSizeMemo discipline: a regenerated fixture invalidates the
     * entry, repeat queries within a session skip the scan job. */
   private val louvainWMemo =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-  private def louvainW(key: String, f: => Long): Long =
-    louvainWMemo.computeIfAbsent(key, _ => f).longValue()
+  private def louvainW(d: String, variant: String, f: => Long): Long =
+    louvainWMemo.computeIfAbsent(
+      s"${SigStore.dir(d, "lineitem", "coedges")}|$variant", _ => f).longValue()
 
   /** Connected components of an undirected (a < b) edge list: every
     * edge-incident vertex labeled with the smallest vertex id reachable
@@ -1049,7 +1025,7 @@ object Graph {
     // modularity of the resulting partition against the CC partition's.
     "graph_louvain_step" -> { (s, d) =>
       louvainMoveRounds(backboneP(s, d), rounds = 4,
-        totalW = louvainW(s"${edgeDir(d)}|unw", backboneP(s, d).count()))
+        totalW = louvainW(d, "unw", backboneP(s, d).count()))
     },
 
     // Weighted Louvain move phase on the weighted backbone (w ≥ 2 edges
@@ -1084,7 +1060,7 @@ object Graph {
     "graph_louvain_full" -> { (s, d) =>
       louvainOutput(louvainContract(
         backboneP(s, d).withColumn("w", lit(1L)), louvainL1P(s, d),
-        mW = louvainW(s"${edgeDir(d)}|unw", backboneP(s, d).count()),
+        mW = louvainW(d, "unw", backboneP(s, d).count()),
         rounds2 = 4))
     },
 

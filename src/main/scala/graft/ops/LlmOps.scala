@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables
+import graft.store.SigStore
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -459,19 +460,26 @@ object LlmOps {
         col("ssq"), col("cang"))
   }
 
-  /** Cache location for a dataset's ANN index (`kind` = ivf | pq), keyed
-    * on the embeddings files' (name, size, mtime) signature so a
-    * regenerated fixture never answers from a stale index. Queries are
-    * read-only against the sf dir, so the index lives under the system
-    * tmpdir. */
-  private[ops] def annIndexDir(d: String, kind: String): String = {
-    val src = new java.io.File(s"$d/embeddings.parquet")
-    val files = Option(src.listFiles()).map(_.toSeq).getOrElse(Seq.empty)
-    val sig = files.filter(_.isFile)
-      .map(f => s"${f.getName}:${f.length}:${f.lastModified}").sorted.mkString("|")
-    val h = Integer.toHexString(scala.util.hashing.MurmurHash3.stringHash(s"$d|$sig"))
-    s"${System.getProperty("java.io.tmpdir")}/graft_${kind}_index_$h"
-  }
+  /** The full-corpus IVF index (ivfNlist cells, 2 Lloyd rounds) — the
+    * one definition of the store llm_sim_ann_ivf_persisted and
+    * llm_sim_ann_ivf_multiprobe both read. Returns the store dir. */
+  private def ivfIndex(s: SparkSession, d: String): String =
+    SigStore.getOrBuild(d, "embeddings", "ivf_index") { dir =>
+      val e = embDouble(s, d).localCheckpoint(true)
+      writeIvfIndex(e, dir, nlist = ivfNlist(e.count()), iters = 2)
+      releaseCheckpoint(e)
+    }
+
+  /** The STANDING-corpus (vec_id % 10 ≠ 0) IVF index that the upsert,
+    * compaction and incremental semantic-dedup queries maintain against
+    * the incoming vec_id % 10 = 0 batch. Returns the store dir. */
+  private def ivfBaseIndex(s: SparkSession, d: String): String =
+    SigStore.getOrBuild(d, "embeddings", "ivfbase_index") { dir =>
+      val base = embDouble(s, d).filter(col("vec_id") % 10 =!= 0)
+        .localCheckpoint(true)
+      writeIvfIndex(base, dir, nlist = ivfNlist(base.count()), iters = 2)
+      releaseCheckpoint(base)
+    }
 
   /** Product-quantization geometry: pqM subspaces of 64/pqM dims, pqK
     * centroids per subspace → one 4-bit code per subspace, 64 code bits
@@ -736,6 +744,16 @@ object LlmOps {
     (s.read.parquet(s"$dir/centroids"), s.read.parquet(s"$dir/codebook"),
       s.read.parquet(s"$dir/codes"))
   }
+
+  /** The full-corpus IVF-PQ index — the one definition of the store
+    * llm_sim_ann_ivfpq, _refined and _multiprobe all read. Returns the
+    * store dir. */
+  private def ivfpqIndex(s: SparkSession, d: String): String =
+    SigStore.getOrBuild(d, "embeddings", "ivfpq_index") { dir =>
+      val e = embDouble(s, d).localCheckpoint(true)
+      writeIvfPqIndex(e, dir)
+      releaseCheckpoint(e)
+    }
 
   /** Read the refine sidecar of a [[writeIvfPqIndex]] layout: the raw
     * vectors (vec_id, emb, ssq) partitioned by cid. */
@@ -1433,17 +1451,12 @@ object LlmOps {
     * efficiency only, never answers). Past the 4096-list flat cap
     * (n ≳ 16.7M) production stays on the inline two-level dispatch in
     * [[prunedCosinePairs]]; this index covers the flat regime. */
-  private def exactCellsIndex(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    val idx = annIndexDir(d, "ivfexact")
-    val built = new java.io.File(s"$idx/assign/_SUCCESS").exists() &&
-      new java.io.File(s"$idx/centroids/_SUCCESS").exists()
-    if (!built) {
+  private def exactCellsIndex(s: SparkSession, d: String): (DataFrame, DataFrame) =
+    readIvfIndex(s, SigStore.getOrBuild(d, "embeddings", "ivfexact_index") { dir =>
       val e = embDouble(s, d).localCheckpoint(true)
-      writeIvfIndex(e, idx, nlist = ivfNlistExact(e.count()), iters = 0)
+      writeIvfIndex(e, dir, nlist = ivfNlistExact(e.count()), iters = 0)
       releaseCheckpoint(e)
-    }
-    readIvfIndex(s, idx)
-  }
+    })
 
   /** The regime the exact-pair family runs in: flat persisted cells below
     * the 4096-list cap, the materialized corpus (for the inline two-level
@@ -1468,7 +1481,7 @@ object LlmOps {
     * branch on the fixture corpus and pins result equality through the
     * dispatch); production callers never pass one. */
   // Corpus-size memo for the regime test, keyed on the SAME (name, size,
-  // mtime) source signature as the index dirs (annIndexDir) — so a
+  // mtime) source signature as the index stores (SigStore.dir) — so a
   // regenerated fixture invalidates it (the round-6 persisted-cache rule)
   // while repeat queries within a session skip the count job entirely.
   private val corpusSizeMemo =
@@ -1497,13 +1510,20 @@ object LlmOps {
     * (ivfpqMultiProbePairs' codes sides). */
   private[ops] def corpusRows(s: SparkSession, d: String): Long =
     corpusSizeMemo.computeIfAbsent(
-      annIndexDir(d, "nrows"), _ => Tables.embeddings(s, d).count())
+      SigStore.dir(d, "embeddings", "nrows_index"), _ => Tables.embeddings(s, d).count())
 
   /** Above this row count the multiprobe scorer stops broadcast-hinting
     * its codes-derived join sides: ~80 B/row (pqM ints + 3 numerics) puts
     * 4M rows ≈ 0.3 GB per side — comfortably under Spark's 8 GB broadcast
     * hard limit with headroom for row overhead, while still covering any
-    * single-node-scale corpus. */
+    * single-node-scale corpus.
+    *
+    * Heap assumption: the gate counts rows, not memory. At the cap each
+    * broadcast side is collected to the driver, built into a hash
+    * relation there and held once per executor, so the driver and every
+    * executor need free heap of a few times ~0.3 GB per side beyond their
+    * working set — assumed true of the default multi-GB heaps. A
+    * deployment with a small driver or executor heap must lower this cap. */
   private val MultiProbeBroadcastRowCap = 4000000L
 
   /** Above this CELL count the multiprobe scorer abandons the dense
@@ -1530,7 +1550,7 @@ object LlmOps {
       val it = overCapCorpusMemo.entrySet().iterator()
       while (it.hasNext)
         if (it.next().getValue.sparkSession.sparkContext.isStopped) it.remove()
-      OverCapCorpus(overCapCorpusMemo.compute(annIndexDir(d, "nrows"),
+      OverCapCorpus(overCapCorpusMemo.compute(SigStore.dir(d, "embeddings", "nrows_index"),
         (_, cur) =>
           if (cur != null && (cur.sparkSession eq s)) cur
           else embDouble(s, d).localCheckpoint(true)), n)
@@ -1703,11 +1723,9 @@ object LlmOps {
     * table a dedup pipeline writes before pair generation. */
   private def minhashBase(s: SparkSession, d: String): DataFrame = {
     graft.functions.VectorFunctions.register(s)
-    val dir = docIndexDir(d, "shinglesig")
-    if (!new java.io.File(s"$dir/_SUCCESS").exists())
-      signaturesOf(shinglesOf(Tables.documents(s, d)))
-        .write.mode("overwrite").parquet(dir)
-    s.read.parquet(dir)
+    s.read.parquet(SigStore.getOrBuild(d, "documents", "shinglesig_index") {
+      signaturesOf(shinglesOf(Tables.documents(s, d))).write.mode("overwrite").parquet(_)
+    })
   }
 
   /** Signature frame (doc_id, hs, n, sig) over a shingled frame — the
@@ -1833,18 +1851,6 @@ object LlmOps {
       .distinct()
   }
 
-  /** Signature-keyed cache dir for a DOCUMENTS-derived index (containment
-    * postings) — [[annIndexDir]]'s discipline keyed on documents.parquet,
-    * so a regenerated fixture never answers from stale postings. */
-  private[ops] def docIndexDir(d: String, kind: String): String = {
-    val src = new java.io.File(s"$d/documents.parquet")
-    val files = Option(src.listFiles()).map(_.toSeq).getOrElse(Seq.empty)
-    val sig = files.filter(_.isFile)
-      .map(f => s"${f.getName}:${f.length}:${f.lastModified}").sorted.mkString("|")
-    val h = Integer.toHexString(scala.util.hashing.MurmurHash3.stringHash(s"$d|$sig"))
-    s"${System.getProperty("java.io.tmpdir")}/graft_${kind}_index_$h"
-  }
-
   /** Train-once persistence for the containment dedup side — the
     * writeIvfIndex lever applied to the posting index the incremental
     * queries probe: the corpus is shingled ONCE at build time, and every
@@ -1882,10 +1888,6 @@ object LlmOps {
       dir: String): (DataFrame, DataFrame, DataFrame) =
     (s.read.parquet(s"$dir/sigs"), s.read.parquet(s"$dir/posting"),
       s.read.parquet(s"$dir/df"))
-
-  private def containmentIndexBuilt(dir: String): Boolean =
-    Seq("sigs", "posting", "df")
-      .forall(t => new java.io.File(s"$dir/$t/_SUCCESS").exists())
 
   /** Chunk-level shingle signatures of a documents frame — the
     * llm_doc_chunking 32-token/stride-24 windows, each chunk's 3-gram
@@ -1992,13 +1994,10 @@ object LlmOps {
     * DuckDB twin needs no change). Returns (doc_id, cos_sim, rank_v). */
   private[graft] def hybridVectorTop(s: SparkSession, d: String,
       k: Int = 100): DataFrame = {
-    val idx = annIndexDir(d, "ivfhybrid")
-    val built = new java.io.File(s"$idx/assign/_SUCCESS").exists() &&
-      new java.io.File(s"$idx/centroids/_SUCCESS").exists()
-    if (!built) {
+    val idx = SigStore.getOrBuild(d, "embeddings", "ivfhybrid_index") { dir =>
       val corpus = embDouble(s, d).filter(col("vec_id") =!= 0)
         .localCheckpoint(true)
-      writeIvfIndex(corpus, idx, nlist = ivfNlistExact(corpus.count()), iters = 0)
+      writeIvfIndex(corpus, dir, nlist = ivfNlistExact(corpus.count()), iters = 0)
       releaseCheckpoint(corpus)
     }
     val (cent, assign) = readIvfIndex(s, idx)
@@ -2417,12 +2416,12 @@ object LlmOps {
     // reshuffle determinism.
     "llm_dedup_incremental" -> { (s, d) =>
       graft.functions.VectorFunctions.register(s)
-      val idx = docIndexDir(d, "contain")
-      if (!containmentIndexBuilt(idx))
+      val idx = SigStore.getOrBuild(d, "documents", "contain_index") {
         writeContainmentIndex(
           docsWithShingles(s, d).filter(col("doc_id") % 5 =!= 0)
             .select(col("doc_id"), expr("graft_shingle_hashes(sh)").as("hs")),
-          idx)
+          _)
+      }
       val (sigs, posting, dfreq) = readContainmentIndex(s, idx)
       // the batch frame stays LAZY (round-12 rule: a checkpoint here would
       // hide the documents scan from plan assertions): the probe, verify,
@@ -2738,13 +2737,10 @@ object LlmOps {
     // The cid-partitioned assign parquet makes the admissible-cell join a
     // partition-prunable scan at 100 TB.
     "llm_ann_search_topk_persisted" -> { (s, d) =>
-      val idx = annIndexDir(d, "ivfsearch")
-      val built = new java.io.File(s"$idx/assign/_SUCCESS").exists() &&
-        new java.io.File(s"$idx/centroids/_SUCCESS").exists()
-      if (!built) {
+      val idx = SigStore.getOrBuild(d, "embeddings", "ivfsearch_index") { dir =>
         val corpus = embDouble(s, d).filter(col("vec_id") % 50 =!= 0)
           .localCheckpoint(true)
-        writeIvfIndex(corpus, idx, nlist = ivfNlistExact(corpus.count()), iters = 0)
+        writeIvfIndex(corpus, dir, nlist = ivfNlistExact(corpus.count()), iters = 0)
         releaseCheckpoint(corpus)
       }
       val (cent, assign) = readIvfIndex(s, idx)
@@ -2903,15 +2899,7 @@ object LlmOps {
     // the measured-recall trade on this one. The same reasoning covers
     // all 13 † fixed-codebook ANN variants.
     "llm_sim_ann_ivf_persisted" -> { (s, d) =>
-      val idx = annIndexDir(d, "ivf")
-      val built = new java.io.File(s"$idx/assign/_SUCCESS").exists() &&
-        new java.io.File(s"$idx/centroids/_SUCCESS").exists()
-      if (!built) {
-        val e = embDouble(s, d).localCheckpoint(true)
-        writeIvfIndex(e, idx, nlist = ivfNlist(e.count()), iters = 2)
-        releaseCheckpoint(e)
-      }
-      val (_, assign) = readIvfIndex(s, idx)
+      val (_, assign) = readIvfIndex(s, ivfIndex(s, d))
       ivfPairs(assign)
     },
 
@@ -2932,16 +2920,7 @@ object LlmOps {
     // so a stale codebook is a perf bug, not a correctness bug. Rows-only
     // like the other fixed-codebook ANN variants (no DuckDB twin exists).
     "llm_sim_ann_ivf_upsert" -> { (s, d) =>
-      val idx = annIndexDir(d, "ivfbase")
-      val built = new java.io.File(s"$idx/assign/_SUCCESS").exists() &&
-        new java.io.File(s"$idx/centroids/_SUCCESS").exists()
-      if (!built) {
-        val base = embDouble(s, d).filter(col("vec_id") % 10 =!= 0)
-          .localCheckpoint(true)
-        writeIvfIndex(base, idx, nlist = ivfNlist(base.count()), iters = 2)
-        releaseCheckpoint(base)
-      }
-      val (centroids, assign) = readIvfIndex(s, idx)
+      val (centroids, assign) = readIvfIndex(s, ivfBaseIndex(s, d))
       // Delta encode goes through encodeAgainstCodebook — the SAME seam
       // the streaming micro-batch ingest runs — so batch ≡ streamed
       // equivalence is structural, not a parallel-maintenance promise.
@@ -2967,29 +2946,18 @@ object LlmOps {
     // answers on the exact cell-routed paths — retraining remains a
     // separate, drift-triggered event. Rows-only like its siblings.
     "llm_sim_ann_ivf_compact" -> { (s, d) =>
-      val idx = annIndexDir(d, "ivfbase")
-      val baseBuilt = new java.io.File(s"$idx/assign/_SUCCESS").exists() &&
-        new java.io.File(s"$idx/centroids/_SUCCESS").exists()
-      if (!baseBuilt) {
-        val base = embDouble(s, d).filter(col("vec_id") % 10 =!= 0)
-          .localCheckpoint(true)
-        writeIvfIndex(base, idx, nlist = ivfNlist(base.count()), iters = 2)
-        releaseCheckpoint(base)
-      }
-      val cidx = annIndexDir(d, "ivfcompact")
-      val compacted = new java.io.File(s"$cidx/assign/_SUCCESS").exists() &&
-        new java.io.File(s"$cidx/centroids/_SUCCESS").exists()
-      if (!compacted) {
+      val idx = ivfBaseIndex(s, d)
+      val cidx = SigStore.getOrBuild(d, "embeddings", "ivfcompact_index") { dir =>
         val (centroids, assign) = readIvfIndex(s, idx)
         val batch = embDouble(s, d).filter(col("vec_id") % 10 === 0)
         val cols = Seq("vec_id", "label", "cid", "emb", "ssq", "cang").map(col)
         // cast cid on both arms: parquet partition discovery types the
         // base side's cid as INT regardless of the writer's type
-        centroids.write.mode("overwrite").parquet(s"$cidx/centroids")
+        centroids.write.mode("overwrite").parquet(s"$dir/centroids")
         assign.select(cols: _*).withColumn("cid", col("cid").cast("int"))
           .unionByName(assignToCentroid(batch, centroids).select(cols: _*)
             .withColumn("cid", col("cid").cast("int")))
-          .write.mode("overwrite").partitionBy("cid").parquet(s"$cidx/assign")
+          .write.mode("overwrite").partitionBy("cid").parquet(s"$dir/assign")
       }
       val (_, merged) = readIvfIndex(s, cidx)
       ivfPairs(merged)
@@ -3007,16 +2975,7 @@ object LlmOps {
     // lists only), the batch fans out once against a broadcast codebook,
     // and the brute-force DuckDB twin is the losslessness proof.
     "llm_dedup_semantic_incremental" -> { (s, d) =>
-      val idx = annIndexDir(d, "ivfbase")
-      val built = new java.io.File(s"$idx/assign/_SUCCESS").exists() &&
-        new java.io.File(s"$idx/centroids/_SUCCESS").exists()
-      if (!built) {
-        val base = embDouble(s, d).filter(col("vec_id") % 10 =!= 0)
-          .localCheckpoint(true)
-        writeIvfIndex(base, idx, nlist = ivfNlist(base.count()), iters = 2)
-        releaseCheckpoint(base)
-      }
-      val (centroids, assign) = readIvfIndex(s, idx)
+      val (centroids, assign) = readIvfIndex(s, ivfBaseIndex(s, d))
       val batch = embDouble(s, d).filter(col("vec_id") % 10 === 0)
       val matches = exactSearchThresholdIndexed(batch, centroids, assign, 0.4)
         .groupBy(col("qid")).agg(count(lit(1)).as("n_matches"),
@@ -3046,15 +3005,7 @@ object LlmOps {
     // candidate-subset chain, TOTAL recall vs the exact path rising in
     // nprobe, exact precision, and reshuffle determinism.
     "llm_sim_ann_ivf_multiprobe" -> { (s, d) =>
-      val idx = annIndexDir(d, "ivf")
-      val built = new java.io.File(s"$idx/assign/_SUCCESS").exists() &&
-        new java.io.File(s"$idx/centroids/_SUCCESS").exists()
-      if (!built) {
-        val e = embDouble(s, d).localCheckpoint(true)
-        writeIvfIndex(e, idx, nlist = ivfNlist(e.count()), iters = 2)
-        releaseCheckpoint(e)
-      }
-      val (centroids, assign) = readIvfIndex(s, idx)
+      val (centroids, assign) = readIvfIndex(s, ivfIndex(s, d))
       ivfMultiProbePairs(assign, centroids, nprobe = 2)
     },
 
@@ -3116,12 +3067,9 @@ object LlmOps {
     // that rows are identical to the retrain path — structural, since
     // both run pqPairScores on a pqCodesTable.
     "llm_sim_ann_pq_persisted" -> { (s, d) =>
-      val idx = annIndexDir(d, "pq")
-      val built = new java.io.File(s"$idx/codes/_SUCCESS").exists() &&
-        new java.io.File(s"$idx/codebook/_SUCCESS").exists()
-      if (!built) {
+      val idx = SigStore.getOrBuild(d, "embeddings", "pq_index") { dir =>
         val e = embDouble(s, d).localCheckpoint(true)
-        writePqIndex(e, idx)
+        writePqIndex(e, dir)
         releaseCheckpoint(e)
       }
       val (cb, codes) = readPqIndex(s, idx)
@@ -3160,15 +3108,7 @@ object LlmOps {
     // pairs). Rows-only like its siblings: the score is an approximation
     // with no DuckDB twin.
     "llm_sim_ann_ivfpq" -> { (s, d) =>
-      val idx = annIndexDir(d, "ivfpq")
-      val built = Seq("centroids", "codebook", "codes", "flat")
-        .forall(p => new java.io.File(s"$idx/$p/_SUCCESS").exists())
-      if (!built) {
-        val e = embDouble(s, d).localCheckpoint(true)
-        writeIvfPqIndex(e, idx)
-        releaseCheckpoint(e)
-      }
-      val (cent, cb, codes) = readIvfPqIndex(s, idx)
+      val (cent, cb, codes) = readIvfPqIndex(s, ivfpqIndex(s, d))
       ivfpqPairScores(codes, cb, cent)
     },
 
@@ -3187,14 +3127,7 @@ object LlmOps {
     // unrefined recall, exact-score correctness, precision 1.0, and
     // reshuffle determinism.
     "llm_sim_ann_ivfpq_refined" -> { (s, d) =>
-      val idx = annIndexDir(d, "ivfpq")
-      val built = Seq("centroids", "codebook", "codes", "flat")
-        .forall(p => new java.io.File(s"$idx/$p/_SUCCESS").exists())
-      if (!built) {
-        val e = embDouble(s, d).localCheckpoint(true)
-        writeIvfPqIndex(e, idx)
-        releaseCheckpoint(e)
-      }
+      val idx = ivfpqIndex(s, d)
       val (cent, cb, codes) = readIvfPqIndex(s, idx)
       ivfpqRefinedPairs(codes, cb, cent, readIvfPqFlat(s, idx),
         tau = 0.3, margin = 0.15)
@@ -3213,14 +3146,7 @@ object LlmOps {
     // subset chain with score equality on shared pairs, recall
     // monotonicity vs the exact path, and reshuffle determinism.
     "llm_sim_ann_ivfpq_multiprobe" -> { (s, d) =>
-      val idx = annIndexDir(d, "ivfpq")
-      val built = Seq("centroids", "codebook", "codes", "flat")
-        .forall(p => new java.io.File(s"$idx/$p/_SUCCESS").exists())
-      if (!built) {
-        val e = embDouble(s, d).localCheckpoint(true)
-        writeIvfPqIndex(e, idx)
-        releaseCheckpoint(e)
-      }
+      val idx = ivfpqIndex(s, d)
       val (cent, cb, codes) = readIvfPqIndex(s, idx)
       ivfpqMultiProbePairs(codes, cb, cent, readIvfPqFlat(s, idx), nprobe = 2,
         broadcastCodes = corpusRows(s, d) <= MultiProbeBroadcastRowCap)
@@ -3241,16 +3167,13 @@ object LlmOps {
     // so the refresh cadence is an accuracy-monitoring decision. Rows-only
     // like its fixed-codebook siblings.
     "llm_sim_ann_ivfpq_upsert" -> { (s, d) =>
-      val idx = annIndexDir(d, "ivfpqbase")
-      val built = Seq("centroids", "codebook", "codes", "flat")
-        .forall(p => new java.io.File(s"$idx/$p/_SUCCESS").exists())
-      if (!built) {
-        val base = embDouble(s, d).filter(col("vec_id") % 10 =!= 0)
-          .localCheckpoint(true)
-        writeIvfPqIndex(base, idx)
-        releaseCheckpoint(base)
-      }
-      val (cent, cb, codes) = readIvfPqIndex(s, idx)
+      val (cent, cb, codes) = readIvfPqIndex(s,
+        SigStore.getOrBuild(d, "embeddings", "ivfpqbase_index") { dir =>
+          val base = embDouble(s, d).filter(col("vec_id") % 10 =!= 0)
+            .localCheckpoint(true)
+          writeIvfPqIndex(base, dir)
+          releaseCheckpoint(base)
+        })
       // lazy batch (no checkpoint): the delta-only embeddings scan stays
       // visible in the executed plan, where LlmOpsSpec asserts its filter
       val batch = embDouble(s, d).filter(col("vec_id") % 10 === 0)
@@ -3469,11 +3392,10 @@ object LlmOps {
     // prefix hashes — the RAG-ingestion dedup at any corpus size.
     "llm_chunk_dedup" -> { (s, d) =>
       graft.functions.VectorFunctions.register(s)
-      val idx = docIndexDir(d, "containchunk")
-      if (!containmentIndexBuilt(idx))
+      val idx = SigStore.getOrBuild(d, "documents", "containchunk_index") {
         writeContainmentIndex(
-          chunkSignatures(Tables.documents(s, d).filter(col("doc_id") % 5 =!= 0)),
-          idx)
+          chunkSignatures(Tables.documents(s, d).filter(col("doc_id") % 5 =!= 0)), _)
+      }
       val (sigs, posting, dfreq) = readContainmentIndex(s, idx)
       // probe run chunks + shingles ONLY the batch docs; the chunk corpus
       // comes from the persisted index (same economics as

@@ -2,6 +2,7 @@ package graft.ops
 
 import graft.Tables
 import graft.Tables.dsumD
+import graft.store.SigStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -47,11 +48,10 @@ object Sources {
     // timestamp/JSON-envelope ingestion path is the flow-log library's
     // territory (graft.flowlog).
     "src_scan_csv_roundtrip" -> { (s, d) =>
-      val dir = fmtDir(d, "orders", "csv")
-      if (!new java.io.File(s"$dir/_SUCCESS").exists()) {
+      val dir = SigStore.getOrBuild(d, "orders", "fmt_orders_csv") {
         Tables.orders(s, d)
           .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
-          .write.mode("overwrite").option("header", "true").csv(dir)
+          .write.mode("overwrite").option("header", "true").csv(_)
       }
       s.read.schema("o_orderkey BIGINT, o_orderstatus STRING, o_totalprice DOUBLE")
         .option("header", "true").csv(dir)
@@ -64,11 +64,10 @@ object Sources {
     // schema (no sampling pass), value-identity proven by sharing the
     // parquet oracle.
     "src_scan_jsonl_roundtrip" -> { (s, d) =>
-      val dir = fmtDir(d, "customer", "jsonl")
-      if (!new java.io.File(s"$dir/_SUCCESS").exists()) {
+      val dir = SigStore.getOrBuild(d, "customer", "fmt_customer_jsonl") {
         Tables.customer(s, d)
           .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal"))
-          .write.mode("overwrite").json(dir)
+          .write.mode("overwrite").json(_)
       }
       s.read.schema("c_custkey BIGINT, c_mktsegment STRING, c_acctbal DOUBLE")
         .json(dir)
@@ -79,7 +78,7 @@ object Sources {
 
     // Dynamic partition pruning as a DECLARED query — the #1 scan lever
     // at 100 TB (SURVEY §4): the fact lives as a dt=yyyy-MM partitioned
-    // layout (written once per source signature, the fmtDir discipline),
+    // layout (written once per source signature, a SigStore store),
     // the dim is a tiny FILE-BACKED month table (a LocalRelation dim
     // constant-folds its filter away and the DPP rule never sees a
     // filtered build side — the round-4 lesson), and the mth <= 3 dim
@@ -91,19 +90,17 @@ object Sources {
     // finalized plan. Oracle = the identical join on the unpartitioned
     // table, so losslessness of the layout+pruning is driver-checked.
     "src_scan_partitioned_dpp" -> { (s, d) =>
-      val factDir = fmtDir(d, "orders", "dtpart")
-      if (!new java.io.File(s"$factDir/_SUCCESS").exists()) {
+      val factDir = SigStore.getOrBuild(d, "orders", "fmt_orders_dtpart") {
         Tables.orders(s, d)
           .withColumn("dt", date_format(col("o_orderdate"), "yyyy-MM"))
-          .write.mode("overwrite").partitionBy("dt").parquet(factDir)
+          .write.mode("overwrite").partitionBy("dt").parquet(_)
       }
-      val dimDir = fmtDir(d, "orders", "dppdim")
-      if (!new java.io.File(s"$dimDir/_SUCCESS").exists()) {
+      val dimDir = SigStore.getOrBuild(d, "orders", "fmt_orders_dppdim") {
         Tables.orders(s, d)
           .select(date_format(col("o_orderdate"), "yyyy-MM").as("dt"),
             month(col("o_orderdate")).cast("long").as("mth"))
           .distinct()
-          .write.mode("overwrite").parquet(dimDir)
+          .write.mode("overwrite").parquet(_)
       }
       s.read.parquet(factDir)
         .join(s.read.parquet(dimDir).filter(col("mth") <= 3), Seq("dt"))
@@ -123,17 +120,15 @@ object Sources {
     // lossless for both the shared and the added column.
     "src_scan_schema_evolution" -> { (s, d) =>
       val split = lit("2000-01-01").cast("timestamp_ntz")
-      val d1 = fmtDir(d, "orders", "sev_v1")
-      if (!new java.io.File(s"$d1/_SUCCESS").exists()) {
+      val d1 = SigStore.getOrBuild(d, "orders", "fmt_orders_sev_v1") {
         Tables.orders(s, d).filter(col("o_orderdate") < split)
           .select(col("o_orderkey"), col("o_totalprice"))
-          .write.mode("overwrite").parquet(d1)
+          .write.mode("overwrite").parquet(_)
       }
-      val d2 = fmtDir(d, "orders", "sev_v2")
-      if (!new java.io.File(s"$d2/_SUCCESS").exists()) {
+      val d2 = SigStore.getOrBuild(d, "orders", "fmt_orders_sev_v2") {
         Tables.orders(s, d).filter(col("o_orderdate") >= split)
           .select(col("o_orderkey"), col("o_totalprice"), col("o_orderpriority"))
-          .write.mode("overwrite").parquet(d2)
+          .write.mode("overwrite").parquet(_)
       }
       s.read.option("mergeSchema", "true").parquet(d1, d2)
         .groupBy(coalesce(col("o_orderpriority"), lit("<pre-schema>")).as("prio"))
@@ -148,11 +143,10 @@ object Sources {
     // text formats no explicit read schema is needed and predicate
     // pushdown/column pruning work as for parquet.
     "src_scan_orc_roundtrip" -> { (s, d) =>
-      val dir = fmtDir(d, "part", "orc")
-      if (!new java.io.File(s"$dir/_SUCCESS").exists()) {
+      val dir = SigStore.getOrBuild(d, "part", "fmt_part_orc") {
         Tables.part(s, d)
           .select(col("p_partkey"), col("p_brand"), col("p_retailprice"))
-          .write.mode("overwrite").orc(dir)
+          .write.mode("overwrite").orc(_)
       }
       s.read.orc(dir)
         .groupBy(col("p_brand"))
@@ -160,21 +154,6 @@ object Sources {
         .orderBy(col("p_brand").asc)
     }
   )
-
-  /** Signature-keyed cache dir for a re-encoded copy of a fixture table —
-    * the same (name, size, mtime) discipline as LlmOps.annIndexDir, so a
-    * regenerated fixture can never be answered from a stale re-encode.
-    * Shared with the other layout-rewriting queries (scale_zorder_skipping,
-    * src_scan_schema_evolution). */
-  private[ops] def fmtDir(d: String, table: String, fmt: String): String = {
-    val src = new java.io.File(s"$d/$table.parquet")
-    val files = Option(src.listFiles()).map(_.toSeq).getOrElse(Seq.empty)
-    val sig = files.filter(_.isFile)
-      .map(f => s"${f.getName}:${f.length}:${f.lastModified}").sorted.mkString("|")
-    val h = Integer.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(s"$d|$table|$fmt|$sig"))
-    s"${System.getProperty("java.io.tmpdir")}/graft_fmt_${table}_${fmt}_$h"
-  }
 
   val oracles: Seq[(String, String)] = Seq(
     "src_scan_parquet" ->

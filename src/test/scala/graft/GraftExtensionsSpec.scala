@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.expressions.Literal
-import org.scalatest.funsuite.AnyFunSuite
 
 /** The spark.sql.extensions injection path. A genuinely fresh session can't
   * be built inside the shared-JVM test run (extensions are static conf,
@@ -11,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * GraftExtensions must register builders that produce working expressions.
   * The end-to-end session path is exercised by every query closure through
   * VectorFunctions.register (same builders, same registry mechanism). */
-class GraftExtensionsSpec extends AnyFunSuite {
+class GraftExtensionsSpec extends SparkSpec {
 
   test("GraftExtensions installs builders producing working expressions") {
     val ext = new SparkSessionExtensions
@@ -37,7 +36,7 @@ class GraftExtensionsSpec extends AnyFunSuite {
     import s.implicits._
     // file-backed on purpose: a LocalRelation filter is constant-folded
     // away before any optimizer rule can be observed in the plan.
-    val tmp = java.nio.file.Files.createTempDirectory("lev_rule").toString
+    val tmp = tempDir("lev_rule")
     Seq(("kitten", "sitting"), ("abc", "abcd"), ("a", "zzzzzzzzzz"),
       ("same", "same"), (null, "x")).toDF("x", "y")
       .write.mode("overwrite").parquet(tmp)

@@ -357,7 +357,7 @@ class PlanSpec extends SparkSpec {
 
   test("partitioned layout prunes partitions on dt filter") {
     import org.apache.spark.sql.functions._
-    val out = java.nio.file.Files.createTempDirectory("plan_pp").toString
+    val out = tempDir("plan_pp")
     Tables.orders(spark, sf)
       .withColumn("dt", date_format(col("o_orderdate"), "yyyy-MM-dd"))
       .write.partitionBy("dt").mode("overwrite").parquet(out)
@@ -371,14 +371,14 @@ class PlanSpec extends SparkSpec {
 
   test("dynamic partition pruning fires on a partitioned fact ⋈ filtered dim") {
     import org.apache.spark.sql.functions._
-    val out = java.nio.file.Files.createTempDirectory("plan_dpp").toString
+    val out = tempDir("plan_dpp")
     Tables.orders(spark, sf)
       .withColumn("dt", date_format(col("o_orderdate"), "yyyy-MM"))
       .write.partitionBy("dt").mode("overwrite").parquet(out)
     import spark.implicits._
     // dim must be file-backed: a LocalRelation folds the filter away and
     // the DPP rule never sees a filtered build side.
-    val dimPath = java.nio.file.Files.createTempDirectory("plan_dpp_dim").toString
+    val dimPath = tempDir("plan_dpp_dim")
     Seq(("1995-01", "keep"), ("1995-02", "keep"), ("1999-09", "drop"))
       .toDF("dt", "tag").write.mode("overwrite").parquet(dimPath)
     val joined = spark.read.parquet(out)

@@ -1,5 +1,6 @@
 package graft
 
+import graft.store.SigStore
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -9,6 +10,20 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   def sf: String = "/root/testdata/sf0.001"
+
+  private val tempDirs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+
+  /** A fresh temp dir (streaming checkpoints, sinks, fixture copies),
+    * deleted with its contents when the suite ends. */
+  def tempDir(prefix: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toString
+    tempDirs.add(dir)
+    dir
+  }
+
+  override protected def afterAll(): Unit =
+    try tempDirs.forEach(d => SigStore.delete(d))
+    finally super.afterAll()
 }
 
 object SparkSpec {

@@ -54,7 +54,7 @@ class TablesSpec extends SparkSpec {
     // natively). Both layouts must surface the SAME TIMESTAMP_NTZ column.
     import spark.implicits._
     import org.apache.spark.sql.types.TimestampNTZType
-    val dir = java.nio.file.Files.createTempDirectory("graft_tables_spec").toString
+    val dir = tempDir("graft_tables_spec")
     val microsA = 1704067200000000L // 2024-01-01 00:00:00 UTC in µs
     val microsB = microsA + 86400L * 1000000L + 123456L
     // ns layout: a plain INT64 column named ts carrying epoch-nanos

@@ -153,7 +153,7 @@ class FlowLogSpec extends SparkSpec {
   }
 
   test("partitioned sink round-trip preserves rows and layout") {
-    val out = java.nio.file.Files.createTempDirectory("flowlog_sink").toString
+    val out = tempDir("flowlog_sink")
     val parsed = FlowLog.withDatePartitions(
       FlowLog.parseFlowLogs(decoded()).filter(col("parse_error").isNull))
     FlowLog.writePartitioned(parsed, out)
@@ -177,7 +177,7 @@ class FlowLogSpec extends SparkSpec {
   }
 
   test("raw text-file read path: spark.read.text + parse (SURVEY §2.A source row)") {
-    val dir = java.nio.file.Files.createTempDirectory("flowlog_txt").toString
+    val dir = tempDir("flowlog_txt")
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/flows.txt"),
       Seq(
         "2 1 eni-a 10.0.0.1 10.0.0.2 443 80 6 1 100 1704067140 1704067200 ACCEPT OK",

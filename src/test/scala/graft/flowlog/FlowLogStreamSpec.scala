@@ -30,7 +30,7 @@ class FlowLogStreamSpec extends SparkSpec {
   test("streaming pipeline: envelopes to partitioned parquet, exactly once") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("flowlog_stream").toString
+    val dir = tempDir("flowlog_stream")
     val out = s"$dir/out"; val ckpt = s"$dir/ckpt"
 
     def run(payloads: Seq[Array[Byte]], mem: MemoryStream[Array[Byte]]): Unit = {
@@ -110,7 +110,7 @@ class FlowLogStreamSpec extends SparkSpec {
     import spark.implicits._
     import org.apache.spark.sql.streaming.OutputMode
     withRocksDb {
-      val dir = java.nio.file.Files.createTempDirectory("flowlog_psstream").toString
+      val dir = tempDir("flowlog_psstream")
       val mem = MemoryStream[Array[Byte]]
       def start() = FlowLogStream.streamPortScan(mem.toDF(), minPorts = 10,
           watermark = "30 minutes")
@@ -162,7 +162,7 @@ class FlowLogStreamSpec extends SparkSpec {
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.streaming.OutputMode
     withRocksDb {
-      val dir = java.nio.file.Files.createTempDirectory("flowlog_bcstream").toString
+      val dir = tempDir("flowlog_bcstream")
       val mem = MemoryStream[Array[Byte]]
       def start() = FlowLogStream.streamBeaconRegularity(mem.toDF(),
           minFlows = 5, watermark = "30 minutes")
@@ -227,7 +227,7 @@ class FlowLogStreamSpec extends SparkSpec {
     import spark.implicits._
     import org.apache.spark.sql.streaming.OutputMode
     withRocksDb {
-      val dir = java.nio.file.Files.createTempDirectory("flowlog_exstream").toString
+      val dir = tempDir("flowlog_exstream")
       val mem = MemoryStream[Array[Byte]]
       def start() = FlowLogStream.streamExfilRatio(mem.toDF(),
           watermark = "30 minutes")
@@ -285,7 +285,7 @@ class FlowLogStreamSpec extends SparkSpec {
     // fire (the vacuity rule)
     val minBytes = 12000L
     withRocksDb {
-      val dir = java.nio.file.Files.createTempDirectory("flowlog_ecsstream").toString
+      val dir = tempDir("flowlog_ecsstream")
       val mem = MemoryStream[Array[Byte]]
       def start() = FlowLogStream.streamEcsServiceTraffic(mem.toDF(),
           minBytes = minBytes, watermark = "30 minutes")
@@ -367,7 +367,7 @@ class FlowLogStreamSpec extends SparkSpec {
     import spark.implicits._
     import org.apache.spark.sql.streaming.OutputMode
     withRocksDb {
-      val dir = java.nio.file.Files.createTempDirectory("flowlog_ssstream").toString
+      val dir = tempDir("flowlog_ssstream")
       val mem = MemoryStream[Array[Byte]]
       def start() = FlowLogStream.streamSynScanRefined(mem.toDF(),
           minPorts = 5, watermark = "30 minutes")
@@ -441,7 +441,7 @@ class FlowLogStreamSpec extends SparkSpec {
     import spark.implicits._
     import org.apache.spark.sql.streaming.OutputMode
     def runWith(nChunks: Int): Set[List[Any]] = {
-      val dir = java.nio.file.Files.createTempDirectory(s"flowlog_sschunk$nChunks").toString
+      val dir = tempDir(s"flowlog_sschunk$nChunks")
       val mem = MemoryStream[Array[Byte]]
       val q = FlowLogStream.streamSynScanRefined(mem.toDF(), minPorts = 5,
           watermark = "30 minutes")
@@ -473,7 +473,7 @@ class FlowLogStreamSpec extends SparkSpec {
     import spark.implicits._
     import org.apache.spark.sql.streaming.OutputMode
     def runWith(nChunks: Int): Set[List[Any]] = {
-      val dir = java.nio.file.Files.createTempDirectory(s"flowlog_pschunk$nChunks").toString
+      val dir = tempDir(s"flowlog_pschunk$nChunks")
       val mem = MemoryStream[Array[Byte]]
       val q = FlowLogStream.streamPortScan(mem.toDF(), minPorts = 10,
           watermark = "30 minutes")
@@ -505,7 +505,7 @@ class FlowLogStreamSpec extends SparkSpec {
     import spark.implicits._
     import org.apache.spark.sql.streaming.OutputMode
     def runWith(nChunks: Int): Set[List[Any]] = {
-      val dir = java.nio.file.Files.createTempDirectory(s"flowlog_ecschunk$nChunks").toString
+      val dir = tempDir(s"flowlog_ecschunk$nChunks")
       val mem = MemoryStream[Array[Byte]]
       val q = FlowLogStream.streamEcsServiceTraffic(mem.toDF(),
           minBytes = 12000L, watermark = "30 minutes")

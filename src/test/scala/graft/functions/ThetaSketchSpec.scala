@@ -66,7 +66,7 @@ class ThetaSketchSpec extends SparkSpec {
   }
 
   test("persisted partials: disk-merge ≡ inline-merge, blobs survive parquet byte-for-byte") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_thetaspec").toString
+    val dir = tempDir("graft_thetaspec")
     val p = partials(corpus(60000), 5)
     p.write.mode("overwrite").parquet(dir)
     val fromDisk = mergeFlat(spark.read.parquet(dir))

@@ -51,6 +51,25 @@ class VectorKernelsSpec extends SparkSpec {
     }
   }
 
+  test("sortedIntersectArrLong: duplicates pair off min(m, n) times, unlike array_intersect; null-element arrays are rejected") {
+    VectorFunctions.register(spark)
+    import spark.implicits._
+    val r = Seq((Seq(1L, 1L, 2L, 3L, 3L), Seq(1L, 1L, 1L, 3L)))
+      .toDF("a", "b")
+      .selectExpr("graft_sorted_intersect_arr(a, b) AS k",
+        "array_intersect(a, b) AS r")
+      .head()
+    assert(r.getSeq[Long](0) === Seq(1L, 1L, 3L))
+    assert(r.getSeq[Long](1) === Seq(1L, 3L))
+    // the kernel reads primitive longs: an element type that admits null
+    // must fail analysis instead of reading each null as 0
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      spark.sql("SELECT graft_sorted_intersect_arr(array(1L, CAST(NULL AS BIGINT)), array(0L, 1L))")
+        .collect()
+    }
+    assert(e.getMessage.contains("without null elements"), e.getMessage)
+  }
+
   test("sortedIntersectMinWeightSum: weighted merge semantics") {
     // ids {1,3,5} ∩ {2,3,5,9} = {3,5}: min(10,1) + min(30,2) = 3
     assert(VectorKernels.sortedIntersectMinWeightSum(

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.{SparkSpec, Tables}
+import graft.store.SigStore
 import org.apache.spark.sql.functions._
 
 /** Bounds for the sketch-based aggregates that have no cross-engine oracle. */
@@ -36,7 +37,7 @@ class AggregatesSpec extends SparkSpec {
     // merged sketches) equals the flat merge, (c) the partial files on
     // disk really carry binary sketch blobs, not estimates.
     graft.SparkEntry.queries("agg_hll_sketch_merge")(spark, sf).collect()
-    val dir = Aggregates.sketchDir(sf)
+    val dir = SigStore.dir(sf, "orders", "hllsketch_partials")
     val partials = spark.read.parquet(dir)
     assert(partials.schema("sk").dataType ===
       org.apache.spark.sql.types.BinaryType, "partials must be raw sketch blobs")
@@ -121,7 +122,7 @@ class AggregatesSpec extends SparkSpec {
 
   test("hdr histogram partials: per-bucket merge is partitioning/stage-invariant and equals the one-shot histogram") {
     graft.SparkEntry.queries("agg_hdr_quantile_merge")(spark, sf).collect()
-    val dir = Aggregates.sketchDir(sf, "hdrhist")
+    val dir = SigStore.dir(sf, "orders", "hdrhist_partials")
     val partials = spark.read.parquet(dir)
     def hist(df: org.apache.spark.sql.DataFrame): Map[(String, Long), Long] =
       df.groupBy(col("p"), col("bkt")).agg(sum(col("cnt")).as("cnt"))

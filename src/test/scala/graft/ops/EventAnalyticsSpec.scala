@@ -364,7 +364,7 @@ class EventAnalyticsSpec extends SparkSpec {
       (11L, t(0), 3L, "purchase"), (12L, t(10), 3L, "view"))
       .toDF("event_id", "ts", "user_id", "event_type")
       .withColumn("value", lit(1.0)).withColumn("props", lit("{}"))
-    val tmp = java.nio.file.Files.createTempDirectory("attr_events").toString
+    val tmp = tempDir("attr_events")
     ev.write.mode("overwrite").parquet(s"$tmp/events.parquet")
     val rows = EventAnalytics.queries.toMap.apply("attr_multi_touch")(spark, tmp)
       .collect().map(r => r.getString(0) ->

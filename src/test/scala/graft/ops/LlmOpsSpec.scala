@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.{SparkSpec, Tables}
+import graft.store.SigStore
 import org.apache.spark.sql.functions._
 
 /** Properties for the non-oracle-able LLM ops (hash-based signatures have no
@@ -26,7 +27,7 @@ class LlmOpsSpec extends SparkSpec {
       .toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("t"))
       .withColumn("n_chars", length(col("text")))
-    val tmp = java.nio.file.Files.createTempDirectory("simhash_docs").toString
+    val tmp = tempDir("simhash_docs")
     docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
     // reuse every other table from the sf dir via a symlinked view: the
     // simhash query only reads documents, so pointing the loader at tmp works.
@@ -107,7 +108,7 @@ class LlmOpsSpec extends SparkSpec {
     val declared = SparkEntry_queries("llm_sim_ann_ivf_multiprobe")
     val declaredRows = declared.collect().map(_.toSeq.toList).toList
     val (centroids, assign) =
-      LlmOps.readIvfIndex(spark, LlmOps.annIndexDir(sf, "ivf"))
+      LlmOps.readIvfIndex(spark, SigStore.dir(sf, "embeddings", "ivf_index"))
     def pairsAt(np: Int): Set[(Long, Long)] =
       LlmOps.ivfMultiProbePairs(assign, centroids, np).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -169,7 +170,7 @@ class LlmOpsSpec extends SparkSpec {
     // the declared query ensures the persisted ivfpq index exists
     val declared = SparkEntry_queries("llm_sim_ann_ivfpq_multiprobe")
     val declaredRows = declared.collect().map(_.toSeq.toList).toList
-    val idx = LlmOps.annIndexDir(sf, "ivfpq")
+    val idx = SigStore.dir(sf, "embeddings", "ivfpq_index")
     val (cent, cb, codes) = LlmOps.readIvfPqIndex(spark, idx)
     val flat = LlmOps.readIvfPqFlat(spark, idx)
     def rowsAt(np: Int): Map[(Long, Long), Double] =
@@ -219,7 +220,7 @@ class LlmOpsSpec extends SparkSpec {
   test("multi-probe IVF-PQ sparse regime (VERDICT r15 #1): bit-identical to the dense kernel when forced past the cell cap; dense LUTs stay bounded") {
     // the declared query ensures the persisted ivfpq index exists
     SparkEntry_queries("llm_sim_ann_ivfpq_multiprobe").collect()
-    val idx = LlmOps.annIndexDir(sf, "ivfpq")
+    val idx = SigStore.dir(sf, "embeddings", "ivfpq_index")
     val (cent, cb, codes) = LlmOps.readIvfPqIndex(spark, idx)
     val flat = LlmOps.readIvfPqFlat(spark, idx)
     // forcing the cap below the fixture's nC (16) routes the sparse
@@ -313,7 +314,7 @@ class LlmOpsSpec extends SparkSpec {
     // batch's encodings to the persisted inverted file must reproduce a
     // full re-encode of ALL vectors against the same codebook row-for-row
     val (centroids, _) =
-      LlmOps.readIvfIndex(spark, LlmOps.annIndexDir(sf, "ivfbase"))
+      LlmOps.readIvfIndex(spark, SigStore.dir(sf, "embeddings", "ivfbase_index"))
     val all = LlmOps.embDouble(spark, sf).localCheckpoint(true)
     val full = LlmOps.ivfPairs(LlmOps.assignToCentroid(all, centroids))
       .collect().map(_.toSeq.toList).toList
@@ -346,7 +347,7 @@ class LlmOpsSpec extends SparkSpec {
     // batch's encodings to the persisted codes table must reproduce a
     // full re-encode of ALL vectors against the same codebooks
     val (cent, cb, _) =
-      LlmOps.readIvfPqIndex(spark, LlmOps.annIndexDir(sf, "ivfpqbase"))
+      LlmOps.readIvfPqIndex(spark, SigStore.dir(sf, "embeddings", "ivfpqbase_index"))
     val all = LlmOps.embDouble(spark, sf).localCheckpoint(true)
     val full = LlmOps.ivfpqPairScores(
         LlmOps.encodeAgainstIvfPq(all, cent, cb)
@@ -539,11 +540,7 @@ class LlmOpsSpec extends SparkSpec {
     // nothing partition-order-dependent even with the merge order
     // permuted by a different shuffle-partition count)
     def dropIndex(): Unit = {
-      val dir = new java.io.File(LlmOps.annIndexDir(sf, "ivfpq"))
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      if (dir.exists()) rm(dir)
+      SigStore.delete(SigStore.dir(sf, "embeddings", "ivfpq_index"))
     }
     dropIndex()
     val ivfpq = SparkEntry_queries("llm_sim_ann_ivfpq").collect()
@@ -684,7 +681,7 @@ class LlmOpsSpec extends SparkSpec {
     val rows = (bases ++ nearDups).map { case (id, t) =>
       (id.toLong, t, "en", "synth", t.length)
     }
-    val tmp = java.nio.file.Files.createTempDirectory("minhash_prop").toString
+    val tmp = tempDir("minhash_prop")
     rows.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
     val got = LlmOps.queries.toMap.apply("llm_dedup_minhash")(spark, tmp)
@@ -860,7 +857,7 @@ class LlmOpsSpec extends SparkSpec {
     // draws land under n), and a zero-weight doc (its cumulative interval
     // is empty — no slot boundary can land in it).
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("pps_prop").toString
+    val tmp = tempDir("pps_prop")
     val rows = Seq((0L, 0L), (1L, 10000L)) ++ (2L until 100L).map(i => (i, 50L))
     rows.toDF("doc_id", "n_chars")
       .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
@@ -902,7 +899,7 @@ class LlmOpsSpec extends SparkSpec {
     }
     val filler = (200L until 6080L).map(i => (i, unit()))
     val rows = (planted ++ filler).map { case (id, v) => (id, v, (id % 7).toInt) }
-    val tmp = java.nio.file.Files.createTempDirectory("pq_scale").toString
+    val tmp = tempDir("pq_scale")
     rows.toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$tmp/embeddings.parquet")
     val pq = LlmOps.queries.toMap.apply("llm_sim_ann_pq")(spark, tmp)
@@ -1054,7 +1051,7 @@ class LlmOpsSpec extends SparkSpec {
     val rows = (longs ++ shorts).map { case (id, t) =>
       (id, t, "en", "synth", t.length)
     }
-    val tmp = java.nio.file.Files.createTempDirectory("containment_prop").toString
+    val tmp = tempDir("containment_prop")
     rows.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
     val got = LlmOps.queries.toMap.apply("llm_dedup_containment_lsh")(spark, tmp)
@@ -1202,7 +1199,7 @@ class LlmOpsSpec extends SparkSpec {
       .toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("t"))
       .withColumn("n_chars", length(col("text")))
-    val tmp = java.nio.file.Files.createTempDirectory("rep_signals").toString
+    val tmp = tempDir("rep_signals")
     docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
     val got = LlmOps.queries.toMap.apply("llm_rep_signals")(spark, tmp)
       .collect().map(r => r.getLong(0) ->
@@ -1251,7 +1248,7 @@ class LlmOpsSpec extends SparkSpec {
     val docs = rows.toDF("doc_id", "text", "source")
       .withColumn("lang", lit("en"))
       .withColumn("n_chars", length(col("text")))
-    val tmp = java.nio.file.Files.createTempDirectory("llmops_docs").toString
+    val tmp = tempDir("llmops_docs")
     docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
     tmp
   }
@@ -1470,7 +1467,7 @@ class LlmOpsSpec extends SparkSpec {
     val docs = Seq((0L, "aaab aaab ab")).toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("t"))
       .withColumn("n_chars", length(col("text")))
-    val tmp = java.nio.file.Files.createTempDirectory("bpe_docs").toString
+    val tmp = tempDir("bpe_docs")
     docs.write.mode("overwrite").parquet(s"$tmp/documents.parquet")
     val merges = LlmOps.queries.toMap.apply("llm_bpe_train")(spark, tmp).collect()
       .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3)))

@@ -67,7 +67,7 @@ class ScaleSpec extends SparkSpec {
     // FileSourceScanExec node (and its metric) is reachable.
     import org.apache.spark.sql.execution.FileSourceScanExec
     val ev = graft.Tables.events(spark, sf)
-    val base = java.nio.file.Files.createTempDirectory("graft_skip").toString
+    val base = tempDir("graft_skip")
     val q = ev
       .withColumn("q_user", Scale.zQuantize(col("user_id"), 0.0, 1500.0, bits = 8))
       .withColumn("q_val", Scale.zQuantize(col("value"), 0.0, 600.0, bits = 8))
@@ -220,7 +220,7 @@ class ScaleSpec extends SparkSpec {
     import spark.implicits._
     val df = (1 to 500).map(i => (s"2024-01-${"%02d".format(i % 5 + 1)}", i))
       .toDF("dt", "v")
-    val out = java.nio.file.Files.createTempDirectory("graft_cpw").toString
+    val out = tempDir("graft_cpw")
     Scale.coalescePartitionedWrite(df, Seq(col("dt")), filesPerPartition = 1)
       .write.partitionBy("dt").mode("overwrite").parquet(out)
     val partDirs = new java.io.File(out).listFiles().filter(_.getName.startsWith("dt="))

@@ -234,7 +234,7 @@ class StreamingSpec extends SparkSpec {
   test("exactly-once parquet sink: checkpoint restart does not duplicate") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_eo").toString
+    val dir = tempDir("graft_eo")
     val out = s"$dir/out"; val ckpt = s"$dir/ckpt"
     val mem = MemoryStream[Ev]
     val q1 = StreamOps.startParquetSink(mem.toDF(), out, ckpt)
@@ -254,7 +254,7 @@ class StreamingSpec extends SparkSpec {
     // batch must still come through.
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_dedup_ckpt").toString
+    val dir = tempDir("graft_dedup_ckpt")
     val out = s"$dir/out"; val ckpt = s"$dir/ckpt"
     val mem = MemoryStream[Ev]
     def start() = StreamOps.dedup(mem.toDF()).writeStream
@@ -284,7 +284,7 @@ class StreamingSpec extends SparkSpec {
     // id, and unrelated docs pass through.
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_neardup").toString
+    val dir = tempDir("graft_neardup")
     val mem = MemoryStream[(Long, String)]
     val docs = mem.toDF().toDF("doc_id", "text")
     val q = StreamOps.startNearDupFilterSink(
@@ -312,7 +312,7 @@ class StreamingSpec extends SparkSpec {
     // (signatures come from the parquet store, not query state).
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_neardup_ckpt").toString
+    val dir = tempDir("graft_neardup_ckpt")
     val mem = MemoryStream[(Long, String)]
     def start() = StreamOps.startNearDupFilterSink(
       mem.toDF().toDF("doc_id", "text"), s"$dir/out", s"$dir/store", s"$dir/ckpt")
@@ -336,7 +336,7 @@ class StreamingSpec extends SparkSpec {
   test("foreachBatch merge sink upserts by key keeping the latest version") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_merge").toString
+    val dir = tempDir("graft_merge")
     val out = s"$dir/out"; val ckpt = s"$dir/ckpt"
     val mem = MemoryStream[Ev]
     val q = StreamOps.startMergeSink(
@@ -368,7 +368,7 @@ class StreamingSpec extends SparkSpec {
     import graft.multimodal.{Jpeg, Multimodal}
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_mediadedup").toString
+    val dir = tempDir("graft_mediadedup")
     val mem = MemoryStream[(Long, String, Array[Byte])]
     def start() = StreamOps.startMediaDedupSink(
       mem.toDF().toDF("media_id", "media_type", "payload"),
@@ -435,7 +435,7 @@ class StreamingSpec extends SparkSpec {
     import graft.multimodal.{Jpeg, Multimodal}
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_mediacompact").toString
+    val dir = tempDir("graft_mediacompact")
     val mem = MemoryStream[(Long, String, Array[Byte])]
     def start() = StreamOps.startMediaDedupSink(
       mem.toDF().toDF("media_id", "media_type", "payload"),
@@ -519,7 +519,7 @@ class StreamingSpec extends SparkSpec {
     // hit on purpose.
     import graft.multimodal.{Jpeg, Multimodal}
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_mediareplay").toString
+    val dir = tempDir("graft_mediareplay")
     def audioClip(codes: Seq[Int], rate: Int, perBlock: Int) =
       Multimodal.encodeWav(rate,
         codes.flatMap(c => Seq.fill(perBlock)(((c - 96) * 128).toShort)).toArray)
@@ -599,7 +599,7 @@ class StreamingSpec extends SparkSpec {
     // checkpoint, and pre-kill deltas must come back from the store.
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact").toString
+    val dir = tempDir("graft_compact")
     val mem = MemoryStream[(Timestamp, String, String)]
     def start() = StreamOps.startCompactionPlanSink(
       mem.toDF().toDF("ts", "event_type", "props"),
@@ -789,7 +789,7 @@ class StreamingSpec extends SparkSpec {
   test("silence detector state survives a kill/restart: the buffered last-event exists only in state") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_silence_ckpt").toString
+    val dir = tempDir("graft_silence_ckpt")
     val out = s"$dir/out"; val ckpt = s"$dir/ckpt"
     val mem = MemoryStream[Ev]
     def start() = StreamOps.streamSilenceAlerts(mem.toDF(),
@@ -865,7 +865,7 @@ class StreamingSpec extends SparkSpec {
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
-      val dir = java.nio.file.Files.createTempDirectory("graft_asof_rocks").toString
+      val dir = tempDir("graft_asof_rocks")
       val pMem = MemoryStream[(Long, Timestamp)]
       val eMem = MemoryStream[(Long, Timestamp, Long)]
       def start() = StreamOps.streamAsOfJoin(
@@ -1013,7 +1013,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming top-k sketch survives a kill/restart: pre-kill counts still answer") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_topk_ckpt").toString
+    val dir = tempDir("graft_topk_ckpt")
     val out = s"$dir/out"; val ckpt = s"$dir/ckpt"
     val mem = MemoryStream[(Long, Timestamp)]
     def start() = StreamOps.streamWindowTopK(
@@ -1093,7 +1093,7 @@ class StreamingSpec extends SparkSpec {
     // is not watermark-complete). Recovery must emit the exact answer.
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_asof_fwd_ckpt").toString
+    val dir = tempDir("graft_asof_fwd_ckpt")
     val out = s"$dir/out"; val ckpt = s"$dir/ckpt"
     val pMem = MemoryStream[(Long, Timestamp)]
     val eMem = MemoryStream[(Long, Timestamp, Long)]
@@ -1129,7 +1129,7 @@ class StreamingSpec extends SparkSpec {
     // nothing or nulls; the recovered store must emit the exact answer.
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_asof_ckpt").toString
+    val dir = tempDir("graft_asof_ckpt")
     val out = s"$dir/out"; val ckpt = s"$dir/ckpt"
     val pMem = MemoryStream[(Long, Timestamp)]
     val eMem = MemoryStream[(Long, Timestamp, Long)]
@@ -1353,7 +1353,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming Holt state survives a kill/restart: the fold summary persists across runs") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_holt_ckpt").toString
+    val dir = tempDir("graft_holt_ckpt")
     val out = s"$dir/out"; val ckpt = s"$dir/ckpt"
     val mem = MemoryStream[Ev]
     def start() = StreamOps.streamHolt(mem.toDF())
@@ -1449,7 +1449,7 @@ class StreamingSpec extends SparkSpec {
       } finally q.stop()
       // kill/restart: the recovered ValueState must continue the fold
       // (same arithmetic checkpoints as the fMGWS durability test)
-      val dir = java.nio.file.Files.createTempDirectory("graft_holt_tws_ckpt").toString
+      val dir = tempDir("graft_holt_tws_ckpt")
       val out = s"$dir/out"; val ckpt = s"$dir/ckpt"
       val mem2 = MemoryStream[Ev]
       def start() = StreamOps.streamHoltTws(mem2.toDF())
@@ -1483,7 +1483,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming drawdown state survives a kill/restart: the peak persists across runs") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_dd_ckpt").toString
+    val dir = tempDir("graft_dd_ckpt")
     val out = s"$dir/out"; val ckpt = s"$dir/ckpt"
     // h = 15000: the 3.0 peak exists ONLY in pre-kill state; the post-
     // restart 1.0 row draws down 20000 > h and must alert against it.
@@ -1516,7 +1516,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming CUSUM state survives a kill/restart: buffered rows and the fold summary persist") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_cusum_ckpt").toString
+    val dir = tempDir("graft_cusum_ckpt")
     val out = s"$dir/out"; val ckpt = s"$dir/ckpt"
     // mu = 0, h = 25000: each 1.0-valued event adds 10000 to s, so the
     // third event in event-time order (00:02) crosses 25000 -> one onset.
@@ -1596,7 +1596,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming Bollinger state survives a kill/restart: the rolling window persists") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_boll_ckpt").toString
+    val dir = tempDir("graft_boll_ckpt")
     val out = s"$dir/out"; val ckpt = s"$dir/ckpt"
     // n = 6: five 1.0-rows then one 9.0-row — dev = 5·(y−x) = 400000 beats
     // thr = 2·√5·|y−x| ≈ 357771 (a 3-point window can NEVER alert:
@@ -1630,7 +1630,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming DQ gate: violations quarantine with reasons, clean rows pass, restart loses nothing") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_dqgate").toString
+    val dir = tempDir("graft_dqgate")
     // (id, status, price) rows; two constraints, one row failing each,
     // one row failing BOTH
     val mem = MemoryStream[(Long, String, Double)]
@@ -1669,7 +1669,7 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     graft.functions.VectorFunctions.register(spark)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivfstream").toString
+    val dir = tempDir("graft_ivfstream")
     // standing index trained ONCE on the base corpus (vec_id % 10 != 0) —
     // the same split the batch upsert query uses
     val e = graft.Tables.embeddings(spark, sf)
@@ -1727,7 +1727,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming hybrid retrieval: incremental stats converge to the batch query, across a kill/restart") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_hybrid").toString
+    val dir = tempDir("graft_hybrid")
     val docs = graft.Tables.documents(spark, sf)
       .select(col("doc_id"), col("text")).as[(Long, String)]
       .collect().sortBy(_._1).toSeq
@@ -1766,7 +1766,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming hdr histogram sink: merged store equals the batch histogram, across a kill/restart") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_hdrsink").toString
+    val dir = tempDir("graft_hdrsink")
     // values straddle the exact (<32) range and several bucketed octaves
     val all = (1L to 400L).map(i => (if (i % 2 == 0) "a" else "b", i * 37 % 3000 + 1))
     val mem = MemoryStream[(String, Long)]
@@ -1802,7 +1802,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming theta sketch sink: merged blobs equal the one-shot sketch, set algebra exact, across a kill/restart") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_thetasink").toString
+    val dir = tempDir("graft_thetasink")
     // two overlapping segments: a = {0..599}, b = {300..899}
     val all = (0L until 600L).map("a" -> _) ++ (300L until 900L).map("b" -> _)
     val mem = MemoryStream[(String, Long)]
