@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main. Output protocol (a single giant
   * JSON line was truncated mid-line by the driver's tail capture, leaving
@@ -20,68 +19,9 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // JVM/codegen warmup so the first timed query doesn't absorb session
-    // bring-up (job scheduling, codegen compiler, shuffle machinery).
-    // Whole-stage codegen classes are per plan-shape: without warming the
-    // heavy families, the alphabetically-first query of each absorbs
-    // ~3-4 s of janino compilation that belongs to no query (measured on
-    // agg_approx_distinct and llm_dedup_embcos). Warm them untimed at the
-    // smallest SF — same shapes, negligible data.
-    spark.range(1000).selectExpr("sum(id)").collect()
-    // llm_dedup_exact warms the sha2+window family: it is the first
-    // LLM-family query alphabetically after the cheap agg block, and
-    // without warmup it absorbed the family's codegen compilation
-    // (BENCH_r04 measured it at 1.63x baseline on an absolute delta of
-    // 0.14 s — pure first-plan-of-family cost).
-    val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARMUP_DIR", "/root/testdata/sf0.001")
-    // llm_sim_ann_pq warms the PQ family (decimal-mean Lloyd loop + SDC
-    // broadcast lookup), new in round 5 — its serial codebook chain
-    // otherwise absorbs the family's codegen on the first timed run.
-    // stream_session_agg_batch warms the MergingSessions family: its plan
-    // is already the fused single-exchange session merge (round-6 audit),
-    // and the r5 1.47x-vs-baseline delta was this family's first-plan
-    // codegen cost landing on it.
-    // graph_* sorts before llm_* — the graph queries are the first to hit
-    // the HOF-pair-explode and sorted-intersect-kernel plan families, so
-    // without warmup they absorb those families' codegen compilation.
-    // graph_louvain_full is alphabetically first of the three Louvain
-    // queries and absorbed that family's first-plan codegen in driver
-    // runs (BENCH_r13 5.12 s vs 3.5 s fresh — the round-13 family-warmup
-    // migration); flowlog_bytes_per_eni_hour is first of the flowlog
-    // family and additionally pre-writes the signature-keyed envelope
-    // fixture for the warmup dir.
-    Seq("agg_approx_distinct", "llm_dedup_embcos", "llm_sim_topk",
-        "llm_dedup_exact", "llm_sim_ann_pq",
-        "graph_triangle_count", "graph_khop_reach", "graph_pagerank",
-        "graph_louvain_full", "flowlog_bytes_per_eni_hour",
-        "stream_session_agg_batch").foreach { q =>
-      try SparkEntry.queries(q)(spark, warmDir).count()
-      catch { case e: Throwable =>
-        // never fail the bench, but a silent no-op here makes the run
-        // incomparable to the committed baseline — say so.
-        System.err.println(s"[bench] WARMUP $q failed (numbers will include " +
-          s"codegen compilation): ${e.getMessage}")
-      }
-    }
-    spark.catalog.clearCache()
-    System.gc()
     // optional args: query names to bench (local iteration); the driver
-    // passes none and gets the full set. A typo'd name must not produce an
-    // empty "passing" run.
-    val only = args.toSet
-    val unknown = only -- SparkEntry.queries.keySet
-    if (unknown.nonEmpty) {
-      System.err.println(s"[bench] unknown queries: ${unknown.mkString(", ")}")
-      sys.exit(2)
-    }
+    // passes none and gets the full set.
+    val only = Harness.selected(args.toSeq)
     // SPARK_GRAFT_BENCH_REPEATS=N (default 3): run each query N
     // consecutive times and report the per-query MEDIAN. The committed
     // BASELINE is recorded at N=3 and the default matches it, so the
@@ -90,15 +30,11 @@ object Bench {
     // regression detection chase noise and left the 2x bound exposed to a
     // loaded-machine run. Set N=1 for quick local iteration. Lower-middle
     // median for even N — deterministic, no averaging across runs.
-    // a malformed value must fail loudly like an unknown query name does —
-    // not crash with a bare NumberFormatException before any JSON line.
-    val repeats = sys.env.get("SPARK_GRAFT_BENCH_REPEATS") match {
-      case None => 3
-      case Some(v) => v.toIntOption.filter(_ >= 1).getOrElse {
-        System.err.println(s"[bench] bad SPARK_GRAFT_BENCH_REPEATS: '$v'")
-        sys.exit(2)
-      }
-    }
+    // A malformed value fails loudly like an unknown query name does.
+    val repeats = Harness.positiveEnv("SPARK_GRAFT_BENCH_REPEATS", 3)
+    val spark = Harness.session(defaultCpus = 32)
+    val cpus = spark.sparkContext.defaultParallelism
+    Harness.warmup(spark)
     // Environment-drift calibration probe (VERDICT r15 #5): a fixed
     // CPU-bound synthetic plan — pure codegen hash+sum over a range, no
     // I/O, no shuffle variance — timed (median of 3) at the START and END
@@ -112,7 +48,7 @@ object Bench {
         val t0 = System.nanoTime()
         // bit_xor, not sum: ANSI sum over 100M arbitrary hash longs
         // overflows; xor is closed on long and keeps the loop CPU-bound
-        spark.range(0L, 500000000L, 1L, cpus.toInt)
+        spark.range(0L, 500000000L, 1L, cpus)
           .selectExpr("xxhash64(id) AS h").selectExpr("bit_xor(h)").collect()
         (System.nanoTime() - t0) / 1e9
       }

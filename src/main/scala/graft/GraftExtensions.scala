@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** Production registration path for the graft native expressions:
   *
@@ -11,30 +13,15 @@ import org.apache.spark.sql.SparkSessionExtensions
   * injects the vector kernels into every session at build time. Query
   * closures also self-register via [[graft.functions.VectorFunctions]]
   * (idempotent) so the library works against harness-built sessions that
-  * don't set the conf.
+  * don't set the conf. Both paths iterate the same
+  * [[graft.functions.VectorFunctions.kernels]] table.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
-    def info(name: String): ExpressionInfo =
-      new ExpressionInfo("graft.functions.VectorExpressions", name)
-    ext.injectFunction((FunctionIdentifier("graft_dot"), info("graft_dot"),
-      exprs => functions.DotProductD(exprs.head, exprs(1))))
-    ext.injectFunction((FunctionIdentifier("graft_minhash"), info("graft_minhash"),
-      exprs => functions.MinHashSig(exprs.head)))
-    ext.injectFunction((FunctionIdentifier("graft_minhash_str"), info("graft_minhash_str"),
-      exprs => functions.MinHashSigStr(exprs.head)))
-    ext.injectFunction((FunctionIdentifier("graft_simhash"), info("graft_simhash"),
-      exprs => functions.SimHash64(exprs.head)))
-    ext.injectFunction((FunctionIdentifier("graft_sorted_intersect"), info("graft_sorted_intersect"),
-      exprs => functions.SortedIntersectCount(exprs.head, exprs(1))))
-    ext.injectFunction((FunctionIdentifier("graft_shingle_hashes"), info("graft_shingle_hashes"),
-      exprs => functions.ShingleHashes(exprs.head)))
-    ext.injectFunction((FunctionIdentifier("graft_sorted_intersect_long"), info("graft_sorted_intersect_long"),
-      exprs => functions.SortedIntersectCountLong(exprs.head, exprs(1))))
-    ext.injectFunction((FunctionIdentifier("graft_winnow"), info("graft_winnow"),
-      exprs => functions.WinnowFp(exprs.head)))
+    functions.VectorFunctions.kernels.foreach { case (name, build) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo("graft.functions.VectorExpressions", name), build))
+    }
     // Optimizer rule: free length guard ahead of un-thresholded
     // levenshtein predicates (see the rule's scaladoc for the soundness
     // argument). Runtime sessions use LevenshteinGuardRule.install.

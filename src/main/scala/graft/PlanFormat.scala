@@ -5,20 +5,14 @@ package graft
   *
   * Usage: runMain graft.PlanFormat <sfDir> <outDir> <tag> <query...>
   *
-  * Runs under the same local[32]/shuffle-partitions session shape as Bench
-  * so Exchange counts and join strategies match what the bench executes.
+  * Runs under [[Harness.session]], the session shape Bench uses, so
+  * Exchange counts and join strategies match what the bench executes.
   */
 object PlanFormat {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, tag, qs @ _*) = args.toSeq.toArray
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    Harness.selected(qs)
+    val spark = Harness.session(defaultCpus = 32)
     new java.io.File(outDir).mkdirs()
     qs.foreach { q =>
       val df = SparkEntry.queries(q)(spark, sfDir)

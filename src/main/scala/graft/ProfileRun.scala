@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 import scala.collection.mutable
 
 /** Ad-hoc stage-level profiler for optimization rounds (guide §1: measure
@@ -21,14 +20,7 @@ import scala.collection.mutable
 object ProfileRun {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(defaultCpus = 32)
 
     @volatile var current = "warmup"
     case class StageRec(query: String, name: String, ms: Long, tasks: Int,
@@ -53,16 +45,7 @@ object ProfileRun {
     })
 
     // same family warmup as Bench so codegen costs don't pollute
-    val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARMUP_DIR", "/root/testdata/sf0.001")
-    Seq("agg_approx_distinct", "llm_dedup_embcos", "llm_sim_topk",
-        "llm_dedup_exact", "llm_sim_ann_pq",
-        "graph_triangle_count", "graph_khop_reach", "graph_pagerank",
-        "graph_louvain_full", "flowlog_bytes_per_eni_hour",
-        "stream_session_agg_batch").foreach { q =>
-      try SparkEntry.queries(q)(spark, warmDir).count()
-      catch { case _: Throwable => () }
-    }
-    spark.catalog.clearCache(); System.gc()
+    Harness.warmup(spark)
 
     args.foreach { name =>
       SparkEntry.queries.get(name) match {

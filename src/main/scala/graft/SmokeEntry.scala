@@ -1,10 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object SmokeEntry {
   def main(a: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.ui.enabled","false").config("spark.sql.session.timeZone","UTC").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session(defaultCpus = 4)
     val df = SparkEntry.entry(spark)
     println("ENTRY_ROWS=" + df.count())
     df.show(3)

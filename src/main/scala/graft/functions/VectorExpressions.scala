@@ -702,9 +702,12 @@ case class HoltWintersStates(left: Expression, right: Expression) extends Binary
 }
 
 object VectorFunctions {
-  /** Register the vector kernels in the session's function registry so
-    * query closures can call them via `expr("graft_dot(a, b)")`. Idempotent;
-    * works on harness-built sessions (no SparkSessionExtensions needed).
+  /** The registrable native kernels, SQL name -> expression builder. Both
+    * registration paths iterate this one table: [[register]] for sessions
+    * built without extensions, [[graft.GraftExtensions]] for sessions
+    * configured with `spark.sql.extensions`. `IvfPqTerms` is not here: it
+    * carries driver-collected lookup arrays that a string-keyed registry
+    * cannot pass, so callers reach it through `PlanBridge.column`.
     *
     * Input precondition of the merge kernels (`graft_sorted_intersect*`):
     * every id array is sorted ascending and DISTINCT, e.g.
@@ -712,34 +715,27 @@ object VectorFunctions {
     * without an error. Duplicates are not removed: a value present m
     * times in one array and n times in the other counts min(m, n) times,
     * where `array_intersect` keeps it once. */
+  val kernels: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    ("graft_dot", e => DotProductD(e.head, e(1))),
+    ("graft_minhash", e => MinHashSig(e.head)),
+    ("graft_minhash_str", e => MinHashSigStr(e.head)),
+    ("graft_simhash", e => SimHash64(e.head)),
+    ("graft_sorted_intersect", e => SortedIntersectCount(e.head, e(1))),
+    ("graft_shingle_hashes", e => ShingleHashes(e.head)),
+    ("graft_sorted_intersect_long", e => SortedIntersectCountLong(e.head, e(1))),
+    ("graft_winnow", e => WinnowFp(e.head)),
+    ("graft_sorted_intersect_minw", e => SortedIntersectMinWeightSum(e.head, e(1), e(2), e(3))),
+    ("graft_sorted_intersect_arr", e => SortedIntersectArrLong(e.head, e(1))),
+    ("graft_holt", e => HoltStates(e.head)),
+    ("graft_holt_winters", e => HoltWintersStates(e.head, e(1))))
+
+  /** Register [[kernels]] in the session's function registry so query
+    * closures can call them via `expr("graft_dot(a, b)")`. Idempotent;
+    * works on harness-built sessions (no SparkSessionExtensions needed). */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "graft_dot", exprs => DotProductD(exprs.head, exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_minhash", exprs => MinHashSig(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_minhash_str", exprs => MinHashSigStr(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_simhash", exprs => SimHash64(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_sorted_intersect", exprs => SortedIntersectCount(exprs.head, exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_shingle_hashes", exprs => ShingleHashes(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_sorted_intersect_long", exprs => SortedIntersectCountLong(exprs.head, exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_winnow", exprs => WinnowFp(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_sorted_intersect_minw",
-      exprs => SortedIntersectMinWeightSum(exprs.head, exprs(1), exprs(2), exprs(3)),
-      "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_sorted_intersect_arr",
-      exprs => SortedIntersectArrLong(exprs.head, exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_holt", exprs => HoltStates(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction(
-      "graft_holt_winters", exprs => HoltWintersStates(exprs.head, exprs(1)), "built-in")
+    kernels.foreach { case (name, build) =>
+      reg.createOrReplaceTempFunction(name, build, "built-in")
+    }
   }
 }

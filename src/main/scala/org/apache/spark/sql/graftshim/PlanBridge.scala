@@ -50,22 +50,23 @@ object PlanBridge {
     val ck = df.localCheckpoint(eager = true)
     ck.asInstanceOf[classic.Dataset[_]].queryExecution.analyzed match {
       case lr: LogicalRDD =>
-        val sc = df.sparkSession.sparkContext
-        sc.getRDDStorageInfo.find(_.id == lr.rdd.id)
-          .map { info =>
-            val size = math.max(info.memSize + info.diskSize, 1L)
-            val fresh = LogicalRDD(lr.output, lr.rdd, lr.outputPartitioning,
-              lr.outputOrdering, lr.isStreaming, lr.stream)(
-              df.sparkSession.asInstanceOf[classic.SparkSession],
-              Some(Statistics(sizeInBytes = BigInt(size))), None)
-            ofRows(df.sparkSession, fresh)
-          }
-          // storage info missing (shouldn't happen for an eager local
-          // checkpoint) — fall back to the plain checkpoint
-          .getOrElse(ck)
+        // storage info missing (shouldn't happen for an eager local
+        // checkpoint) — fall back to the plain checkpoint
+        measured(df.sparkSession, lr).map(ofRows(df.sparkSession, _)).getOrElse(ck)
       case _ => ck
     }
   }
+
+  /** `lr` with its statistics replaced by the block-store size of its
+    * materialized RDD; None when the storage info is missing. */
+  private def measured(spark: SparkSession, lr: LogicalRDD): Option[LogicalRDD] =
+    spark.sparkContext.getRDDStorageInfo.find(_.id == lr.rdd.id).map { info =>
+      val size = math.max(info.memSize + info.diskSize, 1L)
+      LogicalRDD(lr.output, lr.rdd, lr.outputPartitioning,
+        lr.outputOrdering, lr.isStreaming, lr.stream)(
+        spark.asInstanceOf[classic.SparkSession],
+        Some(Statistics(sizeInBytes = BigInt(size))), None)
+    }
 
   /** [[checkpointTrueStats]] fused with a changed-row count: materializes
     * `df` as an eager local checkpoint AND counts the rows where
@@ -120,16 +121,6 @@ object PlanBridge {
       Iterator.single(c)
     }.collect().sum
     val lr = LogicalRDD.fromDataset(rdd, ds, isStreaming = false)
-    val sc = df.sparkSession.sparkContext
-    val fresh = sc.getRDDStorageInfo.find(_.id == rdd.id)
-      .map { info =>
-        val size = math.max(info.memSize + info.diskSize, 1L)
-        LogicalRDD(lr.output, lr.rdd, lr.outputPartitioning,
-          lr.outputOrdering, lr.isStreaming, lr.stream)(
-          df.sparkSession.asInstanceOf[classic.SparkSession],
-          Some(Statistics(sizeInBytes = BigInt(size))), None)
-      }
-      .getOrElse(lr)
-    (ofRows(df.sparkSession, fresh), cnt)
+    (ofRows(df.sparkSession, measured(df.sparkSession, lr).getOrElse(lr)), cnt)
   }
 }

@@ -1,7 +1,10 @@
 package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.Literal
+import org.apache.spark.sql.functions.expr
+import org.apache.spark.sql.graftshim.{ExtensionsProbe, PlanBridge}
 
 /** The spark.sql.extensions injection path. A genuinely fresh session can't
   * be built inside the shared-JVM test run (extensions are static conf,
@@ -14,7 +17,7 @@ class GraftExtensionsSpec extends SparkSpec {
 
   test("GraftExtensions installs builders producing working expressions") {
     val ext = new SparkSessionExtensions
-    new GraftExtensions().apply(ext) // must not throw; registers 7 functions
+    new GraftExtensions().apply(ext) // must not throw; injects the kernel table
 
     val dot = functions.DotProductD(
       Literal.create(Seq(1.0, 2.0), org.apache.spark.sql.types.ArrayType(
@@ -67,5 +70,45 @@ class GraftExtensionsSpec extends SparkSpec {
       .head().getDouble(0) === 11.0)
     assert(s.sql("SELECT graft_sorted_intersect_long(array(1L, 2L, 3L), array(2L, 3L, 4L)) AS n")
       .head().getInt(0) === 2)
+  }
+
+  test("GraftExtensions and VectorFunctions.register expose the same 12 kernels") {
+    val ext = new SparkSessionExtensions
+    new GraftExtensions().apply(ext)
+    val injected = ExtensionsProbe.functions(ext)
+    val injectedNames = injected.listFunction().map(_.funcName).toSet
+    // a fresh session of the shared context: its registry holds only the
+    // builtins, so every graft_ name in it came from register
+    val fresh = SparkSpec.session.newSession()
+    functions.VectorFunctions.register(fresh)
+    val registered = fresh.sessionState.functionRegistry.listFunction()
+      .map(_.funcName).filter(_.startsWith("graft_")).toSet
+    assert(injectedNames === registered)
+    assert(registered.size === 12)
+
+    // literal arguments per kernel; each call must resolve and evaluate
+    // through both paths to the same value
+    val args = Map(
+      "graft_dot" -> Seq("array(1.0D, 2.0D)", "array(3.0D, 4.0D)"),
+      "graft_minhash" -> Seq("array(1L, 2L, 3L)"),
+      "graft_minhash_str" -> Seq("array('a b c', 'b c d')"),
+      "graft_simhash" -> Seq("array(1L, 2L, 3L)"),
+      "graft_sorted_intersect" -> Seq("array('a', 'b')", "array('b', 'c')"),
+      "graft_shingle_hashes" -> Seq("array('a', 'b', 'c', 'd', 'e', 'f')"),
+      "graft_sorted_intersect_long" -> Seq("array(1L, 2L, 3L)", "array(2L, 3L, 4L)"),
+      "graft_winnow" -> Seq("array('a', 'b', 'c', 'd', 'e', 'f', 'g', 'h')"),
+      "graft_sorted_intersect_minw" ->
+        Seq("array(1L, 2L, 3L)", "array(5L, 6L, 7L)", "array(2L, 3L)", "array(1L, 9L)"),
+      "graft_sorted_intersect_arr" -> Seq("array(1L, 2L, 3L)", "array(2L, 3L, 4L)"),
+      "graft_holt" -> Seq("array(1L, 2L, 3L, 4L, 5L)"),
+      "graft_holt_winters" -> Seq("array(1L, 2L, 3L, 4L, 5L, 6L)", "2"))
+    assert(args.keySet === registered)
+    args.foreach { case (name, as) =>
+      val built = injected.lookupFunction(FunctionIdentifier(name),
+        as.map(a => PlanBridge.expression(expr(a))))
+      val viaExt = fresh.range(1).select(PlanBridge.column(built)).collect().toSeq
+      val viaSql = fresh.sql(s"SELECT $name(${as.mkString(", ")})").collect().toSeq
+      assert(viaExt === viaSql, name)
+    }
   }
 }

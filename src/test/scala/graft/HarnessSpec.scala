@@ -1,0 +1,47 @@
+package graft
+
+import java.io.File
+import java.nio.file.Files
+import java.util.regex.Pattern
+import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
+
+/** Harness's env parse (no session is built) and a `src/main` scan that
+  * keeps each session and registration decision in its one owner. */
+class HarnessSpec extends AnyFunSuite {
+
+  test("SPARK_GRAFT_CPUS parses once as a positive Int, else one line naming it") {
+    def cpus(raw: Option[String]) = Harness.positive("SPARK_GRAFT_CPUS", raw, 32)
+    assert(cpus(None) === Right(32))
+    assert(cpus(Some("8")) === Right(8))
+    Seq("0", "-2", "abc", "", " 4", "4.0", "99999999999").foreach { v =>
+      assert(cpus(Some(v)) === Left(s"bad SPARK_GRAFT_CPUS: '$v'"), v)
+    }
+  }
+
+  /** file name -> occurrences of `needle` in src/main/scala. */
+  private def occurrences(needle: String): Map[String, Int] = {
+    val root = new File("src/main/scala")
+    assert(root.isDirectory, s"run from the repo root (cwd ${new File(".").getAbsolutePath})")
+    val s = Files.walk(root.toPath)
+    try s.iterator().asScala.filter(_.toString.endsWith(".scala"))
+      .map(p => p.getFileName.toString ->
+        Pattern.quote(needle).r.findAllMatchIn(new String(Files.readAllBytes(p), "UTF-8")).size)
+      .filter(_._2 > 0).toMap
+    finally s.close()
+  }
+
+  test("sessions, warmup and function registration each have one owner in src/main") {
+    assert(occurrences("SparkSession.builder") === Map("Harness.scala" -> 1),
+      "build sessions with graft.Harness.session")
+    assert(occurrences("SPARK_GRAFT_WARMUP_DIR").keySet === Set("Harness.scala"),
+      "warm up with graft.Harness.warmup")
+    assert(occurrences("SPARK_GRAFT_CPUS").keySet === Set("Harness.scala"))
+    assert(occurrences("injectFunction(") === Map("GraftExtensions.scala" -> 1),
+      "inject kernels by looping over VectorFunctions.kernels")
+    assert(occurrences("createOrReplaceTempFunction(") === Map("VectorExpressions.scala" -> 1),
+      "register kernels by looping over VectorFunctions.kernels")
+    assert(occurrences("getRDDStorageInfo") === Map("PlanBridge.scala" -> 1),
+      "one measured-stats LogicalRDD rebuild (PlanBridge.measured)")
+  }
+}
