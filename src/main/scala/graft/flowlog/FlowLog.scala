@@ -3,6 +3,8 @@ package graft.flowlog
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 import java.util.zip.GZIPInputStream
 
+import scala.util.Using
+
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -38,15 +40,17 @@ object FlowLog {
       StructField("timestamp", LongType),
       StructField("message", StringType)))))))
 
-  private def gunzipBytes(bytes: Array[Byte]): String = {
-    val in = new GZIPInputStream(new ByteArrayInputStream(bytes))
-    val out = new ByteArrayOutputStream()
-    val buf = new Array[Byte](8192)
-    var n = in.read(buf)
-    while (n > 0) { out.write(buf, 0, n); n = in.read(buf) }
-    in.close()
-    new String(out.toByteArray, java.nio.charset.StandardCharsets.UTF_8)
-  }
+  /** Closes the stream on every path, so a payload that fails mid-read
+    * ends its Inflater's native buffer at once instead of leaving it to
+    * the GC cleaner. */
+  private def gunzipBytes(bytes: Array[Byte]): String =
+    Using.resource(new GZIPInputStream(new ByteArrayInputStream(bytes))) { in =>
+      val out = new ByteArrayOutputStream()
+      val buf = new Array[Byte](8192)
+      var n = in.read(buf)
+      while (n > 0) { out.write(buf, 0, n); n = in.read(buf) }
+      new String(out.toByteArray, java.nio.charset.StandardCharsets.UTF_8)
+    }
 
   /** gunzip as a UDF; returns null (→ quarantine) on corrupt payloads. */
   val gunzip = udf { (bytes: Array[Byte]) =>
@@ -183,9 +187,11 @@ object FlowLog {
     df.withColumn("dt", date_format(col("start_ts"), "yyyy-MM-dd"))
       .withColumn("hr", date_format(col("start_ts"), "HH"))
 
-  /** Partitioned, idempotent Parquet sink — the reference pipeline's output
-    * layout (`dt=YYYY-MM-DD/hr=HH/`). Overwrite mode + deterministic input
-    * makes re-runs idempotent per partition. */
+  /** Partitioned Parquet sink — the reference pipeline's output layout
+    * (`dt=YYYY-MM-DD/hr=HH/`). Under Spark's default static
+    * `partitionOverwriteMode`, overwrite replaces EVERY partition under
+    * `path`, not only the ones `df` touches, so `path` must hold this
+    * write alone (both callers write into a fresh staging or temp dir). */
   def writePartitioned(df: DataFrame, path: String): Unit =
     df.write.partitionBy("dt", "hr").mode("overwrite").parquet(path)
 
@@ -244,6 +250,27 @@ object FlowLog {
         col("b.srcaddr").as("addr_rev"), col("b.srcport").as("port_rev"),
         col("a.bytes").as("bytes_fwd"), col("b.bytes").as("bytes_rev"),
         col("a.action").as("action_fwd"), col("b.action").as("action_rev"))
+  }
+
+  /** Exfiltration view over the flow_direction extension (v5+): per
+    * destination /24 subnet (dstaddr's first three octets) and `keys`,
+    * ingress and egress byte totals and the flow count, kept where BOTH
+    * directions occurred, with exfil_ratio = egress / ingress (one double
+    * division of exact BIGINTs). Bytes add only when flow_direction is
+    * exactly 'ingress' or 'egress'; any other value counts in n_flows
+    * alone. The batch `flowlog_exfil_ratio` query and
+    * `FlowLogStream.streamExfilRatio` (keyed by its day window) are both
+    * this definition, so stream ≡ batch holds by construction. */
+  def exfilRatio(flows: DataFrame, keys: Column*): DataFrame = {
+    def bytesTo(direction: String) =
+      sum(when(col("flow_direction") === direction, col("bytes")).otherwise(0L))
+    flows.filter(col("flow_direction").isNotNull)
+      .groupBy(substring_index(col("dstaddr"), ".", 3).as("subnet") +: keys: _*)
+      .agg(bytesTo("ingress").as("ingress_bytes"),
+        bytesTo("egress").as("egress_bytes"), count(lit(1)).as("n_flows"))
+      .filter(col("ingress_bytes") > 0 && col("egress_bytes") > 0)
+      .withColumn("exfil_ratio",
+        col("egress_bytes").cast("double") / col("ingress_bytes").cast("double"))
   }
 
   /** Port-scan heuristic: sources probing many distinct dst ports. */

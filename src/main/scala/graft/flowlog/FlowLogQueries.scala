@@ -411,31 +411,17 @@ object FlowLogQueries {
 
     // Exfiltration heuristic over the flow_direction extension (v5+): per
     // destination /24 subnet, egress vs ingress byte totals and their
-    // ratio — the asymmetry view a hunt team scans for data pull-out.
+    // ratio — the asymmetry view a hunt team scans for data pull-out
+    // (FlowLog.exfilRatio, shared with the streaming monitor).
     // Only v5/v7 lines carry flow_direction (the fixture's even ids;
     // mirrors are v2 and fall out via the null check), and within every
     // subnet class both directions occur structurally at every scale
     // ((event_id div 2) alternates parity inside each 20-id window, and
     // 25 ∤ 4 keeps the subnet classes direction-mixed), so the both-sides
     // HAVING guard is non-vacuous everywhere. One map-side-combinable
-    // groupBy; the ratio is one double division of exact BIGINTs.
+    // groupBy.
     "flowlog_exfil_ratio" -> { (s, d) =>
-      val v5 = parsedFlowP(s, d)
-        .filter(col("flow_direction").isNotNull)
-        .select(concat(lit("10.1."),
-          element_at(split(col("dstaddr"), "\\."), 3)).as("subnet"),
-          col("bytes"), col("flow_direction"))
-      v5.groupBy(col("subnet"))
-        .agg(sum(when(col("flow_direction") === "ingress", col("bytes"))
-          .otherwise(0L)).as("ingress_bytes"),
-          sum(when(col("flow_direction") === "egress", col("bytes"))
-            .otherwise(0L)).as("egress_bytes"),
-          count(lit(1)).as("n_flows"))
-        .filter(col("ingress_bytes") > 0 && col("egress_bytes") > 0)
-        .select(col("subnet"), col("ingress_bytes"), col("egress_bytes"),
-          col("n_flows"),
-          (col("egress_bytes").cast("double") /
-            col("ingress_bytes").cast("double")).as("exfil_ratio"))
+      FlowLog.exfilRatio(parsedFlowP(s, d))
         .orderBy(col("exfil_ratio").desc, col("subnet").asc)
     },
 

@@ -1,8 +1,10 @@
 package graft.flowlog
 
+import java.sql.Timestamp
+
+import graft.streaming.EventTimeFold
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** STREAMING twins of the flow-log security detectors (VERDICT r14 #1) —
   * the deployment shape of the declared batch analytics: the reference is
@@ -10,150 +12,127 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * would actually run as stateful operators over the envelope stream, not
   * as nightly batch scans.
   *
-  * Both detectors consume the SAME ingestion seam as the batch queries —
+  * Every detector consumes the SAME ingestion seam as the batch queries —
   * binary gzip envelopes → [[FlowLog.decodeEnvelopes]] →
   * [[FlowLog.parseFlowLogs]] — so stream ≡ batch is structural up to the
   * stateful fold, and FlowLogStreamSpec pins the fold itself against the
-  * batch aggregation on the fixture (the streamCusum discipline).
+  * batch aggregation on the fixture.
   *
-  * State design (the 100 TB stream):
-  *  - Keys are DAY-SCOPED — (srcaddr, day) / (srcaddr, dstport, day) — so
-  *    state RETIRES: once the watermark passes the key's day end, the key
-  *    emits its FINAL report and is removed (state.remove — asserted via
-  *    lastProgress.stateOperators.numRowsTotal in the spec). An unscoped
-  *    per-source key would grow state monotonically with the address
-  *    space; the day scope is also the semantics a hunt team wants
-  *    (yesterday's scanner is a new incident today). The round-13 rule
-  *    applies: an idle day key arms a DAY-END event-time timer or it
-  *    would never be re-invoked and never retire.
-  *  - Per-key state is bounded: the port-scan distinct-port set by the
-  *    65536-port domain, the beacon summary O(1) — plus the in-horizon
-  *    pending buffer, bounded by the watermark delay (never stream
-  *    length).
-  *  - Order correctness: both folds are order-SENSITIVE (the onset time,
-  *    the gap sequence), so rows buffer in state and fold only STRICTLY
-  *    below the watermark in deterministic (ts, tiebreak) order — the
-  *    streamCusum at-or-below rule (an equal-ts row can still arrive).
-  *  - Alerts are ONSETS (Append mode): the port-scan detector emits one
-  *    ONSET row the moment a source's distinct-port count crosses the
-  *    threshold — the actionable moment — and one FINAL row per suspect
-  *    at day close carrying the same (n_ports, n_rejects) the batch
-  *    query reports. The beacon detector emits per-channel FINAL stats at
-  *    day close (ranking/limit is the reading query's job — a streaming
-  *    top-k over an unbounded key space would itself need a sketch).
+  * Keys are DAY-SCOPED — (srcaddr, day), (srcaddr, dstport, day), … — so
+  * state retires: once the watermark passes the key's day end, the key
+  * emits its FINAL report and is removed. An unscoped per-source key would
+  * grow state monotonically with the address space; the day scope is also
+  * the semantics a hunt team wants (yesterday's scanner is a new incident
+  * today). The order-sensitive folds (onset times, gap sequences) run on
+  * [[EventTimeFold]], which owns the buffering, release rule, retirement
+  * and timers; each detector below keeps its projection, key, fold order,
+  * step and day-close row. The exfil monitor's fold is two order-
+  * insensitive sums, so it is a plain windowed aggregation.
+  *
+  * Alerts are ONSETS (Append mode): the port-scan detector emits one ONSET
+  * row the moment a source's distinct-port count crosses the threshold —
+  * the actionable moment — and one FINAL row per suspect at day close
+  * carrying the same (n_ports, n_rejects) the batch query reports. The
+  * beacon detector emits per-channel FINAL stats at day close
+  * (ranking/limit is the reading query's job — a streaming top-k over an
+  * unbounded key space would itself need a sketch).
+  *
+  * NOTE on the event-time clock: each watermark tracks the DETECTOR'S OWN
+  * population — Spark pushes non-event-time filters below the
+  * EventTimeWatermark node (measured: a filtered-out far-future row does
+  * not advance the watermark). Day close therefore requires in-population
+  * traffic; an operator needing wall-clock closure on a silent population
+  * would use a processing-time policy instead.
   */
 object FlowLogStream {
 
-  private def msToTs(ms: Long): java.sql.Timestamp = new java.sql.Timestamp(ms)
+  private def msToTs(ms: Long): Timestamp = new Timestamp(ms)
 
-  /** UTC midnight of the timestamp's day, as the key's day handle. */
-  private def dayTs(t: java.sql.Timestamp): java.sql.Timestamp =
-    new java.sql.Timestamp(Math.floorDiv(t.getTime, 86400000L) * 86400000L)
+  private def parsed(envelopes: DataFrame): DataFrame =
+    FlowLog.parseFlowLogs(FlowLog.decodeEnvelopes(envelopes))
 
   // ---------------------------------------------------------------- port scan
 
-  case class PsIn(srcaddr: String, ts: java.sql.Timestamp, dstport: Int,
+  case class PsIn(srcaddr: String, ts: Timestamp, dstport: Int,
       reject: Boolean)
   case class PsPend(ts_ms: Long, dstport: Int, reject: Boolean)
-  case class PsBuf(ports: List[Int], n_flows: Long, n_rejects: Long,
-      alerted: Boolean, pending: List[PsPend])
+  case class PsSum(ports: List[Int], n_flows: Long, n_rejects: Long,
+      alerted: Boolean)
   /** kind = ONSET (threshold crossing, ts = the crossing flow's start) or
     * FINAL (day-close report, ts = day end; counts are the full day's —
     * the batch query's row for that (srcaddr, day)). */
   case class PortScanAlert(kind: String, srcaddr: String,
-      day: java.sql.Timestamp, ts: java.sql.Timestamp,
+      day: Timestamp, ts: Timestamp,
       n_ports: Long, n_rejects: Long, n_flows: Long)
 
   /** Streaming port-scan detector over raw envelope bytes — the streaming
     * twin of the declared `flowlog_port_scan` (FlowLog.portScanSuspects),
     * day-scoped. Filter matches the batch query exactly: parsed OK lines
-    * with a dstport (NODATA/SKIPDATA/quarantine fall out). */
+    * with a dstport (NODATA/SKIPDATA/quarantine fall out). The
+    * distinct-port set is bounded by the 65536-port domain. */
   def streamPortScan(envelopes: DataFrame, minPorts: Int = 10,
       watermark: String = "30 minutes"): Dataset[PortScanAlert] = {
     val spark = envelopes.sparkSession
     import spark.implicits._
-    // NOTE on the event-time clock: the watermark tracks the DETECTOR'S
-    // OWN population — Spark pushes non-event-time filters below the
-    // EventTimeWatermark node, so placing withWatermark "before" the
-    // filter changes nothing (measured: a filtered-out far-future row
-    // does not advance the watermark). Day-close therefore requires
-    // in-population traffic; an operator needing wall-clock closure on a
-    // silent population would use a processing-time policy instead.
-    FlowLog.parseFlowLogs(FlowLog.decodeEnvelopes(envelopes))
-      .filter(col("parse_error").isNull && col("dstport").isNotNull &&
-        col("srcaddr").isNotNull)
-      .select(col("srcaddr"), col("start_ts").as("ts"), col("dstport"),
-        (col("action") === "REJECT").as("reject"))
-      .withWatermark("ts", watermark)
-      .as[PsIn]
-      .groupByKey(r => (r.srcaddr, dayTs(r.ts)))
-      .flatMapGroupsWithState[PsBuf, PortScanAlert](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (key: (String, java.sql.Timestamp), rows: Iterator[PsIn],
-            state: GroupState[PsBuf]) =>
-          portScanHandle(key._1, key._2, rows, state, minPorts)
-      }
+    EventTimeFold.run(
+      parsed(envelopes)
+        .filter(col("parse_error").isNull && col("dstport").isNotNull &&
+          col("srcaddr").isNotNull)
+        .select(col("srcaddr"), col("start_ts").as("ts"), col("dstport"),
+          (col("action") === "REJECT").as("reject"))
+        .withWatermark("ts", watermark)
+        .as[PsIn]
+        .groupByKey(r => (r.srcaddr, EventTimeFold.day(r.ts))),
+      portScanFold(minPorts))(r => PsPend(r.ts.getTime, r.dstport, r.reject))
   }
 
-  private[flowlog] def portScanHandle(src: String, day: java.sql.Timestamp,
-      rows: Iterator[PsIn], state: GroupState[PsBuf],
-      minPorts: Int): Iterator[PortScanAlert] = {
-    val wm = state.getCurrentWatermarkMs()
-    val dayEndMs = day.getTime + 86400000L
-    val prev = state.getOption.getOrElse(PsBuf(Nil, 0L, 0L, alerted = false, Nil))
-    val all = prev.pending ++
-      rows.map(r => PsPend(r.ts.getTime, r.dstport, r.reject))
-    // strictly below the watermark = certain (an equal-ts row can still
-    // arrive — the streamCusum rule)
-    val (ready, pending) = all.partition(_.ts_ms < wm)
-    var portSet = prev.ports.toSet
-    var nFlows = prev.n_flows
-    var nRejects = prev.n_rejects
-    var alerted = prev.alerted
-    val out = List.newBuilder[PortScanAlert]
-    // (ts, dstport) is a deterministic fold order: rows equal on both are
-    // interchangeable (same set/count effect), so the onset row is unique
-    ready.sortBy(p => (p.ts_ms, p.dstport)).foreach { p =>
-      nFlows += 1
-      if (p.reject) nRejects += 1
-      portSet += p.dstport
-      if (!alerted && portSet.size >= minPorts) {
-        alerted = true
-        out += PortScanAlert("ONSET", src, day, msToTs(p.ts_ms),
-          portSet.size.toLong, nRejects, nFlows)
-      }
-    }
-    if (pending.isEmpty && wm >= dayEndMs) {
-      // day closed: every remaining day row would be late (< dayEnd ≤ wm)
-      // and watermark-dropped, so the report is final — emit and retire
-      if (portSet.size >= minPorts)
-        out += PortScanAlert("FINAL", src, day, msToTs(dayEndMs),
-          portSet.size.toLong, nRejects, nFlows)
-      state.remove()
-    } else {
-      state.update(PsBuf(portSet.toList, nFlows, nRejects, alerted, pending))
-      // pending rows resume on the next watermark advance; an idle key
-      // arms its DAY END so retirement fires even if the key goes silent
-      state.setTimeoutTimestamp(
-        if (pending.nonEmpty) wm + 1 else math.max(dayEndMs, wm + 1))
-    }
-    out.result().iterator
-  }
+  private def portScanFold(minPorts: Int) =
+    EventTimeFold[(String, Timestamp), PsPend, PsSum, PortScanAlert](
+      PsSum(Nil, 0L, 0L, alerted = false), _.ts_ms,
+      // (ts, dstport) is a deterministic fold order: rows equal on both are
+      // interchangeable (same set/count effect), so the onset row is unique
+      Ordering.by((p: PsPend) => (p.ts_ms, p.dstport)),
+      k => Some(EventTimeFold.dayEnd(k._2)),
+      { case ((src, day), s, ready) =>
+        var portSet = s.ports.toSet
+        var nFlows = s.n_flows
+        var nRejects = s.n_rejects
+        var alerted = s.alerted
+        val out = List.newBuilder[PortScanAlert]
+        ready.foreach { p =>
+          nFlows += 1
+          if (p.reject) nRejects += 1
+          portSet += p.dstport
+          if (!alerted && portSet.size >= minPorts) {
+            alerted = true
+            out += PortScanAlert("ONSET", src, day, msToTs(p.ts_ms),
+              portSet.size.toLong, nRejects, nFlows)
+          }
+        }
+        (PsSum(portSet.toList, nFlows, nRejects, alerted), out.result())
+      },
+      { case ((src, day), s) =>
+        val nPorts = s.ports.size
+        if (nPorts < minPorts) None
+        else Some(PortScanAlert("FINAL", src, day,
+          msToTs(EventTimeFold.dayEnd(day)), nPorts.toLong, s.n_rejects,
+          s.n_flows))
+      })
 
   // ------------------------------------------------- refined SYN scan
 
-  case class SsIn(srcaddr: String, ts: java.sql.Timestamp,
+  case class SsIn(srcaddr: String, ts: Timestamp,
       dstport: Option[Int], syn: Boolean, reject: Boolean)
   case class SsPend(ts_ms: Long, dstport: Option[Int], syn: Boolean,
       reject: Boolean)
-  case class SsBuf(ports: List[Int], n_syn_flows: Long, n_syn_rejects: Long,
-      n_flows: Long, alerted: Boolean, pending: List[SsPend])
+  case class SsSum(ports: List[Int], n_syn_flows: Long, n_syn_rejects: Long,
+      n_flows: Long, alerted: Boolean)
   /** kind = ONSET (the source's distinct SYN-no-ACK port count crossed
     * minPorts — ts = the crossing flow's start, counts as of the crossing)
     * or FINAL (day-close report, ts = day end; the full day's counts —
     * the batch `flowlog_syn_scan_refined` row for that (srcaddr, day)). */
   case class SynScanAlert(kind: String, srcaddr: String,
-      day: java.sql.Timestamp, ts: java.sql.Timestamp, n_syn_ports: Long,
+      day: Timestamp, ts: Timestamp, n_syn_ports: Long,
       n_syn_flows: Long, n_syn_rejects: Long, n_flows: Long)
 
   /** Streaming twin of the refined SYN-scan detector
@@ -162,97 +141,77 @@ object FlowLogStream {
     * with ACK clear (flags & 16 == 0) marks an unanswered connection
     * attempt, and a source probing ≥ minPorts DISTINCT ports with such
     * flows inside one UTC day is a scanner. Day-scoped like
-    * [[streamPortScan]] (yesterday's scanner is a new incident today);
-    * the population filter matches the batch query exactly — every
-    * tcp_flags-carrying line counts in n_flows, only SYN-no-ACK flows
-    * feed the port set and the syn counters.
-    *
-    * State: the distinct-port set is bounded by the 65536-port domain;
-    * counters are O(1); the pending buffer is watermark-horizon-bounded.
-    * The ONSET timestamp is order-sensitive, so rows buffer and fold
-    * strictly below the watermark in deterministic (ts, port, syn,
-    * reject) order — fully identical rows are interchangeable, so the
-    * crossing row is unique (the streamCusum rule). */
+    * [[streamPortScan]]; the population filter matches the batch query
+    * exactly — every tcp_flags-carrying line counts in n_flows (so v2
+    * traffic cannot advance this detector's clock), only SYN-no-ACK flows
+    * feed the port set and the syn counters. */
   def streamSynScanRefined(envelopes: DataFrame, minPorts: Int = 5,
       watermark: String = "30 minutes"): Dataset[SynScanAlert] = {
     val spark = envelopes.sparkSession
     import spark.implicits._
-    // same event-time-clock note as streamPortScan: the watermark tracks
-    // the tcp_flags-carrying population (filters push below the watermark
-    // node — v2 traffic cannot advance this detector's clock)
-    FlowLog.parseFlowLogs(FlowLog.decodeEnvelopes(envelopes))
-      .filter(col("tcp_flags").isNotNull)
-      .select(col("srcaddr"), col("start_ts").as("ts"), col("dstport"),
-        ((col("tcp_flags").cast("int").bitwiseAND(lit(2)) =!= 0) &&
-          (col("tcp_flags").cast("int").bitwiseAND(lit(16)) === 0)).as("syn"),
-        coalesce(col("action") === "REJECT", lit(false)).as("reject"))
-      .withWatermark("ts", watermark)
-      .as[SsIn]
-      .groupByKey(r => (r.srcaddr, dayTs(r.ts)))
-      .flatMapGroupsWithState[SsBuf, SynScanAlert](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (key: (String, java.sql.Timestamp), rows: Iterator[SsIn],
-            state: GroupState[SsBuf]) =>
-          synScanHandle(key._1, key._2, rows, state, minPorts)
-      }
+    EventTimeFold.run(
+      parsed(envelopes)
+        .filter(col("tcp_flags").isNotNull)
+        .select(col("srcaddr"), col("start_ts").as("ts"), col("dstport"),
+          ((col("tcp_flags").cast("int").bitwiseAND(lit(2)) =!= 0) &&
+            (col("tcp_flags").cast("int").bitwiseAND(lit(16)) === 0)).as("syn"),
+          coalesce(col("action") === "REJECT", lit(false)).as("reject"))
+        .withWatermark("ts", watermark)
+        .as[SsIn]
+        .groupByKey(r => (r.srcaddr, EventTimeFold.day(r.ts))),
+      synScanFold(minPorts))(
+      r => SsPend(r.ts.getTime, r.dstport, r.syn, r.reject))
   }
 
-  private[flowlog] def synScanHandle(src: String, day: java.sql.Timestamp,
-      rows: Iterator[SsIn], state: GroupState[SsBuf],
-      minPorts: Int): Iterator[SynScanAlert] = {
-    val wm = state.getCurrentWatermarkMs()
-    val dayEndMs = day.getTime + 86400000L
-    val prev = state.getOption.getOrElse(
-      SsBuf(Nil, 0L, 0L, 0L, alerted = false, Nil))
-    val all = prev.pending ++
-      rows.map(r => SsPend(r.ts.getTime, r.dstport, r.syn, r.reject))
-    val (ready, pending) = all.partition(_.ts_ms < wm)
-    var portSet = prev.ports.toSet
-    var nSynFlows = prev.n_syn_flows
-    var nSynRejects = prev.n_syn_rejects
-    var nFlows = prev.n_flows
-    var alerted = prev.alerted
-    val out = List.newBuilder[SynScanAlert]
-    // deterministic fold order; rows equal on all four fields are
-    // interchangeable (same set/count effect), so the onset row is unique
-    ready.sortBy(p => (p.ts_ms, p.dstport.getOrElse(-1), p.syn, p.reject))
-      .foreach { p =>
-        nFlows += 1
-        if (p.syn) {
-          nSynFlows += 1
-          if (p.reject) nSynRejects += 1
-          p.dstport.foreach(portSet += _)
-          if (!alerted && portSet.size >= minPorts) {
-            alerted = true
-            out += SynScanAlert("ONSET", src, day, msToTs(p.ts_ms),
-              portSet.size.toLong, nSynFlows, nSynRejects, nFlows)
+  private def synScanFold(minPorts: Int) =
+    EventTimeFold[(String, Timestamp), SsPend, SsSum, SynScanAlert](
+      SsSum(Nil, 0L, 0L, 0L, alerted = false), _.ts_ms,
+      // rows equal on all four fields are interchangeable (same set/count
+      // effect), so the onset row is unique
+      Ordering.by((p: SsPend) =>
+        (p.ts_ms, p.dstport.getOrElse(-1), p.syn, p.reject)),
+      k => Some(EventTimeFold.dayEnd(k._2)),
+      { case ((src, day), s, ready) =>
+        var portSet = s.ports.toSet
+        var nSynFlows = s.n_syn_flows
+        var nSynRejects = s.n_syn_rejects
+        var nFlows = s.n_flows
+        var alerted = s.alerted
+        val out = List.newBuilder[SynScanAlert]
+        ready.foreach { p =>
+          nFlows += 1
+          if (p.syn) {
+            nSynFlows += 1
+            if (p.reject) nSynRejects += 1
+            p.dstport.foreach(portSet += _)
+            if (!alerted && portSet.size >= minPorts) {
+              alerted = true
+              out += SynScanAlert("ONSET", src, day, msToTs(p.ts_ms),
+                portSet.size.toLong, nSynFlows, nSynRejects, nFlows)
+            }
           }
         }
-      }
-    if (pending.isEmpty && wm >= dayEndMs) {
-      if (portSet.size >= minPorts)
-        out += SynScanAlert("FINAL", src, day, msToTs(dayEndMs),
-          portSet.size.toLong, nSynFlows, nSynRejects, nFlows)
-      state.remove()
-    } else {
-      state.update(SsBuf(portSet.toList, nSynFlows, nSynRejects, nFlows,
-        alerted, pending))
-      state.setTimeoutTimestamp(
-        if (pending.nonEmpty) wm + 1 else math.max(dayEndMs, wm + 1))
-    }
-    out.result().iterator
-  }
+        (SsSum(portSet.toList, nSynFlows, nSynRejects, nFlows, alerted),
+          out.result())
+      },
+      { case ((src, day), s) =>
+        val nPorts = s.ports.size
+        if (nPorts < minPorts) None
+        else Some(SynScanAlert("FINAL", src, day,
+          msToTs(EventTimeFold.dayEnd(day)), nPorts.toLong, s.n_syn_flows,
+          s.n_syn_rejects, s.n_flows))
+      })
 
   // ---------------------------------------------------- beacon regularity
 
-  case class BcIn(srcaddr: String, dstport: Int, ts: java.sql.Timestamp)
+  case class BcIn(srcaddr: String, dstport: Int, ts: Timestamp)
   case class BcPend(start_s: Long)
   /** O(1) gap summary: last folded start_s + (n, Σg, Σg²) — exactly the
     * integers the batch dispersion m·Σg²−(Σg)² needs. */
-  case class BcBuf(has_last: Boolean, last_s: Long, n_flows: Long,
-      span_s: Long, ss: Long, pending: List[BcPend])
+  case class BcSum(has_last: Boolean, last_s: Long, n_flows: Long,
+      span_s: Long, ss: Long)
   case class BeaconReport(srcaddr: String, dstport: Long,
-      day: java.sql.Timestamp, n_flows: Long, span_s: Long,
+      day: Timestamp, n_flows: Long, span_s: Long,
       dispersion: Long)
 
   /** Streaming beacon-regularity detector — the streaming twin of
@@ -266,122 +225,88 @@ object FlowLogStream {
       watermark: String = "30 minutes"): Dataset[BeaconReport] = {
     val spark = envelopes.sparkSession
     import spark.implicits._
-    // same event-time-clock note as streamPortScan: the watermark tracks
-    // the filtered population (filter pushdown through the watermark node)
-    FlowLog.parseFlowLogs(FlowLog.decodeEnvelopes(envelopes))
-      .filter(col("log_status") === "OK" && col("parse_error").isNull &&
-        col("dstport").isNotNull)
-      .select(col("srcaddr"), col("dstport"), col("start_ts").as("ts"))
-      .withWatermark("ts", watermark)
-      .as[BcIn]
-      .groupByKey(r => (r.srcaddr, r.dstport, dayTs(r.ts)))
-      .flatMapGroupsWithState[BcBuf, BeaconReport](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (key: (String, Int, java.sql.Timestamp), rows: Iterator[BcIn],
-            state: GroupState[BcBuf]) =>
-          beaconHandle(key._1, key._2, key._3, rows, state, minFlows)
-      }
+    EventTimeFold.run(
+      parsed(envelopes)
+        .filter(col("log_status") === "OK" && col("parse_error").isNull &&
+          col("dstport").isNotNull)
+        .select(col("srcaddr"), col("dstport"), col("start_ts").as("ts"))
+        .withWatermark("ts", watermark)
+        .as[BcIn]
+        .groupByKey(r => (r.srcaddr, r.dstport, EventTimeFold.day(r.ts))),
+      beaconFold(minFlows))(r => BcPend(r.ts.getTime / 1000L))
   }
+
+  private def beaconFold(minFlows: Int) =
+    EventTimeFold[(String, Int, Timestamp), BcPend, BcSum, BeaconReport](
+      BcSum(has_last = false, 0L, 0L, 0L, 0L), _.start_s * 1000L,
+      Ordering.by((p: BcPend) => p.start_s),
+      k => Some(EventTimeFold.dayEnd(k._3)),
+      { (_, s, ready) =>
+        var hasLast = s.has_last
+        var lastS = s.last_s
+        var n = s.n_flows
+        var span = s.span_s
+        var ss = s.ss
+        ready.foreach { p =>
+          if (hasLast) {
+            val g = p.start_s - lastS
+            span += g
+            ss += g * g
+          } else hasLast = true
+          lastS = p.start_s
+          n += 1
+        }
+        (BcSum(hasLast, lastS, n, span, ss), Nil)
+      },
+      { case ((src, dstport, day), s) =>
+        // m·Σg² − (Σg)² over m = n−1 gaps; Σg telescopes to ≤ the day
+        // span, so the product is overflow-safe (the batch query's bound)
+        if (s.n_flows < minFlows) None
+        else Some(BeaconReport(src, dstport.toLong, day, s.n_flows, s.span_s,
+          (s.n_flows - 1L) * s.ss - s.span_s * s.span_s))
+      })
 
   // ------------------------------------------------------- exfil ratio
 
-  /** `direction` carries the raw flow_direction string — NOT a Boolean —
-    * so the fold can mirror the batch query's shape exactly: bytes add
-    * only when the value is exactly 'ingress' or 'egress', any other
-    * value counts in n_flows alone (an egress-test Boolean would silently
-    * fold a third direction value into ingress — stream ≠ batch). */
-  case class ExIn(subnet: String, ts: java.sql.Timestamp, bytes: Long,
-      direction: String)
-  case class ExPend(ts_ms: Long, bytes: Long, direction: String)
-  case class ExBuf(ingress_bytes: Long, egress_bytes: Long, n_flows: Long,
-      pending: List[ExPend])
-  case class ExfilReport(subnet: String, day: java.sql.Timestamp,
+  case class ExfilReport(subnet: String, day: Timestamp,
       ingress_bytes: Long, egress_bytes: Long, n_flows: Long,
       exfil_ratio: Double)
 
   /** Streaming exfiltration monitor — the streaming twin of
-    * `flowlog_exfil_ratio`, day-scoped: per destination /24 subnet,
-    * ingress/egress byte totals over the extension-carrying lines, with
-    * one FINAL report per (subnet, day) at day close when BOTH directions
-    * occurred (the batch HAVING guard). The fold is ORDER-INSENSITIVE
-    * (two long sums), so unlike the port-scan/beacon folds there is no
-    * need to sort — but rows still buffer until strictly below the
-    * watermark so a killed-and-restarted query never double-counts a row
-    * that was read but not yet committed (the sums live in state, the
-    * uncommitted rows replay). Day-end timer retirement as in
-    * [[portScanHandle]]; the ratio is one double division of exact
-    * BIGINTs at emission. */
+    * `flowlog_exfil_ratio`: [[FlowLog.exfilRatio]] keyed by a 1-day
+    * event-time window, so one FINAL report per (subnet, UTC day) is
+    * appended once the watermark passes the day's end, when BOTH
+    * directions occurred (the batch HAVING guard). The fold is two
+    * order-insensitive sums, so Spark's aggregation state holds it and a
+    * killed-and-restarted query resumes from its checkpoint without a
+    * hand-held buffer; the watermark tracks the extension-carrying
+    * population. */
   def streamExfilRatio(envelopes: DataFrame,
       watermark: String = "30 minutes"): Dataset[ExfilReport] = {
     val spark = envelopes.sparkSession
     import spark.implicits._
-    // same event-time-clock note as streamPortScan: the watermark tracks
-    // the extension-carrying population (filter pushdown through the
-    // watermark node means v2-only traffic cannot advance the clock)
-    FlowLog.parseFlowLogs(FlowLog.decodeEnvelopes(envelopes))
-      .filter(col("flow_direction").isNotNull)
-      .select(concat(lit("10.1."),
-          element_at(split(col("dstaddr"), "\\."), 3)).as("subnet"),
-        col("start_ts").as("ts"), col("bytes"),
-        col("flow_direction").as("direction"))
-      .withWatermark("ts", watermark)
-      .as[ExIn]
-      .groupByKey(r => (r.subnet, dayTs(r.ts)))
-      .flatMapGroupsWithState[ExBuf, ExfilReport](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (key: (String, java.sql.Timestamp), rows: Iterator[ExIn],
-            state: GroupState[ExBuf]) =>
-          exfilHandle(key._1, key._2, rows, state)
-      }
-  }
-
-  private[flowlog] def exfilHandle(subnet: String, day: java.sql.Timestamp,
-      rows: Iterator[ExIn], state: GroupState[ExBuf]): Iterator[ExfilReport] = {
-    val wm = state.getCurrentWatermarkMs()
-    val dayEndMs = day.getTime + 86400000L
-    val prev = state.getOption.getOrElse(ExBuf(0L, 0L, 0L, Nil))
-    val all = prev.pending ++
-      rows.map(r => ExPend(r.ts.getTime, r.bytes, r.direction))
-    val (ready, pending) = all.partition(_.ts_ms < wm)
-    var in = prev.ingress_bytes
-    var eg = prev.egress_bytes
-    var n = prev.n_flows
-    ready.foreach { p =>
-      // exact-match adds mirror the batch sum(when(=== 'ingress'/'egress'))
-      // shape: a third direction value contributes to n_flows only
-      if (p.direction == "egress") eg += p.bytes
-      else if (p.direction == "ingress") in += p.bytes
-      n += 1
-    }
-    val out = List.newBuilder[ExfilReport]
-    if (pending.isEmpty && wm >= dayEndMs) {
-      if (in > 0L && eg > 0L)
-        out += ExfilReport(subnet, day, in, eg, n,
-          eg.toDouble / in.toDouble)
-      state.remove()
-    } else {
-      state.update(ExBuf(in, eg, n, pending))
-      state.setTimeoutTimestamp(
-        if (pending.nonEmpty) wm + 1 else math.max(dayEndMs, wm + 1))
-    }
-    out.result().iterator
+    FlowLog.exfilRatio(parsed(envelopes).withWatermark("start_ts", watermark),
+        window(col("start_ts"), "1 day").as("w"))
+      .select(col("subnet"), col("w.start").as("day"), col("ingress_bytes"),
+        col("egress_bytes"), col("n_flows"), col("exfil_ratio"))
+      .as[ExfilReport]
   }
 
   // ------------------------------------------------ ECS service traffic
 
-  case class EsIn(cluster: String, service: String, ts: java.sql.Timestamp,
+  case class EsIn(cluster: String, service: String, ts: Timestamp,
       bytes: Long, task: String)
   case class EsPend(ts_ms: Long, bytes: Long, task: String)
-  case class EsBuf(tasks: List[String], n_flows: Long, total_bytes: Long,
-      alerted: Boolean, pending: List[EsPend])
+  case class EsSum(tasks: List[String], n_flows: Long, total_bytes: Long,
+      alerted: Boolean)
   /** kind = ONSET (the service's day bytes crossed minBytes — the budget/
     * anomaly alert moment, ts = the crossing flow's start, counts as of
     * the crossing) or FINAL (day-close report, ts = day end; the full
     * day's n_flows / total_bytes / exact distinct-task count — the batch
     * `flowlog_ecs_service_traffic` row for that (cluster, service, day)). */
   case class EcsServiceAlert(kind: String, ecs_cluster_name: String,
-      ecs_service_name: String, day: java.sql.Timestamp,
-      ts: java.sql.Timestamp, n_flows: Long, total_bytes: Long, n_tasks: Long)
+      ecs_service_name: String, day: Timestamp,
+      ts: Timestamp, n_flows: Long, total_bytes: Long, n_tasks: Long)
 
   /** Streaming ECS service-traffic monitor — the streaming twin of the v7
     * declared query `flowlog_ecs_service_traffic` (VERDICT r15 #4), so
@@ -393,111 +318,54 @@ object FlowLogStream {
     * batch is structural on a one-day fixture (FlowLogStreamSpec pins it,
     * plus kill/restart durability and retirement).
     *
-    * State: the byte/flow sums are O(1); the distinct-task set is bounded
-    * by the SERVICE'S live task count (an ECS deployment parameter —
-    * tens-to-hundreds, never corpus-scaled), exactly like the port-scan
-    * detector's 65536-port domain; the pending buffer is watermark-
-    * horizon-bounded. The ONSET timestamp is order-sensitive, so rows
-    * buffer and fold strictly below the watermark in deterministic
-    * (ts, task, bytes) order — fully identical rows are interchangeable,
-    * so the crossing row is unique (the streamCusum rule). */
+    * The distinct-task set is bounded by the SERVICE'S live task count
+    * (an ECS deployment parameter — tens-to-hundreds, never corpus-
+    * scaled), exactly like the port-scan detector's 65536-port domain. */
   def streamEcsServiceTraffic(envelopes: DataFrame, minBytes: Long,
       watermark: String = "30 minutes"): Dataset[EcsServiceAlert] = {
     val spark = envelopes.sparkSession
     import spark.implicits._
-    // same event-time-clock note as streamPortScan: the watermark tracks
-    // the v7 service-carrying population (filters push below the
-    // watermark node — v2/v5 traffic cannot advance this detector's clock)
-    FlowLog.parseFlowLogs(FlowLog.decodeEnvelopes(envelopes))
-      .filter(col("version") === 7 && col("ecs_service_name").isNotNull)
-      .select(col("ecs_cluster_name").as("cluster"),
-        col("ecs_service_name").as("service"),
-        col("start_ts").as("ts"), col("bytes"),
-        col("ecs_task_id").as("task"))
-      .withWatermark("ts", watermark)
-      .as[EsIn]
-      .groupByKey(r => (r.cluster, r.service, dayTs(r.ts)))
-      .flatMapGroupsWithState[EsBuf, EcsServiceAlert](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (key: (String, String, java.sql.Timestamp), rows: Iterator[EsIn],
-            state: GroupState[EsBuf]) =>
-          ecsServiceHandle(key._1, key._2, key._3, rows, state, minBytes)
-      }
+    EventTimeFold.run(
+      parsed(envelopes)
+        .filter(col("version") === 7 && col("ecs_service_name").isNotNull)
+        .select(col("ecs_cluster_name").as("cluster"),
+          col("ecs_service_name").as("service"),
+          col("start_ts").as("ts"), col("bytes"),
+          col("ecs_task_id").as("task"))
+        .withWatermark("ts", watermark)
+        .as[EsIn]
+        .groupByKey(r => (r.cluster, r.service, EventTimeFold.day(r.ts))),
+      ecsServiceFold(minBytes))(r => EsPend(r.ts.getTime, r.bytes, r.task))
   }
 
-  private[flowlog] def ecsServiceHandle(cluster: String, service: String,
-      day: java.sql.Timestamp, rows: Iterator[EsIn], state: GroupState[EsBuf],
-      minBytes: Long): Iterator[EcsServiceAlert] = {
-    val wm = state.getCurrentWatermarkMs()
-    val dayEndMs = day.getTime + 86400000L
-    val prev = state.getOption.getOrElse(
-      EsBuf(Nil, 0L, 0L, alerted = false, Nil))
-    val all = prev.pending ++
-      rows.map(r => EsPend(r.ts.getTime, r.bytes, r.task))
-    val (ready, pending) = all.partition(_.ts_ms < wm)
-    var taskSet = prev.tasks.toSet
-    var nFlows = prev.n_flows
-    var total = prev.total_bytes
-    var alerted = prev.alerted
-    val out = List.newBuilder[EcsServiceAlert]
-    ready.sortBy(p => (p.ts_ms, p.task, p.bytes)).foreach { p =>
-      nFlows += 1
-      total += p.bytes
-      taskSet += p.task
-      if (!alerted && total >= minBytes) {
-        alerted = true
-        out += EcsServiceAlert("ONSET", cluster, service, day,
-          msToTs(p.ts_ms), nFlows, total, taskSet.size.toLong)
-      }
-    }
-    if (pending.isEmpty && wm >= dayEndMs) {
-      out += EcsServiceAlert("FINAL", cluster, service, day,
-        msToTs(dayEndMs), nFlows, total, taskSet.size.toLong)
-      state.remove()
-    } else {
-      state.update(EsBuf(taskSet.toList, nFlows, total, alerted, pending))
-      state.setTimeoutTimestamp(
-        if (pending.nonEmpty) wm + 1 else math.max(dayEndMs, wm + 1))
-    }
-    out.result().iterator
-  }
-
-  private[flowlog] def beaconHandle(src: String, dstport: Int,
-      day: java.sql.Timestamp, rows: Iterator[BcIn],
-      state: GroupState[BcBuf], minFlows: Int): Iterator[BeaconReport] = {
-    val wm = state.getCurrentWatermarkMs()
-    val dayEndMs = day.getTime + 86400000L
-    val prev = state.getOption.getOrElse(
-      BcBuf(has_last = false, 0L, 0L, 0L, 0L, Nil))
-    val all = prev.pending ++ rows.map(r => BcPend(r.ts.getTime / 1000L))
-    val (ready, pending) = all.partition(_.start_s * 1000L < wm)
-    var hasLast = prev.has_last
-    var lastS = prev.last_s
-    var n = prev.n_flows
-    var span = prev.span_s
-    var ss = prev.ss
-    ready.sortBy(_.start_s).foreach { p =>
-      if (hasLast) {
-        val g = p.start_s - lastS
-        span += g
-        ss += g * g
-      } else hasLast = true
-      lastS = p.start_s
-      n += 1
-    }
-    val out = List.newBuilder[BeaconReport]
-    if (pending.isEmpty && wm >= dayEndMs) {
-      if (n >= minFlows)
-        // m·Σg² − (Σg)² over m = n−1 gaps; Σg telescopes to ≤ the day
-        // span, so the product is overflow-safe (the batch query's bound)
-        out += BeaconReport(src, dstport.toLong, day, n, span,
-          (n - 1L) * ss - span * span)
-      state.remove()
-    } else {
-      state.update(BcBuf(hasLast, lastS, n, span, ss, pending))
-      state.setTimeoutTimestamp(
-        if (pending.nonEmpty) wm + 1 else math.max(dayEndMs, wm + 1))
-    }
-    out.result().iterator
-  }
+  private def ecsServiceFold(minBytes: Long) =
+    EventTimeFold[(String, String, Timestamp), EsPend, EsSum, EcsServiceAlert](
+      EsSum(Nil, 0L, 0L, alerted = false), _.ts_ms,
+      // fully identical rows are interchangeable, so the crossing row is
+      // unique
+      Ordering.by((p: EsPend) => (p.ts_ms, p.task, p.bytes)),
+      k => Some(EventTimeFold.dayEnd(k._3)),
+      { case ((cluster, service, day), s, ready) =>
+        var taskSet = s.tasks.toSet
+        var nFlows = s.n_flows
+        var total = s.total_bytes
+        var alerted = s.alerted
+        val out = List.newBuilder[EcsServiceAlert]
+        ready.foreach { p =>
+          nFlows += 1
+          total += p.bytes
+          taskSet += p.task
+          if (!alerted && total >= minBytes) {
+            alerted = true
+            out += EcsServiceAlert("ONSET", cluster, service, day,
+              msToTs(p.ts_ms), nFlows, total, taskSet.size.toLong)
+          }
+        }
+        (EsSum(taskSet.toList, nFlows, total, alerted), out.result())
+      },
+      { case ((cluster, service, day), s) =>
+        Some(EcsServiceAlert("FINAL", cluster, service, day,
+          msToTs(EventTimeFold.dayEnd(day)), s.n_flows, s.total_bytes,
+          s.tasks.size.toLong))
+      })
 }

@@ -1016,8 +1016,7 @@ object StreamOps {
     * the CUSUM fold order is (ts, event_id) — ms-resolution state would
     * collapse distinct instants into arrival-order ties). */
   case class CusumPend(ts_us: Long, event_id: Long, iv: Long)
-  case class CusumBuf(cum: Long, min_cum: Long, prev_s: Long,
-      pending: List[CusumPend])
+  case class CusumSum(cum: Long, min_cum: Long, prev_s: Long)
   case class CusumAlert(event_type: String, ts: java.sql.Timestamp,
       event_id: Long, s_cusum: Long, h: Long)
 
@@ -1028,6 +1027,23 @@ object StreamOps {
     t.setNanos(((us % 1000000L) * 1000L).toInt)
     t
   }
+
+  /** The cusum family's input (cusum, drawdown, Holt, Bollinger): the
+    * value quantized to integer micro-units, watermarked on ts. */
+  private def quantized(events: DataFrame,
+      watermark: String): Dataset[CusumIn] = {
+    val spark = events.sparkSession
+    import spark.implicits._
+    events.select(col("event_type"), col("ts"), col("event_id"),
+        expr("CAST(round(value * 10000, 0) AS BIGINT)").as("iv"))
+      .withWatermark("ts", watermark)
+      .as[CusumIn]
+  }
+  private def pend(r: CusumIn): CusumPend =
+    CusumPend(tsToUs(r.ts), r.event_id, r.iv)
+  private val pendMs: CusumPend => Long = _.ts_us / 1000
+  private val pendOrder: Ordering[CusumPend] =
+    Ordering.by((p: CusumPend) => (p.ts_us, p.event_id))
 
   /** Streaming CUSUM changepoint detector — the streaming twin of the
     * batch `ts_cusum_changepoint`: per event_type, fold the one-sided
@@ -1041,67 +1057,39 @@ object StreamOps {
     * is judging would drift its own alarm line). Unknown keys run with
     * (0, Long.MaxValue): folded but never alarming.
     *
-    * Order correctness under out-of-order arrival: CUSUM is
-    * order-SENSITIVE, so rows buffer in state and fold only once CERTAIN —
-    * strictly below the watermark, where the contract says no earlier row
-    * can still arrive (an equal-ts row still can, hence strict; the same
-    * at-or-below rule as the silence detector's gap collapse). Folded
-    * rows collapse into the O(1) summary (cum, running-min cum, prev s);
-    * state per key is that summary plus the in-horizon buffer — bounded by
-    * the watermark delay, never by stream length. A pending buffer arms an
-    * event-time timer at wm + 1 so the fold resumes on watermark advance
-    * even if the key goes silent (the strict-timer deferral note on
-    * topkHandle applies). StreamingSpec pins bit-equality of the alert
-    * stream against the batch query and state durability across a
-    * kill/restart. */
+    * CUSUM is order-SENSITIVE, so it runs on [[EventTimeFold]]: rows fold
+    * once strictly below the watermark in (ts, event_id) order into the
+    * O(1) summary (cum, running-min cum, prev s). The summary persists for
+    * the key's lifetime BY DESIGN — a drift detector's baseline is its
+    * whole history, and there are |event_type| keys — so the key never
+    * retires. StreamingSpec pins bit-equality of the alert stream against
+    * the batch query and state durability across a kill/restart. */
   def streamCusum(events: DataFrame, ref: Map[String, (Long, Long)],
       watermark: String = "10 minutes"): Dataset[CusumAlert] = {
     val spark = events.sparkSession
     import spark.implicits._
-    events.select(col("event_type"), col("ts"), col("event_id"),
-        expr("CAST(round(value * 10000, 0) AS BIGINT)").as("iv"))
-      .withWatermark("ts", watermark)
-      .as[CusumIn]
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState[CusumBuf, CusumAlert](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (tpe: String, rows: Iterator[CusumIn], state: GroupState[CusumBuf]) =>
-          cusumHandle(tpe, rows, state,
-            ref.getOrElse(tpe, (0L, Long.MaxValue)))
-      }
+    EventTimeFold.run(quantized(events, watermark).groupByKey(_.event_type),
+      EventTimeFold[String, CusumPend, CusumSum, CusumAlert](
+        CusumSum(0L, 0L, 0L), pendMs, pendOrder, _ => None,
+        { (tpe, c, ready) =>
+          val (mu, h) = ref.getOrElse(tpe, (0L, Long.MaxValue))
+          var cum = c.cum
+          var minCum = c.min_cum
+          var prevS = c.prev_s
+          val out = List.newBuilder[CusumAlert]
+          ready.foreach { p =>
+            cum += p.iv - mu
+            if (cum < minCum) minCum = cum
+            val s = cum - math.min(0L, minCum)
+            if (s > h && prevS <= h)
+              out += CusumAlert(tpe, usToTs(p.ts_us), p.event_id, s, h)
+            prevS = s
+          }
+          (CusumSum(cum, minCum, prevS), out.result())
+        }))(pend)
   }
 
-  private[streaming] def cusumHandle(tpe: String, rows: Iterator[CusumIn],
-      state: GroupState[CusumBuf], muH: (Long, Long)): Iterator[CusumAlert] = {
-    val (mu, h) = muH
-    val prev = state.getOption.getOrElse(CusumBuf(0L, 0L, 0L, Nil))
-    val all = prev.pending ++
-      rows.map(r => CusumPend(tsToUs(r.ts), r.event_id, r.iv))
-    val wm = state.getCurrentWatermarkMs()
-    val (ready, pending) = all.partition(_.ts_us / 1000 < wm)
-    var cum = prev.cum
-    var minCum = prev.min_cum
-    var prevS = prev.prev_s
-    val out = List.newBuilder[CusumAlert]
-    ready.sortBy(p => (p.ts_us, p.event_id)).foreach { p =>
-      cum += p.iv - mu
-      if (cum < minCum) minCum = cum
-      val s = cum - math.min(0L, minCum)
-      if (s > h && prevS <= h)
-        out += CusumAlert(tpe, usToTs(p.ts_us), p.event_id, s, h)
-      prevS = s
-    }
-    // The summary persists for the key's lifetime BY DESIGN: a drift
-    // detector's baseline is its whole history, and the summary is O(1)
-    // per key (|event_type| keys). Only the buffer is horizon-bounded.
-    state.update(CusumBuf(cum, minCum, prevS, pending))
-    if (pending.nonEmpty)
-      state.setTimeoutTimestamp(wm + 1)
-    out.result().iterator
-  }
-
-  case class DrawdownBuf(peak: Long, prev_dd: Long,
-      pending: List[CusumPend])
+  case class DrawdownSum(peak: Long, prev_dd: Long)
   case class DrawdownAlert(event_type: String, ts: java.sql.Timestamp,
       event_id: Long, dd: Long, h: Long)
 
@@ -1112,62 +1100,61 @@ object StreamOps {
     * 5×mean-absolute-deviation calibration of the batch query, fit on
     * history by the batch job). Unknown keys run with h =
     * Long.MaxValue: folded but never alarming — flush sentinels are safe.
-    *
-    * Shares the [[streamCusum]] order-correctness machinery verbatim: the
-    * fold is order-sensitive, so rows buffer in state and fold only
-    * STRICTLY below the watermark in (ts, event_id) order; folded rows
-    * collapse into the O(1) (peak, prev_dd) summary; a pending buffer
-    * arms an event-time timer at wm + 1. The summary persists for the
-    * key's lifetime by design — a drawdown monitor's peak IS its whole
-    * history. StreamingSpec pins alert-stream bit-equality against the
-    * batch query on the fixture. */
+    * Like [[streamCusum]], the (peak, prev_dd) summary never retires — a
+    * drawdown monitor's peak IS its whole history. StreamingSpec pins
+    * alert-stream bit-equality against the batch query on the fixture. */
   def streamDrawdown(events: DataFrame, ref: Map[String, Long],
       watermark: String = "10 minutes"): Dataset[DrawdownAlert] = {
     val spark = events.sparkSession
     import spark.implicits._
-    events.select(col("event_type"), col("ts"), col("event_id"),
-        expr("CAST(round(value * 10000, 0) AS BIGINT)").as("iv"))
-      .withWatermark("ts", watermark)
-      .as[CusumIn]
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState[DrawdownBuf, DrawdownAlert](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (tpe: String, rows: Iterator[CusumIn], state: GroupState[DrawdownBuf]) =>
-          drawdownHandle(tpe, rows, state,
-            ref.getOrElse(tpe, Long.MaxValue))
-      }
+    EventTimeFold.run(quantized(events, watermark).groupByKey(_.event_type),
+      EventTimeFold[String, CusumPend, DrawdownSum, DrawdownAlert](
+        // peak starts at MinValue so the first folded row sets peak = iv
+        // and dd = 0 — exactly the batch window's first-row semantics.
+        DrawdownSum(Long.MinValue, 0L), pendMs, pendOrder, _ => None,
+        { (tpe, s, ready) =>
+          val h = ref.getOrElse(tpe, Long.MaxValue)
+          var peak = s.peak
+          var prevDd = s.prev_dd
+          val out = List.newBuilder[DrawdownAlert]
+          ready.foreach { p =>
+            if (p.iv > peak) peak = p.iv
+            val dd = peak - p.iv
+            if (dd > h && prevDd <= h)
+              out += DrawdownAlert(tpe, usToTs(p.ts_us), p.event_id, dd, h)
+            prevDd = dd
+          }
+          (DrawdownSum(peak, prevDd), out.result())
+        }))(pend)
   }
 
-  private[streaming] def drawdownHandle(tpe: String, rows: Iterator[CusumIn],
-      state: GroupState[DrawdownBuf], h: Long): Iterator[DrawdownAlert] = {
-    // peak starts at MinValue so the first folded row sets peak = iv and
-    // dd = 0 — exactly the batch window's first-row semantics.
-    val prev = state.getOption.getOrElse(DrawdownBuf(Long.MinValue, 0L, Nil))
-    val all = prev.pending ++
-      rows.map(r => CusumPend(tsToUs(r.ts), r.event_id, r.iv))
-    val wm = state.getCurrentWatermarkMs()
-    val (ready, pending) = all.partition(_.ts_us / 1000 < wm)
-    var peak = prev.peak
-    var prevDd = prev.prev_dd
-    val out = List.newBuilder[DrawdownAlert]
-    ready.sortBy(p => (p.ts_us, p.event_id)).foreach { p =>
-      if (p.iv > peak) peak = p.iv
-      val dd = peak - p.iv
-      if (dd > h && prevDd <= h)
-        out += DrawdownAlert(tpe, usToTs(p.ts_us), p.event_id, dd, h)
-      prevDd = dd
-    }
-    state.update(DrawdownBuf(peak, prevDd, pending))
-    if (pending.nonEmpty)
-      state.setTimeoutTimestamp(wm + 1)
-    out.result().iterator
-  }
-
-  case class HoltBuf(has: Boolean, l: Long, b: Long,
-      pending: List[CusumPend])
+  case class HoltSum(has: Boolean, l: Long, b: Long)
   case class HoltState(event_type: String, dt: java.sql.Timestamp,
       ts: java.sql.Timestamp, event_id: Long, iv: Long,
       level_u: Long, trend_u: Long, level: Double)
+
+  /** The Holt fold of [[streamHolt]] and [[streamHoltTws]]. A day key
+    * retires once the watermark is strictly past its day end. */
+  private val holtFold =
+    EventTimeFold[(String, java.sql.Timestamp), CusumPend, HoltSum, HoltState](
+      HoltSum(has = false, 0L, 0L), pendMs, pendOrder,
+      k => Some(EventTimeFold.dayEnd(k._2) + 1),
+      { case ((tpe, dt), s, ready) =>
+        var has = s.has; var l = s.l; var b = s.b
+        val out = List.newBuilder[HoltState]
+        ready.foreach { p =>
+          if (!has) { has = true; l = p.iv; b = 0L } // seed: l1 = x1, b1 = 0
+          else {
+            val l1 = (p.iv + l + b) >> 1
+            b = (l1 - l + b) >> 1
+            l = l1
+          }
+          out += HoltState(tpe, dt, usToTs(p.ts_us), p.event_id, p.iv, l, b,
+            java.math.BigDecimal.valueOf(l.toDouble / 10000.0)
+              .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue())
+        }
+        (HoltSum(has, l, b), out.result())
+      })
 
   /** Streaming Holt linear smoother — the streaming twin of the batch
     * `ts_holt_linear`: per (event_type, DAY) key, fold the α = β = ½
@@ -1183,91 +1170,32 @@ object StreamOps {
     * (type, day), folds parallelize across days × types, and a day key
     * RETIRES — once the watermark passes its day end with nothing
     * pending, no in-contract row can ever fold into it again, so the
-    * state is removed (the forward-as-of drain precedent; StreamingSpec
-    * asserts the post-flush state row count). streamCusum's summary, by
-    * contrast, IS its whole history and persists by design.
-    *
-    * Shares the [[streamCusum]] order-correctness machinery verbatim:
-    * order-sensitive fold ⇒ rows buffer in state and fold only STRICTLY
-    * below the watermark in (ts, event_id) order; a pending buffer arms
-    * an event-time timer at wm + 1. */
+    * state is removed (StreamingSpec asserts the post-flush state row
+    * count). streamCusum's summary, by contrast, IS its whole history and
+    * persists by design. */
   def streamHolt(events: DataFrame,
       watermark: String = "10 minutes"): Dataset[HoltState] = {
     val spark = events.sparkSession
     import spark.implicits._
-    events.select(col("event_type"), col("ts"), col("event_id"),
-        expr("CAST(round(value * 10000, 0) AS BIGINT)").as("iv"))
-      .withWatermark("ts", watermark)
-      .as[CusumIn]
-      // day key derived in epoch space (UTC-fixed 86 400 s days), NEVER
-      // via JVM-default-zone LocalDate conversions: the batch twin
-      // buckets with session-tz (UTC) date_trunc on timestamp_ntz, and a
-      // non-UTC JVM zone (or a DST transition) would silently shear the
-      // stream's day buckets away from the batch's
-      .groupByKey(r => (r.event_type, usToTs(
-        Math.floorDiv(tsToUs(r.ts), 86400000000L) * 86400000000L)))
-      .flatMapGroupsWithState[HoltBuf, HoltState](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (key: (String, java.sql.Timestamp), rows: Iterator[CusumIn],
-            state: GroupState[HoltBuf]) =>
-          holtHandle(key._1, key._2, rows, state)
-      }
+    EventTimeFold.run(quantized(events, watermark)
+        .groupByKey(r => (r.event_type, EventTimeFold.day(r.ts))),
+      holtFold)(pend)
   }
 
-  private[streaming] def holtHandle(tpe: String, dt: java.sql.Timestamp,
-      rows: Iterator[CusumIn],
-      state: GroupState[HoltBuf]): Iterator[HoltState] = {
-    val prev = state.getOption.getOrElse(HoltBuf(false, 0L, 0L, Nil))
-    val all = prev.pending ++
-      rows.map(r => CusumPend(tsToUs(r.ts), r.event_id, r.iv))
-    val wm = state.getCurrentWatermarkMs()
-    val (ready, pending) = all.partition(_.ts_us / 1000 < wm)
-    var has = prev.has; var l = prev.l; var b = prev.b
-    val out = List.newBuilder[HoltState]
-    ready.sortBy(p => (p.ts_us, p.event_id)).foreach { p =>
-      if (!has) { has = true; l = p.iv; b = 0L } // seed: l1 = x1, b1 = 0
-      else {
-        val l1 = (p.iv + l + b) >> 1
-        b = (l1 - l + b) >> 1
-        l = l1
-      }
-      out += HoltState(tpe, dt, usToTs(p.ts_us), p.event_id, p.iv, l, b,
-        java.math.BigDecimal.valueOf(l.toDouble / 10000.0)
-          .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue())
-    }
-    // dt is a UTC-midnight epoch (floorDiv key derivation above), so a
-    // fixed 86 400 000 ms width is EXACT — no DST-variable local days
-    val dayEndMs = dt.getTime + 86400000L
-    if (pending.isEmpty && wm > dayEndMs) state.remove() // day key retires
-    else {
-      state.update(HoltBuf(has, l, b, pending))
-      // pending rows resume on the next watermark advance; an idle key
-      // arms its own RETIREMENT timer at day end (a key with no timer is
-      // never re-invoked, so without this the remove() above could only
-      // fire for keys that happened to receive data after their day)
-      state.setTimeoutTimestamp(
-        if (pending.nonEmpty) wm + 1 else math.max(dayEndMs + 1, wm + 1))
-    }
-    out.result().iterator
-  }
-
-  case class TwsHoltBuf(has: Boolean, l: Long, b: Long,
-      pending: List[CusumPend], timer_ms: Long)
+  case class TwsHoltBuf(buf: EventTimeFold.Buf[HoltSum, CusumPend],
+      timer_ms: Option[Long])
 
   /** [[streamHolt]] ported to Spark 4's `transformWithState` (SURVEY §2.I
-    * names the API) — same key space, same fold arithmetic, same
-    * retirement contract, expressed in the arbitrary-state API instead of
+    * names the API) — same key space, same fold, same retirement
+    * contract, expressed in the arbitrary-state API instead of
     * flatMapGroupsWithState:
     *
-    *  - the (has, l, b) summary + pending buffer live in a named
-    *    `ValueState` (typed via a product encoder, no TTL — retirement is
-    *    event-time-exact, not wall-clock);
+    *  - the fold state lives in a named `ValueState` (typed via a product
+    *    encoder, no TTL — retirement is event-time-exact, not wall-clock);
     *  - fMGWS's single implicit timeout becomes an EXPLICIT timer
     *    registry: exactly ONE live timer per key, tracked in the state
     *    row itself (timer_ms) so each invocation deletes the stale timer
-    *    before arming the new one — pending rows arm wm + 1, idle keys
-    *    arm their day end (a key with no timer is never re-invoked: the
-    *    streamHolt rule, unchanged);
+    *    before arming the one [[EventTimeFold]] chose;
     *  - `handleExpiredTimer` is the flush path: fold with no input rows.
     *    A timer that fires after retirement finds no state and must
     *    return empty WITHOUT re-arming, or the key is resurrected
@@ -1281,13 +1209,8 @@ object StreamOps {
       watermark: String = "10 minutes"): Dataset[HoltState] = {
     val spark = events.sparkSession
     import spark.implicits._
-    events.select(col("event_type"), col("ts"), col("event_id"),
-        expr("CAST(round(value * 10000, 0) AS BIGINT)").as("iv"))
-      .withWatermark("ts", watermark)
-      .as[CusumIn]
-      // same epoch-space UTC day key as streamHolt
-      .groupByKey(r => (r.event_type, usToTs(
-        Math.floorDiv(tsToUs(r.ts), 86400000000L) * 86400000000L)))
+    quantized(events, watermark)
+      .groupByKey(r => (r.event_type, EventTimeFold.day(r.ts)))
       .transformWithState(new HoltTwsProcessor,
         org.apache.spark.sql.streaming.TimeMode.EventTime(),
         OutputMode.Append())
@@ -1306,62 +1229,47 @@ object StreamOps {
     override def handleInputRows(key: (String, java.sql.Timestamp),
         rows: Iterator[CusumIn],
         tv: org.apache.spark.sql.streaming.TimerValues): Iterator[HoltState] =
-      holtTwsFold(key._1, key._2, rows, buf, getHandle,
-        tv.getCurrentWatermarkInMs(), fromTimer = false)
+      fold(key, rows, tv.getCurrentWatermarkInMs(), fromTimer = false)
     override def handleExpiredTimer(key: (String, java.sql.Timestamp),
         tv: org.apache.spark.sql.streaming.TimerValues,
         info: org.apache.spark.sql.streaming.ExpiredTimerInfo): Iterator[HoltState] =
-      holtTwsFold(key._1, key._2, Iterator.empty, buf, getHandle,
-        tv.getCurrentWatermarkInMs(), fromTimer = true)
-  }
+      fold(key, Iterator.empty, tv.getCurrentWatermarkInMs(), fromTimer = true)
 
-  /** The [[holtHandle]] fold body over transformWithState primitives.
-    * `fromTimer` marks the flush path: the firing timer is consumed by
-    * the runtime, so it must not be re-deleted, and a post-retirement
-    * stale timer must not resurrect state. */
-  private[streaming] def holtTwsFold(tpe: String, dt: java.sql.Timestamp,
-      rows: Iterator[CusumIn],
-      buf: org.apache.spark.sql.streaming.ValueState[TwsHoltBuf],
-      handle: org.apache.spark.sql.streaming.StatefulProcessorHandle,
-      wm: Long, fromTimer: Boolean): Iterator[HoltState] = {
-    if (fromTimer && !buf.exists()) return Iterator.empty
-    val prev = if (buf.exists()) buf.get()
-      else TwsHoltBuf(has = false, 0L, 0L, Nil, Long.MinValue)
-    val all = prev.pending ++
-      rows.map(r => CusumPend(tsToUs(r.ts), r.event_id, r.iv))
-    val (ready, pending) = all.partition(_.ts_us / 1000 < wm)
-    var has = prev.has; var l = prev.l; var b = prev.b
-    val out = List.newBuilder[HoltState]
-    ready.sortBy(p => (p.ts_us, p.event_id)).foreach { p =>
-      if (!has) { has = true; l = p.iv; b = 0L } // seed: l1 = x1, b1 = 0
-      else {
-        val l1 = (p.iv + l + b) >> 1
-        b = (l1 - l + b) >> 1
-        l = l1
+    private def fold(key: (String, java.sql.Timestamp), rows: Iterator[CusumIn],
+        wm: Long, fromTimer: Boolean): Iterator[HoltState] = {
+      val prev = if (buf.exists()) Some(buf.get()) else None
+      val (next, delete, register, out) =
+        holtTws(key, prev, rows.map(pend), wm, fromTimer)
+      delete.foreach(t => getHandle.deleteTimer(t))
+      register.foreach(t => getHandle.registerTimer(t))
+      next match {
+        case Some(b) => buf.update(b)
+        case None => if (prev.isDefined) buf.clear() // day key retires
       }
-      out += HoltState(tpe, dt, usToTs(p.ts_us), p.event_id, p.iv, l, b,
-        java.math.BigDecimal.valueOf(l.toDouble / 10000.0)
-          .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue())
+      out.iterator
     }
-    // the firing timer was consumed by the runtime; any OTHER tracked
-    // timer is live and must be deleted before re-arming (one live timer
-    // per key — the invariant that keeps the registry O(keys))
-    val live = prev.timer_ms != Long.MinValue && !fromTimer
-    val dayEndMs = dt.getTime + 86400000L // UTC-midnight dt: exact width
-    if (pending.isEmpty && wm > dayEndMs) {
-      buf.clear() // day key retires
-      if (live) handle.deleteTimer(prev.timer_ms)
-    } else {
-      val next =
-        if (pending.nonEmpty) wm + 1 else math.max(dayEndMs + 1, wm + 1)
-      if (live && prev.timer_ms != next) handle.deleteTimer(prev.timer_ms)
-      if (!live || prev.timer_ms != next) handle.registerTimer(next)
-      buf.update(TwsHoltBuf(has, l, b, pending, next))
-    }
-    out.result().iterator
   }
 
-  case class BollBuf(last: List[Long], pending: List[CusumPend])
+  /** One [[HoltTwsProcessor]] invocation, pure: the [[holtFold]] step plus
+    * the one-live-timer registry. Returns the next state (None = clear),
+    * the timer to delete, the timer to register and the rows to emit.
+    * `fromTimer` marks the flush path: the firing timer was consumed by
+    * the runtime, so it is not deleted again, and a stale timer that
+    * fires after retirement returns nothing and does not resurrect the
+    * key. */
+  private[streaming] def holtTws(key: (String, java.sql.Timestamp),
+      prev: Option[TwsHoltBuf], rows: Iterator[CusumPend], wm: Long,
+      fromTimer: Boolean)
+      : (Option[TwsHoltBuf], Option[Long], Option[Long], List[HoltState]) =
+    if (fromTimer && prev.isEmpty) (None, None, None, Nil)
+    else {
+      val next = holtFold.step(key, prev.map(_.buf), rows, wm)
+      val live = if (fromTimer) None else prev.flatMap(_.timer_ms)
+      (next.state.map(TwsHoltBuf(_, next.timer)),
+        live.filterNot(next.timer.contains),
+        next.timer.filterNot(live.contains), next.out)
+    }
+
   case class BollAlert(event_type: String, ts: java.sql.Timestamp,
       event_id: Long, iv: Long, dev: Long, var_n: Long, direction: String)
 
@@ -1372,57 +1280,37 @@ object StreamOps {
     * (dev and var_n are emitted as the exact BIGINTs, the sqrt is the one
     * IEEE FP op — the alert stream is bit-comparable to the batch rows).
     *
-    * Shares the [[streamCusum]] order-correctness machinery verbatim:
-    * the fold is order-sensitive, so rows buffer in state and fold only
-    * STRICTLY below the watermark in (ts, event_id) order; folded rows
-    * collapse into the last n−1 quantized values — the state is O(n) per
-    * key by construction (a sliding window's summary IS its window),
-    * plus the horizon-bounded pending buffer; a pending buffer arms an
-    * event-time timer at wm + 1. Unknown/sentinel keys are safe with no
-    * reference profile: a key alarms only after n folded rows. */
+    * The summary is the last n−1 folded values — O(n) per key by
+    * construction (a sliding window's summary IS its window) — and, like
+    * [[streamCusum]]'s, never retires. Unknown/sentinel keys are safe
+    * with no reference profile: a key alarms only after n folded rows. */
   def streamBollinger(events: DataFrame, n: Int = 20,
       watermark: String = "10 minutes"): Dataset[BollAlert] = {
     val spark = events.sparkSession
     import spark.implicits._
-    events.select(col("event_type"), col("ts"), col("event_id"),
-        expr("CAST(round(value * 10000, 0) AS BIGINT)").as("iv"))
-      .withWatermark("ts", watermark)
-      .as[CusumIn]
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState[BollBuf, BollAlert](
-        OutputMode.Append(), GroupStateTimeout.EventTimeTimeout()) {
-        (tpe: String, rows: Iterator[CusumIn], state: GroupState[BollBuf]) =>
-          bollingerHandle(tpe, rows, state, n)
-      }
+    EventTimeFold.run(quantized(events, watermark).groupByKey(_.event_type),
+      EventTimeFold[String, CusumPend, List[Long], BollAlert](
+        Nil, pendMs, pendOrder, _ => None,
+        { (tpe, prevLast, ready) =>
+          var last = prevLast // most recent n−1 folded values, oldest first
+          val out = List.newBuilder[BollAlert]
+          ready.foreach { p =>
+            if (last.size == n - 1) { // full window = n−1 predecessors + current
+              val win = p.iv :: last
+              val s1 = win.sum
+              val s2 = win.map(v => v * v).sum
+              val dev = n * p.iv - s1
+              val varN = n * s2 - s1 * s1
+              if (math.abs(dev).toDouble > 2.0d * math.sqrt(varN.toDouble))
+                out += BollAlert(tpe, usToTs(p.ts_us), p.event_id, p.iv, dev,
+                  varN, if (dev > 0) "up" else "down")
+            }
+            last = (last :+ p.iv).takeRight(n - 1)
+          }
+          (last, out.result())
+        }))(pend)
   }
 
-  private[streaming] def bollingerHandle(tpe: String, rows: Iterator[CusumIn],
-      state: GroupState[BollBuf], n: Int): Iterator[BollAlert] = {
-    val prev = state.getOption.getOrElse(BollBuf(Nil, Nil))
-    val all = prev.pending ++
-      rows.map(r => CusumPend(tsToUs(r.ts), r.event_id, r.iv))
-    val wm = state.getCurrentWatermarkMs()
-    val (ready, pending) = all.partition(_.ts_us / 1000 < wm)
-    var last = prev.last // most recent n−1 folded values, oldest first
-    val out = List.newBuilder[BollAlert]
-    ready.sortBy(p => (p.ts_us, p.event_id)).foreach { p =>
-      if (last.size == n - 1) { // full window = n−1 predecessors + current
-        val win = p.iv :: last
-        val s1 = win.sum
-        val s2 = win.map(v => v * v).sum
-        val dev = n * p.iv - s1
-        val varN = n * s2 - s1 * s1
-        if (math.abs(dev).toDouble > 2.0d * math.sqrt(varN.toDouble))
-          out += BollAlert(tpe, usToTs(p.ts_us), p.event_id, p.iv, dev, varN,
-            if (dev > 0) "up" else "down")
-      }
-      last = (last :+ p.iv).takeRight(n - 1)
-    }
-    state.update(BollBuf(last, pending))
-    if (pending.nonEmpty)
-      state.setTimeoutTimestamp(wm + 1)
-    out.result().iterator
-  }
 
   case class AsOfFwdBuf(events: List[AsOfEvent], probes: List[Long])
 

@@ -1,10 +1,7 @@
 package graft
 
-import java.io.File
-import java.nio.file.Files
-import java.util.regex.Pattern
+import graft.SourceScan.occurrences
 import org.scalatest.funsuite.AnyFunSuite
-import scala.jdk.CollectionConverters._
 
 /** Harness's env parse (no session is built) and a `src/main` scan that
   * keeps each session and registration decision in its one owner. */
@@ -17,18 +14,6 @@ class HarnessSpec extends AnyFunSuite {
     Seq("0", "-2", "abc", "", " 4", "4.0", "99999999999").foreach { v =>
       assert(cpus(Some(v)) === Left(s"bad SPARK_GRAFT_CPUS: '$v'"), v)
     }
-  }
-
-  /** file name -> occurrences of `needle` in src/main/scala. */
-  private def occurrences(needle: String): Map[String, Int] = {
-    val root = new File("src/main/scala")
-    assert(root.isDirectory, s"run from the repo root (cwd ${new File(".").getAbsolutePath})")
-    val s = Files.walk(root.toPath)
-    try s.iterator().asScala.filter(_.toString.endsWith(".scala"))
-      .map(p => p.getFileName.toString ->
-        Pattern.quote(needle).r.findAllMatchIn(new String(Files.readAllBytes(p), "UTF-8")).size)
-      .filter(_._2 > 0).toMap
-    finally s.close()
   }
 
   test("sessions, warmup and function registration each have one owner in src/main") {

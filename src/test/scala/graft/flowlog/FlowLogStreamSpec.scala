@@ -276,6 +276,43 @@ class FlowLogStreamSpec extends SparkSpec {
     }
   }
 
+  test("exfil subnets are the destination's first three octets: 10.1.9.x and 10.9.9.x report apart, batch and stream") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    import org.apache.spark.sql.streaming.OutputMode
+    val s0 = 1704067200L
+    def v5(id: Int, dst: String, bytes: Long, s: Long, direction: String) =
+      envelope(id, s"5 123456789012 eni-a 10.0.0.1 $dst 1 2 6 1 $bytes $s ${s + 1} " +
+        s"ACCEPT OK vpc-a subnet-a i-a 0 IPv4 10.0.0.1 $dst us-east-1 use1-az1 " +
+        s"- - - - $direction 1")
+    val day1 = Seq(v5(1, "10.1.9.8", 100L, s0 + 10, "ingress"),
+      v5(2, "10.1.9.7", 50L, s0 + 20, "egress"),
+      v5(3, "10.9.9.8", 200L, s0 + 30, "ingress"),
+      v5(4, "10.9.9.7", 70L, s0 + 40, "egress"))
+    val want = Set(("10.1.9", 100L, 50L, 2L), ("10.9.9", 200L, 70L, 2L))
+    val batch = FlowLog.exfilRatio(FlowLog.parseFlowLogs(FlowLog.decodeEnvelopes(
+        day1.toDF("value")))).collect()
+      .map(r => (r.getAs[String]("subnet"), r.getAs[Long]("ingress_bytes"),
+        r.getAs[Long]("egress_bytes"), r.getAs[Long]("n_flows"))).toSet
+    assert(batch === want)
+    val dir = tempDir("flowlog_exsubnet")
+    val mem = MemoryStream[Array[Byte]]
+    val q = FlowLogStream.streamExfilRatio(mem.toDF(), watermark = "30 minutes")
+      .writeStream.format("parquet").option("path", s"$dir/out")
+      .option("checkpointLocation", s"$dir/ckpt")
+      .outputMode(OutputMode.Append()).start()
+    try {
+      mem.addData(day1); q.processAllAvailable()
+      // a later-day v5 line advances the watermark past day 1's end
+      mem.addData(v5(5, "10.1.9.8", 1L, s0 + 2L * 86400L, "egress"))
+      q.processAllAvailable()
+    } finally q.stop()
+    val stream = spark.read.parquet(s"$dir/out").collect()
+      .map(r => (r.getAs[String]("subnet"), r.getAs[Long]("ingress_bytes"),
+        r.getAs[Long]("egress_bytes"), r.getAs[Long]("n_flows"))).toSet
+    assert(stream === want)
+  }
+
   test("streaming ECS service-traffic monitor (RocksDB): FINAL equals the v7 batch query, one byte-budget onset per crossing service, state retires, survives kill/restart") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
