@@ -637,6 +637,15 @@ object LlmOps {
     (s.read.parquet(s"$dir/codebook"), s.read.parquet(s"$dir/codes"))
   }
 
+  /** (vec_id, cid, emb = x − c(x)): each vector's residual against its
+    * nearest coarse centroid — the PQ training and encoding input. */
+  private def residuals(e: DataFrame, centroids: DataFrame): DataFrame =
+    assignToCentroid(e, centroids)
+      .select(col("vec_id"), col("cid"), col("emb"))
+      .join(broadcast(centroids), Seq("cid"))
+      .select(col("vec_id"), col("cid"),
+        expr("zip_with(emb, cemb, (x, c) -> x - c)").as("emb"))
+
   /** IVF-PQ index persistence — [[writeIvfIndex]] and [[writePqIndex]]
     * composed for the residual layout (FAISS's IndexIVFPQ): `centroids`
     * (cid, cemb — the coarse quantizer), `codebook` (m, k, csub — the PQ
@@ -675,11 +684,7 @@ object LlmOps {
       cb: DataFrame): DataFrame = {
     val dec = org.apache.spark.sql.types.DecimalType(30, 12)
     val dims = 64 / pqM
-    val resid = assignToCentroid(e, centroids)
-      .select(col("vec_id"), col("cid"), col("emb"))
-      .join(broadcast(centroids), Seq("cid"))
-      .select(col("vec_id"), col("cid"),
-        expr("zip_with(emb, cemb, (x, c) -> x - c)").as("emb"))
+    val resid = residuals(e, centroids)
     val sub = pqSubvectors(resid)
     val centSub = centroids
       .withColumn("m", explode(sequence(lit(0), lit(pqM - 1))))
@@ -704,12 +709,7 @@ object LlmOps {
       .localCheckpoint(true) // consumers: residual train chain, encoder, write
     // codebook training works on the residual subvectors (sampled past
     // 4096 vectors — the llm_sim_ann_pq sampled-trainer rule, unchanged)
-    val resid = assignToCentroid(e, centroids)
-      .select(col("vec_id"), col("cid"), col("emb"))
-      .join(broadcast(centroids), Seq("cid"))
-      .select(col("vec_id"), col("cid"),
-        expr("zip_with(emb, cemb, (x, c) -> x - c)").as("emb"))
-      .localCheckpoint(true)
+    val resid = residuals(e, centroids).localCheckpoint(true)
     val sub = pqSubvectors(resid).localCheckpoint(true)
     val trainSub =
       if (n <= 4096L) sub
@@ -1938,17 +1938,42 @@ object LlmOps {
       .select(col("doc_a"), col("doc_b"), col("jac"))
   }
 
+  /** The retrieval family's query terms: every BM25 query, the streaming
+    * hybrid sink's default, and (as SQL literals) the oracle chain. */
+  val Bm25Terms: Seq[String] = Seq("merge", "vector", "stream")
+
+  /** Per-doc EXACT INTEGER BM25 stats of a (doc_id, text) frame: tf
+    * (doc_id, term, tf) over `terms` and dl (doc_id, dl). The token stream
+    * is filtered to the query terms BEFORE its one aggregation, so tf is
+    * ~|q|·n_docs rows, not the corpus token count. The batch queries and
+    * the streaming sink (which stores these rows batch-scoped) both derive
+    * their stats here. */
+  private[graft] def bm25Stats(docs: DataFrame,
+      terms: Seq[String] = Bm25Terms): (DataFrame, DataFrame) = {
+    val toks = docs.select(col("doc_id"),
+      split(lower(col("text")), " ").as("toks"))
+    val tf = toks.select(col("doc_id"), explode(col("toks")).as("term"))
+      .filter(col("term").isInCollection(terms))
+      .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
+    (tf, toks.select(col("doc_id"), size(col("toks")).cast("long").as("dl")))
+  }
+
   /** BM25 (Okapi, k1 = 1.2, b = 0.75, Lucene's +1 idf) per-doc totals from
-    * ACCUMULATED INTEGER STATS — the scoring body shared verbatim by the
-    * batch `llm_hybrid_search` and the streaming incremental sink
+    * ACCUMULATED INTEGER STATS — the scoring body shared verbatim by every
+    * batch retrieval query and the streaming incremental sink
     * (StreamOps.startHybridSearchSink), which is what makes their
-    * equivalence structural: both feed the same exact-integer aggregates
-    * (tf per doc-term; df per term; dl per doc; one-row (n_docs, t_total))
-    * through one expression tree. Determinism recipe is llm_bm25's:
-    * dl/avgdl as the single exact-integer division (dl·N)/T, per-term
-    * scores rounded to 12 places and decimal-summed, output rounded to 6. */
-  private[graft] def bm25FromStats(tf: DataFrame, dfc: DataFrame,
-      dl: DataFrame, tot: DataFrame): DataFrame = {
+    * equivalence structural: df (distinct docs per term) and the one-row
+    * totals (n_docs, t_total) are re-derived from the given tf/dl rows on
+    * every call, never mutated. Determinism recipe: dl/avgdl as the single
+    * exact-integer division (dl·N)/T, per-term scores rounded to 12 places
+    * and decimal-summed (partition-order-independent), output rounded to
+    * 6; the one transcendental (ln) is the llm_tfidf precedent (identical
+    * expression tree in both engines). df is a |q|-row broadcast, totals
+    * a 1-row broadcast. Returns (doc_id, n_q_terms, bm25). */
+  private[graft] def bm25FromStats(tf: DataFrame, dl: DataFrame): DataFrame = {
+    val dfc = tf.select(col("doc_id"), col("term")).distinct()
+      .groupBy(col("term")).agg(count(lit(1)).as("df"))
+    val tot = dl.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("t_total"))
     val idf = log(
       ((col("n_docs") - col("df")).cast("double") + lit(0.5)) /
         (col("df").cast("double") + lit(0.5)) + lit(1.0))
@@ -1962,29 +1987,39 @@ object LlmOps {
       .withColumn("sc", round(idf * sat, 12)
         .cast(org.apache.spark.sql.types.DecimalType(30, 14)))
       .groupBy(col("doc_id"))
-      .agg(sum(col("sc")).cast("double").as("raw"))
-      .select(col("doc_id"), round(col("raw"), 6).as("bm25"))
+      .agg(count(lit(1)).as("n_q_terms"),
+        sum(col("sc")).cast("double").as("raw"))
+      .select(col("doc_id"), col("n_q_terms"), round(col("raw"), 6).as("bm25"))
   }
 
-  /** Reciprocal-rank fusion of a (doc_id, bm25) score table with a
-    * (doc_id, cos_sim, rank_v) vector top-k: text top-100 via
-    * TakeOrderedAndProject, row_number ranks over the bounded set, fused
-    * rrf = Σ 1/(60+rank), top-20. Shared by batch and streaming hybrid. */
-  private[graft] def rrfFuse(bm: DataFrame, vecTop: DataFrame): DataFrame = {
-    val textTop = bm.orderBy(col("bm25").desc, col("doc_id").asc).limit(100)
+  /** BM25 over the query terms of the sf dir's documents. */
+  private def bm25Corpus(s: SparkSession, d: String): DataFrame =
+    (bm25FromStats _).tupled(bm25Stats(Tables.documents(s, d)))
+
+  /** The BM25 top-k with its rank: orderBy + limit is TakeOrderedAndProject
+    * (distributed partial top-k, no global sort), so the unpartitioned
+    * row_number window only ever sees k rows. The (bm25 desc, doc_id asc)
+    * order is total and both engines agree on it (scores are rounded).
+    * Adds rank_t (LONG) to bm's columns. */
+  private[graft] def bm25Ranked(bm: DataFrame, k: Int): DataFrame =
+    bm.orderBy(col("bm25").desc, col("doc_id").asc).limit(k)
       .withColumn("rank_t", row_number().over(
-        Window.orderBy(col("bm25").desc, col("doc_id").asc)))
-    textTop.select(col("doc_id"), col("bm25"), col("rank_t"))
+        Window.orderBy(col("bm25").desc, col("doc_id").asc)).cast("long"))
+
+  /** Reciprocal-rank fusion of a bm25FromStats score table with a
+    * (doc_id, cos_sim, rank_v) vector top-k: text top-100 via
+    * [[bm25Ranked]], fused rrf = Σ 1/(60+rank), top-20. Shared by batch
+    * and streaming hybrid. */
+  private[graft] def rrfFuse(bm: DataFrame, vecTop: DataFrame): DataFrame =
+    bm25Ranked(bm, 100).select(col("doc_id"), col("bm25"), col("rank_t"))
       .join(vecTop.select(col("doc_id"), col("cos_sim"), col("rank_v")),
         Seq("doc_id"), "full_outer")
-      .select(col("doc_id"), col("bm25"), col("cos_sim"),
-        col("rank_t").cast("long").as("rank_t"),
-        col("rank_v").cast("long").as("rank_v"),
+      .select(col("doc_id"), col("bm25"), col("cos_sim"), col("rank_t"),
+        col("rank_v"),
         round(coalesce(lit(1.0) / (lit(60) + col("rank_t")), lit(0.0)) +
           coalesce(lit(1.0) / (lit(60) + col("rank_v")), lit(0.0)), 6).as("rrf"))
       .orderBy(col("rrf").desc, col("doc_id").asc)
       .limit(20)
-  }
 
   /** The hybrid queries' vector side: exact cosine top-k of the corpus
     * (vec_id ≠ 0) against the query vector (vec_id = 0), served by a
@@ -3678,61 +3713,19 @@ object LlmOps {
 
     // BM25 (Okapi, k1 = 1.2, b = 0.75, Lucene's +1 idf) — the standard
     // corpus-search scorer, extending llm_tfidf's machinery with length
-    // normalization and tf saturation. Determinism recipe (the
-    // llm_unigram_rarity one): every input to the double math is an exact
-    // integer aggregate (tf, df, dl, N, T); dl/avgdl is written as the
-    // single division (dl·N)/T of exact integers; per-term scores are
-    // rounded to 12 places and decimal-summed so the per-doc total is
-    // partition-order-independent; the one transcendental (ln) follows
-    // the llm_tfidf precedent (identical expression tree both engines,
-    // rounded well inside double ulp agreement). Top-k is
-    // orderBy+limit = TakeOrderedAndProject — distributed partial top-k
-    // per partition, no single-partition global window. Scale shape:
-    // the token stream is filtered to the query terms BEFORE any shuffle
-    // (tf on ~|q|·n_docs rows, not the corpus token count), df is a
-    // |q|-row broadcast, totals a 1-row broadcast.
+    // normalization and tf saturation. Stats, determinism recipe and scale
+    // shape are bm25Stats/bm25FromStats'. Top-k is orderBy+limit =
+    // TakeOrderedAndProject — distributed partial top-k per partition, no
+    // single-partition global window.
     "llm_bm25" -> { (s, d) =>
-      val qTerms = Seq("merge", "vector", "stream")
-      val docs = Tables.documents(s, d)
-      val toks = docs.select(col("doc_id"),
-        split(lower(col("text")), " ").as("toks"))
-      val dl = toks.select(col("doc_id"),
-        size(col("toks")).cast("long").as("dl"))
-      val qt = toks
-        .select(col("doc_id"), explode(col("toks")).as("term"))
-        .filter(col("term").isInCollection(qTerms))
-      val tf = qt.groupBy(col("doc_id"), col("term"))
-        .agg(count(lit(1)).as("tf"))
-      val dfc = qt.select(col("doc_id"), col("term")).distinct()
-        .groupBy(col("term")).agg(count(lit(1)).as("df"))
-      val tot = toks.agg(count(lit(1)).as("n_docs"),
-        sum(size(col("toks")).cast("long")).as("t_total"))
-      val idf = log(
-        ((col("n_docs") - col("df")).cast("double") + lit(0.5)) /
-          (col("df").cast("double") + lit(0.5)) + lit(1.0))
-      val sat = (col("tf").cast("double") * lit(2.2)) /
-        (col("tf").cast("double") + lit(1.2) * (lit(0.25) +
-          lit(0.75) * ((col("dl") * col("n_docs")).cast("double") /
-            col("t_total").cast("double"))))
-      tf.join(broadcast(dfc), Seq("term"))
-        .join(dl, Seq("doc_id"))
-        .crossJoin(broadcast(tot))
-        .withColumn("sc", round(idf * sat, 12)
-          .cast(org.apache.spark.sql.types.DecimalType(30, 14)))
-        .groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("n_q_terms"),
-          sum(col("sc")).cast("double").as("raw"))
-        .select(col("doc_id"), col("n_q_terms"),
-          round(col("raw"), 6).as("bm25"))
-        .orderBy(col("bm25").desc, col("doc_id").asc)
-        .limit(15)
+      bm25Corpus(s, d).orderBy(col("bm25").desc, col("doc_id").asc).limit(15)
     },
 
     // Hybrid retrieval — the RAG-stack composition: BM25 over the query
     // terms fused with cosine retrieval against a query vector via
     // reciprocal-rank fusion (rrf = Σ 1/(60+rank), Cormack et al. 2009).
     // Ranks are computed over each side's top-100 — the text side by
-    // orderBy+limit (TakeOrderedAndProject: distributed top-k, no global
+    // bm25Ranked (TakeOrderedAndProject: distributed top-k, no global
     // sort), the vector side by the PERSISTED exact-search IVF index
     // (hybridVectorTop — train-once, cell-pruned, provably exact for any
     // codebook, so the brute-force DuckDB twin is unchanged), so the
@@ -3743,22 +3736,10 @@ object LlmOps {
     // llm_bm25 / llm_sim patterns); the fusion itself is two exact double
     // divisions and one addition. The BM25 scoring and RRF fusion bodies
     // are SHARED with the streaming sink (StreamOps.startHybridSearchSink)
-    // via bm25FromStats/rrfFuse, so streaming/batch equivalence is
-    // structural.
+    // via bm25Stats → bm25FromStats → rrfFuse, so streaming/batch
+    // equivalence is structural.
     "llm_hybrid_search" -> { (s, d) =>
-      graft.functions.VectorFunctions.register(s)
-      val qTerms = Seq("merge", "vector", "stream")
-      val toks = Tables.documents(s, d).select(col("doc_id"),
-        split(lower(col("text")), " ").as("toks"))
-      val dl = toks.select(col("doc_id"), size(col("toks")).cast("long").as("dl"))
-      val qt = toks.select(col("doc_id"), explode(col("toks")).as("term"))
-        .filter(col("term").isInCollection(qTerms))
-      val tf = qt.groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
-      val dfc = qt.select(col("doc_id"), col("term")).distinct()
-        .groupBy(col("term")).agg(count(lit(1)).as("df"))
-      val tot = toks.agg(count(lit(1)).as("n_docs"),
-        sum(size(col("toks")).cast("long")).as("t_total"))
-      rrfFuse(bm25FromStats(tf, dfc, dl, tot), hybridVectorTop(s, d))
+      rrfFuse(bm25Corpus(s, d), hybridVectorTop(s, d))
     },
 
     // Positional inverted-index PHRASE search: find every occurrence of
@@ -3809,23 +3790,8 @@ object LlmOps {
     // inputs are top-k tables (≤100 rows each) — the eval join costs
     // nothing at any corpus size; only the scoring stages scan data.
     "llm_eval_mrr" -> { (s, d) =>
-      graft.functions.VectorFunctions.register(s)
       val rel = hybridVectorTop(s, d, k = 10).select(col("doc_id"))
-      val toks = Tables.documents(s, d).select(col("doc_id"),
-        split(lower(col("text")), " ").as("toks"))
-      val dl = toks.select(col("doc_id"), size(col("toks")).cast("long").as("dl"))
-      val qt = toks.select(col("doc_id"), explode(col("toks")).as("term"))
-        .filter(col("term").isInCollection(Seq("merge", "vector", "stream")))
-      val tf = qt.groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
-      val dfc = qt.select(col("doc_id"), col("term")).distinct()
-        .groupBy(col("term")).agg(count(lit(1)).as("df"))
-      val tot = toks.agg(count(lit(1)).as("n_docs"),
-        sum(size(col("toks")).cast("long")).as("t_total"))
-      val ranked = bm25FromStats(tf, dfc, dl, tot)
-        .orderBy(col("bm25").desc, col("doc_id").asc).limit(100)
-        .withColumn("rank_t", row_number().over(
-          Window.orderBy(col("bm25").desc, col("doc_id").asc)))
-        .select(col("doc_id"), col("rank_t"))
+      val ranked = bm25Ranked(bm25Corpus(s, d), 100)
       rel.join(ranked, Seq("doc_id"), "left_outer")
         .agg(count(lit(1)).as("n_relevant"),
           sum(when(col("rank_t") <= 10, 1L).otherwise(0L)).as("hits_at_10"),
@@ -3848,24 +3814,9 @@ object LlmOps {
     // gain is one rounded double division. Both inputs are ≤10-row
     // top-k tables, so the metric costs nothing at corpus scale.
     "llm_eval_ndcg" -> { (s, d) =>
-      graft.functions.VectorFunctions.register(s)
       val rel = hybridVectorTop(s, d, k = 10)
         .select(col("doc_id"), (lit(11L) - col("rank_v")).as("rel"))
-      val toks = Tables.documents(s, d).select(col("doc_id"),
-        split(lower(col("text")), " ").as("toks"))
-      val dl = toks.select(col("doc_id"), size(col("toks")).cast("long").as("dl"))
-      val qt = toks.select(col("doc_id"), explode(col("toks")).as("term"))
-        .filter(col("term").isInCollection(Seq("merge", "vector", "stream")))
-      val tf = qt.groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
-      val dfc = qt.select(col("doc_id"), col("term")).distinct()
-        .groupBy(col("term")).agg(count(lit(1)).as("df"))
-      val tot = toks.agg(count(lit(1)).as("n_docs"),
-        sum(size(col("toks")).cast("long")).as("t_total"))
-      val ranked = bm25FromStats(tf, dfc, dl, tot)
-        .orderBy(col("bm25").desc, col("doc_id").asc).limit(10)
-        .withColumn("rank_t", row_number().over(
-          Window.orderBy(col("bm25").desc, col("doc_id").asc)).cast("long"))
-        .select(col("doc_id"), col("rank_t"))
+      val ranked = bm25Ranked(bm25Corpus(s, d), 10)
       val dec = org.apache.spark.sql.types.DecimalType(30, 14)
       val dcg = ranked.join(rel, Seq("doc_id"), "left_outer")
         .agg(sum((coalesce(col("rel"), lit(0L)) *
@@ -3893,23 +3844,8 @@ object LlmOps {
     // tables (≤100 rows), so the 100-row unpartitioned window is free at
     // any corpus size — only the scoring stages scan data.
     "llm_eval_map" -> { (s, d) =>
-      graft.functions.VectorFunctions.register(s)
       val rel = hybridVectorTop(s, d, k = 10).select(col("doc_id"))
-      val toks = Tables.documents(s, d).select(col("doc_id"),
-        split(lower(col("text")), " ").as("toks"))
-      val dl = toks.select(col("doc_id"), size(col("toks")).cast("long").as("dl"))
-      val qt = toks.select(col("doc_id"), explode(col("toks")).as("term"))
-        .filter(col("term").isInCollection(Seq("merge", "vector", "stream")))
-      val tf = qt.groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
-      val dfc = qt.select(col("doc_id"), col("term")).distinct()
-        .groupBy(col("term")).agg(count(lit(1)).as("df"))
-      val tot = toks.agg(count(lit(1)).as("n_docs"),
-        sum(size(col("toks")).cast("long")).as("t_total"))
-      val ranked = bm25FromStats(tf, dfc, dl, tot)
-        .orderBy(col("bm25").desc, col("doc_id").asc).limit(100)
-        .withColumn("rank_t", row_number().over(
-          Window.orderBy(col("bm25").desc, col("doc_id").asc)).cast("long"))
-        .select(col("doc_id"), col("rank_t"))
+      val ranked = bm25Ranked(bm25Corpus(s, d), 100)
       val marked = ranked
         .join(rel.withColumn("is_rel", lit(1L)), Seq("doc_id"), "left_outer")
         .withColumn("is_rel", coalesce(col("is_rel"), lit(0L)))
@@ -3931,27 +3867,12 @@ object LlmOps {
     // Recall@k — the cutoff-sweep retrieval eval beside MRR/nDCG/AP: how
     // much of the vector ground truth the BM25 ranking has surfaced by
     // each k ∈ {5, 10, 20, 50, 100}. Same machinery as llm_eval_map
-    // (bm25FromStats top-100, persisted-index vector ground truth); the
+    // (bm25Ranked top-100, persisted-index vector ground truth); the
     // k sweep is a 5 × 100 broadcast cross join over the already-bounded
     // rank frame, each recall one double division of exact integers.
     "llm_eval_recall" -> { (s, d) =>
-      graft.functions.VectorFunctions.register(s)
       val rel = hybridVectorTop(s, d, k = 10).select(col("doc_id"))
-      val toks = Tables.documents(s, d).select(col("doc_id"),
-        split(lower(col("text")), " ").as("toks"))
-      val dl = toks.select(col("doc_id"), size(col("toks")).cast("long").as("dl"))
-      val qt = toks.select(col("doc_id"), explode(col("toks")).as("term"))
-        .filter(col("term").isInCollection(Seq("merge", "vector", "stream")))
-      val tf = qt.groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
-      val dfc = qt.select(col("doc_id"), col("term")).distinct()
-        .groupBy(col("term")).agg(count(lit(1)).as("df"))
-      val tot = toks.agg(count(lit(1)).as("n_docs"),
-        sum(size(col("toks")).cast("long")).as("t_total"))
-      val ranked = bm25FromStats(tf, dfc, dl, tot)
-        .orderBy(col("bm25").desc, col("doc_id").asc).limit(100)
-        .withColumn("rank_t", row_number().over(
-          Window.orderBy(col("bm25").desc, col("doc_id").asc)).cast("long"))
-        .select(col("doc_id"), col("rank_t"))
+      val ranked = bm25Ranked(bm25Corpus(s, d), 100)
       val marked = ranked
         .join(rel.withColumn("is_rel", lit(1L)), Seq("doc_id"), "left_outer")
         .withColumn("is_rel", coalesce(col("is_rel"), lit(0L)))
@@ -3978,20 +3899,7 @@ object LlmOps {
     // without shipping kilobyte rows. Scale: assembly runs on the ≤5-row
     // top-k table; only retrieval scans the corpus.
     "llm_rag_context" -> { (s, d) =>
-      val toks = Tables.documents(s, d).select(col("doc_id"),
-        split(lower(col("text")), " ").as("toks"))
-      val dl = toks.select(col("doc_id"), size(col("toks")).cast("long").as("dl"))
-      val qt = toks.select(col("doc_id"), explode(col("toks")).as("term"))
-        .filter(col("term").isInCollection(Seq("merge", "vector", "stream")))
-      val tf = qt.groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
-      val dfc = qt.select(col("doc_id"), col("term")).distinct()
-        .groupBy(col("term")).agg(count(lit(1)).as("df"))
-      val tot = toks.agg(count(lit(1)).as("n_docs"),
-        sum(size(col("toks")).cast("long")).as("t_total"))
-      val ranked = bm25FromStats(tf, dfc, dl, tot)
-        .orderBy(col("bm25").desc, col("doc_id").asc).limit(5)
-        .withColumn("rank_t", row_number().over(
-          Window.orderBy(col("bm25").desc, col("doc_id").asc)).cast("long"))
+      val ranked = bm25Ranked(bm25Corpus(s, d), 5)
       val plan = ranked
         .join(Tables.documents(s, d).select(col("doc_id"), col("text")), Seq("doc_id"))
         .withColumn("tk", split(col("text"), " "))
@@ -4696,21 +4604,7 @@ object LlmOps {
     // corpus scale regardless of corpus size; scoring reuses the proven
     // bm25FromStats/exact-search bodies verbatim.
     "llm_hard_negatives" -> { (s, d) =>
-      graft.functions.VectorFunctions.register(s)
-      val toks = Tables.documents(s, d).select(col("doc_id"),
-        split(lower(col("text")), " ").as("toks"))
-      val dl = toks.select(col("doc_id"), size(col("toks")).cast("long").as("dl"))
-      val qt = toks.select(col("doc_id"), explode(col("toks")).as("term"))
-        .filter(col("term").isInCollection(Seq("merge", "vector", "stream")))
-      val tf = qt.groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
-      val dfc = qt.select(col("doc_id"), col("term")).distinct()
-        .groupBy(col("term")).agg(count(lit(1)).as("df"))
-      val tot = toks.agg(count(lit(1)).as("n_docs"),
-        sum(size(col("toks")).cast("long")).as("t_total"))
-      val ranked = bm25FromStats(tf, dfc, dl, tot)
-        .orderBy(col("bm25").desc, col("doc_id").asc).limit(100)
-        .withColumn("rank_t", row_number().over(
-          Window.orderBy(col("bm25").desc, col("doc_id").asc)).cast("long"))
+      val ranked = bm25Ranked(bm25Corpus(s, d), 100)
       val rel = hybridVectorTop(s, d, k = 10).select(col("doc_id"))
       ranked.join(rel, Seq("doc_id"), "left_anti")
         .orderBy(col("rank_t").asc).limit(5)
@@ -4803,6 +4697,50 @@ object LlmOps {
       |p AS (SELECT a.vec_id AS va, b.vec_id AS vb, a.label AS label_a, b.label AS label_b,
       |             round(list_cosine_similarity(a.emb, b.emb), 6) AS cos_sim
       |      FROM e a JOIN e b ON a.vec_id < b.vec_id)""".stripMargin
+
+  /** The BM25 oracle chain (tokens → dl, totals, query-term tf/df →
+    * per-term Okapi sc — bm25Stats/bm25FromStats' expression tree), shared
+    * by the retrieval-family oracles. Ends at sc with no trailing comma;
+    * [[duckBm25]] adds the per-doc bm. */
+  private val duckBm25Sc =
+    """WITH tok AS (SELECT doc_id, string_split(lower(text), ' ') AS t
+      |             FROM documents),
+      |dl AS (SELECT doc_id, CAST(len(t) AS BIGINT) AS dl FROM tok),
+      |tot AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
+      |               CAST(sum(len(t)) AS BIGINT) AS t_total FROM tok),
+      |qf AS (SELECT doc_id, term FROM
+      |         (SELECT doc_id, unnest(t) AS term FROM tok)
+      |       WHERE term IN ('merge', 'vector', 'stream')),
+      |tf AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
+      |       FROM qf GROUP BY doc_id, term),
+      |df AS (SELECT term, CAST(count(DISTINCT doc_id) AS BIGINT) AS df
+      |       FROM qf GROUP BY term),
+      |sc AS (SELECT tf.doc_id,
+      |         CAST(round(
+      |           ln((CAST(tot.n_docs - df.df AS DOUBLE) + 0.5) /
+      |              (CAST(df.df AS DOUBLE) + 0.5) + 1.0) *
+      |           ((CAST(tf.tf AS DOUBLE) * 2.2) /
+      |            (CAST(tf.tf AS DOUBLE) + 1.2 * (0.25 + 0.75 *
+      |             (CAST(dl.dl * tot.n_docs AS DOUBLE) /
+      |              CAST(tot.t_total AS DOUBLE))))), 12)
+      |           AS DECIMAL(30, 14)) AS sc
+      |       FROM tf JOIN df USING (term)
+      |            JOIN dl ON tf.doc_id = dl.doc_id
+      |            CROSS JOIN tot)""".stripMargin
+
+  private val duckBm25 =
+    s"""$duckBm25Sc,
+       |bm AS (SELECT doc_id, round(CAST(sum(sc) AS DOUBLE), 6) AS bm25
+       |       FROM sc GROUP BY doc_id)""".stripMargin
+
+  /** Exact cosine (rounded to 6) of every corpus vector against the query
+    * vector vec_id 0 — the brute-force twin of hybridVectorTop. */
+  private val duckQueryCos =
+    """e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
+      |qv AS (SELECT emb AS qemb FROM e WHERE vec_id = 0),
+      |cs AS (SELECT e.vec_id,
+      |              round(list_cosine_similarity(e.emb, qv.qemb), 6) AS cos_sim
+      |       FROM e, qv WHERE e.vec_id <> 0)""".stripMargin
 
   /** The BPE training CTE chain (word histogram → e0 encoding →
     * [[bpeMergeRounds]] pN/mN/eN rounds), shared by the llm_bpe_train and
@@ -5435,30 +5373,7 @@ object LlmOps {
         |ORDER BY doc_id ASC NULLS FIRST, rn ASC NULLS FIRST""".stripMargin,
 
     "llm_bm25" ->
-      """WITH tok AS (SELECT doc_id, string_split(lower(text), ' ') AS t
-        |             FROM documents),
-        |dl AS (SELECT doc_id, CAST(len(t) AS BIGINT) AS dl FROM tok),
-        |tot AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
-        |               CAST(sum(len(t)) AS BIGINT) AS t_total FROM tok),
-        |qt AS (SELECT doc_id, unnest(t) AS term FROM tok),
-        |qf AS (SELECT doc_id, term FROM qt
-        |       WHERE term IN ('merge', 'vector', 'stream')),
-        |tf AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
-        |       FROM qf GROUP BY doc_id, term),
-        |df AS (SELECT term, CAST(count(DISTINCT doc_id) AS BIGINT) AS df
-        |       FROM qf GROUP BY term),
-        |sc AS (SELECT tf.doc_id,
-        |         CAST(round(
-        |           ln((CAST(tot.n_docs - df.df AS DOUBLE) + 0.5) /
-        |              (CAST(df.df AS DOUBLE) + 0.5) + 1.0) *
-        |           ((CAST(tf.tf AS DOUBLE) * 2.2) /
-        |            (CAST(tf.tf AS DOUBLE) + 1.2 * (0.25 + 0.75 *
-        |             (CAST(dl.dl * tot.n_docs AS DOUBLE) /
-        |              CAST(tot.t_total AS DOUBLE))))), 12)
-        |           AS DECIMAL(30, 14)) AS sc
-        |       FROM tf JOIN df USING (term)
-        |            JOIN dl ON tf.doc_id = dl.doc_id
-        |            CROSS JOIN tot)
+      s"""$duckBm25Sc
         |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_q_terms,
         |       round(CAST(sum(sc) AS DOUBLE), 6) AS bm25
         |FROM sc GROUP BY doc_id
@@ -5466,43 +5381,14 @@ object LlmOps {
         |LIMIT 15""".stripMargin,
 
     "llm_hybrid_search" ->
-      """WITH tok AS (SELECT doc_id, string_split(lower(text), ' ') AS t
-        |             FROM documents),
-        |dl AS (SELECT doc_id, CAST(len(t) AS BIGINT) AS dl FROM tok),
-        |tot AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
-        |               CAST(sum(len(t)) AS BIGINT) AS t_total FROM tok),
-        |qf AS (SELECT doc_id, term FROM
-        |         (SELECT doc_id, unnest(t) AS term FROM tok)
-        |       WHERE term IN ('merge', 'vector', 'stream')),
-        |tf AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
-        |       FROM qf GROUP BY doc_id, term),
-        |df AS (SELECT term, CAST(count(DISTINCT doc_id) AS BIGINT) AS df
-        |       FROM qf GROUP BY term),
-        |sc AS (SELECT tf.doc_id,
-        |         CAST(round(
-        |           ln((CAST(tot.n_docs - df.df AS DOUBLE) + 0.5) /
-        |              (CAST(df.df AS DOUBLE) + 0.5) + 1.0) *
-        |           ((CAST(tf.tf AS DOUBLE) * 2.2) /
-        |            (CAST(tf.tf AS DOUBLE) + 1.2 * (0.25 + 0.75 *
-        |             (CAST(dl.dl * tot.n_docs AS DOUBLE) /
-        |              CAST(tot.t_total AS DOUBLE))))), 12)
-        |           AS DECIMAL(30, 14)) AS sc
-        |       FROM tf JOIN df USING (term)
-        |            JOIN dl ON tf.doc_id = dl.doc_id
-        |            CROSS JOIN tot),
-        |bm AS (SELECT doc_id, round(CAST(sum(sc) AS DOUBLE), 6) AS bm25
-        |       FROM sc GROUP BY doc_id),
+      s"""$duckBm25,
         |tt AS (SELECT doc_id, bm25 FROM bm
         |       ORDER BY bm25 DESC NULLS LAST, doc_id ASC LIMIT 100),
         |tr AS (SELECT doc_id, bm25,
         |              row_number() OVER (ORDER BY bm25 DESC NULLS LAST,
         |                                 doc_id ASC) AS rank_t
         |       FROM tt),
-        |e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
-        |qv AS (SELECT emb AS qemb FROM e WHERE vec_id = 0),
-        |cs AS (SELECT e.vec_id,
-        |              round(list_cosine_similarity(e.emb, qv.qemb), 6) AS cos_sim
-        |       FROM e, qv WHERE e.vec_id <> 0),
+        |$duckQueryCos,
         |vt AS (SELECT vec_id, cos_sim FROM cs
         |       ORDER BY cos_sim DESC NULLS LAST, vec_id ASC LIMIT 100),
         |vr AS (SELECT vec_id, cos_sim,
@@ -5541,43 +5427,14 @@ object LlmOps {
     // Graded twin of the mrr oracle: ln-discounted gains (the constant
     // factor vs log2 cancels in the ratio), round-12 + DECIMAL(30,14).
     "llm_eval_ndcg" ->
-      """WITH tok AS (SELECT doc_id, string_split(lower(text), ' ') AS t
-        |             FROM documents),
-        |dl AS (SELECT doc_id, CAST(len(t) AS BIGINT) AS dl FROM tok),
-        |tot AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
-        |               CAST(sum(len(t)) AS BIGINT) AS t_total FROM tok),
-        |qf AS (SELECT doc_id, term FROM
-        |         (SELECT doc_id, unnest(t) AS term FROM tok)
-        |       WHERE term IN ('merge', 'vector', 'stream')),
-        |tf AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
-        |       FROM qf GROUP BY doc_id, term),
-        |df AS (SELECT term, CAST(count(DISTINCT doc_id) AS BIGINT) AS df
-        |       FROM qf GROUP BY term),
-        |sc AS (SELECT tf.doc_id,
-        |         CAST(round(
-        |           ln((CAST(tot.n_docs - df.df AS DOUBLE) + 0.5) /
-        |              (CAST(df.df AS DOUBLE) + 0.5) + 1.0) *
-        |           ((CAST(tf.tf AS DOUBLE) * 2.2) /
-        |            (CAST(tf.tf AS DOUBLE) + 1.2 * (0.25 + 0.75 *
-        |             (CAST(dl.dl * tot.n_docs AS DOUBLE) /
-        |              CAST(tot.t_total AS DOUBLE))))), 12)
-        |           AS DECIMAL(30, 14)) AS sc
-        |       FROM tf JOIN df USING (term)
-        |            JOIN dl ON tf.doc_id = dl.doc_id
-        |            CROSS JOIN tot),
-        |bm AS (SELECT doc_id, round(CAST(sum(sc) AS DOUBLE), 6) AS bm25
-        |       FROM sc GROUP BY doc_id),
+      s"""$duckBm25,
         |tt AS (SELECT doc_id, bm25 FROM bm
         |       ORDER BY bm25 DESC NULLS LAST, doc_id ASC LIMIT 10),
         |tr AS (SELECT doc_id,
         |              CAST(row_number() OVER (ORDER BY bm25 DESC NULLS LAST,
         |                                      doc_id ASC) AS BIGINT) AS rank_t
         |       FROM tt),
-        |e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
-        |qv AS (SELECT emb AS qemb FROM e WHERE vec_id = 0),
-        |cs AS (SELECT e.vec_id,
-        |              round(list_cosine_similarity(e.emb, qv.qemb), 6) AS cos_sim
-        |       FROM e, qv WHERE e.vec_id <> 0),
+        |$duckQueryCos,
         |vt AS (SELECT vec_id, cos_sim FROM cs
         |       ORDER BY cos_sim DESC NULLS LAST, vec_id ASC LIMIT 10),
         |rel AS (SELECT vec_id AS doc_id,
@@ -5602,32 +5459,7 @@ object LlmOps {
     // the token-budget packing plan and the digest of the trimmed
     // concatenation (string_agg in rank order over non-empty fragments).
     "llm_rag_context" ->
-      """WITH tok AS (SELECT doc_id, string_split(lower(text), ' ') AS t
-        |             FROM documents),
-        |dl AS (SELECT doc_id, CAST(len(t) AS BIGINT) AS dl FROM tok),
-        |tot AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
-        |               CAST(sum(len(t)) AS BIGINT) AS t_total FROM tok),
-        |qf AS (SELECT doc_id, term FROM
-        |         (SELECT doc_id, unnest(t) AS term FROM tok)
-        |       WHERE term IN ('merge', 'vector', 'stream')),
-        |tf AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
-        |       FROM qf GROUP BY doc_id, term),
-        |df AS (SELECT term, CAST(count(DISTINCT doc_id) AS BIGINT) AS df
-        |       FROM qf GROUP BY term),
-        |sc AS (SELECT tf.doc_id,
-        |         CAST(round(
-        |           ln((CAST(tot.n_docs - df.df AS DOUBLE) + 0.5) /
-        |              (CAST(df.df AS DOUBLE) + 0.5) + 1.0) *
-        |           ((CAST(tf.tf AS DOUBLE) * 2.2) /
-        |            (CAST(tf.tf AS DOUBLE) + 1.2 * (0.25 + 0.75 *
-        |             (CAST(dl.dl * tot.n_docs AS DOUBLE) /
-        |              CAST(tot.t_total AS DOUBLE))))), 12)
-        |           AS DECIMAL(30, 14)) AS sc
-        |       FROM tf JOIN df USING (term)
-        |            JOIN dl ON tf.doc_id = dl.doc_id
-        |            CROSS JOIN tot),
-        |bm AS (SELECT doc_id, round(CAST(sum(sc) AS DOUBLE), 6) AS bm25
-        |       FROM sc GROUP BY doc_id),
+      s"""$duckBm25,
         |tt AS (SELECT doc_id, bm25 FROM bm
         |       ORDER BY bm25 DESC NULLS LAST, doc_id ASC LIMIT 5),
         |tr AS (SELECT doc_id, bm25,
@@ -5658,43 +5490,14 @@ object LlmOps {
     // ground truth = cosine top-10 (rounded scores, vec_id tie-break),
     // retrieved = bm25 top-100 ranking; misses score 0.
     "llm_eval_mrr" ->
-      """WITH tok AS (SELECT doc_id, string_split(lower(text), ' ') AS t
-        |             FROM documents),
-        |dl AS (SELECT doc_id, CAST(len(t) AS BIGINT) AS dl FROM tok),
-        |tot AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
-        |               CAST(sum(len(t)) AS BIGINT) AS t_total FROM tok),
-        |qf AS (SELECT doc_id, term FROM
-        |         (SELECT doc_id, unnest(t) AS term FROM tok)
-        |       WHERE term IN ('merge', 'vector', 'stream')),
-        |tf AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
-        |       FROM qf GROUP BY doc_id, term),
-        |df AS (SELECT term, CAST(count(DISTINCT doc_id) AS BIGINT) AS df
-        |       FROM qf GROUP BY term),
-        |sc AS (SELECT tf.doc_id,
-        |         CAST(round(
-        |           ln((CAST(tot.n_docs - df.df AS DOUBLE) + 0.5) /
-        |              (CAST(df.df AS DOUBLE) + 0.5) + 1.0) *
-        |           ((CAST(tf.tf AS DOUBLE) * 2.2) /
-        |            (CAST(tf.tf AS DOUBLE) + 1.2 * (0.25 + 0.75 *
-        |             (CAST(dl.dl * tot.n_docs AS DOUBLE) /
-        |              CAST(tot.t_total AS DOUBLE))))), 12)
-        |           AS DECIMAL(30, 14)) AS sc
-        |       FROM tf JOIN df USING (term)
-        |            JOIN dl ON tf.doc_id = dl.doc_id
-        |            CROSS JOIN tot),
-        |bm AS (SELECT doc_id, round(CAST(sum(sc) AS DOUBLE), 6) AS bm25
-        |       FROM sc GROUP BY doc_id),
+      s"""$duckBm25,
         |tt AS (SELECT doc_id, bm25 FROM bm
         |       ORDER BY bm25 DESC NULLS LAST, doc_id ASC LIMIT 100),
         |tr AS (SELECT doc_id,
         |              row_number() OVER (ORDER BY bm25 DESC NULLS LAST,
         |                                 doc_id ASC) AS rank_t
         |       FROM tt),
-        |e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
-        |qv AS (SELECT emb AS qemb FROM e WHERE vec_id = 0),
-        |cs AS (SELECT e.vec_id,
-        |              round(list_cosine_similarity(e.emb, qv.qemb), 6) AS cos_sim
-        |       FROM e, qv WHERE e.vec_id <> 0),
+        |$duckQueryCos,
         |rel AS (SELECT vec_id AS doc_id FROM cs
         |        ORDER BY cos_sim DESC NULLS LAST, vec_id ASC LIMIT 10),
         |j AS (SELECT rel.doc_id, tr.rank_t
@@ -5715,43 +5518,14 @@ object LlmOps {
     // Same bm25@100 + cosine-top-10 CTEs as llm_eval_mrr; AP sums the
     // running-precision at each relevant rank, one rounded double each.
     "llm_eval_map" ->
-      """WITH tok AS (SELECT doc_id, string_split(lower(text), ' ') AS t
-        |             FROM documents),
-        |dl AS (SELECT doc_id, CAST(len(t) AS BIGINT) AS dl FROM tok),
-        |tot AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
-        |               CAST(sum(len(t)) AS BIGINT) AS t_total FROM tok),
-        |qf AS (SELECT doc_id, term FROM
-        |         (SELECT doc_id, unnest(t) AS term FROM tok)
-        |       WHERE term IN ('merge', 'vector', 'stream')),
-        |tf AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
-        |       FROM qf GROUP BY doc_id, term),
-        |df AS (SELECT term, CAST(count(DISTINCT doc_id) AS BIGINT) AS df
-        |       FROM qf GROUP BY term),
-        |sc AS (SELECT tf.doc_id,
-        |         CAST(round(
-        |           ln((CAST(tot.n_docs - df.df AS DOUBLE) + 0.5) /
-        |              (CAST(df.df AS DOUBLE) + 0.5) + 1.0) *
-        |           ((CAST(tf.tf AS DOUBLE) * 2.2) /
-        |            (CAST(tf.tf AS DOUBLE) + 1.2 * (0.25 + 0.75 *
-        |             (CAST(dl.dl * tot.n_docs AS DOUBLE) /
-        |              CAST(tot.t_total AS DOUBLE))))), 12)
-        |           AS DECIMAL(30, 14)) AS sc
-        |       FROM tf JOIN df USING (term)
-        |            JOIN dl ON tf.doc_id = dl.doc_id
-        |            CROSS JOIN tot),
-        |bm AS (SELECT doc_id, round(CAST(sum(sc) AS DOUBLE), 6) AS bm25
-        |       FROM sc GROUP BY doc_id),
+      s"""$duckBm25,
         |tt AS (SELECT doc_id, bm25 FROM bm
         |       ORDER BY bm25 DESC NULLS LAST, doc_id ASC LIMIT 100),
         |tr AS (SELECT doc_id,
         |              row_number() OVER (ORDER BY bm25 DESC NULLS LAST,
         |                                 doc_id ASC) AS rank_t
         |       FROM tt),
-        |e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
-        |qv AS (SELECT emb AS qemb FROM e WHERE vec_id = 0),
-        |cs AS (SELECT e.vec_id,
-        |              round(list_cosine_similarity(e.emb, qv.qemb), 6) AS cos_sim
-        |       FROM e, qv WHERE e.vec_id <> 0),
+        |$duckQueryCos,
         |rel AS (SELECT vec_id AS doc_id FROM cs
         |        ORDER BY cos_sim DESC NULLS LAST, vec_id ASC LIMIT 10),
         |j AS (SELECT tr.rank_t,
@@ -5775,43 +5549,14 @@ object LlmOps {
     // The llm_eval_map chain through j (rank, relevance flag), swept over
     // the k cutoffs; each recall is one double division.
     "llm_eval_recall" ->
-      """WITH tok AS (SELECT doc_id, string_split(lower(text), ' ') AS t
-        |             FROM documents),
-        |dl AS (SELECT doc_id, CAST(len(t) AS BIGINT) AS dl FROM tok),
-        |tot AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
-        |               CAST(sum(len(t)) AS BIGINT) AS t_total FROM tok),
-        |qf AS (SELECT doc_id, term FROM
-        |         (SELECT doc_id, unnest(t) AS term FROM tok)
-        |       WHERE term IN ('merge', 'vector', 'stream')),
-        |tf AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
-        |       FROM qf GROUP BY doc_id, term),
-        |df AS (SELECT term, CAST(count(DISTINCT doc_id) AS BIGINT) AS df
-        |       FROM qf GROUP BY term),
-        |sc AS (SELECT tf.doc_id,
-        |         CAST(round(
-        |           ln((CAST(tot.n_docs - df.df AS DOUBLE) + 0.5) /
-        |              (CAST(df.df AS DOUBLE) + 0.5) + 1.0) *
-        |           ((CAST(tf.tf AS DOUBLE) * 2.2) /
-        |            (CAST(tf.tf AS DOUBLE) + 1.2 * (0.25 + 0.75 *
-        |             (CAST(dl.dl * tot.n_docs AS DOUBLE) /
-        |              CAST(tot.t_total AS DOUBLE))))), 12)
-        |           AS DECIMAL(30, 14)) AS sc
-        |       FROM tf JOIN df USING (term)
-        |            JOIN dl ON tf.doc_id = dl.doc_id
-        |            CROSS JOIN tot),
-        |bm AS (SELECT doc_id, round(CAST(sum(sc) AS DOUBLE), 6) AS bm25
-        |       FROM sc GROUP BY doc_id),
+      s"""$duckBm25,
         |tt AS (SELECT doc_id, bm25 FROM bm
         |       ORDER BY bm25 DESC NULLS LAST, doc_id ASC LIMIT 100),
         |tr AS (SELECT doc_id,
         |              row_number() OVER (ORDER BY bm25 DESC NULLS LAST,
         |                                 doc_id ASC) AS rank_t
         |       FROM tt),
-        |e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
-        |qv AS (SELECT emb AS qemb FROM e WHERE vec_id = 0),
-        |cs AS (SELECT e.vec_id,
-        |              round(list_cosine_similarity(e.emb, qv.qemb), 6) AS cos_sim
-        |       FROM e, qv WHERE e.vec_id <> 0),
+        |$duckQueryCos,
         |rel AS (SELECT vec_id AS doc_id FROM cs
         |        ORDER BY cos_sim DESC NULLS LAST, vec_id ASC LIMIT 10),
         |j AS (SELECT tr.rank_t,
@@ -6481,43 +6226,14 @@ object LlmOps {
         |ORDER BY doc_id ASC NULLS FIRST""".stripMargin,
 
     "llm_hard_negatives" ->
-      """WITH tok AS (SELECT doc_id, string_split(lower(text), ' ') AS t
-        |             FROM documents),
-        |dl AS (SELECT doc_id, CAST(len(t) AS BIGINT) AS dl FROM tok),
-        |tot AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
-        |               CAST(sum(len(t)) AS BIGINT) AS t_total FROM tok),
-        |qf AS (SELECT doc_id, term FROM
-        |         (SELECT doc_id, unnest(t) AS term FROM tok)
-        |       WHERE term IN ('merge', 'vector', 'stream')),
-        |tf AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
-        |       FROM qf GROUP BY doc_id, term),
-        |df AS (SELECT term, CAST(count(DISTINCT doc_id) AS BIGINT) AS df
-        |       FROM qf GROUP BY term),
-        |sc AS (SELECT tf.doc_id,
-        |         CAST(round(
-        |           ln((CAST(tot.n_docs - df.df AS DOUBLE) + 0.5) /
-        |              (CAST(df.df AS DOUBLE) + 0.5) + 1.0) *
-        |           ((CAST(tf.tf AS DOUBLE) * 2.2) /
-        |            (CAST(tf.tf AS DOUBLE) + 1.2 * (0.25 + 0.75 *
-        |             (CAST(dl.dl * tot.n_docs AS DOUBLE) /
-        |              CAST(tot.t_total AS DOUBLE))))), 12)
-        |           AS DECIMAL(30, 14)) AS sc
-        |       FROM tf JOIN df USING (term)
-        |            JOIN dl ON tf.doc_id = dl.doc_id
-        |            CROSS JOIN tot),
-        |bm AS (SELECT doc_id, round(CAST(sum(sc) AS DOUBLE), 6) AS bm25
-        |       FROM sc GROUP BY doc_id),
+      s"""$duckBm25,
         |tt AS (SELECT doc_id, bm25 FROM bm
         |       ORDER BY bm25 DESC NULLS LAST, doc_id ASC LIMIT 100),
         |tr AS (SELECT doc_id, bm25,
         |              row_number() OVER (ORDER BY bm25 DESC NULLS LAST,
         |                                 doc_id ASC) AS rank_t
         |       FROM tt),
-        |e AS (SELECT vec_id, embedding::DOUBLE[] AS emb FROM embeddings),
-        |qv AS (SELECT emb AS qemb FROM e WHERE vec_id = 0),
-        |cs AS (SELECT e.vec_id,
-        |              round(list_cosine_similarity(e.emb, qv.qemb), 6) AS cos_sim
-        |       FROM e, qv WHERE e.vec_id <> 0),
+        |$duckQueryCos,
         |rel AS (SELECT vec_id AS doc_id FROM cs
         |        ORDER BY cos_sim DESC NULLS LAST, vec_id ASC LIMIT 10)
         |SELECT CAST(rank_t AS BIGINT) AS rank_t, doc_id, bm25

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
@@ -174,9 +175,9 @@ object StreamOps {
 
   /** Merge-style sink via foreachBatch: upsert each micro-batch into the
     * target by key, keeping the row with the highest version column. The
-    * read-union-dedup-overwrite cycle is idempotent per batch (re-running a
-    * batch converges to the same state), which is what foreachBatch needs
-    * since its exactly-once guarantee is at-least-once + idempotence.
+    * read-union-dedup cycle is idempotent per batch (re-running a batch
+    * converges to the same state), which is what foreachBatch needs since
+    * its exactly-once guarantee is at-least-once + idempotence.
     *
     * Scale notes: the full-target rewrite here is the local stand-in for a
     * real table format's MERGE (partition-scoped rewrites); the dedup
@@ -186,28 +187,42 @@ object StreamOps {
     df.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val spark = batch.sparkSession
-        val existing =
-          try spark.read.parquet(outPath)
-          catch { case _: Exception => spark.emptyDataFrame }
-        val all =
-          if (existing.columns.isEmpty) batch
-          else existing.unionByName(batch)
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col(key))
-          .orderBy(col(version).desc, col(key).asc)
-        val merged = all
-          .withColumn("_rn", org.apache.spark.sql.functions.row_number().over(w))
-          .filter(col("_rn") === 1).drop("_rn")
-        // write to a staging dir then swap — the overwrite must not destroy
-        // the data it is still reading from.
-        val staged = merged.cache()
-        staged.count()
-        staged.write.mode("overwrite").parquet(outPath)
-        staged.unpersist()
-        ()
+        mergeBatch(batch, outPath, key, version)
       }
       .start()
+
+  /** One micro-batch of [[startMergeSink]]. The merged target never
+    * passes through a moment where it exists nowhere on disk: it is
+    * written to `<out>.writing`, renamed atomically to `<out>.staged`,
+    * and only then does the old `out` go and `<out>.staged` take its name.
+    * A crash anywhere in that swap leaves a complete `<out>.staged`, so
+    * each batch first finishes a swap a crash left half done — a replayed
+    * batch then merges into the full target, and the max-version merge
+    * makes the replay converge. (A plain overwrite would delete `out`
+    * before its write job commits, leaving a crash in between no target
+    * to merge the replay into.) */
+  private[graft] def mergeBatch(batch: DataFrame, outPath: String,
+      key: String, version: String): Unit = {
+    val spark = batch.sparkSession
+    val out = new Path(outPath)
+    val fs = out.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def move(from: String, to: String): Unit =
+      if (!fs.rename(new Path(from), new Path(to)))
+        sys.error(s"merge sink: cannot rename $from to $to")
+    def publish(): Unit = { fs.delete(out, true); move(s"$outPath.staged", outPath) }
+    if (fs.exists(new Path(s"$outPath.staged"))) publish()
+    val all =
+      if (fs.exists(out)) spark.read.parquet(outPath).unionByName(batch)
+      else batch
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col(key))
+      .orderBy(col(version).desc, col(key).asc)
+    all.withColumn("_rn", org.apache.spark.sql.functions.row_number().over(w))
+      .filter(col("_rn") === 1).drop("_rn")
+      .write.mode("overwrite").parquet(s"$outPath.writing")
+    move(s"$outPath.writing", s"$outPath.staged")
+    publish()
+  }
 
   /** Streaming near-duplicate document filter — the incremental form of
     * llm_dedup_minhash: each micro-batch of (doc_id, text, …) rows is
@@ -286,9 +301,9 @@ object StreamOps {
     * under `outPath/current` after every batch.
     *
     * Batch-equivalence is STRUCTURAL, not approximate: the scoring and
-    * fusion run through the same LlmOps.bm25FromStats / rrfFuse /
-    * hybridVectorTop bodies the declared (oracle-backed) batch query
-    * uses, over stats that accumulate losslessly (tf/dl are integers, and
+    * fusion run through the same LlmOps.bm25Stats → bm25FromStats →
+    * rrfFuse / hybridVectorTop bodies the declared (oracle-backed) batch
+    * query uses, over stats that accumulate losslessly (tf/dl are integers, and
     * df / n_docs / t_total are re-derived from the accumulated rows each
     * batch, never incrementally mutated) — so after the last batch the
     * output is bit-identical to the batch query on the same documents
@@ -310,23 +325,17 @@ object StreamOps {
     * stay bounded at 100 rows either way. */
   def startHybridSearchSink(docs: DataFrame, sfDir: String, outPath: String,
       statsPath: String, checkpoint: String,
-      qTerms: Seq[String] = Seq("merge", "vector", "stream")): StreamingQuery =
+      qTerms: Seq[String] = graft.ops.LlmOps.Bm25Terms): StreamingQuery =
     docs.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, id: Long) =>
         val spark = batch.sparkSession
-        graft.functions.VectorFunctions.register(spark)
         val b = batch.persist()
         try {
-          val toks = b.select(col("doc_id"),
-            split(lower(col("text")), " ").as("toks"))
-          toks.select(col("doc_id"), size(col("toks")).cast("long").as("dl"),
-              lit(id).as("batch_id"))
+          val (tf, dl) = graft.ops.LlmOps.bm25Stats(b, qTerms)
+          dl.withColumn("batch_id", lit(id))
             .write.mode("overwrite").parquet(s"$statsPath/docs/b$id")
-          toks.select(col("doc_id"), explode(col("toks")).as("term"))
-            .filter(col("term").isInCollection(qTerms))
-            .groupBy(col("doc_id"), col("term")).agg(count(lit(1)).as("tf"))
-            .withColumn("batch_id", lit(id))
+          tf.withColumn("batch_id", lit(id))
             .write.mode("overwrite").parquet(s"$statsPath/terms/b$id")
           // standings from the ACCUMULATED stats (this batch included);
           // the <= filter keeps a replay from seeing a later half-written
@@ -336,12 +345,8 @@ object StreamOps {
           val tfAll = spark.read.parquet(s"$statsPath/terms/b*")
             .filter(col("batch_id") <= id)
             .select(col("doc_id"), col("term"), col("tf"))
-          val dfc = tfAll.select(col("doc_id"), col("term")).distinct()
-            .groupBy(col("term")).agg(count(lit(1)).as("df"))
-          val tot = dlAll.agg(count(lit(1)).as("n_docs"),
-            sum(col("dl")).as("t_total"))
           val standings = graft.ops.LlmOps.rrfFuse(
-            graft.ops.LlmOps.bm25FromStats(tfAll, dfc, dlAll, tot),
+            graft.ops.LlmOps.bm25FromStats(tfAll, dlAll),
             graft.ops.LlmOps.hybridVectorTop(spark, sfDir))
           // stage then overwrite: the standings read nothing from
           // outPath, so a plain overwrite is safe and idempotent

@@ -358,6 +358,46 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("merge sink: a batch replayed after a crash mid-swap keeps every key") {
+    // foreachBatch is at-least-once: a crash inside the target swap
+    // re-fires the same batch. Both on-disk states the swap can be killed
+    // in — the merged rows staged beside the old target, and the old
+    // target already deleted — must replay to the full upserted table.
+    import spark.implicits._
+    val dir = tempDir("graft_mergeswap")
+    val out = s"$dir/out"
+    def run(rows: (Long, Long, Double)*): Unit = StreamOps.mergeBatch(
+      rows.toDF("user_id", "event_id", "value"), out, "user_id", "event_id")
+    def table: List[(Long, Long, Double)] = spark.read.parquet(out).collect()
+      .map(r => (r.getAs[Long]("user_id"), r.getAs[Long]("event_id"),
+        r.getAs[Double]("value"))).toList.sorted
+    def mv(from: String, to: String): Unit = java.nio.file.Files.move(
+      java.nio.file.Paths.get(from), java.nio.file.Paths.get(to))
+    def copy(from: String, to: String): Unit = {
+      val src = java.nio.file.Paths.get(from)
+      java.nio.file.Files.walk(src).forEach(p => java.nio.file.Files.copy(
+        p, java.nio.file.Paths.get(to).resolve(src.relativize(p).toString)))
+    }
+    val batch2 = Seq((10L, 3L, 9.0), (30L, 4L, 4.0))
+    val want = List((10L, 3L, 9.0), (20L, 2L, 2.0), (30L, 4L, 4.0))
+    run((10L, 1L, 1.0), (20L, 2L, 2.0))
+    copy(out, s"$dir/before")
+    run(batch2: _*)
+    assert(table === want)
+    // killed after staging, before the old target was deleted
+    mv(out, s"$out.staged"); copy(s"$dir/before", out)
+    run(batch2: _*)
+    assert(table === want, "replay beside a staged target lost keys")
+    // killed after the old target was deleted, before the final rename
+    mv(out, s"$out.staged")
+    run(batch2: _*)
+    assert(table === want, "replay after the target was deleted lost keys")
+    assert(!new java.io.File(s"$out.staged").exists() &&
+      !new java.io.File(s"$out.writing").exists() &&
+      new java.io.File(out).listFiles().forall(_.isFile),
+      "swap left a temp dir behind")
+  }
+
   test("streaming media dedup: rate/fps re-encodes of seen clips are dropped, batch-equivalent, restart-safe") {
     // The incremental, mixed-modality form of mm_dedup_audio/video: a
     // half-rate audio re-encode and a frame-doubled video re-upload of
