@@ -28,7 +28,8 @@ object Harness {
 
   /** `local[n]` session with n = `SPARK_GRAFT_CPUS` (else `defaultCpus`),
     * validated before any session exists; n shuffle partitions, UTC, no
-    * UI, log level WARN. */
+    * UI, log level WARN, fork-free streaming checkpoints
+    * ([[graft.streaming.ForklessLocalFs]]). */
   def session(defaultCpus: Int): SparkSession = {
     val n = positiveEnv("SPARK_GRAFT_CPUS", defaultCpus)
     val spark = SparkSession.builder()
@@ -38,6 +39,7 @@ object Harness {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    graft.streaming.ForklessLocalFs.install(spark)
     spark
   }
 

@@ -60,8 +60,12 @@ object FlowLog {
 
   /** Decode a binary envelope column into one row per log event.
     * Input: a DataFrame with `value: BinaryType` (gzip JSON envelope).
-    * CONTROL_MESSAGE envelopes and undecodable payloads are dropped. */
-  def decodeEnvelopes(raw: DataFrame, valueCol: String = "value"): DataFrame =
+    * CONTROL_MESSAGE envelopes and undecodable payloads are dropped.
+    * Every flow-log sink and detector passes through here, so it also
+    * makes the session's streaming checkpoints fork-free
+    * ([[graft.streaming.ForklessLocalFs]]). */
+  def decodeEnvelopes(raw: DataFrame, valueCol: String = "value"): DataFrame = {
+    graft.streaming.ForklessLocalFs.install(raw.sparkSession)
     raw
       .withColumn("json", gunzip(col(valueCol)))
       .filter(col("json").isNotNull)
@@ -76,6 +80,7 @@ object FlowLog {
         col("ev.id").as("event_id"),
         timestamp_millis(col("ev.timestamp")).as("event_ts"),
         col("ev.message").as("message"))
+  }
 
   /** Base64-string variant (e.g. Firehose delivery or test fixtures). */
   def decodeBase64Envelopes(raw: DataFrame, valueCol: String = "value"): DataFrame =

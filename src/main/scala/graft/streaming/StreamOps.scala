@@ -1,9 +1,9 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 /** Structured Streaming operator library (SURVEY.md §2.I).
   *
@@ -173,6 +173,25 @@ object StreamOps {
         OutputMode.Update())
   }
 
+  /** `df.writeStream` checkpointed at `checkpoint`, its checkpoint I/O
+    * fork-free ([[ForklessLocalFs]]): every checkpointing sink starts here. */
+  private def checkpointed(df: DataFrame, checkpoint: String): DataStreamWriter[Row] = {
+    ForklessLocalFs.install(df.sparkSession)
+    df.writeStream.option("checkpointLocation", checkpoint)
+  }
+
+  /** Ids of the `<prefix><id>` dirs under `storePath` that hold a
+    * committed write (`_SUCCESS`), in no particular order; none while
+    * `storePath` does not exist. */
+  private def storeDirs(spark: SparkSession, storePath: String, prefix: String): Seq[Long] = {
+    val root = new Path(storePath)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(root)) Seq.empty
+    else fs.listStatus(root).toSeq.map(_.getPath)
+      .filter(d => d.getName.matches(s"$prefix\\d+") && fs.exists(new Path(d, "_SUCCESS")))
+      .map(_.getName.drop(prefix.length).toLong)
+  }
+
   /** Merge-style sink via foreachBatch: upsert each micro-batch into the
     * target by key, keeping the row with the highest version column. The
     * read-union-dedup cycle is idempotent per batch (re-running a batch
@@ -184,8 +203,7 @@ object StreamOps {
     * window per key is the same plan a Delta/Iceberg merge executes. */
   def startMergeSink(df: DataFrame, outPath: String, checkpoint: String,
       key: String, version: String): StreamingQuery =
-    df.writeStream
-      .option("checkpointLocation", checkpoint)
+    checkpointed(df, checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         mergeBatch(batch, outPath, key, version)
       }
@@ -236,8 +254,11 @@ object StreamOps {
     *
     * Idempotence (foreachBatch is at-least-once + idempotent writes): both
     * writes overwrite their own batch-scoped directory, and the store read
-    * filters batch_id < currentBatch so a half-written replay partition
-    * can never mask or duplicate its own originals.
+    * takes only the committed (`_SUCCESS`) `b<k>` dirs with k < the
+    * current batch, so a half-written replay partition can never mask or
+    * duplicate its own originals. Before the first commit the store is
+    * empty; any other read failure fails the batch instead of letting
+    * its duplicates through.
     *
     * Scale notes: the per-batch work is bands(batch) ⋈ bands(store) — an
     * equi-join on (band_idx, band_hash) whose probe side is ONE
@@ -249,8 +270,7 @@ object StreamOps {
     * near-dup under the 3-gram definition), mirroring the batch path. */
   def startNearDupFilterSink(docs: DataFrame, outPath: String,
       storePath: String, checkpoint: String, tau: Double = 0.5): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
+    checkpointed(docs, checkpoint)
       .foreachBatch { (batch: DataFrame, id: Long) =>
         val spark = batch.sparkSession
         graft.functions.VectorFunctions.register(spark)
@@ -260,10 +280,10 @@ object StreamOps {
             .signaturesOf(graft.ops.LlmOps.shinglesOf(b))
             .withColumn("batch_id", lit(id))
             .persist()
+          val parts = storeDirs(spark, storePath, "b").filter(_ < id)
           val store =
-            try spark.read.parquet(s"$storePath/b*")
-              .filter(col("batch_id") < id)
-            catch { case _: Exception => spark.emptyDataFrame }
+            if (parts.isEmpty) spark.emptyDataFrame
+            else spark.read.parquet(parts.map(k => s"$storePath/b$k"): _*)
           val all = if (store.columns.isEmpty) sigs else sigs.unionByName(store)
           val nb = graft.ops.LlmOps.bandHashes(sigs)
             .select(col("doc_id").as("new_id"), col("band_idx"), col("band_hash"))
@@ -326,8 +346,7 @@ object StreamOps {
   def startHybridSearchSink(docs: DataFrame, sfDir: String, outPath: String,
       statsPath: String, checkpoint: String,
       qTerms: Seq[String] = graft.ops.LlmOps.Bm25Terms): StreamingQuery =
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
+    checkpointed(docs, checkpoint)
       .foreachBatch { (batch: DataFrame, id: Long) =>
         val spark = batch.sparkSession
         val b = batch.persist()
@@ -386,8 +405,7 @@ object StreamOps {
     require(constraints.nonEmpty, "a gate needs at least one constraint")
     require(!df.columns.contains("dq_failed"),
       "input already carries a dq_failed column — the gate would clobber it")
-    df.writeStream
-      .option("checkpointLocation", checkpoint)
+    checkpointed(df, checkpoint)
       .foreachBatch { (batch: DataFrame, id: Long) =>
         val failed = array(constraints.map { case (name, bad) =>
           when(bad, lit(name)).otherwise(lit(null))
@@ -434,8 +452,7 @@ object StreamOps {
     * upsert plan-asserts. */
   def startIvfUpsertSink(vectors: DataFrame, centroidsPath: String,
       storePath: String, checkpoint: String): StreamingQuery =
-    vectors.writeStream
-      .option("checkpointLocation", checkpoint)
+    checkpointed(vectors, checkpoint)
       .foreachBatch { (batch: DataFrame, id: Long) =>
         val spark = batch.sparkSession
         val centroids = spark.read.parquet(centroidsPath)
@@ -466,8 +483,7 @@ object StreamOps {
     * read path. */
   def startHdrHistogramSink(values: DataFrame, storePath: String,
       checkpoint: String): StreamingQuery =
-    values.writeStream
-      .option("checkpointLocation", checkpoint)
+    checkpointed(values, checkpoint)
       .foreachBatch { (batch: DataFrame, id: Long) =>
         batch.select(col("p"), col("v"))
           .withColumn("bkt", expr(graft.functions.HdrHistogram.bucketSql("v")))
@@ -500,8 +516,7 @@ object StreamOps {
     * thetaUnionAgg fold as the read path. */
   def startThetaSketchSink(keys: DataFrame, storePath: String,
       checkpoint: String): StreamingQuery =
-    keys.writeStream
-      .option("checkpointLocation", checkpoint)
+    checkpointed(keys, checkpoint)
       .foreachBatch { (batch: DataFrame, id: Long) =>
         batch.select(col("p"), col("k"))
           .groupBy(col("p"))
@@ -569,8 +584,7 @@ object StreamOps {
   def startMediaDedupSink(media: DataFrame, outPath: String,
       storePath: String, checkpoint: String,
       compactEvery: Int = 4): StreamingQuery =
-    media.writeStream
-      .option("checkpointLocation", checkpoint)
+    checkpointed(media, checkpoint)
       .foreachBatch { (batch: DataFrame, id: Long) =>
         mediaDedupBatch(batch, id, outPath, storePath, compactEvery)
       }
@@ -584,12 +598,6 @@ object StreamOps {
       outPath: String, storePath: String, compactEvery: Int): Unit = {
     val spark = batch.sparkSession
     import spark.implicits._
-    def storeDirs(prefix: String): Seq[Long] =
-      Option(new java.io.File(storePath).listFiles()).map(_.toSeq)
-        .getOrElse(Seq.empty)
-        .filter(f => f.getName.matches(s"$prefix\\d+") &&
-          new java.io.File(f, "_SUCCESS").exists())
-        .map(_.getName.drop(prefix.length).toLong)
     def rmDir(p: String): Unit = {
       val loc = new org.apache.hadoop.fs.Path(p)
       val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -616,8 +624,8 @@ object StreamOps {
       // signature over the pre-batch world PLUS this very batch, and the
       // batch_id < id filter below restores exactly the pre-batch world
       // (first-seen rows from the replayed batch carry batch_id == id).
-      val cj = storeDirs("c").filter(_ <= id).sorted.lastOption
-      val bks = storeDirs("b")
+      val cj = storeDirs(spark, storePath, "c").filter(_ <= id).sorted.lastOption
+      val bks = storeDirs(spark, storePath, "b")
         .filter(k => k < id && cj.forall(_ < k)).sorted
       val parts = cj.map(j => s"$storePath/c$j").toSeq ++
         bks.map(k => s"$storePath/b$k")
@@ -646,8 +654,8 @@ object StreamOps {
           // retire everything c<id> subsumes: any older fold, any delta
           // at-or-below id (including the delta this replay just
           // re-wrote) — covers a crash mid-retirement too.
-          (storeDirs("c").filter(_ < id).map(j => s"$storePath/c$j") ++
-            storeDirs("b").filter(_ <= id).map(k => s"$storePath/b$k"))
+          (storeDirs(spark, storePath, "c").filter(_ < id).map(j => s"$storePath/c$j") ++
+            storeDirs(spark, storePath, "b").filter(_ <= id).map(k => s"$storePath/b$k"))
             .foreach(rmDir)
         } else {
           // fold read set + this batch's delta into one deduped store:
@@ -702,8 +710,7 @@ object StreamOps {
     * to the table maintenance scheduler. */
   def startCompactionPlanSink(events: DataFrame, storePath: String,
       outPath: String, checkpoint: String, target: Long = 16384L): StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
+    checkpointed(events, checkpoint)
       .foreachBatch { (batch: DataFrame, id: Long) =>
         val spark = batch.sparkSession
         graft.ops.Basics.fileInventory(batch)
@@ -1403,10 +1410,9 @@ object StreamOps {
     * batch. */
   def startParquetSink(df: DataFrame, outPath: String, checkpoint: String,
       partitionCols: Seq[String] = Seq.empty): StreamingQuery = {
-    val w = df.writeStream
+    val w = checkpointed(df, checkpoint)
       .format("parquet")
       .option("path", outPath)
-      .option("checkpointLocation", checkpoint)
       .outputMode(OutputMode.Append())
     (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w).start()
   }

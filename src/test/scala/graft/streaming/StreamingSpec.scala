@@ -333,6 +333,33 @@ class StreamingSpec extends SparkSpec {
     } finally q2.stop()
   }
 
+  test("streaming near-dup filter: an unreadable store fails the batch instead of passing its duplicates") {
+    // Only "no committed store dir yet" reads as an empty store; a store
+    // that exists but cannot be read must stop the query, or every doc of
+    // the batch would pass as unseen.
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val dir = tempDir("graft_neardup_corrupt")
+    val mem = MemoryStream[(Long, String)]
+    val q = StreamOps.startNearDupFilterSink(
+      mem.toDF().toDF("doc_id", "text"), s"$dir/out", s"$dir/store", s"$dir/ckpt")
+    val base = "the quick brown fox jumps over the lazy dog again and again " +
+      "and then rests quietly under the old oak tree"
+    try {
+      mem.addData((1L, base)); q.processAllAvailable()
+      val parts = new java.io.File(s"$dir/store/b0").listFiles()
+        .filter(_.getName.endsWith(".parquet"))
+      assert(parts.nonEmpty, "vacuous: batch 0 stored no signatures")
+      parts.foreach(f => java.nio.file.Files.write(f.toPath, "not parquet".getBytes))
+      mem.addData((2L, base))
+      intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        q.processAllAvailable()
+      }
+      assert(!new java.io.File(s"$dir/out/b1").exists(),
+        "the duplicate of doc 1 was written as unseen")
+    } finally q.stop()
+  }
+
   test("foreachBatch merge sink upserts by key keeping the latest version") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
