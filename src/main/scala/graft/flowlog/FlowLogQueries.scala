@@ -596,10 +596,10 @@ object FlowLogQueries {
     // inference types dt as DATE and hr as INT on read — the layout's
     // contract, pinned here cross-engine.
     "flowlog_partitioned_sink_read" -> { (s, d) =>
-      // _v5: the sink is DERIVED from the line population (v6), so its
-      // store tag bumps with it even though the readback aggregate is
+      // the sink is DERIVED from the line population, so its store name
+      // carries PopulationVersion even though the readback aggregate is
       // version-independent — a stale sink must not contradict parsedFlow
-      val dir = SigStore.getOrBuild(d, "events", "flowlog_sink_v5") {
+      val dir = SigStore.getOrBuild(d, "events", s"flowlog_sink_$PopulationVersion") {
         FlowLog.writePartitioned(FlowLog.withDatePartitions(parsedFlow(s, d)), _)
       }
       s.read.parquet(dir)

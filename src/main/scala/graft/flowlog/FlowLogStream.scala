@@ -86,12 +86,12 @@ object FlowLogStream {
       portScanFold(minPorts))(r => PsPend(r.ts.getTime, r.dstport, r.reject))
   }
 
-  private def portScanFold(minPorts: Int) =
+  private[flowlog] def portScanFold(minPorts: Int) =
     EventTimeFold[(String, Timestamp), PsPend, PsSum, PortScanAlert](
       PsSum(Nil, 0L, 0L, alerted = false), _.ts_ms,
-      // (ts, dstport) is a deterministic fold order: rows equal on both are
-      // interchangeable (same set/count effect), so the onset row is unique
-      Ordering.by((p: PsPend) => (p.ts_ms, p.dstport)),
+      // rows equal on all three fields are interchangeable (same set/count
+      // effect), so the onset row and its counts are unique
+      Ordering.by((p: PsPend) => (p.ts_ms, p.dstport, p.reject)),
       k => Some(EventTimeFold.dayEnd(k._2)),
       { case ((src, day), s, ready) =>
         var portSet = s.ports.toSet

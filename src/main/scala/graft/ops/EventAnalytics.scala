@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -34,8 +34,81 @@ import org.apache.spark.sql.functions._
   *    max_by partials carry a (value, key) pair); `win_path_transitions`
   *    windows per user_id — never a global order — then aggregates to a
   *    |types|² matrix.
+  *
+  * Three time-series families are each written once, on the Spark side
+  * and as a DuckDB CTE fragment, and every query of a family adds only its
+  * own projection, join type and ORDER BY:
+  *  - the hourly spine ([[hourlySpine]] / `duckHourlySpine`): gap-fill,
+  *    interpolation and the decomposition family;
+  *  - the additive decomposition ([[decomposed]] / `duckDecomposed`):
+  *    `ts_decompose_additive`, `ts_seasonal_strength`,
+  *    `ts_residual_outliers`;
+  *  - the Holt day series ([[holtDaySeries]] / `duckHoltDays` with the
+  *    linear and seasonal recursions): the four `ts_holt_*` queries.
   */
 object EventAnalytics {
+
+  // date_trunc returns TIMESTAMP_LTZ even on NTZ input — cast straight
+  // back to NTZ (sessions run UTC) so the output column compares
+  // bit-for-bit with DuckDB's tz-free truncation, per the Tables rule.
+  private def hourTrunc(c: Column): Column =
+    date_trunc("hour", c).cast("timestamp_ntz")
+
+  /** Every (event_type, hr) over the global [min, max] hour span of `ev`:
+    * |types| × |hours| rows, a function of the span and the key
+    * cardinality, never of the row count. */
+  private def hourlySpine(ev: DataFrame): DataFrame = {
+    val hours = ev.agg(hourTrunc(min(col("ts"))).as("lo"), hourTrunc(max(col("ts"))).as("hi"))
+      .select(explode(sequence(col("lo"), col("hi"), expr("interval 1 hour"))).as("hr"))
+    ev.select(col("event_type")).distinct().crossJoin(hours)
+  }
+
+  /** The additive decomposition of the dense hourly count series `x` per
+    * event_type (rationale at ts_decompose_additive): `trend_micro` (the
+    * centred 25-hour mean, full windows only), `d` = 10⁶·x − trend_micro,
+    * and `seasonal_micro`, the (type, hour-of-day) offset floor-mean of
+    * `d`, left-joined back. `d` is null exactly where the trend is, and
+    * every row with a non-null `d` has its seasonal row. */
+  private def decomposed(ev: DataFrame): DataFrame = {
+    val agg = ev.groupBy(col("event_type"), hourTrunc(col("ts")).as("hr"))
+      .agg(count(lit(1)).as("x"))
+    val dense = hourlySpine(ev).join(agg, Seq("event_type", "hr"), "left")
+      .select(col("event_type"), col("hr"), coalesce(col("x"), lit(0L)).as("x"))
+    val wT = Window.partitionBy(col("event_type")).orderBy(col("hr").asc)
+      .rowsBetween(-12, 12)
+    val t1 = dense
+      .withColumn("w_n", count(lit(1)).over(wT))
+      .withColumn("sum25", sum(col("x")).over(wT))
+      .withColumn("trend_micro",
+        when(col("w_n") === 25, expr("(1000000 * sum25) div 25")))
+      .withColumn("d", col("x") * lit(1000000L) - col("trend_micro"))
+    val seas = t1.filter(col("d").isNotNull)
+      .groupBy(col("event_type").as("s_type"),
+        hour(col("hr")).cast("long").as("hod"))
+      .agg(expr("(sum(d + 1000000000000) div count(1)) - 1000000000000")
+        .as("seasonal_micro"))
+    t1.join(broadcast(seas),
+        t1("event_type") === col("s_type") &&
+          hour(t1("hr")).cast("long") === col("hod"), "left")
+      .select(col("event_type"), col("hr"), col("x"), col("trend_micro"),
+        col("d"), col("seasonal_micro"))
+  }
+
+  /** Each (event_type, UTC day) key's rows as one array `xs` of
+    * (ts, event_id, iv) structs in (ts, event_id) order, iv the value in
+    * exact integer ten-thousandths: the input the graft_holt kernels fold
+    * (rationale at ts_holt_linear). Registers the kernels. */
+  private def holtDaySeries(s: SparkSession, d: String): DataFrame = {
+    graft.functions.VectorFunctions.register(s)
+    Tables.events(s, d)
+      .select(col("event_type"),
+        expr("CAST(date_trunc('DAY', ts) AS TIMESTAMP_NTZ)").as("dt"),
+        col("ts"), col("event_id"),
+        expr("CAST(round(value * 10000, 0) AS BIGINT)").as("iv"))
+      .groupBy(col("event_type"), col("dt"))
+      .agg(sort_array(collect_list(struct(col("ts"), col("event_id"),
+        col("iv")))).as("xs"))
+  }
 
   val queries: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     // Hourly resample of each event_type over the global [min,max] hour
@@ -45,22 +118,12 @@ object EventAnalytics {
     // before charting/as-of alignment.
     "ts_gapfill_ffill" -> { (s, d) =>
       val ev = Tables.events(s, d)
-      // date_trunc returns TIMESTAMP_LTZ even on NTZ input — cast straight
-      // back to NTZ (sessions run UTC) so the output column compares
-      // bit-for-bit with DuckDB's tz-free truncation, per the Tables rule.
-      val trunc = (c: org.apache.spark.sql.Column) =>
-        date_trunc("hour", c).cast("timestamp_ntz")
       val agg = ev
-        .groupBy(col("event_type"), trunc(col("ts")).as("hr"))
+        .groupBy(col("event_type"), hourTrunc(col("ts")).as("hr"))
         .agg(count(lit(1)).as("n"), sum(col("value").cast(Tables.Money)).as("sv"))
-      val bounds = ev.agg(trunc(min(col("ts"))).as("lo"),
-        trunc(max(col("ts"))).as("hi"))
-      val hours = bounds.select(
-        explode(sequence(col("lo"), col("hi"), expr("interval 1 hour"))).as("hr"))
-      val spine = ev.select(col("event_type")).distinct().crossJoin(hours)
       val w = Window.partitionBy(col("event_type")).orderBy(col("hr").asc)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      spine.join(agg, Seq("event_type", "hr"), "left")
+      hourlySpine(ev).join(agg, Seq("event_type", "hr"), "left")
         .select(col("event_type"), col("hr"),
           coalesce(col("n"), lit(0L)).as("n"),
           last(col("sv"), ignoreNulls = true).over(w)
@@ -150,10 +213,8 @@ object EventAnalytics {
     // max_by carry a (value, key) pair through partial aggregation, the
     // same one-shuffle shape as any groupBy at 100 TB.
     "ts_ohlc_resample" -> { (s, d) =>
-      val ev = Tables.events(s, d)
       val key = struct(col("ts"), col("event_id"))
-      ev.groupBy(col("event_type"),
-          date_trunc("hour", col("ts")).cast("timestamp_ntz").as("hr"))
+      Tables.events(s, d).groupBy(col("event_type"), hourTrunc(col("ts")).as("hr"))
         .agg(min_by(col("value"), key).as("open"),
           max(col("value")).as("high"), min(col("value")).as("low"),
           max_by(col("value"), key).as("close"),
@@ -191,23 +252,16 @@ object EventAnalytics {
     // over raw events.
     "ts_interpolate_linear" -> { (s, d) =>
       val ev = Tables.events(s, d)
-      val trunc = (c: org.apache.spark.sql.Column) =>
-        date_trunc("hour", c).cast("timestamp_ntz")
       val agg = ev
-        .groupBy(col("event_type"), trunc(col("ts")).as("hr"))
+        .groupBy(col("event_type"), hourTrunc(col("ts")).as("hr"))
         .agg(sum(col("value").cast(Tables.Money))
           .cast("decimal(18,4)").as("sv"))
-      val bounds = ev.agg(trunc(min(col("ts"))).as("lo"),
-        trunc(max(col("ts"))).as("hi"))
-      val hours = bounds.select(
-        explode(sequence(col("lo"), col("hi"), expr("interval 1 hour"))).as("hr"))
-      val spine = ev.select(col("event_type")).distinct().crossJoin(hours)
       val wP = Window.partitionBy(col("event_type")).orderBy(col("hr").asc)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       val wN = Window.partitionBy(col("event_type")).orderBy(col("hr").asc)
         .rowsBetween(Window.currentRow, Window.unboundedFollowing)
       val knownHr = when(col("sv").isNotNull, col("hr"))
-      spine.join(agg, Seq("event_type", "hr"), "left")
+      hourlySpine(ev).join(agg, Seq("event_type", "hr"), "left")
         .withColumn("p_h", last(knownHr, ignoreNulls = true).over(wP))
         .withColumn("p_v", last(col("sv"), ignoreNulls = true).over(wP))
         .withColumn("n_h", first(knownHr, ignoreNulls = true).over(wN))
@@ -260,7 +314,7 @@ object EventAnalytics {
     // engines).
     "agg_retention_cohort" -> { (s, d) =>
       val ev = Tables.events(s, d)
-      // NTZ cast for the same reason as ts_gapfill_ffill's hour truncation.
+      // NTZ cast for the same reason as hourTrunc's.
       val f = ev.groupBy(col("user_id"))
         .agg(date_trunc("week", min(col("ts"))).cast("timestamp_ntz").as("cohort_week"))
       val a = ev.select(col("user_id"),
@@ -552,15 +606,7 @@ object EventAnalytics {
     // recursive CTE joined on per-key row_number. Output keeps the exact
     // integer state (level_u/trend_u) plus one rounded double division.
     "ts_holt_linear" -> { (s, d) =>
-      graft.functions.VectorFunctions.register(s)
-      val ev = Tables.events(s, d)
-        .select(col("event_type"),
-          expr("CAST(date_trunc('DAY', ts) AS TIMESTAMP_NTZ)").as("dt"),
-          col("ts"), col("event_id"),
-          expr("CAST(round(value * 10000, 0) AS BIGINT)").as("iv"))
-      ev.groupBy(col("event_type"), col("dt"))
-        .agg(sort_array(collect_list(struct(col("ts"), col("event_id"),
-          col("iv")))).as("xs"))
+      holtDaySeries(s, d)
         .withColumn("st", expr("graft_holt(transform(xs, x -> x.iv))"))
         .select(col("event_type"), col("dt"), explode(expr(
           """transform(xs, (x, i) -> named_struct(
@@ -594,15 +640,7 @@ object EventAnalytics {
     // parallelize across days × types while each day's fold stays exactly
     // sequential.
     "ts_holt_winters" -> { (s, d) =>
-      graft.functions.VectorFunctions.register(s)
-      val ev = Tables.events(s, d)
-        .select(col("event_type"),
-          expr("CAST(date_trunc('DAY', ts) AS TIMESTAMP_NTZ)").as("dt"),
-          col("ts"), col("event_id"),
-          expr("CAST(round(value * 10000, 0) AS BIGINT)").as("iv"))
-      ev.groupBy(col("event_type"), col("dt"))
-        .agg(sort_array(collect_list(struct(col("ts"), col("event_id"),
-          col("iv")))).as("xs"))
+      holtDaySeries(s, d)
         .withColumn("st", expr("graft_holt_winters(transform(xs, x -> x.iv), 4)"))
         .select(col("event_type"), col("dt"), explode(expr(
           """transform(xs, (x, i) -> named_struct(
@@ -631,15 +669,7 @@ object EventAnalytics {
     // happens here, so at 100 TB this is the CHEAPER query: same
     // day-scoped parallel fold, key-sized output.
     "ts_holt_forecast" -> { (s, d) =>
-      graft.functions.VectorFunctions.register(s)
-      val ev = Tables.events(s, d)
-        .select(col("event_type"),
-          expr("CAST(date_trunc('DAY', ts) AS TIMESTAMP_NTZ)").as("dt"),
-          col("ts"), col("event_id"),
-          expr("CAST(round(value * 10000, 0) AS BIGINT)").as("iv"))
-      ev.groupBy(col("event_type"), col("dt"))
-        .agg(sort_array(collect_list(struct(col("ts"), col("event_id"),
-          col("iv")))).as("xs"))
+      holtDaySeries(s, d)
         .withColumn("st", expr("graft_holt(transform(xs, x -> x.iv))"))
         .withColumn("n", size(col("xs")))
         .withColumn("lt", expr("element_at(st, 2 * n - 1)"))
@@ -662,15 +692,7 @@ object EventAnalytics {
     // seasonal values straight off the recursive CTE's rolling LIST state
     // (sl[h] IS s_{T−4+h} once the list is full).
     "ts_holt_winters_forecast" -> { (s, d) =>
-      graft.functions.VectorFunctions.register(s)
-      val ev = Tables.events(s, d)
-        .select(col("event_type"),
-          expr("CAST(date_trunc('DAY', ts) AS TIMESTAMP_NTZ)").as("dt"),
-          col("ts"), col("event_id"),
-          expr("CAST(round(value * 10000, 0) AS BIGINT)").as("iv"))
-      ev.groupBy(col("event_type"), col("dt"))
-        .agg(sort_array(collect_list(struct(col("ts"), col("event_id"),
-          col("iv")))).as("xs"))
+      holtDaySeries(s, d)
         .withColumn("n", size(col("xs")))
         .filter(col("n") >= 4)
         .withColumn("st", expr("graft_holt_winters(transform(xs, x -> x.iv), 4)"))
@@ -832,33 +854,7 @@ object EventAnalytics {
     // Scale: the spine is |types|×|hours| (metadata-sized), one window
     // pass keyed by type, one tiny (type, 24) aggregate broadcast back.
     "ts_decompose_additive" -> { (s, d) =>
-      val ev = Tables.events(s, d)
-      val trunc = (c: org.apache.spark.sql.Column) =>
-        date_trunc("hour", c).cast("timestamp_ntz")
-      val agg = ev.groupBy(col("event_type"), trunc(col("ts")).as("hr"))
-        .agg(count(lit(1)).as("x"))
-      val bounds = ev.agg(trunc(min(col("ts"))).as("lo"), trunc(max(col("ts"))).as("hi"))
-      val hours = bounds.select(
-        explode(sequence(col("lo"), col("hi"), expr("interval 1 hour"))).as("hr"))
-      val dense = ev.select(col("event_type")).distinct().crossJoin(hours)
-        .join(agg, Seq("event_type", "hr"), "left")
-        .select(col("event_type"), col("hr"), coalesce(col("x"), lit(0L)).as("x"))
-      val wT = Window.partitionBy(col("event_type")).orderBy(col("hr").asc)
-        .rowsBetween(-12, 12)
-      val t1 = dense
-        .withColumn("w_n", count(lit(1)).over(wT))
-        .withColumn("sum25", sum(col("x")).over(wT))
-        .withColumn("trend_micro",
-          when(col("w_n") === 25, expr("(1000000 * sum25) div 25")))
-        .withColumn("d", col("x") * lit(1000000L) - col("trend_micro"))
-      val seas = t1.filter(col("d").isNotNull)
-        .groupBy(col("event_type").as("s_type"),
-          hour(col("hr")).cast("long").as("hod"))
-        .agg(expr("(sum(d + 1000000000000) div count(1)) - 1000000000000")
-          .as("seasonal_micro"))
-      t1.join(broadcast(seas),
-          t1("event_type") === col("s_type") &&
-            hour(t1("hr")).cast("long") === col("hod"), "left")
+      decomposed(Tables.events(s, d))
         .select(col("event_type"), col("hr"), col("x"), col("trend_micro"),
           col("seasonal_micro"),
           (col("d") - col("seasonal_micro")).as("resid_micro"))
@@ -875,35 +871,9 @@ object EventAnalytics {
     // subtracted from 1.0 and rounded to 9. Same plan shape as the
     // decomposition it diagnoses plus one tiny per-type aggregate.
     "ts_seasonal_strength" -> { (s, d) =>
-      val ev = Tables.events(s, d)
-      val trunc = (c: org.apache.spark.sql.Column) =>
-        date_trunc("hour", c).cast("timestamp_ntz")
-      val agg = ev.groupBy(col("event_type"), trunc(col("ts")).as("hr"))
-        .agg(count(lit(1)).as("x"))
-      val bounds = ev.agg(trunc(min(col("ts"))).as("lo"), trunc(max(col("ts"))).as("hi"))
-      val hours = bounds.select(
-        explode(sequence(col("lo"), col("hi"), expr("interval 1 hour"))).as("hr"))
-      val dense = ev.select(col("event_type")).distinct().crossJoin(hours)
-        .join(agg, Seq("event_type", "hr"), "left")
-        .select(col("event_type"), col("hr"), coalesce(col("x"), lit(0L)).as("x"))
-      val wT = Window.partitionBy(col("event_type")).orderBy(col("hr").asc)
-        .rowsBetween(-12, 12)
-      val t1 = dense
-        .withColumn("w_n", count(lit(1)).over(wT))
-        .withColumn("sum25", sum(col("x")).over(wT))
-        .withColumn("trend_micro",
-          when(col("w_n") === 25, expr("(1000000 * sum25) div 25")))
-        .withColumn("d", col("x") * lit(1000000L) - col("trend_micro"))
-      val seas = t1.filter(col("d").isNotNull)
-        .groupBy(col("event_type").as("s_type"),
-          hour(col("hr")).cast("long").as("hod"))
-        .agg(expr("(sum(d + 1000000000000) div count(1)) - 1000000000000")
-          .as("seasonal_micro"))
       val dec38 = org.apache.spark.sql.types.DecimalType(38, 0)
-      t1.filter(col("d").isNotNull)
-        .join(broadcast(seas),
-          t1("event_type") === col("s_type") &&
-            hour(t1("hr")).cast("long") === col("hod"))
+      decomposed(Tables.events(s, d))
+        .filter(col("d").isNotNull)
         .withColumn("r", col("d") - col("seasonal_micro"))
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"),
@@ -1104,7 +1074,7 @@ object EventAnalytics {
 
     // STL-style anomaly detection — the composition the decompose family
     // exists for: flag hours where the RESIDUAL (x − trend − seasonal,
-    // the ts_decompose_additive pipeline verbatim, integer micro-units)
+    // the shared `decomposed` seam, integer micro-units)
     // exceeds 3× the per-type MAD of residuals. The MAD is an EXACT
     // rank-selected lower median of |resid| (the agg_winsorized_mean
     // rank-pick discipline — never an interpolating quantile), so the
@@ -1112,33 +1082,7 @@ object EventAnalytics {
     // decompose's spine/window passes + one rank window over the
     // residual table + a |types|-row broadcast join-back.
     "ts_residual_outliers" -> { (s, d) =>
-      val ev = Tables.events(s, d)
-      val trunc = (c: org.apache.spark.sql.Column) =>
-        date_trunc("hour", c).cast("timestamp_ntz")
-      val agg = ev.groupBy(col("event_type"), trunc(col("ts")).as("hr"))
-        .agg(count(lit(1)).as("x"))
-      val bounds = ev.agg(trunc(min(col("ts"))).as("lo"), trunc(max(col("ts"))).as("hi"))
-      val hours = bounds.select(
-        explode(sequence(col("lo"), col("hi"), expr("interval 1 hour"))).as("hr"))
-      val dense = ev.select(col("event_type")).distinct().crossJoin(hours)
-        .join(agg, Seq("event_type", "hr"), "left")
-        .select(col("event_type"), col("hr"), coalesce(col("x"), lit(0L)).as("x"))
-      val wT = Window.partitionBy(col("event_type")).orderBy(col("hr").asc)
-        .rowsBetween(-12, 12)
-      val t1 = dense
-        .withColumn("w_n", count(lit(1)).over(wT))
-        .withColumn("sum25", sum(col("x")).over(wT))
-        .withColumn("trend_micro",
-          when(col("w_n") === 25, expr("(1000000 * sum25) div 25")))
-        .withColumn("d", col("x") * lit(1000000L) - col("trend_micro"))
-      val seas = t1.filter(col("d").isNotNull)
-        .groupBy(col("event_type").as("s_type"),
-          hour(col("hr")).cast("long").as("hod"))
-        .agg(expr("(sum(d + 1000000000000) div count(1)) - 1000000000000")
-          .as("seasonal_micro"))
-      val r = t1.join(broadcast(seas),
-          t1("event_type") === col("s_type") &&
-            hour(t1("hr")).cast("long") === col("hod"))
+      val r = decomposed(Tables.events(s, d))
         .filter(col("d").isNotNull)
         .select(col("event_type"), col("hr"), col("x"),
           (col("d") - col("seasonal_micro")).as("resid_micro"))
@@ -1197,16 +1141,118 @@ object EventAnalytics {
     }
   )
 
+  /** [[hourlySpine]]'s oracle twin: the `spine` CTE (event_type, hr),
+    * no leading WITH and no trailing comma. */
+  private val duckHourlySpine =
+    """spine AS (
+      |  SELECT t.event_type, h.hr
+      |  FROM (SELECT DISTINCT event_type FROM events) t
+      |  CROSS JOIN (SELECT unnest(generate_series(
+      |       (SELECT date_trunc('hour', min(ts)) FROM events),
+      |       (SELECT date_trunc('hour', max(ts)) FROM events),
+      |       INTERVAL 1 HOUR)) AS hr) h
+      |)""".stripMargin
+
+  /** [[decomposed]]'s oracle twin, ending at the `dec` CTE (event_type,
+    * hr, x, trend_micro, d, seasonal_micro); the offset trick keeps every
+    * `//` on the non-negative domain (see ts_decompose_additive). DuckDB
+    * lifts the window sums to HUGEINT, so readers cast back to BIGINT. */
+  private val duckDecomposed =
+    s"""$duckHourlySpine, agg AS (
+       |  SELECT event_type, date_trunc('hour', ts) AS hr,
+       |         CAST(count(*) AS BIGINT) AS x
+       |  FROM events GROUP BY 1, 2
+       |), dense AS (
+       |  SELECT s.event_type, s.hr, COALESCE(a.x, 0) AS x
+       |  FROM spine s LEFT JOIN agg a ON s.event_type = a.event_type AND s.hr = a.hr
+       |), t1 AS (
+       |  SELECT event_type, hr, x,
+       |         CASE WHEN count(*) OVER w = 25
+       |              THEN (1000000 * sum(x) OVER w) // 25 END AS trend_micro
+       |  FROM dense
+       |  WINDOW w AS (PARTITION BY event_type ORDER BY hr
+       |               ROWS BETWEEN 12 PRECEDING AND 12 FOLLOWING)
+       |), t2 AS (
+       |  SELECT event_type, hr, x, trend_micro, 1000000 * x - trend_micro AS d
+       |  FROM t1
+       |), seas AS (
+       |  SELECT event_type AS s_type, hour(hr) AS hod,
+       |         (sum(d + 1000000000000) // count(*)) - 1000000000000 AS seasonal_micro
+       |  FROM t2 WHERE d IS NOT NULL GROUP BY event_type, hour(hr)
+       |), dec AS (
+       |  SELECT t2.event_type, t2.hr, t2.x, t2.trend_micro, t2.d, seas.seasonal_micro
+       |  FROM t2 LEFT JOIN seas
+       |    ON seas.s_type = t2.event_type AND seas.hod = hour(t2.hr)
+       |)""".stripMargin
+
+  /** ⌊x/2⌋ in DuckDB. CROSS-ENGINE TRAP (measured, round 10): DuckDB `//`
+    * TRUNCATES toward zero (−5 // 2 = −2) while Spark's shiftright(·, 1)
+    * floors (−5 >> 1 = −3), so the Holt oracles use the integer-only
+    * identity ⌊x/2⌋ = (x − floormod(x, 2)) / 2, floormod(x, 2) =
+    * ((x % 2) + 2) % 2 (x − floormod is even, so `//` on it is exact and
+    * truncate ≡ floor). */
+  private def fdiv(x: String) = s"((($x) - (((($x) % 2) + 2) % 2)) // 2)"
+
+  /** [[holtDaySeries]]'s oracle twin: the `b` CTE, each (type, day) key's
+    * rows numbered rn in (ts, event_id) order. */
+  private val duckHoltDays =
+    """b AS (
+      |  SELECT event_type, date_trunc('day', ts) AS dt, ts, event_id,
+      |         CAST(round(value * 10000, 0) AS BIGINT) AS iv,
+      |         row_number() OVER (PARTITION BY event_type, date_trunc('day', ts)
+      |                            ORDER BY ts ASC, event_id ASC) AS rn
+      |  FROM events
+      |)""".stripMargin
+
+  /** graft_holt replayed as a recursive CTE `r` (l, b) joined on the
+    * per-key rn of [[duckHoltDays]], from WITH RECURSIVE on. Recursion
+    * depth = max rows per day-key (~750). */
+  private val duckHoltLinear = {
+    val lNew = fdiv("b.iv + r.l + r.b")
+    val bNew = fdiv(s"$lNew - r.l + r.b")
+    s"""WITH RECURSIVE $duckHoltDays,
+       |r AS (
+       |  SELECT event_type, dt, ts, event_id, iv, rn,
+       |         iv AS l, CAST(0 AS BIGINT) AS b
+       |  FROM b WHERE rn = 1
+       |  UNION ALL
+       |  SELECT b.event_type, b.dt, b.ts, b.event_id, b.iv, b.rn,
+       |         $lNew AS l,
+       |         $bNew AS b
+       |  FROM r JOIN b ON b.event_type = r.event_type AND b.dt = r.dt
+       |              AND b.rn = r.rn + 1
+       |)""".stripMargin
+  }
+
+  /** graft_holt_winters (p = 4) as a recursive CTE `r` (l, b, s and the
+    * rolling list sl of the last p seasonal values, s_{t−p} = sl[1] once it
+    * is full) over [[duckHoltDays]]; seed rows gate on rn <= 4. */
+  private val duckHoltSeasonal = {
+    val lNew = fdiv("b.iv - r.sl[1] + r.l + r.b")
+    val bNew = fdiv(s"$lNew - r.l + r.b")
+    val sNew = fdiv(s"b.iv - $lNew + r.sl[1]")
+    s"""WITH RECURSIVE $duckHoltDays,
+       |r AS (
+       |  SELECT event_type, dt, ts, event_id, iv, rn,
+       |         iv AS l, CAST(0 AS BIGINT) AS b, CAST(0 AS BIGINT) AS s,
+       |         [CAST(0 AS BIGINT)] AS sl
+       |  FROM b WHERE rn = 1
+       |  UNION ALL
+       |  SELECT b.event_type, b.dt, b.ts, b.event_id, b.iv, b.rn,
+       |         CASE WHEN b.rn <= 4 THEN b.iv ELSE $lNew END AS l,
+       |         CASE WHEN b.rn <= 4 THEN CAST(0 AS BIGINT) ELSE $bNew END AS b,
+       |         CASE WHEN b.rn <= 4 THEN CAST(0 AS BIGINT) ELSE $sNew END AS s,
+       |         list_concat(
+       |           CASE WHEN len(r.sl) < 4 THEN r.sl ELSE r.sl[2:] END,
+       |           [CASE WHEN b.rn <= 4 THEN CAST(0 AS BIGINT) ELSE $sNew END]) AS sl
+       |  FROM r JOIN b ON b.event_type = r.event_type AND b.dt = r.dt
+       |              AND b.rn = r.rn + 1
+       |)""".stripMargin
+  }
+
   val oracles: Seq[(String, String)] = Seq(
     "ts_gapfill_ffill" ->
-      """WITH spine AS (
-        |  SELECT t.event_type, h.hr
-        |  FROM (SELECT DISTINCT event_type FROM events) t
-        |  CROSS JOIN (SELECT unnest(generate_series(
-        |       (SELECT date_trunc('hour', min(ts)) FROM events),
-        |       (SELECT date_trunc('hour', max(ts)) FROM events),
-        |       INTERVAL 1 HOUR)) AS hr) h
-        |), agg AS (
+      s"""WITH $duckHourlySpine, agg AS (
         |  SELECT event_type, date_trunc('hour', ts) AS hr, count(*) AS n,
         |         sum(CAST(value AS DECIMAL(38,4))) AS sv
         |  FROM events GROUP BY 1, 2
@@ -1316,14 +1362,7 @@ object EventAnalytics {
         |ORDER BY event_type ASC NULLS FIRST, next_type ASC NULLS FIRST""".stripMargin,
 
     "ts_interpolate_linear" ->
-      """WITH spine AS (
-        |  SELECT t.event_type, h.hr
-        |  FROM (SELECT DISTINCT event_type FROM events) t
-        |  CROSS JOIN (SELECT unnest(generate_series(
-        |       (SELECT date_trunc('hour', min(ts)) FROM events),
-        |       (SELECT date_trunc('hour', max(ts)) FROM events),
-        |       INTERVAL 1 HOUR)) AS hr) h
-        |), agg AS (
+      s"""WITH $duckHourlySpine, agg AS (
         |  SELECT event_type, date_trunc('hour', ts) AS hr,
         |         CAST(sum(CAST(value AS DECIMAL(38,4))) AS DECIMAL(18,4)) AS sv
         |  FROM events GROUP BY 1, 2
@@ -1594,109 +1633,28 @@ object EventAnalytics {
          |ORDER BY event_type ASC NULLS FIRST, ts ASC, event_id ASC""".stripMargin
     },
 
-    // The identical Holt recurrence replayed as a recursive CTE joined on
-    // per-(type, day) row_number. CROSS-ENGINE TRAP (measured, round 10):
-    // DuckDB `//` TRUNCATES toward zero (−5 // 2 = −2) while Spark's
-    // shiftright(·, 1) floors (−5 >> 1 = −3) — so the oracle emulates
-    // floor division with the integer-only identity
-    // ⌊x/2⌋ = (x − floormod(x, 2)) / 2 where floormod(x, 2) =
-    // ((x % 2) + 2) % 2 (x − floormod is even, so `//` on it is exact and
-    // truncate ≡ floor). Recursion depth = max rows per day-key (~750).
-    "ts_holt_linear" -> {
-      def fdiv(x: String) = s"((($x) - (((($x) % 2) + 2) % 2)) // 2)"
-      val lNew = fdiv("b.iv + r.l + r.b")
-      val bNew = fdiv(s"$lNew - r.l + r.b")
-      s"""WITH RECURSIVE b AS (
-         |  SELECT event_type, date_trunc('day', ts) AS dt, ts, event_id,
-         |         CAST(round(value * 10000, 0) AS BIGINT) AS iv,
-         |         row_number() OVER (PARTITION BY event_type, date_trunc('day', ts)
-         |                            ORDER BY ts ASC, event_id ASC) AS rn
-         |  FROM events
-         |),
-         |r AS (
-         |  SELECT event_type, dt, ts, event_id, iv, rn,
-         |         iv AS l, CAST(0 AS BIGINT) AS b
-         |  FROM b WHERE rn = 1
-         |  UNION ALL
-         |  SELECT b.event_type, b.dt, b.ts, b.event_id, b.iv, b.rn,
-         |         $lNew AS l,
-         |         $bNew AS b
-         |  FROM r JOIN b ON b.event_type = r.event_type AND b.dt = r.dt
-         |              AND b.rn = r.rn + 1
-         |)
+    "ts_holt_linear" ->
+      s"""$duckHoltLinear
          |SELECT event_type, dt, ts, event_id, iv,
          |       CAST(l AS BIGINT) AS level_u, CAST(b AS BIGINT) AS trend_u,
          |       round(CAST(l AS DOUBLE) / 10000.0, 6) AS level
          |FROM r
-         |ORDER BY event_type ASC NULLS FIRST, ts ASC, event_id ASC""".stripMargin
-    },
+         |ORDER BY event_type ASC NULLS FIRST, ts ASC, event_id ASC""".stripMargin,
 
-    // The identical Holt–Winters recurrence replayed as a recursive CTE:
-    // the last p seasonal values travel as a rolling LIST in the
-    // recursion state (s_{t−p} = sl[1] once the list is full), every
-    // halving uses the ts_holt_linear floor-division emulation, and seed
-    // rows gate on rn <= 4.
-    "ts_holt_winters" -> {
-      def fdiv(x: String) = s"((($x) - (((($x) % 2) + 2) % 2)) // 2)"
-      val lNew = fdiv("b.iv - r.sl[1] + r.l + r.b")
-      val bNew = fdiv(s"$lNew - r.l + r.b")
-      val sNew = fdiv(s"b.iv - $lNew + r.sl[1]")
-      s"""WITH RECURSIVE b AS (
-         |  SELECT event_type, date_trunc('day', ts) AS dt, ts, event_id,
-         |         CAST(round(value * 10000, 0) AS BIGINT) AS iv,
-         |         row_number() OVER (PARTITION BY event_type, date_trunc('day', ts)
-         |                            ORDER BY ts ASC, event_id ASC) AS rn
-         |  FROM events
-         |),
-         |r AS (
-         |  SELECT event_type, dt, ts, event_id, iv, rn,
-         |         iv AS l, CAST(0 AS BIGINT) AS b, CAST(0 AS BIGINT) AS s,
-         |         [CAST(0 AS BIGINT)] AS sl
-         |  FROM b WHERE rn = 1
-         |  UNION ALL
-         |  SELECT b.event_type, b.dt, b.ts, b.event_id, b.iv, b.rn,
-         |         CASE WHEN b.rn <= 4 THEN b.iv ELSE $lNew END AS l,
-         |         CASE WHEN b.rn <= 4 THEN CAST(0 AS BIGINT) ELSE $bNew END AS b,
-         |         CASE WHEN b.rn <= 4 THEN CAST(0 AS BIGINT) ELSE $sNew END AS s,
-         |         list_concat(
-         |           CASE WHEN len(r.sl) < 4 THEN r.sl ELSE r.sl[2:] END,
-         |           [CASE WHEN b.rn <= 4 THEN CAST(0 AS BIGINT) ELSE $sNew END]) AS sl
-         |  FROM r JOIN b ON b.event_type = r.event_type AND b.dt = r.dt
-         |              AND b.rn = r.rn + 1
-         |)
+    "ts_holt_winters" ->
+      s"""$duckHoltSeasonal
          |SELECT event_type, dt, ts, event_id, iv,
          |       CAST(l AS BIGINT) AS level_u, CAST(b AS BIGINT) AS trend_u,
          |       CAST(s AS BIGINT) AS seasonal_u,
          |       round(CAST(l AS DOUBLE) / 10000.0, 6) AS level
          |FROM r
-         |ORDER BY event_type ASC NULLS FIRST, ts ASC, event_id ASC""".stripMargin
-    },
+         |ORDER BY event_type ASC NULLS FIRST, ts ASC, event_id ASC""".stripMargin,
 
     // The ts_holt_linear recursion, projected to each key's FINAL states
     // and crossed with the h = 1..4 horizon: one linear projection per
     // step, all HUGEINT-safe integers cast back to BIGINT.
-    "ts_holt_forecast" -> {
-      def fdiv(x: String) = s"((($x) - (((($x) % 2) + 2) % 2)) // 2)"
-      val lNew = fdiv("b.iv + r.l + r.b")
-      val bNew = fdiv(s"$lNew - r.l + r.b")
-      s"""WITH RECURSIVE b AS (
-         |  SELECT event_type, date_trunc('day', ts) AS dt, ts, event_id,
-         |         CAST(round(value * 10000, 0) AS BIGINT) AS iv,
-         |         row_number() OVER (PARTITION BY event_type, date_trunc('day', ts)
-         |                            ORDER BY ts ASC, event_id ASC) AS rn
-         |  FROM events
-         |),
-         |r AS (
-         |  SELECT event_type, dt, ts, event_id, iv, rn,
-         |         iv AS l, CAST(0 AS BIGINT) AS b
-         |  FROM b WHERE rn = 1
-         |  UNION ALL
-         |  SELECT b.event_type, b.dt, b.ts, b.event_id, b.iv, b.rn,
-         |         $lNew AS l,
-         |         $bNew AS b
-         |  FROM r JOIN b ON b.event_type = r.event_type AND b.dt = r.dt
-         |              AND b.rn = r.rn + 1
-         |),
+    "ts_holt_forecast" ->
+      s"""$duckHoltLinear,
          |f AS (SELECT event_type, dt, l, b FROM (
          |  SELECT *, row_number() OVER (PARTITION BY event_type, dt
          |                               ORDER BY rn DESC) AS rnn FROM r)
@@ -1706,42 +1664,15 @@ object EventAnalytics {
          |       round(CAST(f.l + t.h * f.b AS DOUBLE) / 10000.0, 6) AS forecast
          |FROM f, range(1, 5) t(h)
          |ORDER BY event_type ASC NULLS FIRST, dt ASC NULLS FIRST,
-         |         h ASC NULLS FIRST""".stripMargin
-    },
+         |         h ASC NULLS FIRST""".stripMargin,
 
     // The ts_holt_winters recursion's final row carries (l, b) and the
     // rolling seasonal LIST — sl[h] IS s_{T−4+h} once the list is full —
     // so the forecast is a pure projection of the recursion state.
     // Keys shorter than one period (max rn < 4) are dropped, matching the
     // Spark side's n >= 4 filter.
-    "ts_holt_winters_forecast" -> {
-      def fdiv(x: String) = s"((($x) - (((($x) % 2) + 2) % 2)) // 2)"
-      val lNew = fdiv("b.iv - r.sl[1] + r.l + r.b")
-      val bNew = fdiv(s"$lNew - r.l + r.b")
-      val sNew = fdiv(s"b.iv - $lNew + r.sl[1]")
-      s"""WITH RECURSIVE b AS (
-         |  SELECT event_type, date_trunc('day', ts) AS dt, ts, event_id,
-         |         CAST(round(value * 10000, 0) AS BIGINT) AS iv,
-         |         row_number() OVER (PARTITION BY event_type, date_trunc('day', ts)
-         |                            ORDER BY ts ASC, event_id ASC) AS rn
-         |  FROM events
-         |),
-         |r AS (
-         |  SELECT event_type, dt, ts, event_id, iv, rn,
-         |         iv AS l, CAST(0 AS BIGINT) AS b, CAST(0 AS BIGINT) AS s,
-         |         [CAST(0 AS BIGINT)] AS sl
-         |  FROM b WHERE rn = 1
-         |  UNION ALL
-         |  SELECT b.event_type, b.dt, b.ts, b.event_id, b.iv, b.rn,
-         |         CASE WHEN b.rn <= 4 THEN b.iv ELSE $lNew END AS l,
-         |         CASE WHEN b.rn <= 4 THEN CAST(0 AS BIGINT) ELSE $bNew END AS b,
-         |         CASE WHEN b.rn <= 4 THEN CAST(0 AS BIGINT) ELSE $sNew END AS s,
-         |         list_concat(
-         |           CASE WHEN len(r.sl) < 4 THEN r.sl ELSE r.sl[2:] END,
-         |           [CASE WHEN b.rn <= 4 THEN CAST(0 AS BIGINT) ELSE $sNew END]) AS sl
-         |  FROM r JOIN b ON b.event_type = r.event_type AND b.dt = r.dt
-         |              AND b.rn = r.rn + 1
-         |),
+    "ts_holt_winters_forecast" ->
+      s"""$duckHoltSeasonal,
          |f AS (SELECT event_type, dt, l, b, sl FROM (
          |  SELECT *, row_number() OVER (PARTITION BY event_type, dt
          |                               ORDER BY rn DESC) AS rnn FROM r)
@@ -1751,8 +1682,7 @@ object EventAnalytics {
          |       round(CAST(f.l + t.h * f.b + f.sl[t.h] AS DOUBLE) / 10000.0, 6) AS forecast
          |FROM f, range(1, 5) t(h)
          |ORDER BY event_type ASC NULLS FIRST, dt ASC NULLS FIRST,
-         |         h ASC NULLS FIRST""".stripMargin
-    },
+         |         h ASC NULLS FIRST""".stripMargin,
 
     // Same closed-form CUSUM; DuckDB lifts sums/divisions to HUGEINT, so
     // the output columns cast back to BIGINT (the graph_pagerank pattern).
@@ -1830,95 +1760,24 @@ object EventAnalytics {
         |FROM r WHERE rn = 1
         |ORDER BY event_type ASC NULLS FIRST""".stripMargin,
 
-    // Same spine + windows; the offset trick keeps every `//` on the
-    // non-negative domain (see the Spark twin's rationale).
     "ts_decompose_additive" ->
-      """WITH spine AS (
-        |  SELECT t.event_type, h.hr
-        |  FROM (SELECT DISTINCT event_type FROM events) t
-        |  CROSS JOIN (SELECT unnest(generate_series(
-        |       (SELECT date_trunc('hour', min(ts)) FROM events),
-        |       (SELECT date_trunc('hour', max(ts)) FROM events),
-        |       INTERVAL 1 HOUR)) AS hr) h
-        |), agg AS (
-        |  SELECT event_type, date_trunc('hour', ts) AS hr,
-        |         CAST(count(*) AS BIGINT) AS x
-        |  FROM events GROUP BY 1, 2
-        |), dense AS (
-        |  SELECT s.event_type, s.hr, COALESCE(a.x, 0) AS x
-        |  FROM spine s LEFT JOIN agg a ON s.event_type = a.event_type AND s.hr = a.hr
-        |), t1 AS (
-        |  SELECT event_type, hr, x,
-        |         count(*) OVER w AS w_n, sum(x) OVER w AS sum25
-        |  FROM dense
-        |  WINDOW w AS (PARTITION BY event_type ORDER BY hr
-        |               ROWS BETWEEN 12 PRECEDING AND 12 FOLLOWING)
-        |), t2 AS (
-        |  SELECT event_type, hr, x,
-        |         CASE WHEN w_n = 25 THEN (1000000 * sum25) // 25 END AS trend_micro
-        |  FROM t1
-        |), t3 AS (
-        |  SELECT event_type, hr, x, trend_micro,
-        |         1000000 * x - trend_micro AS d
-        |  FROM t2
-        |), seas AS (
-        |  SELECT event_type AS s_type, hour(hr) AS hod,
-        |         (sum(d + 1000000000000) // count(*)) - 1000000000000 AS seasonal_micro
-        |  FROM t3 WHERE d IS NOT NULL GROUP BY event_type, hour(hr)
-        |)
-        |SELECT t3.event_type, t3.hr, t3.x,
-        |       CAST(t3.trend_micro AS BIGINT) AS trend_micro,
-        |       CAST(seas.seasonal_micro AS BIGINT) AS seasonal_micro,
-        |       CAST(t3.d - seas.seasonal_micro AS BIGINT) AS resid_micro
-        |FROM t3 LEFT JOIN seas
-        |  ON seas.s_type = t3.event_type AND seas.hod = hour(t3.hr)
+      s"""WITH $duckDecomposed
+        |SELECT event_type, hr, x,
+        |       CAST(trend_micro AS BIGINT) AS trend_micro,
+        |       CAST(seasonal_micro AS BIGINT) AS seasonal_micro,
+        |       CAST(d - seasonal_micro AS BIGINT) AS resid_micro
+        |FROM dec
         |ORDER BY event_type ASC NULLS FIRST, hr ASC NULLS FIRST""".stripMargin,
 
     // The decompose CTE chain + one per-type variance-ratio aggregate;
     // DuckDB's HUGEINT sums mirror the Spark DECIMAL(38,0) discipline.
     "ts_seasonal_strength" ->
-      """WITH spine AS (
-        |  SELECT t.event_type, h.hr
-        |  FROM (SELECT DISTINCT event_type FROM events) t
-        |  CROSS JOIN (SELECT unnest(generate_series(
-        |       (SELECT date_trunc('hour', min(ts)) FROM events),
-        |       (SELECT date_trunc('hour', max(ts)) FROM events),
-        |       INTERVAL 1 HOUR)) AS hr) h
-        |), agg AS (
-        |  SELECT event_type, date_trunc('hour', ts) AS hr,
-        |         CAST(count(*) AS BIGINT) AS x
-        |  FROM events GROUP BY 1, 2
-        |), dense AS (
-        |  SELECT s.event_type, s.hr, COALESCE(a.x, 0) AS x
-        |  FROM spine s LEFT JOIN agg a ON s.event_type = a.event_type AND s.hr = a.hr
-        |), t1 AS (
-        |  SELECT event_type, hr, x,
-        |         count(*) OVER w AS w_n, sum(x) OVER w AS sum25
-        |  FROM dense
-        |  WINDOW w AS (PARTITION BY event_type ORDER BY hr
-        |               ROWS BETWEEN 12 PRECEDING AND 12 FOLLOWING)
-        |), t2 AS (
-        |  SELECT event_type, hr, x,
-        |         CASE WHEN w_n = 25 THEN (1000000 * sum25) // 25 END AS trend_micro
-        |  FROM t1
-        |), t3 AS (
-        |  SELECT event_type, hr, x, trend_micro,
-        |         1000000 * x - trend_micro AS d
-        |  FROM t2
-        |), seas AS (
-        |  SELECT event_type AS s_type, hour(hr) AS hod,
-        |         (sum(d + 1000000000000) // count(*)) - 1000000000000 AS seasonal_micro
-        |  FROM t3 WHERE d IS NOT NULL GROUP BY event_type, hour(hr)
-        |), comp AS (
-        |  SELECT t3.event_type, t3.d, t3.d - seas.seasonal_micro AS r
-        |  FROM t3 JOIN seas
-        |    ON seas.s_type = t3.event_type AND seas.hod = hour(t3.hr)
-        |  WHERE t3.d IS NOT NULL
-        |), g AS (
+      s"""WITH $duckDecomposed, g AS (
         |  SELECT event_type, CAST(count(*) AS BIGINT) AS n,
         |         sum(d) AS sd, sum(d * d) AS sdd,
-        |         sum(r) AS sr, sum(r * r) AS srr
-        |  FROM comp GROUP BY event_type
+        |         sum(d - seasonal_micro) AS sr,
+        |         sum((d - seasonal_micro) * (d - seasonal_micro)) AS srr
+        |  FROM dec WHERE d IS NOT NULL GROUP BY event_type
         |)
         |SELECT event_type, n,
         |       round(CAST(1.0 AS DOUBLE) -
@@ -2056,39 +1915,9 @@ object EventAnalytics {
         |ORDER BY channel ASC NULLS FIRST""".stripMargin,
 
     "ts_residual_outliers" ->
-      """WITH spine AS (
-        |  SELECT t.event_type, h.hr
-        |  FROM (SELECT DISTINCT event_type FROM events) t
-        |  CROSS JOIN (SELECT unnest(generate_series(
-        |       (SELECT date_trunc('hour', min(ts)) FROM events),
-        |       (SELECT date_trunc('hour', max(ts)) FROM events),
-        |       INTERVAL 1 HOUR)) AS hr) h
-        |), agg AS (
-        |  SELECT event_type, date_trunc('hour', ts) AS hr,
-        |         CAST(count(*) AS BIGINT) AS x
-        |  FROM events GROUP BY 1, 2
-        |), dense AS (
-        |  SELECT s.event_type, s.hr, COALESCE(a.x, 0) AS x
-        |  FROM spine s LEFT JOIN agg a ON s.event_type = a.event_type AND s.hr = a.hr
-        |), t1 AS (
-        |  SELECT event_type, hr, x,
-        |         count(*) OVER w AS w_n, sum(x) OVER w AS sum25
-        |  FROM dense
-        |  WINDOW w AS (PARTITION BY event_type ORDER BY hr
-        |               ROWS BETWEEN 12 PRECEDING AND 12 FOLLOWING)
-        |), t3 AS (
-        |  SELECT event_type, hr, x,
-        |         1000000 * x -
-        |           (CASE WHEN w_n = 25 THEN (1000000 * sum25) // 25 END) AS d
-        |  FROM t1
-        |), seas AS (
-        |  SELECT event_type AS s_type, hour(hr) AS hod,
-        |         (sum(d + 1000000000000) // count(*)) - 1000000000000 AS seasonal_micro
-        |  FROM t3 WHERE d IS NOT NULL GROUP BY event_type, hour(hr)
-        |), r AS (
+      s"""WITH $duckDecomposed, r AS (
         |  SELECT event_type, hr, x, d - seasonal_micro AS resid
-        |  FROM t3 JOIN seas ON event_type = s_type AND hour(hr) = hod
-        |  WHERE d IS NOT NULL
+        |  FROM dec WHERE d IS NOT NULL
         |), rk AS (
         |  SELECT event_type, abs(resid) AS ar,
         |         row_number() OVER (PARTITION BY event_type

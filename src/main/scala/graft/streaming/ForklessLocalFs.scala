@@ -7,7 +7,7 @@ import java.nio.file.attribute.PosixFilePermission
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FsConstants, FsServerDefaults, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FSDataInputStream, FileStatus, FsConstants, FsServerDefaults, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.SparkSession
@@ -25,7 +25,10 @@ import org.apache.spark.sql.SparkSession
   * path that is not a symlink answers with its plain `getFileStatus`;
   * a sticky bit, a non-POSIX file system and symlinks keep the stock
   * code. Files, `.crc` side files and modes are byte-for-byte what
-  * `LocalFs` writes, and reads behave as under `LocalFs`.
+  * `LocalFs` writes. Reads differ in one way: `open(Path)`, the form
+  * Spark's checkpoint file manager calls, verifies the `.crc` side file.
+  * Under `LocalFs` it does not: `ChecksumFs` overrides only
+  * `open(Path, int)`, and `FilterFs.open(Path)` reads the raw file.
   *
   * Parquet part files go through Hadoop's cached `FileSystem`, not
   * FileContext, and still fork `chmod`: `FileSystem.CACHE` keeps the
@@ -34,7 +37,10 @@ import org.apache.spark.sql.SparkSession
   * Hadoop instantiates it through the `(URI, Configuration)` constructor;
   * like `LocalFs` it ignores the URI (always `file:///`). */
 class ForklessLocalFs(uri: URI, conf: Configuration)
-    extends ChecksumFs(new ForklessLocalFs.Raw(conf))
+    extends ChecksumFs(new ForklessLocalFs.Raw(conf)) {
+  override def open(f: Path): FSDataInputStream =
+    open(f, getServerDefaults(f).getFileBufferSize)
+}
 
 object ForklessLocalFs {
 

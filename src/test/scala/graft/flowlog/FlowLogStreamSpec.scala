@@ -533,6 +533,23 @@ class FlowLogStreamSpec extends SparkSpec {
       s"chunking changed the output: only-3=${(a -- b).take(3)} only-7=${(b -- a).take(3)}")
   }
 
+  test("port-scan ONSET counts do not depend on the arrival order of flows equal on (ts, dstport)") {
+    // A REJECT and an ACCEPT flow from one source to the same new port in
+    // the same second cross minPorts = 2 together: whichever folds first is
+    // the crossing row, so its n_rejects must come from the fold order,
+    // not from which of the two arrived first.
+    val key = ("10.0.0.7", new java.sql.Timestamp(0L))
+    val first = FlowLogStream.PsPend(1000L, 80, reject = false)
+    val (rej, acc) = (FlowLogStream.PsPend(2000L, 443, reject = true),
+      FlowLogStream.PsPend(2000L, 443, reject = false))
+    val fold = FlowLogStream.portScanFold(minPorts = 2)
+    def onsets(rows: FlowLogStream.PsPend*) =
+      fold.step(key, None, rows.iterator, 5000L).out.filter(_.kind == "ONSET")
+    val a = onsets(first, rej, acc)
+    assert(a.size === 1, s"vacuous: $a")
+    assert(onsets(first, acc, rej) === a)
+  }
+
   test("ECS service monitor output is invariant to micro-batch chunking (event-time determinism)") {
     // Same contract as the port-scan chunking test: ONSET timestamps and
     // as-of-crossing counts are a pure function of event-time content —

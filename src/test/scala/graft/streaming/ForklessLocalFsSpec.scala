@@ -14,7 +14,7 @@ import graft.flowlog.FlowLogStream
 import jdk.jfr.Recording
 import jdk.jfr.consumer.RecordingFile
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileStatus, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{ChecksumException, FileStatus, FileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQueryException}
@@ -175,11 +175,18 @@ class ForklessLocalFsSpec extends SparkSpec {
     assert(new File(s"$dir/ckpt/offsets/3").isFile, "vacuous: the resumed run wrote no offsets")
   }
 
+  /** The newest offset file of the checkpoint at `ckpt`: a restart reads
+    * it (no-data batches that advance the watermark write their own). */
+  private def newestOffsets(ckpt: String): java.nio.file.Path = {
+    val newest = new File(ckpt, "offsets").list().filter(_.forall(_.isDigit)).map(_.toLong).max
+    Paths.get(ckpt, "offsets", newest.toString)
+  }
+
   test("a corrupted offset file is rejected on restart, as under stock LocalFs") {
-    // FileContext.open(Path) reads through FilterFs straight to the raw
-    // file system, so neither LocalFs nor ForklessLocalFs checks the .crc
-    // of a checkpoint file it reads: it is the offset log's own parser
-    // that must reject the file.
+    // The unparseable file is written with a matching .crc (through the
+    // checksummed local FileSystem), so no checksum catches it under
+    // either file system: it is the offset log's own parser that must
+    // reject the file.
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     val failures = Seq("org.apache.hadoop.fs.local.LocalFs", classOf[ForklessLocalFs].getName).map { impl =>
@@ -190,12 +197,11 @@ class ForklessLocalFsSpec extends SparkSpec {
         val q1 = portScan(mem, ckpt, "noop")
         try batches.take(2).foreach { b => mem.addData(b); q1.processAllAvailable() }
         finally q1.stop()
-        // the restart reads the newest offset file (no-data batches that
-        // advance the watermark write their own)
-        val newest = new File(ckpt, "offsets").list().filter(_.forall(_.isDigit)).map(_.toLong).max
-        val offsets = Paths.get(ckpt, "offsets", newest.toString)
-        Files.write(offsets, new String(Files.readAllBytes(offsets), UTF_8)
-          .replaceFirst("\\{", "#").getBytes(UTF_8))
+        val offsets = newestOffsets(ckpt)
+        val garbled = new String(Files.readAllBytes(offsets), UTF_8)
+          .replaceFirst("\\{", "#").getBytes(UTF_8)
+        val out = FileSystem.getLocal(new Configuration()).create(new Path(offsets.toString), true)
+        try out.write(garbled) finally out.close()
         mem.addData(batches(2))
         val q2 = portScan(mem, ckpt, "noop")
         val e = intercept[StreamingQueryException] {
@@ -208,6 +214,31 @@ class ForklessLocalFsSpec extends SparkSpec {
       } finally spark.conf.unset(ForklessLocalFs.Key)
     }
     assert(failures.distinct.size === 1, failures)
+  }
+
+  test("an offset file rewritten behind its .crc fails the restart with a ChecksumException") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val ckpt = s"${tempDir("forkless_crc")}/ckpt"
+    val mem = MemoryStream[Array[Byte]]
+    val q1 = portScan(mem, ckpt, "noop")
+    try batches.take(2).foreach { b => mem.addData(b); q1.processAllAvailable() }
+    finally q1.stop()
+    // the source offset (the file's last line) moves by one, same length:
+    // still a well-formed offset log entry, only the .crc tells it apart
+    val offsets = newestOffsets(ckpt)
+    val text = new String(Files.readAllBytes(offsets), UTF_8)
+    val last = text.last
+    assert(last.isDigit, s"unexpected offset file: $text")
+    Files.write(offsets, (text.init + ((last - '0' + 1) % 10)).getBytes(UTF_8))
+    assert(Files.exists(offsets.resolveSibling(s".${offsets.getFileName}.crc")))
+    mem.addData(batches(2))
+    val q2 = portScan(mem, ckpt, "noop")
+    val e = intercept[StreamingQueryException] {
+      try q2.processAllAvailable() finally q2.stop()
+    }
+    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(causes.exists(_.isInstanceOf[ChecksumException]), causes.map(_.getClass.getName))
   }
 
   test("the Hadoop file-system key is named once in src/main") {
