@@ -10,10 +10,11 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   * spark-submit --conf spark.sql.extensions=graft.GraftExtensions ...
   * }}}
   *
-  * injects the vector kernels into every session at build time. Query
-  * closures also self-register via [[graft.functions.VectorFunctions]]
-  * (idempotent) so the library works against harness-built sessions that
-  * don't set the conf. Both paths iterate the same
+  * injects the vector kernels into every session at build time, so SQL
+  * text can call them by name. Query closures do not need it: they call
+  * the kernels as Columns through [[graft.functions.VectorFunctions.kernel]].
+  * It and [[graft.functions.VectorFunctions.register]] (the SQL path for
+  * sessions without the conf) iterate the same
   * [[graft.functions.VectorFunctions.kernels]] table.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {

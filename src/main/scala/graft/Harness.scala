@@ -8,8 +8,8 @@ import org.apache.spark.sql.SparkSession
   *
   * It sets no `spark.sql.extensions`: that would inject
   * LevenshteinGuardRule into bench and verify sessions and change the
-  * plans being measured. Query closures register their kernels themselves
-  * via [[graft.functions.VectorFunctions.register]]. */
+  * plans being measured. Query closures need no registration: they call
+  * the kernels as Columns through [[graft.functions.VectorFunctions.kernel]]. */
 object Harness {
 
   /** The positive Int in env var `name` (`raw` is its value), or

@@ -1,11 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graftshim.PlanBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** Native Catalyst expressions for the vector kernels (SURVEY.md §2.K
@@ -702,12 +703,13 @@ case class HoltWintersStates(left: Expression, right: Expression) extends Binary
 }
 
 object VectorFunctions {
-  /** The registrable native kernels, SQL name -> expression builder. Both
-    * registration paths iterate this one table: [[register]] for sessions
-    * built without extensions, [[graft.GraftExtensions]] for sessions
-    * configured with `spark.sql.extensions`. `IvfPqTerms` is not here: it
-    * carries driver-collected lookup arrays that a string-keyed registry
-    * cannot pass, so callers reach it through `PlanBridge.column`.
+  /** The native kernels, SQL name -> expression builder. Query code calls
+    * them through [[kernel]]. The two SQL paths iterate this same table:
+    * [[register]] for sessions built without extensions,
+    * [[graft.GraftExtensions]] for sessions configured with
+    * `spark.sql.extensions`. `IvfPqTerms` is not here: it carries
+    * driver-collected lookup arrays that a name -> builder table cannot
+    * pass, so callers build it directly through `PlanBridge.column`.
     *
     * Input precondition of the merge kernels (`graft_sorted_intersect*`):
     * every id array is sorted ascending and DISTINCT, e.g.
@@ -729,9 +731,20 @@ object VectorFunctions {
     ("graft_holt", e => HoltStates(e.head)),
     ("graft_holt_winters", e => HoltWintersStates(e.head, e(1))))
 
-  /** Register [[kernels]] in the session's function registry so query
-    * closures can call them via `expr("graft_dot(a, b)")`. Idempotent;
-    * works on harness-built sessions (no SparkSessionExtensions needed). */
+  /** A call of the kernel `name` from [[kernels]] as a Column. Query code
+    * calls kernels this way, never by SQL name: the Column resolves to the
+    * same expression the registry builder returns, and it needs no session
+    * state, so it works alike in a batch query and inside a `foreachBatch`
+    * sink. Throws on a name that is not in [[kernels]]. */
+  def kernel(name: String, args: Column*): Column = {
+    val build = kernels.toMap.getOrElse(name,
+      throw new IllegalArgumentException(s"unknown graft kernel: $name"))
+    PlanBridge.column(build(args.map(PlanBridge.expression)))
+  }
+
+  /** Register [[kernels]] in the session's function registry, for SQL
+    * text on a session built without `spark.sql.extensions` (SQL users and
+    * specs; query code uses [[kernel]]). Replaces any previous entries. */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     kernels.foreach { case (name, build) =>

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables
+import graft.functions.VectorFunctions.kernel
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -97,9 +98,8 @@ object EventAnalytics {
   /** Each (event_type, UTC day) key's rows as one array `xs` of
     * (ts, event_id, iv) structs in (ts, event_id) order, iv the value in
     * exact integer ten-thousandths: the input the graft_holt kernels fold
-    * (rationale at ts_holt_linear). Registers the kernels. */
+    * (rationale at ts_holt_linear). */
   private def holtDaySeries(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     Tables.events(s, d)
       .select(col("event_type"),
         expr("CAST(date_trunc('DAY', ts) AS TIMESTAMP_NTZ)").as("dt"),
@@ -607,7 +607,7 @@ object EventAnalytics {
     // integer state (level_u/trend_u) plus one rounded double division.
     "ts_holt_linear" -> { (s, d) =>
       holtDaySeries(s, d)
-        .withColumn("st", expr("graft_holt(transform(xs, x -> x.iv))"))
+        .withColumn("st", kernel("graft_holt", expr("transform(xs, x -> x.iv)")))
         .select(col("event_type"), col("dt"), explode(expr(
           """transform(xs, (x, i) -> named_struct(
             |  'ts', x.ts, 'event_id', x.event_id, 'iv', x.iv,
@@ -641,7 +641,7 @@ object EventAnalytics {
     // sequential.
     "ts_holt_winters" -> { (s, d) =>
       holtDaySeries(s, d)
-        .withColumn("st", expr("graft_holt_winters(transform(xs, x -> x.iv), 4)"))
+        .withColumn("st", kernel("graft_holt_winters", expr("transform(xs, x -> x.iv)"), lit(4)))
         .select(col("event_type"), col("dt"), explode(expr(
           """transform(xs, (x, i) -> named_struct(
             |  'ts', x.ts, 'event_id', x.event_id, 'iv', x.iv,
@@ -670,7 +670,7 @@ object EventAnalytics {
     // day-scoped parallel fold, key-sized output.
     "ts_holt_forecast" -> { (s, d) =>
       holtDaySeries(s, d)
-        .withColumn("st", expr("graft_holt(transform(xs, x -> x.iv))"))
+        .withColumn("st", kernel("graft_holt", expr("transform(xs, x -> x.iv)")))
         .withColumn("n", size(col("xs")))
         .withColumn("lt", expr("element_at(st, 2 * n - 1)"))
         .withColumn("bt", expr("element_at(st, 2 * n)"))
@@ -695,7 +695,7 @@ object EventAnalytics {
       holtDaySeries(s, d)
         .withColumn("n", size(col("xs")))
         .filter(col("n") >= 4)
-        .withColumn("st", expr("graft_holt_winters(transform(xs, x -> x.iv), 4)"))
+        .withColumn("st", kernel("graft_holt_winters", expr("transform(xs, x -> x.iv)"), lit(4)))
         .withColumn("lt", expr("element_at(st, 3 * n - 2)"))
         .withColumn("bt", expr("element_at(st, 3 * n - 1)"))
         .select(col("event_type"), col("dt"), col("lt"), col("bt"), col("st"),

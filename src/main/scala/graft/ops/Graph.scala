@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables
+import graft.functions.VectorFunctions.kernel
 import graft.store.SigStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -90,7 +91,6 @@ object Graph {
     * never changes the census, so any naive counter is a valid twin
     * (GraphSpec runs a seeded differential against one). */
   def triangleCensus(edges: DataFrame): DataFrame = {
-    graft.functions.VectorFunctions.register(edges.sparkSession)
     val deg = edges.select(col("a").as("v"))
       .unionAll(edges.select(col("b").as("v")))
       .groupBy(col("v")).agg(count(lit(1)).as("deg"))
@@ -111,7 +111,7 @@ object Graph {
       .join(adj.select(col("src"), col("nbrs").as("nbrs_u")), "src")
       .join(adj.select(col("src").as("dst"), col("nbrs").as("nbrs_v")), "dst")
     val nTri = triEdges.agg(
-      sum(expr("graft_sorted_intersect_long(nbrs_u, nbrs_v)")).as("n_triangles"))
+      sum(kernel("graft_sorted_intersect_long", col("nbrs_u"), col("nbrs_v"))).as("n_triangles"))
     deg.agg(count(lit(1)).as("n_nodes"))
       .crossJoin(edges.agg(count(lit(1)).as("n_edges")))
       .crossJoin(nTri)
@@ -139,17 +139,40 @@ object Graph {
     * The round count is a constant of the QUERY (unrolled in the oracle
     * SQL as chained CTEs — recursive CTEs can't aggregate), not data-
     * dependent: no driver-side convergence loop is needed. */
-  def pagerankFixed(edges: DataFrame, iters: Int): DataFrame = {
-    val lazyUnd = edges.select(col("a").as("u"), col("b").as("v"))
-      .unionAll(edges.select(col("b").as("u"), col("a").as("v")))
-    val deg = lazyUnd.groupBy(col("u")).agg(count(lit(1)).as("deg"))
-      .select(col("u").as("v"), col("deg"))
+  def pagerankFixed(edges: DataFrame, iters: Int): DataFrame =
+    pagerank(edges.withColumn("w", lit(1L)), iters, "pagerank")
+
+  /** Weighted exact fixed-point PageRank over a weighted (a < b, w) edge
+    * list — the [[pagerankFixed]] integer recurrence with edge-proportional
+    * contribution: c(u→v) = (r(u) div W(u)) · w(u,v), where W(u) = Σ w(u,·)
+    * is the weighted degree; next r(v) = (15·R0 div 100) +
+    * (85 · Σ c(u→v)) div 100. Every operation is a floor division or
+    * product of NON-NEGATIVE integers, so Spark `div` ≡ DuckDB `//` and the
+    * scores are bit-identical across engines and partitionings. Overflow:
+    * per-edge c ≤ r(u) and rank mass is conserved up to the damping leak,
+    * so the 85·Σc peak obeys the same 85·|V|·R0 < 2⁶³ bound as the
+    * unweighted form (|V| ≲ 10⁵ at R0 = 10¹²; lower R0 beyond). Plan shape
+    * per round is identical too: ONE broadcast join for contributions + ONE
+    * groupBy(v), probing a repartition(u).localCheckpoint edge list
+    * exchange-free, all `iters` rounds chained as one lazy plan. */
+  def pagerankWeighted(wedges: DataFrame, iters: Int): DataFrame =
+    pagerank(wedges, iters, "pagerank_w")
+
+  /** The one PageRank body: [[pagerankWeighted]]'s recurrence, and
+    * [[pagerankFixed]] as its w = 1 case (sum(1) = count(1) as BIGINT,
+    * (r div deg) · 1 = r div deg). `parkTag` keeps each caller's retained
+    * edge list in its own [[CheckpointPark]] slot. */
+  private def pagerank(wedges: DataFrame, iters: Int, parkTag: String): DataFrame = {
+    val lazyUnd = wedges.select(col("a").as("u"), col("b").as("v"), col("w"))
+      .unionAll(wedges.select(col("b").as("u"), col("a").as("v"), col("w")))
+    val wdeg = lazyUnd.groupBy(col("u")).agg(sum(col("w")).as("wdeg"))
+      .select(col("u").as("v"), col("wdeg"))
       .localCheckpoint(true)
-    // deg ATTACHED to the edge list once (und2), so each round is ONE
-    // join + ONE aggregate with NO per-round deg join at all: the
-    // contribution r div deg is a pure function of (r, deg), both on the
-    // joined row, so per-edge evaluation is value-identical to the old
-    // per-vertex c computed through a broadcast deg join (the per-round
+    // wdeg ATTACHED to the edge list once (und2), so each round is ONE
+    // join + ONE aggregate with NO per-round degree join at all: the
+    // contribution (r div wdeg) * w is a pure function of (r, wdeg, w), all
+    // on the joined row, so per-edge evaluation is value-identical to the old
+    // per-vertex c computed through a broadcast degree join (the per-round
     // broadcast build was a serialized ~0.2 s barrier per iteration —
     // measured −0.75 s over 8 rounds at sf0.1, identical results).
     // Plain repartition+localCheckpoint: a bucketed-and-sorted checkpoint
@@ -175,13 +198,13 @@ object Graph {
     // becomes one map-side probe of the edge list + a partial-agg shuffle
     // of |V| rows, and the edge list then needs NO materialization at all
     // (no repartition, no checkpoint: every probe re-reads the source
-    // scan ⋈ broadcast deg, and the deg broadcast build is reused across
+    // scan ⋈ broadcast wdeg, and the wdeg broadcast build is reused across
     // rounds — at fixture scale the per-stage scheduling floor, not the
     // scan, is the cost, so two fewer prep stages beat a cheaper probe).
     // Above the cap (cluster scale) the shuffle join stands on the
     // u-repartitioned checkpoint (the gated-broadcast rule — never an
     // unconditional hint on a corpus-scaling side).
-    val bcastRank = deg.count() <= IterSideBroadcastRowCap
+    val bcastRank = wdeg.count() <= IterSideBroadcastRowCap
     // (Round-18 measured NON-win, reverted: a broadcast-regime keyless
     // repartition(dp) of und2base — to lift the t=4 round stages to
     // t=32 — materialized a 22.8 MB row-oriented exchange with its
@@ -191,49 +214,6 @@ object Graph {
     // rescan ⋈ broadcast probe it replaced: pagerank 2.8 → 5.2 s. The
     // per-round stages are latency-bound; the compressed columnar scan
     // is the cheapest per-round source at fixture scale.)
-    val und2base = lazyUnd
-      .join(broadcast(deg).withColumnRenamed("v", "u"), Seq("u"))
-    val und2 =
-      if (bcastRank) und2base
-      else und2base.repartition(col("u")).localCheckpoint(true)
-    var r = deg.select(col("v"), lit(1000000000000L).as("r"))
-    (1 to iters).foreach { _ =>
-      val rIn = r.withColumnRenamed("v", "u")
-      r = und2.join(if (bcastRank) broadcast(rIn) else rIn, Seq("u"))
-        .groupBy(col("v"))
-        .agg((lit(150000000000L) + expr("85 * sum(r div deg) div 100")).as("r"))
-    }
-    CheckpointPark.park("pagerank", und2, deg)
-    r.select(col("v").as("part"), col("r").as("pr_fixed"))
-      .orderBy(col("part").asc)
-  }
-
-  /** Weighted exact fixed-point PageRank over a weighted (a < b, w) edge
-    * list — the [[pagerankFixed]] integer recurrence with edge-proportional
-    * contribution: c(u→v) = (r(u) div W(u)) · w(u,v), where W(u) = Σ w(u,·)
-    * is the weighted degree; next r(v) = (15·R0 div 100) +
-    * (85 · Σ c(u→v)) div 100. Every operation is a floor division or
-    * product of NON-NEGATIVE integers, so Spark `div` ≡ DuckDB `//` and the
-    * scores are bit-identical across engines and partitionings. Overflow:
-    * per-edge c ≤ r(u) and rank mass is conserved up to the damping leak,
-    * so the 85·Σc peak obeys the same 85·|V|·R0 < 2⁶³ bound as the
-    * unweighted form (|V| ≲ 10⁵ at R0 = 10¹²; lower R0 beyond). Plan shape
-    * per round is identical too: ONE broadcast join for contributions + ONE
-    * groupBy(v), probing a repartition(u).localCheckpoint edge list
-    * exchange-free, all `iters` rounds chained as one lazy plan. */
-  def pagerankWeighted(wedges: DataFrame, iters: Int): DataFrame = {
-    val lazyUnd = wedges.select(col("a").as("u"), col("b").as("v"), col("w"))
-      .unionAll(wedges.select(col("b").as("u"), col("a").as("v"), col("w")))
-    val wdeg = lazyUnd.groupBy(col("u")).agg(sum(col("w")).as("wdeg"))
-      .select(col("u").as("v"), col("wdeg"))
-      .localCheckpoint(true)
-    // wdeg attached to the edge list once — the pagerankFixed und2 shape:
-    // per-edge (r div wdeg) * w ≡ the old per-vertex q joined back, so
-    // each round is one join + one aggregate, no per-round wdeg join.
-    // Gated per-round broadcast of the rank side, and the edge list left
-    // lazy in the broadcast regime — see pagerankFixed.
-    val bcastRank = wdeg.count() <= IterSideBroadcastRowCap
-    // (Round-18 repartition non-win reverted — see pagerankFixed.)
     val und2base = lazyUnd
       .join(broadcast(wdeg).withColumnRenamed("v", "u"), Seq("u"))
     val und2 =
@@ -246,7 +226,7 @@ object Graph {
         .groupBy(col("v"))
         .agg((lit(150000000000L) + expr("85 * sum((r div wdeg) * w) div 100")).as("r"))
     }
-    CheckpointPark.park("pagerank_w", und2, wdeg)
+    CheckpointPark.park(parkTag, und2, wdeg)
     r.select(col("v").as("part"), col("r").as("pr_fixed"))
       .orderBy(col("part").asc)
   }
@@ -263,7 +243,6 @@ object Graph {
     * root edge's weight (a cheap per-row HOF over an O(√m) array) feeds the
     * 2-ary kernel min exactly. Integer weights keep both outputs exact. */
   def triangleStrength(wedges: DataFrame): DataFrame = {
-    graft.functions.VectorFunctions.register(wedges.sparkSession)
     val deg = wedges.select(col("a").as("v"))
       .unionAll(wedges.select(col("b").as("v")))
       .groupBy(col("v")).agg(count(lit(1)).as("deg"))
@@ -287,10 +266,9 @@ object Graph {
       .join(adj.select(col("src").as("dst"), col("ids").as("ids_v"),
         col("ws").as("ws_v")), "dst")
     triEdges.agg(
-        sum(expr("graft_sorted_intersect_long(ids_u, ids_v)")).as("nt"),
-        sum(expr(
-          "graft_sorted_intersect_minw(ids_u, transform(ws_u, x -> least(x, w)), ids_v, ws_v)"))
-          .as("st"))
+        sum(kernel("graft_sorted_intersect_long", col("ids_u"), col("ids_v"))).as("nt"),
+        sum(kernel("graft_sorted_intersect_minw", col("ids_u"),
+          expr("transform(ws_u, x -> least(x, w))"), col("ids_v"), col("ws_v"))).as("st"))
       .select(coalesce(col("nt"), lit(0L)).as("n_triangles"),
         coalesce(col("st"), lit(0L)).as("strength"))
       .orderBy(col("n_triangles").asc)
@@ -305,7 +283,7 @@ object Graph {
     * distₖ₋₁(u) + len(u,v) — a ZERO-length SELF-LOOP per vertex makes that
     * single min also carry v's own previous distance, so each round is ONE
     * vertex-keyed join + ONE min-groupBy with the dist frame referenced
-    * exactly ONCE (the pagerankFixed plan shape: no left-join-back, no
+    * exactly ONCE (the pagerank plan shape: no left-join-back, no
     * per-round checkpoint, all rounds chained as one lazy plan probing a
     * repartition(u).localCheckpoint edge list exchange-free). Overflow:
     * every finite path cost ≤ iters·10⁶ and the sentinel sums to at most
@@ -333,7 +311,7 @@ object Graph {
     // SAME ~0.26 s wall as t=5: the rounds are latency-bound, and the
     // 5-block columnar-sourced checkpoint is already the cheapest
     // per-round probe source at fixture scale. sssp 3.0 → 4.2 s; see
-    // the pagerankFixed note for the same result on the lazy form.)
+    // the pagerank note for the same result on the lazy form.)
     val und = dirs
       .unionAll(verts.select(col("u"), col("u").as("v"), lit(0L).as("len")))
       .localCheckpoint(true)
@@ -343,7 +321,7 @@ object Graph {
     // shuffle (the verts subtree above is evaluated once, inside the
     // checkpoint job).
     val vloop = und.filter(col("u") === col("v")).select(col("u"))
-    // Gated per-round broadcast of the dist side — see pagerankFixed.
+    // Gated per-round broadcast of the dist side — see pagerank.
     // (vloop.count() = |V|, a map-only scan of the checkpoint blocks.)
     val bcastDist = vloop.count() <= IterSideBroadcastRowCap
     var dist = vloop.join(broadcast(seeds), vloop("u") === seeds("seed"), "left")
@@ -375,7 +353,6 @@ object Graph {
     * pipeline runs off the bucketed adjacency layout. cc is ONE
     * rounded double division of exact integers per vertex. */
   def clusteringCoeff(edges: DataFrame): DataFrame = {
-    graft.functions.VectorFunctions.register(edges.sparkSession)
     val deg = edges.select(col("a").as("v"))
       .unionAll(edges.select(col("b").as("v")))
       .groupBy(col("v")).agg(count(lit(1)).as("deg"))
@@ -400,7 +377,7 @@ object Graph {
       .join(adj.select(col("src"), col("nbrs").as("nbrs_u")), "src")
       .join(adj.select(col("src").as("dst"), col("nbrs").as("nbrs_v")), "dst")
       .select(col("src"), col("dst"),
-        expr("graft_sorted_intersect_arr(nbrs_u, nbrs_v)").as("zs"))
+        kernel("graft_sorted_intersect_arr", col("nbrs_u"), col("nbrs_v")).as("zs"))
     val tv = tri
       .select(explode(expr(
         """concat(
@@ -871,7 +848,7 @@ object Graph {
     // Both directions: frontier expansion needs out-neighbors of every
     // vertex, and the canonical a<b list stores each edge once. Partition
     // by the probe key once and checkpoint — BOTH hop joins then probe it
-    // exchange-free (same bucketed-by-source rationale as pagerankFixed).
+    // exchange-free (same bucketed-by-source rationale as pagerank).
     val und = edges.select(col("a").as("u"), col("b").as("v"))
       .unionAll(edges.select(col("b").as("u"), col("a").as("v")))
       .repartition(col("u"))
@@ -1265,7 +1242,6 @@ object Graph {
     * frame is consumed before the next peel on that session (every
     * declared-query / spec caller collects immediately). */
   def ktrussPeel(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
-    graft.functions.VectorFunctions.register(edges.sparkSession)
     def support(e: DataFrame): DataFrame = {
       val adj = e.select(col("a").as("u"), col("b").as("v"))
         .unionAll(e.select(col("b").as("u"), col("a").as("v")))
@@ -1273,7 +1249,7 @@ object Graph {
       e.join(adj.select(col("u").as("a"), col("nb").as("nb_a")), "a")
         .join(adj.select(col("u").as("b"), col("nb").as("nb_b")), "b")
         .select(col("a"), col("b"),
-          expr("graft_sorted_intersect_long(nb_a, nb_b)")
+          kernel("graft_sorted_intersect_long", col("nb_a"), col("nb_b"))
             .cast("long").as("support"))
     }
     // Fused materialization + row count per round (round-18, the kcore

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables
+import graft.functions.VectorFunctions.kernel
 import graft.store.SigStore
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -168,15 +169,14 @@ object LlmOps {
           | i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2]))), array())"""
           .stripMargin.replace("\n", " ")).as("sh"))
 
-  /** Embeddings as double vectors with precomputed sum of squares.
-    * Registers the native codegen dot-product kernel (graft.functions) —
-    * candidate-pair verification is compute-bound on it. */
+  /** Embeddings as double vectors with precomputed sum of squares through
+    * the native codegen dot-product kernel (graft.functions) — candidate-pair
+    * verification is compute-bound on it. */
   private[ops] def embDouble(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     Tables.embeddings(s, d)
       .select(col("vec_id"), col("label"),
         expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("emb"))
-      .withColumn("ssq", expr("graft_dot(emb, emb)"))
+      .withColumn("ssq", kernel("graft_dot", col("emb"), col("emb")))
   }
 
   /** One Lloyd assignment step over integer-quantized vectors: exact BIGINT
@@ -235,7 +235,7 @@ object LlmOps {
     * (parity verified, SURVEY.md §5.3); the dot product is a native codegen
     * expression with the same sequential fold order as the HOF form. */
   private val cosExpr: Column =
-    (expr("graft_dot(emb_a, emb_b)") /
+    (kernel("graft_dot", col("emb_a"), col("emb_b")) /
       (sqrt(col("ssq_a")) * sqrt(col("ssq_b"))))
 
   /** Sign-LSH bucket assignment: `bits` hyperplane sign bits packed into a
@@ -246,8 +246,8 @@ object LlmOps {
     * out at bits ≥ 32 and silently alias buckets). */
   private[ops] def signBuckets(e: DataFrame, bits: Int): DataFrame =
     e.withColumn("pl", typedLit(annPlanes(bits)))
-      .withColumn("dots", expr(
-        s"transform(sequence(0, ${bits - 1}), p -> graft_dot(emb, element_at(pl, p + 1)))"))
+      .withColumn("dots", transform(sequence(lit(0), lit(bits - 1)),
+        p => kernel("graft_dot", col("emb"), element_at(col("pl"), p + 1))))
       .withColumn("bucket", expr(
         s"aggregate(sequence(0, ${bits - 1}), CAST(0 AS BIGINT), (acc, p) -> acc * 2 + CASE WHEN dots[p] > 0 THEN 1 ELSE 0 END)"))
       .drop("pl", "dots")
@@ -266,7 +266,7 @@ object LlmOps {
     * value-deterministic.) */
   private[ops] def assignToCentroid(e: DataFrame, centroids: DataFrame,
       joinKeys: Seq[String] = Nil): DataFrame = {
-    val cent = centroids.withColumn("cssq", expr("graft_dot(cemb, cemb)"))
+    val cent = centroids.withColumn("cssq", kernel("graft_dot", col("cemb"), col("cemb")))
     // joinKeys narrows the argmin to each row's OWN centroid subset (the
     // two-level fine assignment joins on the coarse cell id); empty keys =
     // the flat form, a full codebook fan-out. Only the cross-join form
@@ -279,7 +279,7 @@ object LlmOps {
     val fanned =
       if (joinKeys.isEmpty) e.crossJoin(broadcast(cent)) else e.join(cent, joinKeys)
     fanned
-      .withColumn("cdot", expr("graft_dot(emb, cemb)"))
+      .withColumn("cdot", kernel("graft_dot", col("emb"), col("cemb")))
       .withColumn("score", col("cssq") - lit(2.0) * col("cdot"))
       .groupBy(col("vec_id"))
       .agg(min(struct(col("score"), col("cid"), col("cdot"), col("cssq"))).as("m"),
@@ -351,11 +351,10 @@ object LlmOps {
     * (vec_id, cid, probe_rank). */
   private[ops] def multiProbeCells(e: DataFrame, centroids: DataFrame,
       nprobe: Int): DataFrame = {
-    graft.functions.VectorFunctions.register(e.sparkSession)
-    val cent = centroids.withColumn("cssq", expr("graft_dot(cemb, cemb)"))
+    val cent = centroids.withColumn("cssq", kernel("graft_dot", col("cemb"), col("cemb")))
     val scored = e.select(col("vec_id"), col("emb"))
       .crossJoin(broadcast(cent))
-      .withColumn("score", col("cssq") - lit(2.0) * expr("graft_dot(emb, cemb)"))
+      .withColumn("score", col("cssq") - lit(2.0) * kernel("graft_dot", col("emb"), col("cemb")))
       .select(col("vec_id"), col("cid"), col("score"))
       .localCheckpoint(true)
     var picks: DataFrame = null
@@ -436,10 +435,8 @@ object LlmOps {
   }
 
   /** Read a [[writeIvfIndex]] index back: (centroids, assignments). */
-  def readIvfIndex(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    graft.functions.VectorFunctions.register(s) // pair scoring needs graft_dot
+  def readIvfIndex(s: SparkSession, dir: String): (DataFrame, DataFrame) =
     (s.read.parquet(s"$dir/centroids"), s.read.parquet(s"$dir/assign"))
-  }
 
   /** Encode RAW embedding rows (vec_id, label, embedding float array)
     * against a STANDING codebook into inverted-file posting rows — the
@@ -451,10 +448,9 @@ object LlmOps {
     * StreamingSpec pins it, including across a kill/restart. */
   private[graft] def encodeAgainstCodebook(batch: DataFrame,
       centroids: DataFrame): DataFrame = {
-    graft.functions.VectorFunctions.register(batch.sparkSession)
     val e = batch.select(col("vec_id"), col("label"),
         expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("emb"))
-      .withColumn("ssq", expr("graft_dot(emb, emb)"))
+      .withColumn("ssq", kernel("graft_dot", col("emb"), col("emb")))
     assignToCentroid(e, centroids)
       .select(col("vec_id"), col("label"), col("cid"), col("emb"),
         col("ssq"), col("cang"))
@@ -509,9 +505,9 @@ object LlmOps {
     * codebook, squared-L2 argmin via min(struct) — map-side combined, one
     * shuffled row per (vec_id, m), same shape as [[assignToCentroid]]. */
   private def pqAssign(sub: DataFrame, cb: DataFrame): DataFrame =
-    sub.join(broadcast(cb.withColumn("cssq", expr("graft_dot(csub, csub)"))),
+    sub.join(broadcast(cb.withColumn("cssq", kernel("graft_dot", col("csub"), col("csub")))),
         Seq("m"))
-      .withColumn("score", col("cssq") - lit(2.0) * expr("graft_dot(sub, csub)"))
+      .withColumn("score", col("cssq") - lit(2.0) * kernel("graft_dot", col("sub"), col("csub")))
       .groupBy(col("vec_id"), col("m"))
       .agg(min(struct(col("score"), col("k"))).as("a"), first(col("sub")).as("sub"))
       .select(col("vec_id"), col("m"), col("a.k").as("k"), col("sub"))
@@ -552,7 +548,7 @@ object LlmOps {
   private[ops] def pqSdcTable(cb: DataFrame): DataFrame =
     cb.select(col("m"), col("k").as("ka"), col("csub").as("ca"))
       .join(cb.select(col("m"), col("k").as("kb"), col("csub").as("cbb")), Seq("m"))
-      .withColumn("ip", expr("graft_dot(ca, cbb)"))
+      .withColumn("ip", kernel("graft_dot", col("ca"), col("cbb")))
       .select(col("m"), col("ka"), col("kb"), col("ip"))
 
   /** Bucketed PQ code table — one row per vector: its sign-LSH candidate
@@ -563,7 +559,7 @@ object LlmOps {
   private def pqCodesTable(e: DataFrame, sub: DataFrame, cb: DataFrame,
       n: Long): DataFrame = {
     val codes = pqAssign(sub, cb)
-      .join(broadcast(cb.withColumn("cssq", expr("graft_dot(csub, csub)"))
+      .join(broadcast(cb.withColumn("cssq", kernel("graft_dot", col("csub"), col("csub")))
         .select(col("m"), col("k"), col("cssq"))), Seq("m", "k"))
       .groupBy(col("vec_id"))
       .agg(expr("transform(array_sort(collect_list(struct(m, k))), x -> x.k)").as("codes"),
@@ -632,10 +628,8 @@ object LlmOps {
   }
 
   /** Read a [[writePqIndex]] index back: (codebook, bucketed codes). */
-  def readPqIndex(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    graft.functions.VectorFunctions.register(s) // SDC build needs graft_dot
+  def readPqIndex(s: SparkSession, dir: String): (DataFrame, DataFrame) =
     (s.read.parquet(s"$dir/codebook"), s.read.parquet(s"$dir/codes"))
-  }
 
   /** (vec_id, cid, emb = x − c(x)): each vector's residual against its
     * nearest coarse centroid — the PQ training and encoding input. */
@@ -692,10 +686,10 @@ object LlmOps {
       .select(col("cid"), col("m"), col("csubc"))
     pqAssign(sub, cb)
       .join(resid.select(col("vec_id"), col("cid")), Seq("vec_id"))
-      .join(broadcast(cb.withColumn("cssqk", expr("graft_dot(csub, csub)"))
+      .join(broadcast(cb.withColumn("cssqk", kernel("graft_dot", col("csub"), col("csub")))
         .select(col("m"), col("k"), col("csub"), col("cssqk"))), Seq("m", "k"))
       .join(broadcast(centSub), Seq("cid", "m"))
-      .withColumn("cdotm", expr("graft_dot(csubc, csub)"))
+      .withColumn("cdotm", kernel("graft_dot", col("csubc"), col("csub")))
       .groupBy(col("vec_id"), col("cid"))
       .agg(expr("transform(array_sort(collect_list(struct(m, k))), x -> x.k)")
           .as("codes"),
@@ -739,11 +733,9 @@ object LlmOps {
   }
 
   /** Read a [[writeIvfPqIndex]] index back: (centroids, codebook, codes). */
-  def readIvfPqIndex(s: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame) = {
-    graft.functions.VectorFunctions.register(s) // SDC/cgeo need graft_dot
+  def readIvfPqIndex(s: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame) =
     (s.read.parquet(s"$dir/centroids"), s.read.parquet(s"$dir/codebook"),
       s.read.parquet(s"$dir/codes"))
-  }
 
   /** The full-corpus IVF-PQ index — the one definition of the store
     * llm_sim_ann_ivfpq, _refined and _multiprobe all read. Returns the
@@ -757,10 +749,8 @@ object LlmOps {
 
   /** Read the refine sidecar of a [[writeIvfPqIndex]] layout: the raw
     * vectors (vec_id, emb, ssq) partitioned by cid. */
-  def readIvfPqFlat(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
+  def readIvfPqFlat(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(s"$dir/flat")
-  }
 
   /** IVF-PQ pair scoring from a codes table + codebook + coarse centroids
     * — the tail shared by any reader of a [[writeIvfPqIndex]] layout.
@@ -782,7 +772,7 @@ object LlmOps {
   private def ivfpqCandidateScores(codes: DataFrame, cb: DataFrame,
       centroids: DataFrame, broadcastCodes: Boolean = false): DataFrame = {
     val dec = org.apache.spark.sql.types.DecimalType(30, 12)
-    val cgeo = centroids.withColumn("cssq", expr("graft_dot(cemb, cemb)"))
+    val cgeo = centroids.withColumn("cssq", kernel("graft_dot", col("cemb"), col("cemb")))
       .select(col("cid"), col("cssq"))
     val a = codes.select(col("cid"), col("vec_id").as("va"),
       col("codes").as("codes_a"), col("cdot").as("cdot_a"), col("rhsq").as("rhsq_a"))
@@ -1020,20 +1010,20 @@ object LlmOps {
       .withColumn("m", explode(sequence(lit(0), lit(pqM - 1))))
       .withColumn("csubc", expr(s"slice(cemb, m * $dims + 1, $dims)"))
       .join(cb.select(col("m"), col("k"), col("csub")), Seq("m"))
-      .withColumn("cd", expr("graft_dot(csubc, csub)"))
+      .withColumn("cd", kernel("graft_dot", col("csubc"), col("csub")))
       .select(col("cid"), col("m"), col("k"), col("cd"))
       .collect().foreach { r =>
         cdArr((r.getInt(0) * pqM + r.getInt(1)) * pqK + r.getInt(2) - 1) =
           graft.functions.VectorKernels.dec12Scaled(r.getDouble(3))
       }
     val cssqArr = new Array[Double](nC)
-    centroids.withColumn("cssq", expr("graft_dot(cemb, cemb)"))
+    centroids.withColumn("cssq", kernel("graft_dot", col("cemb"), col("cemb")))
       .select(col("cid"), col("cssq")).collect()
       .foreach(r => cssqArr(r.getInt(0)) = r.getDouble(1))
     val ccijArr = new Array[Double](nC * nC)
     centroids.select(col("cid").as("ca"), col("cemb").as("cemb_ca"))
       .crossJoin(centroids.select(col("cid").as("cb_"), col("cemb").as("cemb_cb")))
-      .withColumn("ccij", expr("graft_dot(cemb_ca, cemb_cb)"))
+      .withColumn("ccij", kernel("graft_dot", col("cemb_ca"), col("cemb_cb")))
       .select(col("ca"), col("cb_"), col("ccij")).collect()
       .foreach(r => ccijArr(r.getInt(0) * nC + r.getInt(1)) = r.getDouble(2))
     paired
@@ -1078,7 +1068,7 @@ object LlmOps {
       .withColumn("m", explode(sequence(lit(0), lit(pqM - 1))))
       .withColumn("csubc", expr(s"slice(cemb, m * $dims + 1, $dims)"))
       .join(cb.select(col("m"), col("k"), col("csub")), Seq("m"))
-      .withColumn("cd", expr("graft_dot(csubc, csub)"))
+      .withColumn("cd", kernel("graft_dot", col("csubc"), col("csub")))
       .select(col("cid"), col("m"), col("k"), col("cd"))
     val grouped = paired
       // bounded explode: exactly pqM rows per pair (the ANSI [i] rule)
@@ -1102,9 +1092,9 @@ object LlmOps {
         Seq("ca"))
       .join(centroids.select(col("cid").as("cb_"), col("cemb").as("cemb_cb")),
         Seq("cb_"))
-      .withColumn("ccij", expr("graft_dot(cemb_ca, cemb_cb)"))
+      .withColumn("ccij", kernel("graft_dot", col("cemb_ca"), col("cemb_cb")))
       .select(col("ca"), col("cb_"), col("ccij"))
-    val cgeo = centroids.withColumn("cssq", expr("graft_dot(cemb, cemb)"))
+    val cgeo = centroids.withColumn("cssq", kernel("graft_dot", col("cemb"), col("cemb")))
       .select(col("cid"), col("cssq"))
     grouped
       .join(cellPairs, Seq("ca", "cb_"))
@@ -1151,14 +1141,15 @@ object LlmOps {
     * correct (no vectors to pair). ≤ nlist(nlist+1)/2 rows. */
   private def cellPairGeometry(centroids: DataFrame, assigned: DataFrame): DataFrame = {
     val radii = assigned.groupBy(col("cid")).agg(max(col("cang")).as("r"))
-    val cent = centroids.withColumn("cssq", expr("graft_dot(cemb, cemb)"))
+    val cent = centroids.withColumn("cssq", kernel("graft_dot", col("cemb"), col("cemb")))
     cent
       .select(col("cid").as("ci"), col("cemb").as("cemb_i"), col("cssq").as("cssq_i"))
       .crossJoin(cent.select(
         col("cid").as("cj"), col("cemb").as("cemb_j"), col("cssq").as("cssq_j")))
       .filter(col("ci") <= col("cj"))
       .withColumn("theta_ij", acos(least(lit(1.0), greatest(lit(-1.0),
-        expr("graft_dot(cemb_i, cemb_j)") / (sqrt(col("cssq_i")) * sqrt(col("cssq_j")))))))
+        kernel("graft_dot", col("cemb_i"), col("cemb_j")) /
+          (sqrt(col("cssq_i")) * sqrt(col("cssq_j")))))))
       .join(radii.select(col("cid").as("ci"), col("r").as("r_i")), Seq("ci"))
       .join(radii.select(col("cid").as("cj"), col("r").as("r_j")), Seq("cj"))
       .select(col("ci"), col("cj"), col("theta_ij"), col("r_i"), col("r_j"))
@@ -1311,19 +1302,19 @@ object LlmOps {
       centroids: DataFrame, assigned: DataFrame, k: Int): DataFrame = {
     val eps = 1e-6 + 1e-9
     val radii = assigned.groupBy(col("cid")).agg(max(col("cang")).as("r_c"))
-    val cent = centroids.withColumn("cssq", expr("graft_dot(cemb, cemb)"))
+    val cent = centroids.withColumn("cssq", kernel("graft_dot", col("cemb"), col("cemb")))
     // per-(query, cell) geometry: |Q| × nlist rows, both sides tiny
     val qgeo = queries
       .select(col("vec_id").as("qid"), col("emb").as("qemb"), col("ssq").as("qssq"))
       .crossJoin(broadcast(cent))
       .withColumn("qang", acos(least(lit(1.0), greatest(lit(-1.0),
-        expr("graft_dot(qemb, cemb)") / (sqrt(col("qssq")) * sqrt(col("cssq")))))))
+        kernel("graft_dot", col("qemb"), col("cemb")) / (sqrt(col("qssq")) * sqrt(col("cssq")))))))
       .select(col("qid"), col("qemb"), col("qssq"), col("cid"), col("qang"))
       .localCheckpoint(true) // referenced three times below
     val members = assigned.select(col("cid"), col("vec_id").as("nbr"),
       col("emb").as("emb_b"), col("ssq").as("ssq_b"))
     def scored(cands: DataFrame): DataFrame = cands.withColumn("cos_sim",
-      round(expr("graft_dot(qemb, emb_b)") /
+      round(kernel("graft_dot", col("qemb"), col("emb_b")) /
         (sqrt(col("qssq")) * sqrt(col("ssq_b"))), 6))
     val w = Window.partitionBy(col("qid"))
       .orderBy(col("cos_sim").desc, col("nbr").asc)
@@ -1363,12 +1354,12 @@ object LlmOps {
       centroids: DataFrame, assigned: DataFrame, tau: Double): DataFrame = {
     val eps = 1e-6 + 1e-9
     val radii = assigned.groupBy(col("cid")).agg(max(col("cang")).as("r_c"))
-    val cent = centroids.withColumn("cssq", expr("graft_dot(cemb, cemb)"))
+    val cent = centroids.withColumn("cssq", kernel("graft_dot", col("cemb"), col("cemb")))
     val qgeo = queries
       .select(col("vec_id").as("qid"), col("emb").as("qemb"), col("ssq").as("qssq"))
       .crossJoin(broadcast(cent))
       .withColumn("qang", acos(least(lit(1.0), greatest(lit(-1.0),
-        expr("graft_dot(qemb, cemb)") / (sqrt(col("qssq")) * sqrt(col("cssq")))))))
+        kernel("graft_dot", col("qemb"), col("cemb")) / (sqrt(col("qssq")) * sqrt(col("cssq")))))))
       .select(col("qid"), col("qemb"), col("qssq"), col("cid"), col("qang"))
     val members = assigned.select(col("cid"), col("vec_id").as("nbr"),
       col("emb").as("emb_b"), col("ssq").as("ssq_b"))
@@ -1376,7 +1367,7 @@ object LlmOps {
       .filter(cos(greatest(lit(0.0), col("qang") - col("r_c"))) >= lit(tau) - lit(eps))
       .select(col("qid"), col("qemb"), col("qssq"), col("cid"))
     admissible.join(members, Seq("cid"))
-      .withColumn("cos_sim", round(expr("graft_dot(qemb, emb_b)") /
+      .withColumn("cos_sim", round(kernel("graft_dot", col("qemb"), col("emb_b")) /
         (sqrt(col("qssq")) * sqrt(col("ssq_b"))), 6))
       .filter(col("cos_sim") >= tau)
       .select(col("qid"), col("nbr"), col("cos_sim"))
@@ -1640,7 +1631,7 @@ object LlmOps {
     * the stage that keeps the two-level enumeration bounded by the
     * coarse-admissible fan-out instead of (ncoarse·nfine)². */
   private def fineCellPairs(cells: TwoLevelCells, admCoarse: DataFrame): DataFrame = {
-    val fcent = cells.fineCent.withColumn("cssq", expr("graft_dot(cemb, cemb)"))
+    val fcent = cells.fineCent.withColumn("cssq", kernel("graft_dot", col("cemb"), col("cemb")))
     broadcast(admCoarse)
       .join(fcent.select(col("ccid").as("cci"), col("cid").as("ci"),
         col("cemb").as("cemb_i"), col("cssq").as("cssq_i")), Seq("cci"))
@@ -1648,7 +1639,7 @@ object LlmOps {
         col("cemb").as("cemb_j"), col("cssq").as("cssq_j")), Seq("ccj"))
       .filter(col("ci") <= col("cj"))
       .withColumn("theta_ij", acos(least(lit(1.0), greatest(lit(-1.0),
-        expr("graft_dot(cemb_i, cemb_j)") /
+        kernel("graft_dot", col("cemb_i"), col("cemb_j")) /
           (sqrt(col("cssq_i")) * sqrt(col("cssq_j")))))))
       .join(cells.radii.select(col("cid").as("ci"), col("r").as("r_i")), Seq("ci"))
       .join(cells.radii.select(col("cid").as("cj"), col("r").as("r_j")), Seq("cj"))
@@ -1722,20 +1713,18 @@ object LlmOps {
     * subsets read only their slice). At 100 TB this IS the signature
     * table a dedup pipeline writes before pair generation. */
   private def minhashBase(s: SparkSession, d: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     s.read.parquet(SigStore.getOrBuild(d, "documents", "shinglesig_index") {
       signaturesOf(shinglesOf(Tables.documents(s, d))).write.mode("overwrite").parquet(_)
     })
   }
 
   /** Signature frame (doc_id, hs, n, sig) over a shingled frame — the
-    * kernel shared by [[minhashBase]] and the streaming near-dup filter.
-    * Caller must have registered graft.functions.VectorFunctions. */
+    * kernel shared by [[minhashBase]] and the streaming near-dup filter. */
   private[graft] def signaturesOf(shingled: DataFrame): DataFrame =
     shingled
-      .select(col("doc_id"), expr("graft_shingle_hashes(sh)").as("hs"))
+      .select(col("doc_id"), kernel("graft_shingle_hashes", col("sh")).as("hs"))
       .withColumn("n", size(col("hs")))
-      .withColumn("sig", expr("graft_minhash(hs)"))
+      .withColumn("sig", kernel("graft_minhash", col("hs")))
 
   /** One row per (doc_id, band_idx, band_hash): the 32×2 LSH banding of a
     * signature frame, shared by the batch candidate generator and the
@@ -1912,7 +1901,7 @@ object LlmOps {
           | i -> concat_ws(' ', ctoks[i], ctoks[i+1], ctoks[i+2]))), array())"""
           .stripMargin.replace("\n", " ")).as("sh"))
       .select((col("doc_id") * lit(10000L) + col("chunk_idx")).as("doc_id"),
-        expr("graft_shingle_hashes(sh)").as("hs"))
+        kernel("graft_shingle_hashes", col("sh")).as("hs"))
 
   /** Verified near-duplicate pairs (doc_a < doc_b, jac): band-bucket
     * candidates (see minhashBandCandidates), exact-Jaccard verified via the
@@ -1931,7 +1920,7 @@ object LlmOps {
         col("n").as("n_a")), "doc_a")
       .join(base.select(col("doc_id").as("doc_b"), col("hs").as("hs_b"),
         col("n").as("n_b")), "doc_b")
-      .withColumn("common", expr("graft_sorted_intersect_long(hs_a, hs_b)"))
+      .withColumn("common", kernel("graft_sorted_intersect_long", col("hs_a"), col("hs_b")))
       .withColumn("jac", col("common").cast("double") /
         (col("n_a") + col("n_b") - col("common")).cast("double"))
       .filter(col("jac") >= 0.5)
@@ -2165,8 +2154,6 @@ object LlmOps {
       releaseCheckpoint(labels)
       labels = next.select(col("doc_id"), col("next_cid").as("cluster_id"))
       rounds += 1
-      if (sys.env.contains("GRAFT_LP_DEBUG"))
-        println(s"GRAFT_LP round=$rounds changed=$changed t=${System.nanoTime() / 1000000}")
     }
     releaseCheckpoint(edges)
     // Singletons (vertices with no incident edge) are their own cluster;
@@ -2345,7 +2332,7 @@ object LlmOps {
         col("n").as("n_b"))
       a.join(b, col("doc_a") < col("doc_b") &&
           col("n_a") * 2 >= col("n_b") && col("n_b") * 2 >= col("n_a"))
-        .withColumn("common", expr("graft_sorted_intersect_long(hs_a, hs_b)"))
+        .withColumn("common", kernel("graft_sorted_intersect_long", col("hs_a"), col("hs_b")))
         .withColumn("jac", col("common").cast("double") /
           (col("n_a") + col("n_b") - col("common")).cast("double"))
         // Identity aggregate as a pushdown barrier: without it the optimizer
@@ -2377,7 +2364,7 @@ object LlmOps {
         col("n").as("n_b"))
       a.join(b, col("doc_a") =!= col("doc_b") &&
           col("n_b").cast("double") >= col("n_a").cast("double") * 0.7)
-        .withColumn("common", expr("graft_sorted_intersect_long(hs_a, hs_b)"))
+        .withColumn("common", kernel("graft_sorted_intersect_long", col("hs_a"), col("hs_b")))
         // identity-aggregate barrier, same reason as llm_dedup_ngram_jaccard:
         // keep the expensive merge-intersect out of the join condition.
         .groupBy(col("doc_a"), col("doc_b"), col("n_a"))
@@ -2416,7 +2403,7 @@ object LlmOps {
           col("n").as("n_a")), "doc_a")
         .join(base.select(col("doc_id").as("doc_b"), col("hs").as("hs_b"),
           col("n").as("n_b")), "doc_b")
-        .withColumn("common", expr("graft_sorted_intersect_long(hs_a, hs_b)"))
+        .withColumn("common", kernel("graft_sorted_intersect_long", col("hs_a"), col("hs_b")))
         .select(explode(array(
           struct(col("doc_a").as("doc_a"), col("doc_b").as("doc_b"),
             (col("common").cast("double") / col("n_a").cast("double"))
@@ -2450,11 +2437,10 @@ object LlmOps {
     // provenance (index scan present, no corpus re-shingle) and
     // reshuffle determinism.
     "llm_dedup_incremental" -> { (s, d) =>
-      graft.functions.VectorFunctions.register(s)
       val idx = SigStore.getOrBuild(d, "documents", "contain_index") {
         writeContainmentIndex(
           docsWithShingles(s, d).filter(col("doc_id") % 5 =!= 0)
-            .select(col("doc_id"), expr("graft_shingle_hashes(sh)").as("hs")),
+            .select(col("doc_id"), kernel("graft_shingle_hashes", col("sh")).as("hs")),
           _)
       }
       val (sigs, posting, dfreq) = readContainmentIndex(s, idx)
@@ -2465,7 +2451,7 @@ object LlmOps {
       // shingle, and at deployment scale the daily batch's signatures are
       // written once to parquet anyway (exactly what the index build does)
       val batch = docsWithShingles(s, d).filter(col("doc_id") % 5 === 0)
-        .select(col("doc_id"), expr("graft_shingle_hashes(sh)").as("hs"))
+        .select(col("doc_id"), kernel("graft_shingle_hashes", col("sh")).as("hs"))
       val matches = containmentProbeCandidates(batch, posting, dfreq, 0.7)
         .join(batch.select(col("doc_id").as("doc_a"), col("hs").as("hs_a"),
           size(col("hs")).as("n_a")), "doc_a")
@@ -2473,7 +2459,7 @@ object LlmOps {
         // identity-aggregate barrier keeps the merge-intersect kernel out
         // of inferred join conditions (repo rule, see llm_dedup_containment)
         .groupBy(col("doc_a"), col("doc_b"), col("n_a"))
-        .agg(max(expr("graft_sorted_intersect_long(hs_a, hs_b)")).as("common"))
+        .agg(max(kernel("graft_sorted_intersect_long", col("hs_a"), col("hs_b"))).as("common"))
         .filter(col("common") * 10 >= col("n_a") * 7)
         .groupBy(col("doc_a")).agg(count(lit(1)).as("n_matches"))
       batch.select(col("doc_id"))
@@ -2488,12 +2474,11 @@ object LlmOps {
     // 16-bit band collision, confirmed by Hamming distance <= 6. xxhash64 has
     // no DuckDB twin — validated by LlmOpsSpec instead (rows-only here).
     "llm_dedup_simhash" -> { (s, d) =>
-      graft.functions.VectorFunctions.register(s)
       val docs = Tables.documents(s, d)
         .select(col("doc_id"),
           expr("array_distinct(split(lower(text), ' '))").as("toks"))
         .withColumn("simhash",
-          expr("graft_simhash(transform(toks, t -> xxhash64(t)))"))
+          kernel("graft_simhash", expr("transform(toks, t -> xxhash64(t))")))
       // localCheckpoint: the banded signature table feeds BOTH sides of the
       // self-join below — materializing it once halves the shingle/simhash
       // computation (mirrors llm_dedup_minhash's signature checkpoint).
@@ -3426,7 +3411,6 @@ object LlmOps {
     // map-only, the filter's only wide ops are hash-keyed joins on the
     // prefix hashes — the RAG-ingestion dedup at any corpus size.
     "llm_chunk_dedup" -> { (s, d) =>
-      graft.functions.VectorFunctions.register(s)
       val idx = SigStore.getOrBuild(d, "documents", "containchunk_index") {
         writeContainmentIndex(
           chunkSignatures(Tables.documents(s, d).filter(col("doc_id") % 5 =!= 0)), _)
@@ -3446,7 +3430,7 @@ object LlmOps {
         // identity-aggregate barrier keeps the merge-intersect kernel out
         // of inferred join conditions (repo rule, see llm_dedup_containment)
         .groupBy(col("doc_a"), col("doc_b"), col("n_a"))
-        .agg(max(expr("graft_sorted_intersect_long(hs_a, hs_b)")).as("common"))
+        .agg(max(kernel("graft_sorted_intersect_long", col("hs_a"), col("hs_b"))).as("common"))
         .filter(col("common") * 10 >= col("n_a") * 7)
         .groupBy(col("doc_a")).agg(count(lit(1)).as("n_matches"))
       batch.select(col("doc_id").as("uid"))
@@ -4175,9 +4159,8 @@ object LlmOps {
     // lambda per CHARACTER and benched 1.47 s at sf0.1 — the fused loop
     // does the identical arithmetic per row inside whole-stage codegen.
     "llm_winnow_fingerprint" -> { (s, d) =>
-      graft.functions.VectorFunctions.register(s)
       winnowBase(Tables.documents(s, d))
-        .select(col("doc_id"), explode(expr("graft_winnow(toks)")).as("fp"))
+        .select(col("doc_id"), explode(kernel("graft_winnow", col("toks"))).as("fp"))
         .orderBy(col("doc_id").asc, col("fp").asc)
     },
 

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   *
   * Scale notes (100 TB): a scalar Scala UDF breaks whole-stage codegen, so
   * UDFs are reserved for genuinely non-expressible logic; the protocol-name
-  * mapping below exists to prove the registration path (the same mapping is
+  * mapping below exists to prove the Scala UDF path (the same mapping is
   * also expressible as CASE WHEN, which is what the oracle uses). The typed
   * Aggregator keeps its buffer exact (decimal sums) so the merge step is
   * order-independent — mandatory for distributed partial aggregation, where
@@ -50,7 +50,6 @@ object Udfs {
   val queries: Seq[(String, (SparkSession, String) => DataFrame)] = Seq(
     "udf_protocol_name" -> { (s, d) =>
       val f = udf(protocolName)
-      s.udf.register("graft_protocol_name", f)
       Tables.lineitem(s, d)
         .withColumn("proto_num",
           element_at(array(lit(6), lit(17), lit(1)), (pmod(col("l_suppkey"), lit(3)) + 1).cast("int")))

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.functions.VectorFunctions.kernel
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -273,7 +274,6 @@ object StreamOps {
     checkpointed(docs, checkpoint)
       .foreachBatch { (batch: DataFrame, id: Long) =>
         val spark = batch.sparkSession
-        graft.functions.VectorFunctions.register(spark)
         val b = batch.persist()
         try {
           val sigs = graft.ops.LlmOps
@@ -299,7 +299,7 @@ object StreamOps {
             // "previously seen": an earlier batch, or earlier in this one
             .filter(col("old_batch") < id ||
               (col("old_batch") === id && col("old_id") < col("new_id")))
-            .withColumn("common", expr("graft_sorted_intersect_long(hs_a, hs_b)"))
+            .withColumn("common", kernel("graft_sorted_intersect_long", col("hs_a"), col("hs_b")))
             .filter(col("common").cast("double") /
               (col("n_a") + col("n_b") - col("common")).cast("double") >= tau)
             .select(col("new_id").as("doc_id")).distinct()

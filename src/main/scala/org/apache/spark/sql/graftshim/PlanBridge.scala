@@ -22,9 +22,9 @@ object PlanBridge {
   def analyzedPlan(df: DataFrame): LogicalPlan =
     df.asInstanceOf[classic.Dataset[_]].queryExecution.analyzed
 
-  /** Column ⇄ Expression bridges for custom expressions that carry
-    * non-Expression payloads (e.g. driver-collected lookup arrays) and so
-    * cannot go through the string-keyed function registry. */
+  /** Column ⇄ Expression bridges for the native kernels: every
+    * `VectorFunctions.kernel` call, and `IvfPqTerms`, whose driver-collected
+    * lookup arrays no name-keyed builder can carry. */
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
 
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)

@@ -26,6 +26,16 @@ class HarnessSpec extends AnyFunSuite {
       "inject kernels by looping over VectorFunctions.kernels")
     assert(occurrences("createOrReplaceTempFunction(") === Map("VectorExpressions.scala" -> 1),
       "register kernels by looping over VectorFunctions.kernels")
+    // query code never writes the session's function registry: a kernel
+    // call is a Column built by VectorFunctions.kernel
+    assert(occurrences("VectorFunctions.register(") === Map.empty,
+      "call kernels with VectorFunctions.kernel, not by registering them")
+    assert(occurrences("udf.register(") === Map.empty,
+      "apply a UDF as a Column; do not register it by name")
+    functions.VectorFunctions.kernels.foreach { case (name, _) =>
+      assert(occurrences(name + "(") === Map.empty,
+        s"""call $name as VectorFunctions.kernel("$name", ...)""")
+    }
     assert(occurrences("getRDDStorageInfo") === Map("PlanBridge.scala" -> 1),
       "one measured-stats LogicalRDD rebuild (PlanBridge.measured)")
   }

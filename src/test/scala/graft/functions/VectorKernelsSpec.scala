@@ -134,6 +134,27 @@ class VectorKernelsSpec extends SparkSpec {
     assert(mh.getSeq[Long](0) === mh.getSeq[Long](1))
   }
 
+  test("kernel is the registry's expression as a Column, needs no registration, rejects unknown names") {
+    VectorFunctions.register(spark)
+    val df = spark.createDataFrame(Seq((Seq(1.0, 2.0, 3.0), Seq(4.0, 5.0, 6.0))))
+      .toDF("a", "b")
+    def resolved(q: org.apache.spark.sql.DataFrame) =
+      q.queryExecution.analyzed.expressions.head.children.head
+    val viaKernel = resolved(df.select(VectorFunctions.kernel("graft_dot", col("a"), col("b"))))
+    assert(viaKernel.isInstanceOf[DotProductD])
+    assert(viaKernel === resolved(df.selectExpr("graft_dot(a, b)")))
+
+    // a session that never registered the kernels still runs the Column
+    val fresh = spark.newSession()
+    intercept[org.apache.spark.sql.AnalysisException](
+      fresh.sql("SELECT graft_dot(array(1D), array(1D))").collect())
+    val row = fresh.createDataFrame(Seq((Seq(1.0, 2.0, 3.0), Seq(4.0, 5.0, 6.0))))
+      .toDF("a", "b").select(VectorFunctions.kernel("graft_dot", col("a"), col("b"))).head()
+    assert(row.getDouble(0) === 32.0)
+
+    intercept[IllegalArgumentException](VectorFunctions.kernel("graft_nope", col("a")))
+  }
+
   test("graft_dot matches the HOF aggregate(zip_with(...)) bit-for-bit") {
     VectorFunctions.register(spark)
     val df = graft.Tables.embeddings(spark, sf)
