@@ -440,7 +440,7 @@ object StreamOps {
     * only write is an overwrite of the batch's own directory, and
     * encoding is a pure function of (batch, codebook) — a replayed batch
     * rewrites identical bytes. Batch-equivalence is STRUCTURAL: the
-    * encode body is LlmOps.encodeAgainstCodebook, the same seam the
+    * encode body is AnnIndex.encodeAgainstCodebook, the same seam the
     * batch upsert runs, so the accumulated store equals the one-shot
     * encode row-for-row however arrival slices the stream.
     *
@@ -456,7 +456,7 @@ object StreamOps {
       .foreachBatch { (batch: DataFrame, id: Long) =>
         val spark = batch.sparkSession
         val centroids = spark.read.parquet(centroidsPath)
-        graft.ops.LlmOps.encodeAgainstCodebook(batch, centroids)
+        graft.ops.AnnIndex.encodeAgainstCodebook(batch, centroids)
           .withColumn("batch_id", lit(id))
           .write.mode("overwrite").parquet(s"$storePath/b$id")
         ()

@@ -108,13 +108,13 @@ class LlmOpsSpec extends SparkSpec {
     val declared = SparkEntry_queries("llm_sim_ann_ivf_multiprobe")
     val declaredRows = declared.collect().map(_.toSeq.toList).toList
     val (centroids, assign) =
-      LlmOps.readIvfIndex(spark, SigStore.dir(sf, "embeddings", "ivf_index"))
+      AnnIndex.readIvfIndex(spark, SigStore.dir(sf, "embeddings", "ivf_index"))
     def pairsAt(np: Int): Set[(Long, Long)] =
-      LlmOps.ivfMultiProbePairs(assign, centroids, np).collect()
+      AnnIndex.ivfMultiProbePairs(assign, centroids, np).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
     val p1 = pairsAt(1); val p2 = pairsAt(2); val p3 = pairsAt(3)
     // nprobe = 1 degenerates exactly to the single-cell router
-    val single = LlmOps.ivfPairs(assign).collect()
+    val single = AnnIndex.ivfPairs(assign).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(p1 === single, "nprobe=1 diverged from the single-cell path")
     // candidate growth is structural: top-k cell lists are prefixes of
@@ -124,8 +124,8 @@ class LlmOpsSpec extends SparkSpec {
     // TOTAL recall vs the exact threshold pairs — the round-12 verdict's
     // point: cell-visible recall is already 1.0; this measures the
     // cross-cell pairs multi-probe exists to surface
-    val exact = LlmOps.exactPairsVia(
-        LlmOps.exactCellsOrCorpus(spark, sf), 0.3).collect()
+    val exact = AnnIndex.exactPairsVia(
+        AnnIndex.exactCellsOrCorpus(spark, sf), 0.3).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(exact.nonEmpty, "exact path returned no threshold pairs")
     // precision is exact by construction (candidates re-scored from the
@@ -147,12 +147,12 @@ class LlmOpsSpec extends SparkSpec {
       .map(r => r.getLong(0) -> r.getInt(1).toLong).toMap
     val cellSz = assign.groupBy(col("cid")).count().collect()
       .map(r => r.getInt(0).toLong -> r.getLong(1)).toMap
-    val probes3 = LlmOps.multiProbeCells(assign, centroids, 3).collect()
+    val probes3 = AnnIndex.multiProbeCells(assign, centroids, 3).collect()
       .map(r => (r.getLong(0), r.getInt(1).toLong))
     val dirBound = probes3.map { case (v, c) =>
       cellSz(c) - (if (resident(v) == c) 1L else 0L)
     }.sum
-    val cand3 = LlmOps.ivfMultiProbeCandidates(assign, centroids, 3).count()
+    val cand3 = AnnIndex.ivfMultiProbeCandidates(assign, centroids, 3).count()
     info(s"multi-probe fan-out: ${cand3} distinct candidates vs directed bound $dirBound")
     assert(cand3 <= dirBound,
       s"candidate fan-out $cand3 exceeded the nprobe-cell bound $dirBound")
@@ -171,10 +171,10 @@ class LlmOpsSpec extends SparkSpec {
     val declared = SparkEntry_queries("llm_sim_ann_ivfpq_multiprobe")
     val declaredRows = declared.collect().map(_.toSeq.toList).toList
     val idx = SigStore.dir(sf, "embeddings", "ivfpq_index")
-    val (cent, cb, codes) = LlmOps.readIvfPqIndex(spark, idx)
-    val flat = LlmOps.readIvfPqFlat(spark, idx)
+    val (cent, cb, codes) = AnnIndex.readIvfPqIndex(spark, idx)
+    val flat = AnnIndex.readIvfPqFlat(spark, idx)
     def rowsAt(np: Int): Map[(Long, Long), Double] =
-      LlmOps.ivfpqMultiProbePairs(codes, cb, cent, flat, np).collect()
+      AnnIndex.ivfpqMultiProbePairs(codes, cb, cent, flat, np).collect()
         .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     val m1 = rowsAt(1); val m2 = rowsAt(2); val m3 = rowsAt(3)
     // nprobe=1 must degenerate BIT-IDENTICALLY to the single-cell PQ
@@ -196,8 +196,8 @@ class LlmOpsSpec extends SparkSpec {
     // score is approximate, so measure, don't assume — cross-cell recall
     // must not FALL as candidates widen, and nprobe=2 must surface
     // something on this fixture or the composition is a no-op)
-    val exact = LlmOps.exactPairsVia(
-        LlmOps.exactCellsOrCorpus(spark, sf), 0.3).collect()
+    val exact = AnnIndex.exactPairsVia(
+        AnnIndex.exactCellsOrCorpus(spark, sf), 0.3).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     def recall(p: Set[(Long, Long)]): Double =
       p.intersect(exact).size.toDouble / exact.size
@@ -221,15 +221,15 @@ class LlmOpsSpec extends SparkSpec {
     // the declared query ensures the persisted ivfpq index exists
     SparkEntry_queries("llm_sim_ann_ivfpq_multiprobe").collect()
     val idx = SigStore.dir(sf, "embeddings", "ivfpq_index")
-    val (cent, cb, codes) = LlmOps.readIvfPqIndex(spark, idx)
-    val flat = LlmOps.readIvfPqFlat(spark, idx)
+    val (cent, cb, codes) = AnnIndex.readIvfPqIndex(spark, idx)
+    val flat = AnnIndex.readIvfPqFlat(spark, idx)
     // forcing the cap below the fixture's nC (16) routes the sparse
     // join form — every row must be BIT-identical to the dense kernel
     // (same decimal-exact m-sums, same graft_dot doubles)
     for (np <- Seq(1, 2)) {
-      val dense = LlmOps.ivfpqMultiProbePairs(codes, cb, cent, flat, np)
+      val dense = AnnIndex.ivfpqMultiProbePairs(codes, cb, cent, flat, np)
         .collect().map(_.toSeq.toList).toList
-      val sparse = LlmOps.ivfpqMultiProbePairs(codes, cb, cent, flat, np,
+      val sparse = AnnIndex.ivfpqMultiProbePairs(codes, cb, cent, flat, np,
           denseLutCellCap = 1)
         .collect().map(_.toSeq.toList).toList
       assert(sparse.nonEmpty, s"sparse regime returned no rows at nprobe=$np")
@@ -241,17 +241,17 @@ class LlmOpsSpec extends SparkSpec {
     // driver-collected payload is bounded by the cap's entry count —
     // ~4.5M entries ≈ 36 MB — regardless of corpus size...
     val capEntries =
-      LlmOps.multiProbeDenseLutEntries(LlmOps.MultiProbeDenseLutCellCap)
+      AnnIndex.multiProbeDenseLutEntries(AnnIndex.MultiProbeDenseLutCellCap)
     assert(capEntries < 5000000L,
       s"dense LUT bound at the cap grew to $capEntries entries")
     // ...while a linear-nlist corpus 10× past the cap-crossing size
     // derives a cell count the regime predicate must route SPARSE —
     // the dense form there would need >50× the bounded payload
-    val n10 = 10L * 128L * LlmOps.MultiProbeDenseLutCellCap
-    val nC10 = LlmOps.ivfNlist(n10)
-    assert(nC10 > LlmOps.MultiProbeDenseLutCellCap,
+    val n10 = 10L * 128L * AnnIndex.MultiProbeDenseLutCellCap
+    val nC10 = AnnIndex.ivfNlist(n10)
+    assert(nC10 > AnnIndex.MultiProbeDenseLutCellCap,
       "10×-scale corpus did not cross the dense cap — the property is vacuous")
-    assert(LlmOps.multiProbeDenseLutEntries(nC10) > 50L * capEntries)
+    assert(AnnIndex.multiProbeDenseLutEntries(nC10) > 50L * capEntries)
   }
 
   test("ANN LSH returns a subset of brute-force threshold pairs, with high recall on top pairs") {
@@ -314,9 +314,9 @@ class LlmOpsSpec extends SparkSpec {
     // batch's encodings to the persisted inverted file must reproduce a
     // full re-encode of ALL vectors against the same codebook row-for-row
     val (centroids, _) =
-      LlmOps.readIvfIndex(spark, SigStore.dir(sf, "embeddings", "ivfbase_index"))
+      AnnIndex.readIvfIndex(spark, SigStore.dir(sf, "embeddings", "ivfbase_index"))
     val all = LlmOps.embDouble(spark, sf).localCheckpoint(true)
-    val full = LlmOps.ivfPairs(LlmOps.assignToCentroid(all, centroids))
+    val full = AnnIndex.ivfPairs(AnnIndex.assignToCentroid(all, centroids))
       .collect().map(_.toSeq.toList).toList
     assert(rows === full, "upsert-maintained index diverged from full re-encode")
     // the finalized plan reads the persisted base index, and EVERY
@@ -347,10 +347,10 @@ class LlmOpsSpec extends SparkSpec {
     // batch's encodings to the persisted codes table must reproduce a
     // full re-encode of ALL vectors against the same codebooks
     val (cent, cb, _) =
-      LlmOps.readIvfPqIndex(spark, SigStore.dir(sf, "embeddings", "ivfpqbase_index"))
+      AnnIndex.readIvfPqIndex(spark, SigStore.dir(sf, "embeddings", "ivfpqbase_index"))
     val all = LlmOps.embDouble(spark, sf).localCheckpoint(true)
-    val full = LlmOps.ivfpqPairScores(
-        LlmOps.encodeAgainstIvfPq(all, cent, cb)
+    val full = AnnIndex.ivfpqPairScores(
+        AnnIndex.encodeAgainstIvfPq(all, cent, cb)
           .withColumn("cid", col("cid").cast("int")), cb, cent)
       .collect().map(_.toSeq.toList).toList
     assert(rows === full,
@@ -397,7 +397,7 @@ class LlmOpsSpec extends SparkSpec {
     // the ANY-codebook exactness made observable, not just argued
     val q = SparkEntry_queries("llm_sim_threshold_join")
     val rows = q.collect().map(_.toSeq.toList).toList
-    val inline = LlmOps.prunedCosinePairs(e, 0.4)
+    val inline = AnnIndex.prunedCosinePairs(e, 0.4)
       .select(col("va"), col("vb"), col("cos_sim"),
         (col("label_a") === col("label_b")).as("same_label"))
       .orderBy(col("va").asc, col("vb").asc)
@@ -411,7 +411,7 @@ class LlmOpsSpec extends SparkSpec {
     // top-k: same invariance through the t0/phase-2 machinery
     val qt = SparkEntry_queries("llm_sim_topk")
     val tRows = qt.collect().map(_.toSeq.toList).toList
-    assert(tRows === LlmOps.exactTopKPairs(e, k = 10)
+    assert(tRows === AnnIndex.exactTopKPairs(e, k = 10)
       .collect().map(_.toSeq.toList).toList,
       "indexed top-k diverged from inline")
     val tPlan = qt.queryExecution.executedPlan.toString
@@ -723,7 +723,7 @@ class LlmOpsSpec extends SparkSpec {
         .filter(col("cos_sim") >= tau)
         .select("va", "vb", "cos_sim").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      val pruned = LlmOps.prunedCosinePairs(e, tau)
+      val pruned = AnnIndex.prunedCosinePairs(e, tau)
         .select("va", "vb", "cos_sim").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
       assert(brute.nonEmpty, s"degenerate fixture at tau=$tau: no brute pairs")
@@ -749,7 +749,7 @@ class LlmOpsSpec extends SparkSpec {
         .select(col("qid"), col("nbr"), col("cos_sim"))
         .orderBy(col("qid").asc, col("rnk").asc)
         .collect().map(_.toSeq.toList).toList
-      val fastSearch = LlmOps.exactSearchTopK(queries, corpus, k)
+      val fastSearch = AnnIndex.exactSearchTopK(queries, corpus, k)
         .select(col("qid"), col("nbr"), col("cos_sim"))
         .collect().map(_.toSeq.toList).toList
       assert(fastSearch === bruteSearch, s"search top-$k diverged from brute force")
@@ -762,7 +762,7 @@ class LlmOpsSpec extends SparkSpec {
         .orderBy(col("cos_sim").desc, col("va").asc, col("vb").asc).limit(k)
         .select("va", "vb", "cos_sim").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toList
-      val fast = LlmOps.exactTopKPairs(e, k)
+      val fast = AnnIndex.exactTopKPairs(e, k)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toList
       assert(fast === bruteTop, s"top-$k diverged from brute force")
     }
@@ -907,7 +907,7 @@ class LlmOpsSpec extends SparkSpec {
     // bucket visibility of each planted pair under the corpus-adaptive LSH
     val e = rows.toDF("vec_id", "embedding", "label")
       .select(col("vec_id"), expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("emb"))
-    val buckets = LlmOps.signBuckets(e, LlmOps.annBits(rows.size.toLong))
+    val buckets = AnnIndex.signBuckets(e, AnnIndex.annBits(rows.size.toLong))
       .select("vec_id", "bucket").collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val visible = (0 until 60).map(i => (i.toLong * 2, i.toLong * 2 + 1))
@@ -953,8 +953,8 @@ class LlmOpsSpec extends SparkSpec {
     def collectPairs(df: org.apache.spark.sql.DataFrame) = df
       .select("va", "vb", "cos_sim").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val flat = collectPairs(LlmOps.prunedCosinePairs(e, tau, nlist = 1024))
-    val two = collectPairs(LlmOps.prunedCosinePairsTwoLevel(e, tau, 32, 32))
+    val flat = collectPairs(AnnIndex.prunedCosinePairs(e, tau, nlist = 1024))
+    val two = collectPairs(AnnIndex.prunedCosinePairsTwoLevel(e, tau, 32, 32))
     assert(flat.nonEmpty, "degenerate corpus: no qualifying pairs")
     assert(two === flat, s"two-level diverged from flat: " +
       s"missing=${(flat -- two).take(5)} extra=${(two -- flat).take(5)}")
@@ -964,9 +964,9 @@ class LlmOpsSpec extends SparkSpec {
     }
     // top-k on the same corpus: the two-phase t0 bound must thread through
     // the coarse prune without disturbing the ORDERED ranking.
-    val flatTop = LlmOps.exactTopKPairs(e, 20, nlist = 1024)
+    val flatTop = AnnIndex.exactTopKPairs(e, 20, nlist = 1024)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toList
-    val twoTop = LlmOps.exactTopKPairsTwoLevel(e, 20, 32, 32)
+    val twoTop = AnnIndex.exactTopKPairsTwoLevel(e, 20, 32, 32)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toList
     assert(flatTop.size === 20)
     assert(twoTop === flatTop, s"two-level top-k diverged:\n$twoTop\nvs\n$flatTop")
@@ -974,11 +974,11 @@ class LlmOpsSpec extends SparkSpec {
     // order), not just the two-level bodies: an injected flatCap makes the
     // derived nlist (≈√n = 318 here) hit the cap at test scale, so both
     // entry points take the production switch with side = ⌈n^(1/4)⌉ = 18.
-    assert(LlmOps.twoLevelSide(100150L) === 18)
-    val switched = collectPairs(LlmOps.prunedCosinePairs(e, tau, flatCap = 16))
+    assert(AnnIndex.twoLevelSide(100150L) === 18)
+    val switched = collectPairs(AnnIndex.prunedCosinePairs(e, tau, flatCap = 16))
     assert(switched === flat, s"dispatched two-level diverged from flat: " +
       s"missing=${(flat -- switched).take(5)} extra=${(switched -- flat).take(5)}")
-    val switchedTop = LlmOps.exactTopKPairs(e, 20, flatCap = 16)
+    val switchedTop = AnnIndex.exactTopKPairs(e, 20, flatCap = 16)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toList
     assert(switchedTop === flatTop,
       s"dispatched two-level top-k diverged:\n$switchedTop\nvs\n$flatTop")
@@ -991,27 +991,27 @@ class LlmOpsSpec extends SparkSpec {
     // because both are exact for ANY codebook, the switch must be
     // result-invisible. Driven on the fixture corpus with an injected
     // flatCap (ivfNlistExact floors at 16, so flatCap=16 always trips).
-    val flatCells = LlmOps.exactCellsOrCorpus(spark, sf)
-    assert(flatCells.isInstanceOf[LlmOps.FlatCells],
+    val flatCells = AnnIndex.exactCellsOrCorpus(spark, sf)
+    assert(flatCells.isInstanceOf[AnnIndex.FlatCells],
       "fixture corpus should be in the flat regime under the real cap")
-    val overCells = LlmOps.exactCellsOrCorpus(spark, sf, flatCap = 16)
-    assert(overCells.isInstanceOf[LlmOps.OverCapCorpus],
+    val overCells = AnnIndex.exactCellsOrCorpus(spark, sf, flatCap = 16)
+    assert(overCells.isInstanceOf[AnnIndex.OverCapCorpus],
       "injected cap should force the over-cap regime")
-    def pairsOf(c: LlmOps.ExactCells) =
-      LlmOps.exactPairsVia(c, 0.4).select("va", "vb", "cos_sim").collect()
+    def pairsOf(c: AnnIndex.ExactCells) =
+      AnnIndex.exactPairsVia(c, 0.4).select("va", "vb", "cos_sim").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val pFlat = pairsOf(flatCells)
     val pOver = pairsOf(overCells)
     assert(pFlat.nonEmpty, "degenerate fixture: no threshold pairs")
     assert(pOver === pFlat, s"over-cap pair set diverged: " +
       s"missing=${(pFlat -- pOver).take(5)} extra=${(pOver -- pFlat).take(5)}")
-    def topOf(c: LlmOps.ExactCells) = LlmOps.exactTopKVia(c, 10).collect()
+    def topOf(c: AnnIndex.ExactCells) = AnnIndex.exactTopKVia(c, 10).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toList
     val tFlat = topOf(flatCells)
     assert(tFlat.size === 10)
     assert(topOf(overCells) === tFlat, "over-cap top-k ranking diverged")
     // the vertex base (dedup keep-set) is regime-invariant too
-    def verts(c: LlmOps.ExactCells) = LlmOps.exactVerticesVia(c)
+    def verts(c: AnnIndex.ExactCells) = AnnIndex.exactVerticesVia(c)
       .collect().map(r => (r.getLong(0), r.get(1))).toSet
     assert(verts(overCells) === verts(flatCells))
   }
@@ -1115,23 +1115,23 @@ class LlmOpsSpec extends SparkSpec {
     // IVF cell size n/nlist <= 128 must hold across 4 decades, not just at
     // fixture scale (where both formulas must still derive the round-3
     // constants so fixture results are unchanged).
-    assert(LlmOps.annBits(500) === 8 && LlmOps.annBits(2000) === 8)
-    assert(LlmOps.ivfNlist(500) === 16 && LlmOps.ivfNlist(2000) === 16)
+    assert(AnnIndex.annBits(500) === 8 && AnnIndex.annBits(2000) === 8)
+    assert(AnnIndex.ivfNlist(500) === 16 && AnnIndex.ivfNlist(2000) === 16)
     for (n <- Seq(500L, 5000L, 50000L, 500000L, 5000000L)) {
-      val bits = LlmOps.annBits(n)
-      val nlist = LlmOps.ivfNlist(n)
+      val bits = AnnIndex.annBits(n)
+      val nlist = AnnIndex.ivfNlist(n)
       assert(n.toDouble / (1L << bits) <= 8.0,
         s"n=$n bits=$bits mean occupancy ${n.toDouble / (1L << bits)}")
       assert(n.toDouble / nlist <= 128.0,
         s"n=$n nlist=$nlist mean cell size ${n.toDouble / nlist}")
       // exact-path sizing: the nlist² cell-pair space must stay ~linear
       // in n (within the documented 4096-list cap), never quadratic.
-      val ne = LlmOps.ivfNlistExact(n).toLong
+      val ne = AnnIndex.ivfNlistExact(n).toLong
       assert(ne * ne <= 4L * n || ne == 4096L,
         s"n=$n exact nlist=$ne cell-pair space ${ne * ne} not ~linear")
     }
-    assert(LlmOps.annBits(Long.MaxValue) === 48, "bits cap")
-    assert(LlmOps.ivfNlistExact(Long.MaxValue) === 4096, "exact nlist cap")
+    assert(AnnIndex.annBits(Long.MaxValue) === 48, "bits cap")
+    assert(AnnIndex.ivfNlistExact(Long.MaxValue) === 4096, "exact nlist cap")
     // Empirical: on a seeded random corpus grown 10x, the adaptive bit
     // count keeps the REALIZED max bucket occupancy flat instead of 10x.
     import spark.implicits._
@@ -1140,8 +1140,8 @@ class LlmOpsSpec extends SparkSpec {
     def corpus(n: Int) = (0 until n)
       .map(i => (i.toLong, Array.fill(64)(rnd.nextDouble() * 2 - 1)))
       .toDF("vec_id", "emb")
-    def maxOcc(n: Int): Long = LlmOps
-      .signBuckets(corpus(n), LlmOps.annBits(n))
+    def maxOcc(n: Int): Long = AnnIndex
+      .signBuckets(corpus(n), AnnIndex.annBits(n))
       .groupBy(col("bucket")).count()
       .agg(max(col("count"))).collect()(0).getLong(0)
     val small = maxOcc(500)

@@ -1744,8 +1744,8 @@ class StreamingSpec extends SparkSpec {
         expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("emb"))
       .withColumn("ssq", expr("graft_dot(emb, emb)"))
     val base = e.filter(col("vec_id") % 10 =!= 0).localCheckpoint(true)
-    graft.ops.LlmOps.writeIvfIndex(base, s"$dir/idx",
-      nlist = graft.ops.LlmOps.ivfNlist(base.count()), iters = 2)
+    graft.ops.AnnIndex.writeIvfIndex(base, s"$dir/idx",
+      nlist = graft.ops.AnnIndex.ivfNlist(base.count()), iters = 2)
     // the ingest stream: the % 10 == 0 vectors as RAW floats, in 3 batches
     val delta = graft.Tables.embeddings(spark, sf)
       .filter(col("vec_id") % 10 === 0)
@@ -1778,7 +1778,7 @@ class StreamingSpec extends SparkSpec {
       // encodeAgainstCodebook seam), independent of batch slicing and of
       // the kill/restart boundary
       val streamed = norm(spark.read.parquet(s"$dir/store/b*").drop("batch_id"))
-      val oneShot = norm(graft.ops.LlmOps.encodeAgainstCodebook(
+      val oneShot = norm(graft.ops.AnnIndex.encodeAgainstCodebook(
         graft.Tables.embeddings(spark, sf).filter(col("vec_id") % 10 === 0)
           .select(col("vec_id"), col("label"), col("embedding")), centroids))
       assert(streamed.size === delta.size, "store lost or duplicated vectors")
