@@ -28,8 +28,8 @@ object Harness {
 
   /** `local[n]` session with n = `SPARK_GRAFT_CPUS` (else `defaultCpus`),
     * validated before any session exists; n shuffle partitions, UTC, no
-    * UI, log level WARN, fork-free streaming checkpoints
-    * ([[graft.streaming.ForklessLocalFs]]). */
+    * UI, log level WARN (ERROR for WindowExec), fork-free streaming
+    * checkpoints ([[graft.streaming.ForklessLocalFs]]). */
   def session(defaultCpus: Int): SparkSession = {
     val n = positiveEnv("SPARK_GRAFT_CPUS", defaultCpus)
     val spark = SparkSession.builder()
@@ -39,6 +39,14 @@ object Harness {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // WindowExec warns once per planned window without PARTITION BY. graft
+    // has those only over tiny frames, on purpose: AnnIndex.ivfCodebook's
+    // seeded init over limit(nlist) rows, LlmOps.kmeansFixed, and the
+    // ≤32-row prefix-offset windows of llm_sample_pps, llm_shard_assign and
+    // their kin. Hundreds of these lines per verify run bury real warnings.
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.sql.execution.window.WindowExec",
+      org.apache.logging.log4j.Level.ERROR)
     graft.streaming.ForklessLocalFs.install(spark)
     spark
   }

@@ -247,7 +247,7 @@ object VectorKernels {
     * the DuckDB oracle) on all BMP text — the interpreted HOF dispatched
     * a lambda per character, this is one fused primitive loop per row.
     * Returns an empty array when fewer than k+w-1 tokens (callers
-    * pre-filter, mirroring docsWithShingles' rule). */
+    * pre-filter, mirroring TextDedup.atLeast's rule). */
   def winnowFingerprints(toks: ArrayData): ArrayData = {
     val K = 3; val W = 4; val M = 1000000007L
     val n = toks.numElements()
@@ -702,8 +702,21 @@ case class HoltWintersStates(left: Expression, right: Expression) extends Binary
     copy(left = newLeft, right = newRight)
 }
 
+/** The builder of the native kernel `name`, which takes exactly `arity`
+  * arguments. Every path that builds a kernel expression calls it, so a
+  * wrong argument count is one IllegalArgumentException naming the kernel
+  * and the count it takes, never an index error inside `make`. */
+final case class Kernel(name: String, arity: Int)(make: Seq[Expression] => Expression)
+    extends (Seq[Expression] => Expression) {
+  def apply(args: Seq[Expression]): Expression = {
+    if (args.size != arity) throw new IllegalArgumentException(
+      s"$name takes $arity argument${if (arity == 1) "" else "s"}, got ${args.size}")
+    make(args)
+  }
+}
+
 object VectorFunctions {
-  /** The native kernels, SQL name -> expression builder. Query code calls
+  /** The native kernels, SQL name -> builder (with its arity). Query code calls
     * them through [[kernel]]. The two SQL paths iterate this same table:
     * [[register]] for sessions built without extensions,
     * [[graft.GraftExtensions]] for sessions configured with
@@ -717,25 +730,28 @@ object VectorFunctions {
     * without an error. Duplicates are not removed: a value present m
     * times in one array and n times in the other counts min(m, n) times,
     * where `array_intersect` keeps it once. */
-  val kernels: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    ("graft_dot", e => DotProductD(e.head, e(1))),
-    ("graft_minhash", e => MinHashSig(e.head)),
-    ("graft_minhash_str", e => MinHashSigStr(e.head)),
-    ("graft_simhash", e => SimHash64(e.head)),
-    ("graft_sorted_intersect", e => SortedIntersectCount(e.head, e(1))),
-    ("graft_shingle_hashes", e => ShingleHashes(e.head)),
-    ("graft_sorted_intersect_long", e => SortedIntersectCountLong(e.head, e(1))),
-    ("graft_winnow", e => WinnowFp(e.head)),
-    ("graft_sorted_intersect_minw", e => SortedIntersectMinWeightSum(e.head, e(1), e(2), e(3))),
-    ("graft_sorted_intersect_arr", e => SortedIntersectArrLong(e.head, e(1))),
-    ("graft_holt", e => HoltStates(e.head)),
-    ("graft_holt_winters", e => HoltWintersStates(e.head, e(1))))
+  val kernels: Seq[(String, Kernel)] = Seq(
+    Kernel("graft_dot", 2)(e => DotProductD(e.head, e(1))),
+    Kernel("graft_minhash", 1)(e => MinHashSig(e.head)),
+    Kernel("graft_minhash_str", 1)(e => MinHashSigStr(e.head)),
+    Kernel("graft_simhash", 1)(e => SimHash64(e.head)),
+    Kernel("graft_sorted_intersect", 2)(e => SortedIntersectCount(e.head, e(1))),
+    Kernel("graft_shingle_hashes", 1)(e => ShingleHashes(e.head)),
+    Kernel("graft_sorted_intersect_long", 2)(e => SortedIntersectCountLong(e.head, e(1))),
+    Kernel("graft_winnow", 1)(e => WinnowFp(e.head)),
+    Kernel("graft_sorted_intersect_minw", 4)(e =>
+      SortedIntersectMinWeightSum(e.head, e(1), e(2), e(3))),
+    Kernel("graft_sorted_intersect_arr", 2)(e => SortedIntersectArrLong(e.head, e(1))),
+    Kernel("graft_holt", 1)(e => HoltStates(e.head)),
+    Kernel("graft_holt_winters", 2)(e => HoltWintersStates(e.head, e(1))))
+    .map(k => k.name -> k)
 
   /** A call of the kernel `name` from [[kernels]] as a Column. Query code
     * calls kernels this way, never by SQL name: the Column resolves to the
     * same expression the registry builder returns, and it needs no session
     * state, so it works alike in a batch query and inside a `foreachBatch`
-    * sink. Throws on a name that is not in [[kernels]]. */
+    * sink. Throws IllegalArgumentException on a name that is not in
+    * [[kernels]] or a wrong argument count. */
   def kernel(name: String, args: Column*): Column = {
     val build = kernels.toMap.getOrElse(name,
       throw new IllegalArgumentException(s"unknown graft kernel: $name"))

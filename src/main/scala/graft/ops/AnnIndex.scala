@@ -1145,6 +1145,8 @@ object AnnIndex {
     val eps = 1e-6 + 1e-9
     val (cells, radii, members) = searchGeometry(queries, centroids, assigned)
     val qgeo = cells.localCheckpoint(true) // referenced three times below
+    // the returned frame still reads qgeo: the next call retires it
+    CheckpointPark.park("exact_search_qgeo", qgeo)
     def scored(cands: DataFrame): DataFrame = cands.withColumn("cos_sim", searchCos)
     val w = Window.partitionBy(col("qid"))
       .orderBy(col("cos_sim").desc, col("nbr").asc)

@@ -3,8 +3,8 @@ package graft.ops
 import graft.Tables
 import graft.functions.VectorFunctions.kernel
 import graft.ops.AnnIndex._
-import graft.store.SigStore
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.ops.TextDedup._
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -17,17 +17,12 @@ import org.apache.spark.sql.functions._
   *
   * Scale notes (100 TB):
   *  - Exact dedup is a hash shuffle on the digest — linear, no driver state.
-  *  - MinHash-LSH replaces the O(n²) pair space with band buckets: one
-  *    shuffle groups (band_idx, band_hash) → id lists, pairs explode within
-  *    a bucket, then exact-Jaccard verify on candidates only. Band
-  *    parameters (32 bands × 2 rows) give P(miss) = (1 - s²)³² < 1e-14 at
-  *    s ≥ 0.8 — recall is deterministic-in-practice while candidate volume
-  *    stays ~linear for low-similarity corpora. This is THE scale path;
+  *  - MinHash-LSH (32 bands × 2 rows) is THE near-dup scale path;
   *    brute-force Jaccard below exists as the small-data oracle twin.
-  *  - Asymmetric containment candidates come from a LOSSLESS prefix-filter
-  *    join (containmentPrefixCandidates), not banding — guaranteed recall
-  *    at any length ratio, with rare-first ordering bounding the posting
-  *    fan-out.
+  *    Containment candidates come from a LOSSLESS prefix filter. Tokens,
+  *    grams, chunks, signatures, candidates and verify joins all live in
+  *    [[TextDedup]]; the dedup closures here add projections and
+  *    thresholds.
   *  - The cosine-threshold join, embedding dedup AND global top-k all route
   *    through an EXACT-recall IVF-cell candidate join (triangle-inequality
   *    pruning in angle space — see AnnIndex.prunedCosinePairs /
@@ -44,24 +39,15 @@ import org.apache.spark.sql.functions._
   */
 object LlmOps {
 
-  /** Distinct word 3-gram shingles of lower(text).
-    *
-    * PERFORMANCE: no CASE/IF may wrap the transform — a conditional branch
-    * defeats Catalyst subexpression elimination, so `split(lower(text))`
-    * would re-evaluate per element ×3 = O(tokens²) per document (measured
-    * 25× slower at sf0.1). Docs with < 3 tokens are excluded by a plain
-    * pre-filter instead (they can never reach any Jaccard threshold). */
-  private def docsWithShingles(s: SparkSession, d: String): DataFrame =
-    shinglesOf(Tables.documents(s, d))
-
-  /** Heuristic quality score per document (length, type-token ratio,
-    * stopword density — the C4/Gopher-style cheap-signal family), shared
-    * by llm_quality_score (the per-doc report) and llm_quality_filter
-    * (the per-language rank cut). All-codegen HOF projections; `quality`
-    * is rounded to 6 places BEFORE any ranking so every engine ranks the
+  /** Heuristic quality score per document of a (doc_id, lang, text)
+    * frame (length, type-token ratio, stopword density — the
+    * C4/Gopher-style cheap-signal family), shared by llm_quality_score
+    * (the per-doc report), llm_quality_filter (the per-language rank cut)
+    * and the curation capstone. All-codegen HOF projections; `quality` is
+    * rounded to 6 places BEFORE any ranking so every engine ranks the
     * same values. */
-  private def qualityScored(s: SparkSession, d: String): DataFrame =
-    Tables.documents(s, d)
+  private def qualityScored(docs: DataFrame): DataFrame =
+    docs
       .withColumn("toks", split(lower(col("text")), " "))
       .withColumn("n_toks", size(col("toks")).cast("double"))
       .withColumn("ttr",
@@ -72,16 +58,38 @@ object LlmOps {
       .select(col("doc_id"), col("lang"),
         round(least(lit(1.0), col("n_toks") / 50.0) * 0.4 +
           col("ttr") * 0.3 + col("stop_ratio") * 0.3, 6).as("quality"),
-        round(col("ttr"), 6).as("ttr"))
+        round(col("ttr"), 6).as("ttr"),
+        size(col("toks")).cast("long").as("n_tok"))
+
+  /** Exact dedup: the canonical keeper (lowest doc_id) of each
+    * normalized-text digest `h`. */
+  private def exactKeepers(docs: DataFrame): DataFrame =
+    docs
+      .withColumn("h", sha2(lower(trim(col("text"))), 256))
+      .withColumn("rn", row_number().over(
+        Window.partitionBy(col("h")).orderBy(col("doc_id").asc)))
+      .filter(col("rn") === 1)
+      .drop("rn")
+
+  /** The top 90% of each language by (quality DESC, doc_id ASC). */
+  private def qualityTop90(scored: DataFrame): DataFrame =
+    scored
+      .withColumn("rn", row_number().over(Window.partitionBy(col("lang"))
+        .orderBy(col("quality").desc, col("doc_id").asc)).cast("long"))
+      .withColumn("n", count(lit(1)).over(Window.partitionBy(col("lang"))))
+      .filter(col("rn") <= ceil(col("n") * 0.9))
+
+  /** The deterministic md5 split of each doc_id: ~80% train, ~10% val,
+    * ~10% test. */
+  private def splitOf: Column = {
+    val h = substring(md5(col("doc_id").cast("string")), 1, 2)
+    when(h < "cc", "train").when(h < "e6", "val").otherwise("test")
+  }
 
   /** Tokenized docs eligible for winnowing: ≥ 6 tokens = at least one
-    * full 4-window of 3-grams (the same plain pre-filter rule as
-    * docsWithShingles: no CASE may wrap the gram kernel, and the HOF
-    * twin's [i] indexing is safe only because of this filter). */
-  private def winnowBase(docs: DataFrame): DataFrame =
-    docs
-      .select(col("doc_id"), split(lower(col("text")), " ").as("toks"))
-      .filter(size(col("toks")) >= 6)
+    * full 4-window of 3-grams (the HOF twin's [i] indexing is safe only
+    * because of this filter). */
+  private def winnowBase(docs: DataFrame): DataFrame = tokenized(docs, 6)
 
   /** The pure-HOF twin of graft_winnow — same polynomial gram hash, same
     * window mins, as built-in expressions only. Never in a query path
@@ -100,25 +108,6 @@ object LlmOps {
         """coalesce(array_distinct(transform(sequence(0, size(gh) - 4),
           | j -> array_min(slice(gh, j + 1, 4)))), array())"""
           .stripMargin.replace("\n", " "))).as("fp"))
-
-  /** [[docsWithShingles]] over an arbitrary (doc_id, text) frame — shared
-    * with the streaming near-dup filter, whose input is a micro-batch,
-    * not a table directory. */
-  private[graft] def shinglesOf(docs: DataFrame): DataFrame =
-    docs
-      // `toks` is a separate projection on purpose: referencing the split
-      // through a column guarantees one evaluation per row (CollapseProject
-      // keeps non-cheap multi-use aliases), where split() inlined in the
-      // lambda body re-splits per array element.
-      .select(col("doc_id"), split(lower(col("text")), " ").as("toks"))
-      .filter(size(col("toks")) >= 3)
-      // coalesce(..., array()) makes `sh` non-nullable so the optimizer's
-      // inferred isnotnull constraints constant-fold instead of re-running
-      // the whole (inlined, quadratic) shingle pipeline as a scan filter.
-      .select(col("doc_id"), expr(
-        """coalesce(array_distinct(transform(sequence(0, size(toks) - 3),
-          | i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2]))), array())"""
-          .stripMargin.replace("\n", " ")).as("sh"))
 
   /** Embeddings as double vectors with precomputed sum of squares through
     * the native codegen dot-product kernel (graft.functions) — candidate-pair
@@ -182,235 +171,6 @@ object LlmOps {
     kmeansAssign(e, cent)
       .select(col("vec_id"), col("m.cid").as("cluster"), col("m.dist").as("dist"))
       .orderBy(col("vec_id").asc)
-  }
-
-  /** Shingle-hash signature table — doc_id, hs (sorted FNV-64 shingle
-    * hashes: the compact set representation for both the signature and the
-    * exact merge-intersect verify), n (=|hs|), sig (64 minhashes) —
-    * PERSISTED once per documents signature (round 14: the
-    * writeContainmentIndex / writeIvfIndex train-once lever applied to
-    * the shingle side — previously every minhash/ngram query re-shingled
-    * the full corpus per run into a localCheckpoint). Shingling is
-    * deterministic, so a rebuild over unchanged data recreates the
-    * identical table; a regenerated fixture invalidates the dir by the
-    * (name, size, mtime) key. Consumers that reference the frame from
-    * multiple plan branches now just re-scan the parquet — each scan is
-    * column-pruned and filter-pushed (the doc_id < 500 oracle-twin
-    * subsets read only their slice). At 100 TB this IS the signature
-    * table a dedup pipeline writes before pair generation. */
-  private def minhashBase(s: SparkSession, d: String): DataFrame = {
-    s.read.parquet(SigStore.getOrBuild(d, "documents", "shinglesig_index") {
-      signaturesOf(shinglesOf(Tables.documents(s, d))).write.mode("overwrite").parquet(_)
-    })
-  }
-
-  /** Signature frame (doc_id, hs, n, sig) over a shingled frame — the
-    * kernel shared by [[minhashBase]] and the streaming near-dup filter. */
-  private[graft] def signaturesOf(shingled: DataFrame): DataFrame =
-    shingled
-      .select(col("doc_id"), kernel("graft_shingle_hashes", col("sh")).as("hs"))
-      .withColumn("n", size(col("hs")))
-      .withColumn("sig", kernel("graft_minhash", col("hs")))
-
-  /** One row per (doc_id, band_idx, band_hash): the 32×2 LSH banding of a
-    * signature frame, shared by the batch candidate generator and the
-    * streaming filter (whose join shape is batch ⋈ store, not the
-    * within-corpus self-pairing below). */
-  private[graft] def bandHashes(base: DataFrame): DataFrame =
-    base.select(col("doc_id"),
-        posexplode(expr("transform(sequence(0, 31), b -> xxhash64(slice(sig, b * 2 + 1, 2)))")))
-      .withColumnRenamed("pos", "band_idx").withColumnRenamed("col", "band_hash")
-
-  /** Unordered candidate pairs (doc_a < doc_b) from LSH band collisions over
-    * the minhash signature: 32 bands × 2 rows — P(miss) = (1 − s²)³² < 1e-14
-    * at s ≥ 0.8. One shuffle groups (band_idx, band_hash) → sorted id lists,
-    * pairs explode within a bucket (no self-join), distinct across bands.
-    * This is the full-corpus candidate generator shared by the Jaccard and
-    * containment dedup paths — candidate volume stays ~linear for
-    * low-similarity corpora. */
-  private def minhashBandCandidates(base: DataFrame): DataFrame =
-    bandHashes(base)
-      .groupBy(col("band_idx"), col("band_hash"))
-      .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
-      .filter(size(col("ids")) > 1)
-      .select(explode(expr(
-        """flatten(transform(ids, (a, i) ->
-          | transform(slice(ids, i + 2, size(ids)), b ->
-          |   named_struct('doc_a', a, 'doc_b', b))))"""
-          .stripMargin.replace("\n", " "))).as("p"))
-      .select(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
-      .distinct()
-
-  /** LOSSLESS candidate pairs for asymmetric containment
-    * c(A→B) = |A∩B| / |A| ≥ tau, via prefix filtering (the
-    * AllPairs/PPJoin family): order each doc's shingle hashes by ascending
-    * global document frequency (rarest first, ties on the hash value) and
-    * index only the first ⌊(1−tau)·|A|⌋ + 1 of them. If c(A→B) ≥ tau then
-    * |A \ B| ≤ (1−tau)·|A| < prefix size, so BY PIGEONHOLE at least one
-    * prefix hash of A is also in B — joining A-prefixes against the full
-    * posting list over-approximates the qualifying directional pairs with
-    * zero recall loss (a proof, not a heuristic — the same design rule as
-    * prunedCosinePairs; the driver compare against the unpruned oracle IS
-    * the losslessness check). MinHash banding cannot give this guarantee:
-    * a short doc inside a much longer one has low Jaccard no matter how
-    * high its containment, while the pigeonhole argument scales with |A|
-    * alone. Rare-first ordering makes the indexed prefix hashes the most
-    * selective ones, so posting-list fan-out stays small; at 100 TB the
-    * posting table is ~linear in corpus shingle volume, h is the shuffle
-    * key, and a stop-shingle appears in many postings but almost no
-    * prefixes. Output: unordered candidate pairs (doc_a < doc_b),
-    * distinct. `base` must carry (doc_id, hs) with distinct sorted hashes
-    * and be materialized — the posting table is derived from it twice. */
-  private[ops] def containmentPrefixCandidates(base: DataFrame, tau: Double): DataFrame = {
-    val posting = base.select(col("doc_id"), explode(col("hs")).as("h"))
-      .localCheckpoint(true)
-    val dfreq = posting.groupBy(col("h")).agg(count(lit(1)).as("df"))
-    val prefixes = posting.join(dfreq, Seq("h"))
-      .groupBy(col("doc_id"))
-      .agg(expr("transform(array_sort(collect_list(struct(df, h))), x -> x.h)")
-        .as("ord"))
-      .select(col("doc_id"), explode(expr(
-        s"slice(ord, 1, CAST(floor((1.0 - $tau) * size(ord)) AS INT) + 1)")).as("h"))
-    prefixes.select(col("doc_id").as("doc_a"), col("h"))
-      .join(posting.select(col("doc_id").as("doc_b"), col("h")), Seq("h"))
-      .filter(col("doc_a") =!= col("doc_b"))
-      .select(least(col("doc_a"), col("doc_b")).as("doc_a"),
-        greatest(col("doc_a"), col("doc_b")).as("doc_b"))
-      .distinct()
-  }
-
-  /** Directed form of [[containmentPrefixCandidates]] for incremental
-    * ingestion: candidates (probe, target) such that containment(probe ⊆
-    * target) ≥ τ is possible. Only the PROBE side emits prefixes and only
-    * the TARGET side builds the posting list — the pigeonhole proof needs
-    * just A's own size (any ≤ ⌊(1−τ)|A|⌋ misses leave a prefix hash in B
-    * for ANY global hash order), so the document-frequency order is pure
-    * efficiency: df comes from the target postings, and a probe hash
-    * absent there (df 0, can never hit) sorts first, keeping the rarest-
-    * first benefit. At 100 TB this is the shape that matters — the daily
-    * batch's prefixes probe the big corpus's posting list without ever
-    * re-shuffling the corpus's own prefixes.
-    *
-    * The `posting` checkpoint (like the undirected helper's) lives until
-    * session end: the returned frame is lazy, so an in-helper release
-    * would drop blocks the caller's plan still reads — Bench's post-query
-    * clearCache + GC retires them between queries. */
-  private[ops] def containmentPrefixCandidatesDirected(probes: DataFrame,
-      targets: DataFrame, tau: Double): DataFrame = {
-    val posting = targets.select(col("doc_id").as("doc_b"), explode(col("hs")).as("h"))
-      .localCheckpoint(true)
-    val dfreq = posting.groupBy(col("h")).agg(count(lit(1)).as("df"))
-    containmentProbeCandidates(probes, posting, dfreq, tau)
-  }
-
-  /** The probe stage of the directed prefix filter against STANDING
-    * posting/df frames — the body [[containmentPrefixCandidatesDirected]]
-    * derives its inputs for, split out so the persisted-index queries can
-    * feed it straight from parquet: probe shingles join the (already
-    * materialized) df for the rarest-first order, the lossless
-    * ⌊(1−τ)|A|⌋+1 prefix probes the posting list, candidates dedupe. The
-    * corpus is never re-shingled — the 100 TB daily-ingest contract. */
-  private[ops] def containmentProbeCandidates(probes: DataFrame,
-      posting: DataFrame, dfreq: DataFrame, tau: Double): DataFrame = {
-    val prefixes = probes.select(col("doc_id"), explode(col("hs")).as("h"))
-      .join(dfreq, Seq("h"), "left")
-      .withColumn("df", coalesce(col("df"), lit(0L)))
-      .groupBy(col("doc_id"))
-      .agg(expr("transform(array_sort(collect_list(struct(df, h))), x -> x.h)")
-        .as("ord"))
-      .select(col("doc_id"), explode(expr(
-        s"slice(ord, 1, CAST(floor((1.0 - $tau) * size(ord)) AS INT) + 1)")).as("h"))
-    prefixes.select(col("doc_id").as("doc_a"), col("h"))
-      .join(posting, Seq("h"))
-      .select(col("doc_a"), col("doc_b"))
-      .distinct()
-  }
-
-  /** Train-once persistence for the containment dedup side — the
-    * writeIvfIndex lever applied to the posting index the incremental
-    * queries probe: the corpus is shingled ONCE at build time, and every
-    * subsequent probe batch reads three parquet tables instead of
-    * re-shingling + re-exploding the corpus per run.
-    *
-    * Layout under `dir`:
-    *  - `sigs`: (doc_id, hs) — the corpus signature table, read by the
-    *    verify join only for matched candidates.
-    *  - `posting`: (doc_b, h) — the inverted shingle file, the probe
-    *    join's build side. At deployment scale this is written BUCKETED
-    *    by h so the daily probe co-locates without a corpus shuffle;
-    *    plain parquet here (the in-memory catalog's bucket metadata does
-    *    not survive sessions — the Joins.bucketed caveat).
-    *  - `df`: (h, df) — posting document frequencies for the
-    *    rarest-first prefix order (efficiency only; any order is
-    *    lossless by the pigeonhole proof).
-    *
-    * Shingling is deterministic, so a rebuild over unchanged data
-    * recreates the identical index. `corpus` must carry (doc_id, hs). */
-  private def writeContainmentIndex(corpus: DataFrame, dir: String): Unit = {
-    val s = corpus.sparkSession
-    val sigs = corpus.localCheckpoint(true)
-    sigs.write.mode("overwrite").parquet(s"$dir/sigs")
-    sigs.select(col("doc_id").as("doc_b"), explode(col("hs")).as("h"))
-      .write.mode("overwrite").parquet(s"$dir/posting")
-    s.read.parquet(s"$dir/posting").groupBy(col("h"))
-      .agg(count(lit(1)).as("df"))
-      .write.mode("overwrite").parquet(s"$dir/df")
-    releaseCheckpoint(sigs)
-  }
-
-  /** Read a [[writeContainmentIndex]] back: (sigs, posting, df). */
-  private def readContainmentIndex(s: SparkSession,
-      dir: String): (DataFrame, DataFrame, DataFrame) =
-    (s.read.parquet(s"$dir/sigs"), s.read.parquet(s"$dir/posting"),
-      s.read.parquet(s"$dir/df"))
-
-  /** Chunk-level shingle signatures of a documents frame — the
-    * llm_doc_chunking 32-token/stride-24 windows, each chunk's 3-gram
-    * shingle hashes under the composite surrogate uid = doc_id·10⁴ +
-    * chunk_idx (chunk_idx < 10⁴ ⟺ docs under ~240k tokens; a longer-doc
-    * deployment widens the factor). Shared by llm_chunk_dedup's index
-    * build (corpus docs) and probe (batch docs) so both sides run the
-    * identical chunk algebra. Map-only — chunking never shuffles. */
-  private def chunkSignatures(docs: DataFrame): DataFrame =
-    docs
-      .select(col("doc_id"), split(lower(col("text")), " ").as("toks"))
-      .withColumn("n_tok", size(col("toks")))
-      .select(col("doc_id"), col("n_tok"), col("toks"),
-        explode(expr("sequence(0, n_tok - 1, 24)")).as("start_tok"))
-      .select(col("doc_id"), expr("start_tok div 24").cast("long").as("chunk_idx"),
-        expr("slice(toks, start_tok + 1, 32)").as("ctoks"))
-      // < 3 tokens can never reach any containment threshold (and the
-      // [i] indexing below is safe only under this filter — repo rule)
-      .filter(size(col("ctoks")) >= 3)
-      .select(col("doc_id"), col("chunk_idx"), expr(
-        """coalesce(array_distinct(transform(sequence(0, size(ctoks) - 3),
-          | i -> concat_ws(' ', ctoks[i], ctoks[i+1], ctoks[i+2]))), array())"""
-          .stripMargin.replace("\n", " ")).as("sh"))
-      .select((col("doc_id") * lit(10000L) + col("chunk_idx")).as("doc_id"),
-        kernel("graft_shingle_hashes", col("sh")).as("hs"))
-
-  /** Verified near-duplicate pairs (doc_a < doc_b, jac): band-bucket
-    * candidates (see minhashBandCandidates), exact-Jaccard verified via the
-    * native sorted-merge intersect kernel on the checkpointed signature
-    * table. Shared by the pair-listing query and the cluster builder. */
-  private def minhashDupPairs(s: SparkSession, d: String): DataFrame = {
-    // (Round-18 measured NON-win, reverted: Parallelism.restore on the
-    // single-file signature table — to spread the 517 ms single-task
-    // banding fan-out — cost more in the repartition of the hs/sig
-    // array columns than the spread saved: llm_dedup_clusters
-    // 1.94 → 2.32 s. The round-5 "array persists are slower than
-    // recompute" trap, repartition edition.)
-    val base = minhashBase(s, d)
-    minhashBandCandidates(base)
-      .join(base.select(col("doc_id").as("doc_a"), col("hs").as("hs_a"),
-        col("n").as("n_a")), "doc_a")
-      .join(base.select(col("doc_id").as("doc_b"), col("hs").as("hs_b"),
-        col("n").as("n_b")), "doc_b")
-      .withColumn("common", kernel("graft_sorted_intersect_long", col("hs_a"), col("hs_b")))
-      .withColumn("jac", col("common").cast("double") /
-        (col("n_a") + col("n_b") - col("common")).cast("double"))
-      .filter(col("jac") >= 0.5)
-      .select(col("doc_a"), col("doc_b"), col("jac"))
   }
 
   /** The retrieval family's query terms: every BM25 query, the streaming
@@ -703,46 +463,19 @@ object LlmOps {
     // (canonical keeper = lowest doc_id per normalized-text digest) →
     // quality scoring with the per-language top-90% cut over the
     // SURVIVORS → deterministic hash split assignment → sequence packing
-    // within (split, lang). Each stage is the already-oracle-backed
-    // algebra of its standalone query; composing them pins the
+    // within (split, lang). Each stage calls the body of its oracle-backed
+    // standalone query (exactKeepers, qualityScored, qualityTop90,
+    // splitOf); composing them pins the
     // inter-stage contracts (the quality rank is over deduped docs only;
     // packing offsets restart per split) that no single-stage query can
     // see. Plan: three lang/digest-sharded window passes + projections,
     // no joins, no driver state — the whole pipeline is one lazy plan.
     "llm_curation_pipeline" -> { (s, d) =>
-      val wDup = Window.partitionBy(col("h")).orderBy(col("doc_id").asc)
-      val deduped = Tables.documents(s, d)
-        .withColumn("h", sha2(lower(trim(col("text"))), 256))
-        .withColumn("rn_dup", row_number().over(wDup))
-        .filter(col("rn_dup") === 1)
-      val scored = deduped
-        .withColumn("toks", split(lower(col("text")), " "))
-        .withColumn("n_toks", size(col("toks")).cast("double"))
-        .withColumn("ttr",
-          expr("size(array_distinct(toks))").cast("double") / col("n_toks"))
-        .withColumn("stop_ratio",
-          expr("size(filter(toks, x -> x = 'the' OR x = 'a' OR x = 'of'))")
-            .cast("double") / col("n_toks"))
-        .withColumn("quality",
-          round(least(lit(1.0), col("n_toks") / 50.0) * 0.4 +
-            col("ttr") * 0.3 + col("stop_ratio") * 0.3, 6))
-        .withColumn("n_tok", size(col("toks")).cast("long"))
-      val rankW = Window.partitionBy(col("lang"))
-        .orderBy(col("quality").desc, col("doc_id").asc)
-      val langW = Window.partitionBy(col("lang"))
-      val kept = scored
-        .withColumn("rn", row_number().over(rankW).cast("long"))
-        .withColumn("n", count(lit(1)).over(langW))
-        .filter(col("rn") <= ceil(col("n") * 0.9))
-      val assigned = kept
-        .withColumn("hh", substring(md5(col("doc_id").cast("string")), 1, 2))
-        .withColumn("split",
-          when(col("hh") < "cc", "train")
-            .when(col("hh") < "e6", "val").otherwise("test"))
       val wPack = Window.partitionBy(col("split"), col("lang"))
         .orderBy(col("doc_id").asc)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      assigned
+      qualityTop90(qualityScored(exactKeepers(Tables.documents(s, d))))
+        .withColumn("split", splitOf)
         .withColumn("cum", sum(col("n_tok")).over(wPack))
         .select(col("doc_id"), col("lang"), col("split"), col("quality"),
           col("n_tok"),
@@ -751,11 +484,7 @@ object LlmOps {
     },
 
     "llm_dedup_exact" -> { (s, d) =>
-      val w = Window.partitionBy(col("h")).orderBy(col("doc_id").asc)
-      Tables.documents(s, d)
-        .withColumn("h", sha2(lower(trim(col("text"))), 256))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
+      exactKeepers(Tables.documents(s, d))
         .select(col("doc_id"), col("lang"), col("h"))
         .orderBy(col("doc_id").asc)
     },
@@ -774,10 +503,14 @@ object LlmOps {
     // but A!~C must still collapse to ONE representative). Algorithm and
     // scale notes: labelPropagate above.
     "llm_dedup_clusters" -> { (s, d) =>
-      val labels = labelPropagate(
+      val converged = labelPropagate(
         Tables.documents(s, d).select(col("doc_id")),
         minhashDupPairs(s, d).select(col("doc_a"), col("doc_b")))
-        .localCheckpoint(true)
+      val labels = converged.localCheckpoint(true)
+      // the eager copy is all the plan reads: retire the propagation's
+      // last round now, and park the copy for the next call to retire
+      releaseCheckpoint(converged)
+      CheckpointPark.park("llm_dedup_clusters", labels)
       // cluster_size via groupBy + equi-join, NOT a window over
       // cluster_id: a mega-cluster would pin one window partition (no
       // sort needed for a bare count anyway), while a skewed join key is
@@ -801,15 +534,10 @@ object LlmOps {
       // the shingle-set size absent intra-doc FNV collisions — the same
       // set the intersect kernel measures, so jac is unchanged.
       val sh = minhashBase(s, d).filter(col("doc_id") < 500)
-      val a = sh.select(col("doc_id").as("doc_a"), col("hs").as("hs_a"),
-        col("n").as("n_a"))
-      val b = sh.select(col("doc_id").as("doc_b"), col("hs").as("hs_b"),
-        col("n").as("n_b"))
-      a.join(b, col("doc_a") < col("doc_b") &&
+      sideA(sh).join(sideB(sh), col("doc_a") < col("doc_b") &&
           col("n_a") * 2 >= col("n_b") && col("n_b") * 2 >= col("n_a"))
-        .withColumn("common", kernel("graft_sorted_intersect_long", col("hs_a"), col("hs_b")))
-        .withColumn("jac", col("common").cast("double") /
-          (col("n_a") + col("n_b") - col("common")).cast("double"))
+        .withColumn("common", common)
+        .withColumn("jac", jaccard)
         // Identity aggregate as a pushdown barrier: without it the optimizer
         // folds the jac>=0.5 predicate INTO the nested-loop join condition,
         // re-evaluating the merge-intersect per enumerated pair ahead of the
@@ -833,13 +561,9 @@ object LlmOps {
       // persisted signature table + pushed doc_id slice (see
       // llm_dedup_ngram_jaccard)
       val sh = minhashBase(s, d).filter(col("doc_id") < 500)
-      val a = sh.select(col("doc_id").as("doc_a"), col("hs").as("hs_a"),
-        col("n").as("n_a"))
-      val b = sh.select(col("doc_id").as("doc_b"), col("hs").as("hs_b"),
-        col("n").as("n_b"))
-      a.join(b, col("doc_a") =!= col("doc_b") &&
+      sideA(sh).join(sideB(sh), col("doc_a") =!= col("doc_b") &&
           col("n_b").cast("double") >= col("n_a").cast("double") * 0.7)
-        .withColumn("common", kernel("graft_sorted_intersect_long", col("hs_a"), col("hs_b")))
+        .withColumn("common", common)
         // identity-aggregate barrier, same reason as llm_dedup_ngram_jaccard:
         // keep the expensive merge-intersect out of the join condition.
         .groupBy(col("doc_a"), col("doc_b"), col("n_a"))
@@ -853,7 +577,7 @@ object LlmOps {
     },
 
     // Full-corpus containment dedup: prefix-filter candidates (see
-    // containmentPrefixCandidates — lossless by the pigeonhole proof, so
+    // TextDedup.containmentPrefixCandidates — lossless by pigeonhole, so
     // this path is EXACT and oracle-backed), the same asymmetric
     // |A∩B|/|A| >= 0.7 verify as the bounded brute-force twin above.
     // Through round 4 this used the MinHash band generator, whose recall
@@ -863,22 +587,20 @@ object LlmOps {
     // |A| alone. LlmOpsSpec plants short-in-long pairs (J < 0.3, c ≥ 0.7)
     // and demands full recovery.
     "llm_dedup_containment_lsh" -> { (s, d) =>
-      // hs/n only — no minhash sig column needed once banding is gone.
+      // hs only — no minhash sig column needed once banding is gone.
       // The candidate generator and both verify sides re-reference the
       // frame; since round 14 that frame IS the persisted parquet
       // signature table (minhashBase), so each branch re-scans a pruned
       // column set instead of a checkpointed corpus re-shingle.
-      val base = minhashBase(s, d).select(col("doc_id"), col("hs"), col("n"))
+      val base = minhashBase(s, d).select(col("doc_id"), col("hs"))
       // verify ONCE per unordered candidate (the intersect kernel is
       // symmetric), then explode the two directional containments from
       // the single `common` — half the kernel and join work of verifying
       // each orientation separately.
       containmentPrefixCandidates(base, 0.7)
-        .join(base.select(col("doc_id").as("doc_a"), col("hs").as("hs_a"),
-          col("n").as("n_a")), "doc_a")
-        .join(base.select(col("doc_id").as("doc_b"), col("hs").as("hs_b"),
-          col("n").as("n_b")), "doc_b")
-        .withColumn("common", kernel("graft_sorted_intersect_long", col("hs_a"), col("hs_b")))
+        .join(sideA(base), "doc_a")
+        .join(sideB(base), "doc_b")
+        .withColumn("common", common)
         .select(explode(array(
           struct(col("doc_a").as("doc_a"), col("doc_b").as("doc_b"),
             (col("common").cast("double") / col("n_a").cast("double"))
@@ -899,50 +621,15 @@ object LlmOps {
     // the already-ingested corpus (the rest) without ever re-deduping the
     // corpus itself. A batch doc is a duplicate when ≥70% of its shingles
     // are contained in some single corpus doc. Candidates come from the
-    // DIRECTED prefix filter (lossless, batch-side prefixes only — see
-    // containmentProbeCandidates); the threshold compare is exact integer
-    // (10·common ≥ 7·|A|), so the output is all-integer. The corpus side
-    // rides the PERSISTED posting index (writeContainmentIndex — built
-    // once per documents signature): the probe run shingles ONLY the
-    // batch and scans three index tables, never re-shingling the corpus —
-    // which is the entire daily-ingest economics (the llm_sim_ann_pq
-    // train-once lever applied to the dedup side). Results are identical
-    // to the inline form by construction: the index tables are exactly
-    // the frames the inline body derived. LlmOpsSpec pins plan
-    // provenance (index scan present, no corpus re-shingle) and
-    // reshuffle determinism.
+    // DIRECTED prefix filter (lossless, batch-side prefixes only); the
+    // threshold compare is exact integer, so the output is all-integer.
+    // The corpus side rides the PERSISTED posting index (see
+    // TextDedup.ingestDedup): the probe run shingles ONLY the batch — the
+    // entire daily-ingest economics. LlmOpsSpec pins plan provenance
+    // (index scan present, no corpus re-shingle) and reshuffle
+    // determinism.
     "llm_dedup_incremental" -> { (s, d) =>
-      val idx = SigStore.getOrBuild(d, "documents", "contain_index") {
-        writeContainmentIndex(
-          docsWithShingles(s, d).filter(col("doc_id") % 5 =!= 0)
-            .select(col("doc_id"), kernel("graft_shingle_hashes", col("sh")).as("hs")),
-          _)
-      }
-      val (sigs, posting, dfreq) = readContainmentIndex(s, idx)
-      // the batch frame stays LAZY (round-12 rule: a checkpoint here would
-      // hide the documents scan from plan assertions): the probe, verify,
-      // and output branches each re-shingle the 1-in-5 batch — 3 × 20% of
-      // one corpus pass, still under the inline form's full-corpus
-      // shingle, and at deployment scale the daily batch's signatures are
-      // written once to parquet anyway (exactly what the index build does)
-      val batch = docsWithShingles(s, d).filter(col("doc_id") % 5 === 0)
-        .select(col("doc_id"), kernel("graft_shingle_hashes", col("sh")).as("hs"))
-      val matches = containmentProbeCandidates(batch, posting, dfreq, 0.7)
-        .join(batch.select(col("doc_id").as("doc_a"), col("hs").as("hs_a"),
-          size(col("hs")).as("n_a")), "doc_a")
-        .join(sigs.select(col("doc_id").as("doc_b"), col("hs").as("hs_b")), "doc_b")
-        // identity-aggregate barrier keeps the merge-intersect kernel out
-        // of inferred join conditions (repo rule, see llm_dedup_containment)
-        .groupBy(col("doc_a"), col("doc_b"), col("n_a"))
-        .agg(max(kernel("graft_sorted_intersect_long", col("hs_a"), col("hs_b"))).as("common"))
-        .filter(col("common") * 10 >= col("n_a") * 7)
-        .groupBy(col("doc_a")).agg(count(lit(1)).as("n_matches"))
-      batch.select(col("doc_id"))
-        .join(matches, col("doc_id") === col("doc_a"), "left")
-        .select(col("doc_id"),
-          coalesce(col("n_matches"), lit(0L)).as("n_matches"),
-          (coalesce(col("n_matches"), lit(0L)) > 0L).as("is_dup"))
-        .orderBy(col("doc_id").asc)
+      docIngestDedup(s, d).orderBy(col("doc_id").asc)
     },
 
     // SimHash: 64-bit signature from unigram hashes; near-dup candidates by
@@ -956,12 +643,14 @@ object LlmOps {
           kernel("graft_simhash", expr("transform(toks, t -> xxhash64(t))")))
       // localCheckpoint: the banded signature table feeds BOTH sides of the
       // self-join below — materializing it once halves the shingle/simhash
-      // computation (mirrors llm_dedup_minhash's signature checkpoint).
+      // computation. The returned plan still reads it: parked, so the
+      // next call retires it.
       val banded = docs.select(col("doc_id"), col("simhash"),
           posexplode(expr(
             "transform(sequence(0, 3), b -> (simhash >> (b * 16)) & 65535)")))
         .withColumnRenamed("pos", "band").withColumnRenamed("col", "bits")
         .localCheckpoint(true)
+      CheckpointPark.park("llm_dedup_simhash", banded)
       banded.as("a").join(banded.as("b"),
           col("a.band") === col("b.band") && col("a.bits") === col("b.bits") &&
             col("a.doc_id") < col("b.doc_id"))
@@ -1056,21 +745,10 @@ object LlmOps {
     // probability bounded by |eval|²/2⁶⁴, and a false positive only
     // over-drops — contamination filters are allowed to be conservative).
     "llm_decontaminate" -> { (s, d) =>
-      // same no-CASE/pre-filter/coalesce rules as docsWithShingles — the
-      // HOF must not sit under a conditional (subexpression elimination)
-      // and the output array must be non-nullable (inferred isnotnull
-      // constraints re-run inlined pipelines otherwise).
-      def grams8(df: DataFrame): DataFrame = df
-        .select(col("doc_id"), split(lower(col("text")), " ").as("toks"))
-        .filter(size(col("toks")) >= 8)
-        .select(col("doc_id"), explode(expr(
-          """coalesce(array_distinct(transform(sequence(0, size(toks) - 8),
-            | i -> concat_ws(' ', slice(toks, i + 1, 8)))), array())"""
-            .stripMargin.replace("\n", " "))).as("g"))
       val docs = Tables.documents(s, d)
-      val evalG = grams8(docs.filter(col("source") === "src0"))
+      val evalG = distinctGrams(docs.filter(col("source") === "src0"), 8)
         .select(col("g")).distinct()
-      val overlap = grams8(docs.filter(col("source") =!= "src0"))
+      val overlap = distinctGrams(docs.filter(col("source") =!= "src0"), 8)
         .join(broadcast(evalG), Seq("g"))
         .groupBy(col("doc_id")).agg(count(lit(1)).as("n_overlap"))
       docs.filter(col("source") =!= "src0")
@@ -1092,15 +770,8 @@ object LlmOps {
     // both exchanges hash-partition on high-cardinality keys (gram,
     // doc_id) — no hot key, no broadcast needed.
     "llm_ngram_novelty" -> { (s, d) =>
-      def grams8(df: DataFrame): DataFrame = df
-        .select(col("doc_id"), split(lower(col("text")), " ").as("toks"))
-        .filter(size(col("toks")) >= 8)
-        .select(col("doc_id"), explode(expr(
-          """coalesce(array_distinct(transform(sequence(0, size(toks) - 8),
-            | i -> concat_ws(' ', slice(toks, i + 1, 8)))), array())"""
-            .stripMargin.replace("\n", " "))).as("g"))
       val w = Window.partitionBy(col("g"))
-      grams8(Tables.documents(s, d))
+      distinctGrams(Tables.documents(s, d), 8)
         .withColumn("first_doc", min(col("doc_id")).over(w))
         .groupBy(col("doc_id"))
         .agg(count(lit(1)).as("n_grams"),
@@ -1129,19 +800,7 @@ object LlmOps {
     // collisions harmless: a collision merely marks one window
     // duplicated).
     "llm_passage_dedup" -> { (s, d) =>
-      val byW = Window.partitionBy(col("w")).orderBy(col("doc_id").asc)
-      val overW = Window.partitionBy(col("w"))
-      Tables.documents(s, d)
-        .select(col("doc_id"), split(lower(col("text")), " ").as("toks"))
-        .filter(size(col("toks")) >= 16)
-        .select(col("doc_id"), explode(expr(
-          """coalesce(transform(sequence(0, size(toks) - 16),
-            | i -> concat_ws(' ', slice(toks, i + 1, 16))), array())"""
-            .stripMargin.replace("\n", " "))).as("w"))
-        // nd = count(DISTINCT doc_id) per window, as max(dense_rank):
-        // both window functions share the one exchange+sort on `w`.
-        .withColumn("dr", dense_rank().over(byW))
-        .withColumn("nd", max(col("dr")).over(overW))
+      sharedWindows(Tables.documents(s, d), 16)
         .groupBy(col("doc_id"))
         .agg(count(lit(1)).as("n_windows"),
           sum(when(col("nd") >= 2L, 1L).otherwise(0L)).as("n_dup_windows"))
@@ -1174,20 +833,10 @@ object LlmOps {
     // xxhash64(w) — a collision merely marks one window duplicated.
     "llm_substring_dedup" -> { (s, d) =>
       val k = 8
-      val byW = Window.partitionBy(col("w")).orderBy(col("doc_id").asc)
-      val overW = Window.partitionBy(col("w"))
       val byDoc = Window.partitionBy(col("doc_id")).orderBy(col("s").asc)
       val pmaxW = byDoc.rowsBetween(Window.unboundedPreceding, -1)
       val runW = byDoc.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      Tables.documents(s, d)
-        .select(col("doc_id"), split(lower(col("text")), " ").as("toks"))
-        .filter(size(col("toks")) >= k)
-        .select(col("doc_id"), posexplode(expr(
-          s"""coalesce(transform(sequence(0, size(toks) - $k),
-             | i -> concat_ws(' ', slice(toks, i + 1, $k))), array())"""
-            .stripMargin.replace("\n", " "))).as(Seq("s", "w")))
-        .withColumn("dr", dense_rank().over(byW))
-        .withColumn("nd", max(col("dr")).over(overW))
+      sharedWindows(Tables.documents(s, d), k)
         .filter(col("nd") >= 2)
         .select(col("doc_id"), col("s").cast("long").as("s"),
           (col("s") + k).cast("long").as("e"))
@@ -1719,11 +1368,7 @@ object LlmOps {
     // cumulative → ~10% val, remainder ≈ 10% test.
     "llm_split_assign" -> { (s, d) =>
       Tables.documents(s, d)
-        .withColumn("h", substring(md5(col("doc_id").cast("string")), 1, 2))
-        .select(col("doc_id"), col("lang"),
-          when(col("h") < "cc", "train")
-            .when(col("h") < "e6", "val")
-            .otherwise("test").as("split"))
+        .select(col("doc_id"), col("lang"), splitOf.as("split"))
         .orderBy(col("doc_id").asc)
     },
 
@@ -1794,16 +1439,11 @@ object LlmOps {
     // output sort); at 100 TB this is map-only against the doc scan, and
     // the chunk table partitions by the same key as its source.
     "llm_doc_chunking" -> { (s, d) =>
-      Tables.documents(s, d)
-        .select(col("doc_id"), split(lower(col("text")), " ").as("toks"))
-        .withColumn("n_tok", size(col("toks")))
-        .select(col("doc_id"), col("n_tok"), col("toks"),
-          explode(expr("sequence(0, n_tok - 1, 24)")).as("start_tok"))
-        .select(col("doc_id"),
-          expr("start_tok div 24").cast("long").as("chunk_idx"),
+      chunkWindows(Tables.documents(s, d))
+        .select(col("doc_id"), col("chunk_idx"),
           col("start_tok").cast("long").as("start_tok"),
           least(lit(32), col("n_tok") - col("start_tok")).cast("long").as("n_tok_chunk"),
-          expr("concat_ws(' ', slice(toks, start_tok + 1, 32))").as("chunk_text"))
+          concat_ws(" ", col("ctoks")).as("chunk_text"))
         .orderBy(col("doc_id").asc, col("chunk_idx").asc)
     },
 
@@ -1824,34 +1464,10 @@ object LlmOps {
     // map-only, the filter's only wide ops are hash-keyed joins on the
     // prefix hashes — the RAG-ingestion dedup at any corpus size.
     "llm_chunk_dedup" -> { (s, d) =>
-      val idx = SigStore.getOrBuild(d, "documents", "containchunk_index") {
-        writeContainmentIndex(
-          chunkSignatures(Tables.documents(s, d).filter(col("doc_id") % 5 =!= 0)), _)
-      }
-      val (sigs, posting, dfreq) = readContainmentIndex(s, idx)
-      // probe run chunks + shingles ONLY the batch docs; the chunk corpus
-      // comes from the persisted index (same economics as
-      // llm_dedup_incremental — the index is built once per documents
-      // signature and probed by every subsequent ingest batch). Lazy for
-      // the same plan-provenance reason as llm_dedup_incremental's batch.
-      val batch =
-        chunkSignatures(Tables.documents(s, d).filter(col("doc_id") % 5 === 0))
-      val matches = containmentProbeCandidates(batch, posting, dfreq, 0.7)
-        .join(batch.select(col("doc_id").as("doc_a"), col("hs").as("hs_a"),
-          size(col("hs")).as("n_a")), "doc_a")
-        .join(sigs.select(col("doc_id").as("doc_b"), col("hs").as("hs_b")), "doc_b")
-        // identity-aggregate barrier keeps the merge-intersect kernel out
-        // of inferred join conditions (repo rule, see llm_dedup_containment)
-        .groupBy(col("doc_a"), col("doc_b"), col("n_a"))
-        .agg(max(kernel("graft_sorted_intersect_long", col("hs_a"), col("hs_b"))).as("common"))
-        .filter(col("common") * 10 >= col("n_a") * 7)
-        .groupBy(col("doc_a")).agg(count(lit(1)).as("n_matches"))
-      batch.select(col("doc_id").as("uid"))
-        .join(matches, col("uid") === col("doc_a"), "left")
-        .select(expr("uid div 10000").as("doc_id"),
-          expr("uid % 10000").cast("long").as("chunk_idx"),
-          coalesce(col("n_matches"), lit(0L)).as("n_matches"),
-          (coalesce(col("n_matches"), lit(0L)) > 0L).as("is_dup"))
+      chunkIngestDedup(s, d)
+        .select(expr("doc_id div 10000").as("doc_id"),
+          expr("doc_id % 10000").cast("long").as("chunk_idx"),
+          col("n_matches"), col("is_dup"))
         .orderBy(col("doc_id").asc, col("chunk_idx").asc)
     },
 
@@ -1861,7 +1477,7 @@ object LlmOps {
     // Operation order mirrors the oracle SQL term-for-term so the binary64
     // arithmetic is bit-identical; the degenerate-range guard lives INSIDE
     // the transform lambda on scalar values (an outer CASE around a HOF
-    // defeats subexpression elimination — see docsWithShingles).
+    // defeats subexpression elimination — see TextDedup.atLeast).
     // posexplode keeps the compare engine-exact (as llm_embed_normalize).
     "llm_embed_quantize" -> { (s, d) =>
       embDouble(s, d)
@@ -2368,7 +1984,7 @@ object LlmOps {
     },
 
     "llm_quality_score" -> { (s, d) =>
-      qualityScored(s, d)
+      qualityScored(Tables.documents(s, d))
         .select(col("doc_id"), col("quality"), col("ttr"))
         .orderBy(col("doc_id").asc)
     },
@@ -2382,13 +1998,7 @@ object LlmOps {
     // at 100 TB; if one language dominated, win_ntile_percent's two-pass
     // range-partition ranking is the drop-in distributed form.
     "llm_quality_filter" -> { (s, d) =>
-      val rankW = Window.partitionBy(col("lang"))
-        .orderBy(col("quality").desc, col("doc_id").asc)
-      val langW = Window.partitionBy(col("lang"))
-      qualityScored(s, d)
-        .withColumn("rn", row_number().over(rankW).cast("long"))
-        .withColumn("n", count(lit(1)).over(langW))
-        .filter(col("rn") <= ceil(col("n") * 0.9))
+      qualityTop90(qualityScored(Tables.documents(s, d)))
         .select(col("doc_id"), col("lang"), col("quality"))
         .orderBy(col("doc_id").asc)
     },
@@ -2407,7 +2017,7 @@ object LlmOps {
     // codegen HOF projection. The greatest(n−3, 0) bound keeps the
     // sequence() valid for sub-3-token docs — their d3 is garbage but the
     // scalar CASE never reads it (the CASE wraps cheap projected columns,
-    // never the HOF itself — see docsWithShingles on why that ordering
+    // never the HOF itself — see TextDedup.atLeast on why that ordering
     // matters).
     "llm_rep_signals" -> { (s, d) =>
       val docs = Tables.documents(s, d)
@@ -3077,10 +2687,57 @@ object LlmOps {
     }
   )
 
-  private val duckShingles =
-    """list_distinct(list_transform(range(1, greatest(len(string_split(lower(text), ' ')) - 1, 1)),
-      | i -> string_split(lower(text), ' ')[i] || ' ' || string_split(lower(text), ' ')[i+1] || ' ' || string_split(lower(text), ' ')[i+2]))"""
-      .stripMargin.replace("\n", "")
+  /** The distinct 3-gram shingles of the token list `t` (TextDedup.shinglesOf). */
+  private def duckShinglesOf(t: String) =
+    s"""list_distinct(list_transform(range(1, greatest(len($t) - 1, 1)),
+       | i -> $t[i] || ' ' || $t[i+1] || ' ' || $t[i+2]))""".stripMargin.replace("\n", "")
+
+  private val duckShingles = duckShinglesOf("string_split(lower(text), ' ')")
+
+  /** The token CTE `tok`: every documents column plus its token list `t`
+    * and token count `n_tok` (TextDedup.tokens). */
+  private val duckTok =
+    """tok AS (SELECT *, string_split(lower(text), ' ') AS t,
+      |               len(string_split(lower(text), ' ')) AS n_tok
+      |        FROM documents)""".stripMargin
+
+  /** The k-token gram of `t` starting at 1-based position i: DuckDB's
+    * inclusive list slice t[i:i+k-1]. */
+  private def duckGram(k: Int) = s"array_to_string(t[i:i+${k - 1}], ' ')"
+
+  /** Every k-token gram of `t` in order (range() is end-exclusive, so i
+    * runs 1 .. len(t)-k+1), distinct when `distinct` (TextDedup.grams). */
+  private def duckGrams(k: Int, distinct: Boolean) = {
+    val g = s"list_transform(range(1, len(t) - ${k - 2}), i -> ${duckGram(k)})"
+    if (distinct) s"list_distinct($g)" else g
+  }
+
+  /** The chunk CTE `ch` (TextDedup.chunkWindows): 32-token windows at
+    * stride 24, with start_tok, chunk_idx and the chunk tokens `ctoks`. */
+  private val duckChunks =
+    s"""$duckTok,
+       |ch AS (SELECT doc_id, t, n_tok, start_tok, start_tok // 24 AS chunk_idx,
+       |              t[start_tok + 1 : start_tok + 32] AS ctoks
+       |       FROM (SELECT *, unnest(range(0, n_tok, 24)) AS start_tok FROM tok))""".stripMargin
+
+  /** Unpruned directed containment over the shingle sets of `where`'s
+    * documents: `p` holds every ordered pair with its containment c. */
+  private def duckContainPairs(where: String) =
+    s"""WITH t AS (SELECT doc_id, $duckShingles AS sh FROM documents $where),
+       |p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+       |             len(list_intersect(a.sh, b.sh))::DOUBLE / len(a.sh)::DOUBLE AS c
+       |      FROM t a JOIN t b ON a.doc_id <> b.doc_id)""".stripMargin
+
+  /** Batch-vs-corpus containment over the shingled CTE `src`
+    * (TextDedup.ingestDedup, brute force): the batch `b` (doc_id ≡ 0 mod
+    * 5), the corpus `c` (the rest) and `m`, each batch row's count of
+    * corpus rows holding ≥ 70% of its shingles, keyed by `keys`. */
+  private def duckIngestMatches(src: String, keys: String) =
+    s"""b AS (SELECT * FROM $src WHERE doc_id % 5 = 0),
+       |c AS (SELECT * FROM $src WHERE doc_id % 5 <> 0),
+       |m AS (SELECT $keys, count(*) AS n_matches
+       |      FROM b JOIN c ON len(list_intersect(b.sh, c.sh)) * 10 >= len(b.sh) * 7
+       |      GROUP BY $keys)""".stripMargin
 
   private def duckJaccardPairs(where: String) =
     s"""WITH t AS (SELECT doc_id, $duckShingles AS sh FROM documents $where),
@@ -3260,10 +2917,7 @@ object LlmOps {
     // Unpruned semantic predicate: hash-matching it proves the Spark side's
     // one-sided length prune lossless.
     "llm_dedup_containment" ->
-      s"""WITH t AS (SELECT doc_id, $duckShingles AS sh FROM documents WHERE doc_id < 500),
-         |p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         |             len(list_intersect(a.sh, b.sh))::DOUBLE / len(a.sh)::DOUBLE AS c
-         |      FROM t a JOIN t b ON a.doc_id <> b.doc_id)
+      s"""${duckContainPairs("WHERE doc_id < 500")}
          |SELECT doc_a, doc_b, round(c, 6) AS containment FROM p WHERE c >= 0.7
          |ORDER BY doc_a ASC NULLS FIRST, doc_b ASC NULLS FIRST""".stripMargin,
 
@@ -3272,10 +2926,7 @@ object LlmOps {
     // was rows-only through round 4, when its candidates came from MinHash
     // bands with a ≈4.5% worst-case miss floor.
     "llm_dedup_containment_lsh" ->
-      s"""WITH t AS (SELECT doc_id, $duckShingles AS sh FROM documents),
-         |p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         |             len(list_intersect(a.sh, b.sh))::DOUBLE / len(a.sh)::DOUBLE AS c
-         |      FROM t a JOIN t b ON a.doc_id <> b.doc_id)
+      s"""${duckContainPairs("")}
          |SELECT doc_a, doc_b, round(c, 6) AS containment FROM p WHERE c >= 0.7
          |ORDER BY doc_a ASC NULLS FIRST, doc_b ASC NULLS FIRST""".stripMargin,
 
@@ -3284,11 +2935,7 @@ object LlmOps {
     "llm_dedup_incremental" ->
       s"""WITH t AS (SELECT doc_id, $duckShingles AS sh FROM documents
          |           WHERE len(string_split(lower(text), ' ')) >= 3),
-         |b AS (SELECT doc_id, sh FROM t WHERE doc_id % 5 = 0),
-         |c AS (SELECT doc_id, sh FROM t WHERE doc_id % 5 <> 0),
-         |m AS (SELECT b.doc_id, count(*) AS n_matches
-         |      FROM b JOIN c ON len(list_intersect(b.sh, c.sh)) * 10 >= len(b.sh) * 7
-         |      GROUP BY b.doc_id)
+         |${duckIngestMatches("t", "b.doc_id")}
          |SELECT b.doc_id, CAST(coalesce(m.n_matches, 0) AS BIGINT) AS n_matches,
          |       coalesce(m.n_matches, 0) > 0 AS is_dup
          |FROM b LEFT JOIN m ON b.doc_id = m.doc_id
@@ -3328,14 +2975,9 @@ object LlmOps {
         |WHERE levenshtein(a.t, b.t) <= 50
         |ORDER BY doc_a ASC NULLS FIRST, doc_b ASC NULLS FIRST""".stripMargin,
 
-    // DuckDB's inclusive 1-based list slice t[i:i+7] is the 8-token gram
-    // starting at i; range() is end-exclusive so i runs 1 .. len(t)-7.
     "llm_decontaminate" ->
-      """WITH tok AS (SELECT doc_id, source, string_split(lower(text), ' ') AS t
-        |             FROM documents),
-        |g AS (SELECT doc_id, source,
-        |             unnest(list_distinct(list_transform(range(1, len(t) - 6),
-        |               i -> array_to_string(t[i:i+7], ' ')))) AS g
+      s"""WITH $duckTok,
+        |g AS (SELECT doc_id, source, unnest(${duckGrams(8, distinct = true)}) AS g
         |      FROM tok WHERE len(t) >= 8),
         |ev AS (SELECT DISTINCT g FROM g WHERE source = 'src0'),
         |ov AS (SELECT doc_id, count(*) AS n_overlap FROM g JOIN ev USING (g)
@@ -3348,11 +2990,8 @@ object LlmOps {
         |ORDER BY d.doc_id ASC NULLS FIRST""".stripMargin,
 
     "llm_ngram_novelty" ->
-      """WITH tok AS (SELECT doc_id, string_split(lower(text), ' ') AS t
-        |             FROM documents),
-        |g AS (SELECT doc_id,
-        |             unnest(list_distinct(list_transform(range(1, len(t) - 6),
-        |               i -> array_to_string(t[i:i+7], ' ')))) AS g
+      s"""WITH $duckTok,
+        |g AS (SELECT doc_id, unnest(${duckGrams(8, distinct = true)}) AS g
         |      FROM tok WHERE len(t) >= 8),
         |f AS (SELECT doc_id,
         |             min(doc_id) OVER (PARTITION BY g) AS first_doc
@@ -3365,10 +3004,8 @@ object LlmOps {
         |ORDER BY doc_id ASC NULLS FIRST""".stripMargin,
 
     "llm_passage_dedup" ->
-      """WITH tok AS (SELECT doc_id, string_split(lower(text), ' ') AS t
-        |             FROM documents),
-        |w AS (SELECT doc_id, unnest(list_transform(range(1, len(t) - 14),
-        |        i -> array_to_string(t[i:i+15], ' '))) AS w
+      s"""WITH $duckTok,
+        |w AS (SELECT doc_id, unnest(${duckGrams(16, distinct = false)}) AS w
         |      FROM tok WHERE len(t) >= 16),
         |pw AS (SELECT w, count(DISTINCT doc_id) AS nd FROM w GROUP BY w)
         |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_windows,
@@ -3381,13 +3018,10 @@ object LlmOps {
         |ORDER BY doc_id ASC NULLS FIRST""".stripMargin,
 
     "llm_substring_dedup" ->
-      """WITH tok AS (SELECT doc_id, string_split(lower(text), ' ') AS t
-        |             FROM documents),
+      s"""WITH $duckTok,
         |win AS (SELECT doc_id, t, unnest(range(1, len(t) - 6)) AS i
         |        FROM tok WHERE len(t) >= 8),
-        |w AS (SELECT doc_id, i - 1 AS s,
-        |             array_to_string(t[i:i+7], ' ') AS w
-        |      FROM win),
+        |w AS (SELECT doc_id, i - 1 AS s, ${duckGram(8)} AS w FROM win),
         |pw AS (SELECT w FROM w GROUP BY w
         |       HAVING count(DISTINCT doc_id) >= 2),
         |d AS (SELECT doc_id, CAST(s AS BIGINT) AS s,
@@ -3620,18 +3254,13 @@ object LlmOps {
         |ORDER BY doc_id ASC NULLS FIRST""".stripMargin,
 
     "llm_doc_chunking" ->
-      """WITH t AS (SELECT doc_id, string_split(lower(text), ' ') AS tk,
-        |             len(string_split(lower(text), ' ')) AS n_tok
-        |           FROM documents),
-        |s AS (SELECT doc_id, tk, n_tok,
-        |             unnest(range(0, n_tok, 24)) AS start_tok
-        |      FROM t)
+      s"""WITH $duckChunks
         |SELECT doc_id,
-        |       CAST(start_tok // 24 AS BIGINT) AS chunk_idx,
+        |       CAST(chunk_idx AS BIGINT) AS chunk_idx,
         |       CAST(start_tok AS BIGINT) AS start_tok,
         |       CAST(least(32, n_tok - start_tok) AS BIGINT) AS n_tok_chunk,
-        |       array_to_string(tk[start_tok + 1 : start_tok + 32], ' ') AS chunk_text
-        |FROM s
+        |       array_to_string(ctoks, ' ') AS chunk_text
+        |FROM ch
         |ORDER BY doc_id ASC NULLS FIRST, chunk_idx ASC NULLS FIRST""".stripMargin,
 
     // Brute-force cross-split chunk containment (every batch chunk against
@@ -3639,24 +3268,10 @@ object LlmOps {
     // lossless, so the sets must be identical. Same chunking recipe as
     // llm_doc_chunking, same shingle algebra as llm_dedup_incremental.
     "llm_chunk_dedup" ->
-      """WITH t AS (SELECT doc_id, string_split(lower(text), ' ') AS tk,
-        |             len(string_split(lower(text), ' ')) AS n_tok
-        |           FROM documents),
-        |s AS (SELECT doc_id, tk, n_tok,
-        |             unnest(range(0, n_tok, 24)) AS start_tok
-        |      FROM t),
-        |ch AS (SELECT doc_id, start_tok // 24 AS chunk_idx,
-        |              tk[start_tok + 1 : start_tok + 32] AS ctoks
-        |       FROM s),
-        |cs AS (SELECT doc_id, chunk_idx,
-        |              list_distinct(list_transform(range(1, greatest(len(ctoks) - 1, 1)),
-        |                i -> ctoks[i] || ' ' || ctoks[i+1] || ' ' || ctoks[i+2])) AS sh
+      s"""WITH $duckChunks,
+        |cs AS (SELECT doc_id, chunk_idx, ${duckShinglesOf("ctoks")} AS sh
         |       FROM ch WHERE len(ctoks) >= 3),
-        |b AS (SELECT doc_id, chunk_idx, sh FROM cs WHERE doc_id % 5 = 0),
-        |c AS (SELECT doc_id, chunk_idx, sh FROM cs WHERE doc_id % 5 <> 0),
-        |m AS (SELECT b.doc_id, b.chunk_idx, count(*) AS n_matches
-        |      FROM b JOIN c ON len(list_intersect(b.sh, c.sh)) * 10 >= len(b.sh) * 7
-        |      GROUP BY b.doc_id, b.chunk_idx)
+        |${duckIngestMatches("cs", "b.doc_id, b.chunk_idx")}
         |SELECT b.doc_id, CAST(b.chunk_idx AS BIGINT) AS chunk_idx,
         |       CAST(coalesce(m.n_matches, 0) AS BIGINT) AS n_matches,
         |       coalesce(m.n_matches, 0) > 0 AS is_dup

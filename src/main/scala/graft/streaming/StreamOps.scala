@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.functions.VectorFunctions.kernel
+import graft.ops.TextDedup
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -265,7 +265,7 @@ object StreamOps {
     * equi-join on (band_idx, band_hash) whose probe side is ONE
     * micro-batch; the store never self-joins. At 100 TB the store is a
     * table partitioned/bucketed by band hash, exactly the signature table
-    * the batch path checkpoints (LlmOps.minhashBase), and this sink is
+    * the batch path persists (TextDedup.minhashBase), and this sink is
     * the standard backfill-then-tail dedup deployment. Sub-3-token docs
     * have no shingle signature and pass through unfiltered (they cannot
     * near-dup under the 3-gram definition), mirroring the batch path. */
@@ -276,8 +276,7 @@ object StreamOps {
         val spark = batch.sparkSession
         val b = batch.persist()
         try {
-          val sigs = graft.ops.LlmOps
-            .signaturesOf(graft.ops.LlmOps.shinglesOf(b))
+          val sigs = TextDedup.signaturesOf(TextDedup.shinglesOf(b))
             .withColumn("batch_id", lit(id))
             .persist()
           val parts = storeDirs(spark, storePath, "b").filter(_ < id)
@@ -285,24 +284,22 @@ object StreamOps {
             if (parts.isEmpty) spark.emptyDataFrame
             else spark.read.parquet(parts.map(k => s"$storePath/b$k"): _*)
           val all = if (store.columns.isEmpty) sigs else sigs.unionByName(store)
-          val nb = graft.ops.LlmOps.bandHashes(sigs)
-            .select(col("doc_id").as("new_id"), col("band_idx"), col("band_hash"))
-          val ab = graft.ops.LlmOps.bandHashes(all)
-            .select(col("doc_id").as("old_id"), col("band_idx"), col("band_hash"))
+          // new docs are the a side, every seen doc the b side
+          val nb = TextDedup.bandHashes(sigs)
+            .select(col("doc_id").as("doc_a"), col("band_idx"), col("band_hash"))
+          val ab = TextDedup.bandHashes(all)
+            .select(col("doc_id").as("doc_b"), col("band_idx"), col("band_hash"))
           val dups = nb.join(ab, Seq("band_idx", "band_hash"))
-            .filter(col("new_id") =!= col("old_id"))
-            .select(col("new_id"), col("old_id")).distinct()
-            .join(sigs.select(col("doc_id").as("new_id"), col("hs").as("hs_a"),
-              col("n").as("n_a")), "new_id")
-            .join(all.select(col("doc_id").as("old_id"), col("hs").as("hs_b"),
-              col("n").as("n_b"), col("batch_id").as("old_batch")), "old_id")
+            .filter(col("doc_a") =!= col("doc_b"))
+            .select(col("doc_a"), col("doc_b")).distinct()
+            .join(TextDedup.sideA(sigs), "doc_a")
+            .join(TextDedup.sideB(all, col("batch_id").as("old_batch")), "doc_b")
             // "previously seen": an earlier batch, or earlier in this one
             .filter(col("old_batch") < id ||
-              (col("old_batch") === id && col("old_id") < col("new_id")))
-            .withColumn("common", kernel("graft_sorted_intersect_long", col("hs_a"), col("hs_b")))
-            .filter(col("common").cast("double") /
-              (col("n_a") + col("n_b") - col("common")).cast("double") >= tau)
-            .select(col("new_id").as("doc_id")).distinct()
+              (col("old_batch") === id && col("doc_b") < col("doc_a")))
+            .withColumn("common", TextDedup.common)
+            .filter(TextDedup.jaccard >= tau)
+            .select(col("doc_a").as("doc_id")).distinct()
           b.join(dups, Seq("doc_id"), "left_anti")
             .write.mode("overwrite").parquet(s"$outPath/b$id")
           sigs.write.mode("overwrite").parquet(s"$storePath/b$id")

@@ -155,6 +155,23 @@ class VectorKernelsSpec extends SparkSpec {
     intercept[IllegalArgumentException](VectorFunctions.kernel("graft_nope", col("a")))
   }
 
+  test("a wrong argument count names the kernel and its arity, on the Column and SQL paths") {
+    val fresh = spark.newSession()
+    VectorFunctions.register(fresh)
+    assert(VectorFunctions.kernels.size === 12)
+    for ((name, k) <- VectorFunctions.kernels; n <- Seq(k.arity - 1, k.arity + 1)) {
+      val expected = s"$name takes ${k.arity} argument"
+      val viaColumn = intercept[IllegalArgumentException](
+        VectorFunctions.kernel(name, Seq.fill(n)(lit(1)): _*))
+      assert(viaColumn.getMessage.startsWith(expected), viaColumn.getMessage)
+      val viaSql = intercept[Exception](
+        fresh.sql(s"SELECT $name(${Seq.fill(n)("1").mkString(", ")})").collect())
+      val cause = Iterator.iterate[Throwable](viaSql)(_.getCause).takeWhile(_ != null)
+        .collectFirst { case e: IllegalArgumentException => e }
+      assert(cause.exists(_.getMessage.startsWith(expected)), s"$name($n args): $viaSql")
+    }
+  }
+
   test("graft_dot matches the HOF aggregate(zip_with(...)) bit-for-bit") {
     VectorFunctions.register(spark)
     val df = graft.Tables.embeddings(spark, sf)

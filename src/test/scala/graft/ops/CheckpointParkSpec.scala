@@ -1,6 +1,9 @@
 package graft.ops
 
+import scala.jdk.CollectionConverters._
 import graft.SparkSpec
+import org.apache.spark.rdd.RDD
+import org.apache.spark.storage.StorageLevel
 
 /** Pins the round-16 consumption-aware retirement guard (ADVICE r15,
   * medium): parking a second frame under the same tag BEFORE the first
@@ -35,5 +38,44 @@ class CheckpointParkSpec extends SparkSpec {
     val df3 = spark.range(0L, 10L).toDF("id").localCheckpoint(true)
     CheckpointPark.park(tag, df3)
     assert(df3.count() === 10L)
+  }
+
+  test("repeated calls leave at most one checkpoint per call site persisted") {
+    // The exact-search geometry (hybridVectorTop, once per hybrid-sink
+    // micro-batch), the containment prefix filter's posting list, the
+    // cluster labels and the simhash bands are eager checkpoints that the
+    // returned frame still reads; each call site parks them, so three
+    // calls keep at most the newest. A checkpoint RDD's name ends with its
+    // call site ("... at localCheckpoint at AnnIndex.scala:1147").
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    // The persistent-RDD map holds its values weakly: a leaked checkpoint
+    // could be collected before the check. The watcher holds every RDD it
+    // sees persisted while the queries run.
+    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[RDD[_]]()
+    @volatile var running = true
+    val watcher = new Thread(() =>
+      while (running) { sc.getPersistentRDDs.values.foreach(seen.add); Thread.sleep(1) })
+    val queries = LlmOps.queries.toMap
+    watcher.start()
+    try for (_ <- 1 to 3) {
+      LlmOps.hybridVectorTop(spark, sf).collect()
+      for (q <- Seq("llm_dedup_containment_lsh", "llm_dedup_clusters", "llm_dedup_simhash"))
+        queries(q)(spark, sf).collect()
+    } finally {
+      running = false
+      watcher.join()
+    }
+    def site(r: RDD[_]): String = r.toString.split(" at ").last
+    def leaked: Map[String, Int] = seen.asScala.toSeq
+      .filter(r => !before.contains(r.id) && r.getStorageLevel != StorageLevel.NONE)
+      .groupBy(site).map { case (k, rs) => k -> rs.size }.filter(_._2 > 1)
+    assert(seen.asScala.exists(r => site(r).startsWith("AnnIndex.scala")),
+      "the watcher saw no exact-search checkpoint")
+    // a retired slot is released when the listener observes its execution
+    // (asynchronous): poll briefly
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    while (leaked.nonEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+    assert(leaked.isEmpty, s"call sites with more than one checkpoint left persisted: $leaked")
   }
 }

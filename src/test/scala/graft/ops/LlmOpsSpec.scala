@@ -792,7 +792,7 @@ class LlmOpsSpec extends SparkSpec {
       ((n + i).toLong, sub)
     }
     val base = (docs ++ planted).toDF("doc_id", "hs").localCheckpoint(true)
-    val cands = LlmOps.containmentPrefixCandidates(base, tau = 0.8)
+    val cands = TextDedup.containmentPrefixCandidates(base, tau = 0.8)
     val got = cands.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     (0 until 40).foreach { i =>
       assert(got.contains((i.toLong, (n + i).toLong)),
@@ -832,7 +832,9 @@ class LlmOpsSpec extends SparkSpec {
     }
     val probes = (subs ++ tight).toDF("doc_id", "hs").localCheckpoint(true)
     val corpus = targets.toDF("doc_id", "hs").localCheckpoint(true)
-    val got = LlmOps.containmentPrefixCandidatesDirected(probes, corpus, tau = 0.8)
+    val posting = TextDedup.postingOf(corpus)
+    val got = TextDedup.containmentProbeCandidates(probes, posting,
+        TextDedup.docFreq(posting), tau = 0.8)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     (0 until 30).foreach { i =>
       assert(got.contains(((10000 + i).toLong, i.toLong)),
