@@ -275,8 +275,8 @@ object FlowLogQueries {
     * fixture-honesty choice that priced the same pass 14 times (~1.4-2.2 s
     * each at sf0.1, 11% of the bench). Parse is a deterministic pure
     * function of the envelope fixture, so a rebuild over unchanged data
-    * recreates the identical table (the TextDedup.minhashBase discipline; the store
-    * name carries [[PopulationVersion]], so a line-population bump
+    * recreates the identical table (the TextDedup.minhashBase discipline;
+    * the store name carries [[PopulationVersion]], so a line-population bump
     * invalidates both together). The decode path itself stays PRICED and
     * oracle-pinned on the provenance queries that keep reading it raw:
     * flowlog_top_talkers (the headline representative),

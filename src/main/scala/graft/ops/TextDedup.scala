@@ -29,7 +29,7 @@ import org.apache.spark.sql.functions._
 object TextDedup {
 
   /** (doc_id, toks): the lower-cased text split on single spaces. */
-  private[ops] def tokens(docs: DataFrame): DataFrame =
+  private def tokens(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), split(lower(col("text")), " ").as("toks"))
 
   /** Rows whose token array `toks` holds at least k tokens. This plain
