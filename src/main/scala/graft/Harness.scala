@@ -38,17 +38,23 @@ object Harness {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
+    logLevels(spark)
+    graft.streaming.ForklessLocalFs.install(spark)
+    spark
+  }
+
+  /** Log level WARN, ERROR for WindowExec; also applied by the spec
+    * session. WindowExec warns once per planned window without PARTITION
+    * BY. graft has those only over tiny frames, on purpose:
+    * AnnIndex.ivfCodebook's seeded init over limit(nlist) rows,
+    * LlmOps.kmeansFixed, and the ≤32-row prefix-offset windows of
+    * llm_sample_pps, llm_shard_assign and their kin. Hundreds of these
+    * lines per verify run bury real warnings. */
+  def logLevels(spark: SparkSession): Unit = {
     spark.sparkContext.setLogLevel("WARN")
-    // WindowExec warns once per planned window without PARTITION BY. graft
-    // has those only over tiny frames, on purpose: AnnIndex.ivfCodebook's
-    // seeded init over limit(nlist) rows, LlmOps.kmeansFixed, and the
-    // ≤32-row prefix-offset windows of llm_sample_pps, llm_shard_assign and
-    // their kin. Hundreds of these lines per verify run bury real warnings.
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "org.apache.spark.sql.execution.window.WindowExec",
       org.apache.logging.log4j.Level.ERROR)
-    graft.streaming.ForklessLocalFs.install(spark)
-    spark
   }
 
   /** JVM/codegen warmup so the first timed query doesn't absorb session

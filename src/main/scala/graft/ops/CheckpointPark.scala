@@ -35,8 +35,9 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * consumed-but-not-yet-observed slot may briefly defer — the bound
   * remains one live occupant per call site plus the in-flight event lag.
   *
-  * Tags are unique per call site, so two different operators never retire
-  * each other's slots; no single declared query invokes the same parked
+  * Tags are unique per call site (a shared body such as
+  * Graph.labelPropagate parks under its caller's tag), so two different
+  * operators never retire each other's slots; no single declared query invokes the same parked
   * call site twice within one composite plan (the louvain two-level
   * sweep, which does, keeps its own per-level lifecycle and does not
   * park). Stopped sessions are swept on every park — their blocks died

@@ -3,7 +3,7 @@ package graft.ops
 import graft.Tables
 import graft.functions.VectorFunctions.kernel
 import graft.store.SigStore
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** SURVEY.md §2 — graph analytics over the part co-occurrence graph.
@@ -11,8 +11,19 @@ import org.apache.spark.sql.functions._
   * The graph: vertices are parts, with an undirected edge between two
   * parts whenever some order contains both (the classic market-basket
   * co-occurrence graph; at sf0.01 that is ~2k vertices / ~116k edges).
-  * Both operators are exact-integer computations, so the DuckDB oracle
-  * twins hash-match bit-for-bit with no rounding discipline needed.
+  * Every query is an exact-integer computation (its few doubles are one
+  * division of exact integers), so the DuckDB oracle twins hash-match
+  * bit-for-bit with no rounding discipline needed.
+  *
+  * This object owns the graph primitives, each written once: the sorted
+  * pair fan-out ([[pairFanOut]]), both orientations of an edge list
+  * ([[directed]]), the endpoint list and degree table ([[endpoints]],
+  * [[degrees]]), the (deg, id) orientation and its two adjacency joins
+  * ([[oriented]], [[withAdjacency]]), connected components
+  * ([[labelPropagate]], also run by the LLM dedup clusters) and the
+  * label → group size tail ([[withGroupSize]]); the oracles share one
+  * DuckDB fragment per CTE ([[duckWe]], [[duckBb]], [[duckUnd]],
+  * [[duckMinLabel]], [[duckLouvain]]).
   *
   * Scale notes (100 TB):
   *  - Edge construction is ONE groupBy(l_orderkey) — orders have
@@ -50,40 +61,83 @@ object Graph {
     * MultiProbeBroadcastRowCap heap note applies here too). */
   private[ops] val IterSideBroadcastRowCap = 4000000L
 
-  /** Distinct undirected co-occurrence edges (a < b), via one
-    * groupBy(order) + in-row pair generation (sorted parts array, HOF
-    * slice/transform — no self-join of the item table needed). */
-  private[ops] def coEdges(s: SparkSession, d: String): DataFrame = {
-    Tables.lineitem(s, d)
-      .groupBy(col("l_orderkey"))
-      .agg(sort_array(collect_set(col("l_partkey"))).as("pks"))
-      // All in-order pairs (pks sorted ascending, so a < b by construction).
-      // slice is 1-based; for 0-based element i the strict suffix starts at
-      // i + 2, and slice clamps past the end, so `[i]` indexing never occurs
-      // (no ANSI out-of-bounds risk, per the round-5 rule).
-      .select(explode(expr(
-        "flatten(transform(pks, (x, i) -> " +
-          "transform(slice(pks, i + 2, size(pks)), y -> struct(x AS a, y AS b))))")).as("e"))
-      .select(col("e.a").as("a"), col("e.b").as("b"))
-      .distinct()
+  /** Every in-row pair of the sorted array column `xs` as
+    * array<struct<a, b>>, a before b — so a < b when `xs` is strictly
+    * increasing. slice is 1-based; for 0-based element i the strict
+    * suffix starts at i + 2, and slice clamps past the end, so `[i]`
+    * indexing never occurs (no ANSI out-of-bounds risk, per the round-5
+    * rule). The co-occurrence edges, the common-neighbor wedges, the word
+    * co-occurrence pairs and the minhash band candidates all fan out
+    * through it: pairs come from one grouped row, never a self-join. */
+  private[ops] def pairFanOut(xs: String): Column =
+    expr(s"flatten(transform($xs, (x, i) -> " +
+      s"transform(slice($xs, i + 2, size($xs)), y -> struct(x AS a, y AS b))))")
+
+  /** Both orientations of an (a, b) edge list: (from, to, carry…) for each
+    * edge and its reverse. `carry` columns ride both arms unchanged. */
+  private def directed(edges: DataFrame, from: String, to: String,
+      carry: Column*): DataFrame =
+    edges.select(col("a").as(from) +: col("b").as(to) +: carry: _*)
+      .unionAll(edges.select(col("b").as(from) +: col("a").as(to) +: carry: _*))
+
+  /** One `v` row per endpoint of each edge of an (a, b) edge list. */
+  private def endpoints(edges: DataFrame, v: String): DataFrame =
+    edges.select(col("a").as(v)).unionAll(edges.select(col("b").as(v)))
+
+  /** The degree table (v, `deg`) of an (a, b) edge list. */
+  private def degrees(edges: DataFrame, deg: String): DataFrame =
+    endpoints(edges, "v").groupBy(col("v")).agg(count(lit(1)).as(deg))
+
+  /** `edges` with each endpoint's degree attached as da / db. deg is |V|
+    * rows (tiny vs |E|) — broadcast at fixture scale; at 100 TB this
+    * becomes a pair of vertex-keyed shuffle joins, still linear. */
+  private def endpointDegrees(edges: DataFrame, deg: DataFrame): DataFrame =
+    edges.join(broadcast(deg.select(col("v").as("a"), col("deg").as("da"))), Seq("a"))
+      .join(broadcast(deg.select(col("v").as("b"), col("deg").as("db"))), Seq("b"))
+
+  /** Each (a < b) edge directed from its lower (deg, id) endpoint:
+    * (src, dst, carry…). Every out-degree is then O(√m) — the orientation
+    * the triangle family intersects over (object scaladoc). */
+  private def oriented(edges: DataFrame, deg: DataFrame, carry: Column*): DataFrame = {
+    val aFirst = struct(col("da"), col("a")) < struct(col("db"), col("b"))
+    endpointDegrees(edges, deg)
+      .select(when(aFirst, col("a")).otherwise(col("b")).as("src") +:
+        when(aFirst, col("b")).otherwise(col("a")).as("dst") +: carry: _*)
+  }
+
+  /** The two vertex-keyed adjacency joins of the triangle family: each
+    * `cols` column c of `adj` (keyed on src) lands on an [[oriented]] edge
+    * as c_u for its src and c_v for its dst. */
+  private def withAdjacency(oriented: DataFrame, adj: DataFrame, cols: String*): DataFrame =
+    oriented.join(adj.select(col("src") +: cols.map(c => col(c).as(c + "_u")): _*), "src")
+      .join(adj.select(col("src").as("dst") +: cols.map(c => col(c).as(c + "_v")): _*), "dst")
+
+  /** The oriented edges with both endpoints' sorted out-neighbor arrays
+    * (nbrs_u, nbrs_v): a triangle x<y<z (rank order) appears exactly once,
+    * at edge x→y, as z ∈ N⁺(x) ∩ N⁺(y). */
+  private def triangleEdges(edges: DataFrame, deg: DataFrame): DataFrame = {
+    val o = oriented(edges, deg)
+    withAdjacency(o,
+      o.groupBy(col("src")).agg(sort_array(collect_list(col("dst"))).as("nbrs")), "nbrs")
   }
 
   /** Weighted co-occurrence edges: (a, b, w) with a < b and w = the number
-    * of orders containing BOTH parts — the multiplicity [[coEdges]]
-    * discards. Same single groupBy(order) + in-row pair fan-out; the
-    * distinct of coEdges becomes a count aggregate over the identical
-    * shuffle (map-side combined), so the weighted list costs the same
-    * shuffle as the unweighted one. */
-  private[ops] def coEdgesWeighted(s: SparkSession, d: String): DataFrame = {
+    * of orders containing BOTH parts, via one groupBy(order) + in-row pair
+    * fan-out over the sorted parts array (no self-join of the item
+    * table); the pair count is map-side combined, so the weighted list
+    * costs the shuffle a distinct would. */
+  private[ops] def coEdgesWeighted(s: SparkSession, d: String): DataFrame =
     Tables.lineitem(s, d)
       .groupBy(col("l_orderkey"))
       .agg(sort_array(collect_set(col("l_partkey"))).as("pks"))
-      .select(explode(expr(
-        "flatten(transform(pks, (x, i) -> " +
-          "transform(slice(pks, i + 2, size(pks)), y -> struct(x AS a, y AS b))))")).as("e"))
+      .select(explode(pairFanOut("pks")).as("e"))
       .groupBy(col("e.a").as("a"), col("e.b").as("b"))
       .agg(count(lit(1)).as("w"))
-  }
+
+  /** Distinct undirected co-occurrence edges (a < b): the inline twin of
+    * [[coEdgesP]]. */
+  private[ops] def coEdges(s: SparkSession, d: String): DataFrame =
+    coEdgesWeighted(s, d).select(col("a"), col("b"))
 
   /** Triangle census of a distinct canonical (a < b) edge list:
     * one row (n_nodes, n_edges, n_triangles). Degree-oriented
@@ -91,26 +145,8 @@ object Graph {
     * never changes the census, so any naive counter is a valid twin
     * (GraphSpec runs a seeded differential against one). */
   def triangleCensus(edges: DataFrame): DataFrame = {
-    val deg = edges.select(col("a").as("v"))
-      .unionAll(edges.select(col("b").as("v")))
-      .groupBy(col("v")).agg(count(lit(1)).as("deg"))
-    // Orient each edge from its lower (deg, id) endpoint. deg is |V| rows
-    // (tiny vs |E|) — broadcast at fixture scale; at 100 TB this becomes
-    // a pair of vertex-keyed shuffle joins, still linear.
-    val da = deg.select(col("v").as("a"), col("deg").as("da"))
-    val db = deg.select(col("v").as("b"), col("deg").as("db"))
-    val aFirst = struct(col("da"), col("a")) < struct(col("db"), col("b"))
-    val oriented = edges.join(broadcast(da), "a").join(broadcast(db), "b")
-      .select(when(aFirst, col("a")).otherwise(col("b")).as("src"),
-        when(aFirst, col("b")).otherwise(col("a")).as("dst"))
-    // Sorted out-adjacency per vertex; a triangle x<y<z (rank order) is
-    // counted exactly once, at edge x→y, as z ∈ N⁺(x) ∩ N⁺(y).
-    val adj = oriented.groupBy(col("src"))
-      .agg(sort_array(collect_list(col("dst"))).as("nbrs"))
-    val triEdges = oriented
-      .join(adj.select(col("src"), col("nbrs").as("nbrs_u")), "src")
-      .join(adj.select(col("src").as("dst"), col("nbrs").as("nbrs_v")), "dst")
-    val nTri = triEdges.agg(
+    val deg = degrees(edges, "deg")
+    val nTri = triangleEdges(edges, deg).agg(
       sum(kernel("graft_sorted_intersect_long", col("nbrs_u"), col("nbrs_v"))).as("n_triangles"))
     deg.agg(count(lit(1)).as("n_nodes"))
       .crossJoin(edges.agg(count(lit(1)).as("n_edges")))
@@ -152,9 +188,11 @@ object Graph {
     * per-edge c ≤ r(u) and rank mass is conserved up to the damping leak,
     * so the 85·Σc peak obeys the same 85·|V|·R0 < 2⁶³ bound as the
     * unweighted form (|V| ≲ 10⁵ at R0 = 10¹²; lower R0 beyond). Plan shape
-    * per round is identical too: ONE broadcast join for contributions + ONE
-    * groupBy(v), probing a repartition(u).localCheckpoint edge list
-    * exchange-free, all `iters` rounds chained as one lazy plan. */
+    * per round is identical too: ONE join for contributions + ONE
+    * groupBy(v), all `iters` rounds chained as one lazy plan. Below
+    * [[IterSideBroadcastRowCap]] each round broadcasts the rank side and
+    * probes the lazy edge list ⋈ weighted degrees map-side; above it the
+    * rounds shuffle-join a repartition(u).localCheckpoint of that list. */
   def pagerankWeighted(wedges: DataFrame, iters: Int): DataFrame =
     pagerank(wedges, iters, "pagerank_w")
 
@@ -163,8 +201,7 @@ object Graph {
     * (r div deg) · 1 = r div deg). `parkTag` keeps each caller's retained
     * edge list in its own [[CheckpointPark]] slot. */
   private def pagerank(wedges: DataFrame, iters: Int, parkTag: String): DataFrame = {
-    val lazyUnd = wedges.select(col("a").as("u"), col("b").as("v"), col("w"))
-      .unionAll(wedges.select(col("b").as("u"), col("a").as("v"), col("w")))
+    val lazyUnd = directed(wedges, "u", "v", col("w"))
     val wdeg = lazyUnd.groupBy(col("u")).agg(sum(col("w")).as("wdeg"))
       .select(col("u").as("v"), col("wdeg"))
       .localCheckpoint(true)
@@ -243,29 +280,16 @@ object Graph {
     * root edge's weight (a cheap per-row HOF over an O(√m) array) feeds the
     * 2-ary kernel min exactly. Integer weights keep both outputs exact. */
   def triangleStrength(wedges: DataFrame): DataFrame = {
-    val deg = wedges.select(col("a").as("v"))
-      .unionAll(wedges.select(col("b").as("v")))
-      .groupBy(col("v")).agg(count(lit(1)).as("deg"))
-    val da = deg.select(col("v").as("a"), col("deg").as("da"))
-    val db = deg.select(col("v").as("b"), col("deg").as("db"))
-    val aFirst = struct(col("da"), col("a")) < struct(col("db"), col("b"))
-    val oriented = wedges.join(broadcast(da), "a").join(broadcast(db), "b")
-      .select(when(aFirst, col("a")).otherwise(col("b")).as("src"),
-        when(aFirst, col("b")).otherwise(col("a")).as("dst"),
-        col("w"))
+    val o = oriented(wedges, degrees(wedges, "deg"), col("w"))
     // ONE collect_list per group, then project the parallel arrays (two
     // transform calls over the same sorted buffer — a second collect_list
     // would double the aggregation buffer for no reason). dst is unique
     // per src, so the struct sort orders by dst alone.
-    val adj = oriented.groupBy(col("src"))
+    val adj = o.groupBy(col("src"))
       .agg(expr("array_sort(collect_list(struct(dst, w)))").as("sorted"))
       .select(col("src"), expr("transform(sorted, x -> x.dst)").as("ids"),
         expr("transform(sorted, x -> x.w)").as("ws"))
-    val triEdges = oriented
-      .join(adj.select(col("src"), col("ids").as("ids_u"), col("ws").as("ws_u")), "src")
-      .join(adj.select(col("src").as("dst"), col("ids").as("ids_v"),
-        col("ws").as("ws_v")), "dst")
-    triEdges.agg(
+    withAdjacency(o, adj, "ids", "ws").agg(
         sum(kernel("graft_sorted_intersect_long", col("ids_u"), col("ids_v"))).as("nt"),
         sum(kernel("graft_sorted_intersect_minw", col("ids_u"),
           expr("transform(ws_u, x -> least(x, w))"), col("ids_v"), col("ws_v"))).as("st"))
@@ -284,8 +308,10 @@ object Graph {
     * single min also carry v's own previous distance, so each round is ONE
     * vertex-keyed join + ONE min-groupBy with the dist frame referenced
     * exactly ONCE (the pagerank plan shape: no left-join-back, no
-    * per-round checkpoint, all rounds chained as one lazy plan probing a
-    * repartition(u).localCheckpoint edge list exchange-free). Overflow:
+    * per-round checkpoint, all rounds chained as one lazy plan probing
+    * one localCheckpoint of the edge list plus self-loops — map-side with
+    * the dist side broadcast below [[IterSideBroadcastRowCap]], through
+    * one reused join exchange above it). Overflow:
     * every finite path cost ≤ iters·10⁶ and the sentinel sums to at most
     * INF + iters·10⁶ ≪ 2⁶³. The round count is a constant of the query
     * (unrolled as chained CTEs in the oracle); rows with dist = INF (not
@@ -293,10 +319,7 @@ object Graph {
     * the exact ≤iters-hop weighted distance field of the seed set. */
   def ssspWeighted(wedges: DataFrame, seeds: DataFrame, iters: Int): DataFrame = {
     val INF = 1000000000000000L
-    val dirs = wedges.select(col("a").as("u"), col("b").as("v"),
-        expr("1000000 div w").as("len"))
-      .unionAll(wedges.select(col("b").as("u"), col("a").as("v"),
-        expr("1000000 div w").as("len")))
+    val dirs = directed(wedges, "u", "v", expr("1000000 div w").as("len"))
     val verts = dirs.select(col("u")).distinct()
     // Checkpointed WITHOUT a pre-shuffle by u (round-18): in the
     // broadcast-dist regime below the rounds probe the checkpoint
@@ -353,17 +376,7 @@ object Graph {
     * pipeline runs off the bucketed adjacency layout. cc is ONE
     * rounded double division of exact integers per vertex. */
   def clusteringCoeff(edges: DataFrame): DataFrame = {
-    val deg = edges.select(col("a").as("v"))
-      .unionAll(edges.select(col("b").as("v")))
-      .groupBy(col("v")).agg(count(lit(1)).as("deg"))
-    val da = deg.select(col("v").as("a"), col("deg").as("da"))
-    val db = deg.select(col("v").as("b"), col("deg").as("db"))
-    val aFirst = struct(col("da"), col("a")) < struct(col("db"), col("b"))
-    val oriented = edges.join(broadcast(da), "a").join(broadcast(db), "b")
-      .select(when(aFirst, col("a")).otherwise(col("b")).as("src"),
-        when(aFirst, col("b")).otherwise(col("a")).as("dst"))
-    val adj = oriented.groupBy(col("src"))
-      .agg(sort_array(collect_list(col("dst"))).as("nbrs"))
+    val deg = degrees(edges, "deg")
     // Per-edge intersection via the merge-walk kernel (array_intersect's
     // per-row hash set was the query's single most expensive stage —
     // 1.04 s of 2.7 s at sf0.1), and the three credit arms fused into ONE
@@ -373,9 +386,7 @@ object Graph {
     // materialization. zs stays in its own projection (CollapseProject
     // keeps non-cheap exprs referenced >1× un-inlined, so the kernel runs
     // once per edge).
-    val tri = oriented
-      .join(adj.select(col("src"), col("nbrs").as("nbrs_u")), "src")
-      .join(adj.select(col("src").as("dst"), col("nbrs").as("nbrs_v")), "dst")
+    val tri = triangleEdges(edges, deg)
       .select(col("src"), col("dst"),
         kernel("graft_sorted_intersect_arr", col("nbrs_u"), col("nbrs_v")).as("zs"))
     val tv = tri
@@ -409,12 +420,7 @@ object Graph {
     * rounded to 9. Plan: one degree aggregate + two broadcast joins +
     * one global sum — no window, no driver state. */
   def assortativity(edges: DataFrame): DataFrame = {
-    val deg = edges.select(col("a").as("v"))
-      .unionAll(edges.select(col("b").as("v")))
-      .groupBy(col("v")).agg(count(lit(1)).as("deg"))
-    val da = deg.select(col("v").as("a"), col("deg").as("da"))
-    val db = deg.select(col("v").as("b"), col("deg").as("db"))
-    val joined = edges.join(broadcast(da), "a").join(broadcast(db), "b")
+    val joined = endpointDegrees(edges, degrees(edges, "deg"))
     val samples = joined.select(col("da").as("x"), col("db").as("y"))
       .unionAll(joined.select(col("db").as("x"), col("da").as("y")))
     samples.agg(count(lit(1)).as("m2"),
@@ -474,26 +480,32 @@ object Graph {
     * unchanged data recreates the identical table. */
   private[ops] def componentLabelsP(s: SparkSession, d: String): DataFrame =
     s.read.parquet(SigStore.getOrBuild(d, "lineitem", "cclabels") { dir =>
-      val bb = backboneP(s, d)
-      val verts = bb.select(col("a").as("doc_id"))
-        .unionAll(bb.select(col("b").as("doc_id"))).distinct()
-      LlmOps.labelPropagate(verts,
-          bb.select(col("a").as("doc_a"), col("b").as("doc_b")))
+      componentLabels(backboneP(s, d), "cclabels", eager = false)
         .write.mode("overwrite").parquet(dir)
     })
 
   /** The strong-tie backbone: co-occurrence edges with multiplicity ≥ 2
-    * (parts that appeared together in at least two orders). Thresholding
-    * the weighted list is a free filter on the [[coEdgesWeighted]]
-    * aggregate — same single shuffle — and it is what makes component /
-    * link-prediction structure non-trivial: the w ≥ 1 graph is one giant
-    * near-clique at every scale, while the backbone fragments into real
-    * communities (sf0.01: 1.9k vertices / 3.4k edges; sf0.1: 2.3k
-    * components). The standard graph-mining move (backbone extraction)
-    * and the standard scale move too — the filter drops ~97% of edges
-    * before any iterative work touches them. */
+    * (parts that appeared together in at least two orders) — the inline
+    * twin of [[backboneP]]. Thresholding the weighted list is a free
+    * filter on the [[coEdgesWeighted]] aggregate — same single shuffle —
+    * and it is what makes component / link-prediction structure
+    * non-trivial: the w ≥ 1 graph is one giant near-clique at every scale,
+    * while the backbone fragments into real communities (sf0.01: 1.9k
+    * vertices / 3.4k edges; sf0.1: 2.3k components). The standard
+    * graph-mining move (backbone extraction) and the standard scale move
+    * too — the filter drops ~97% of edges before any iterative work
+    * touches them. */
   private[ops] def backbone(s: SparkSession, d: String): DataFrame =
     coEdgesWeighted(s, d).filter(col("w") >= 2).select(col("a"), col("b"))
+
+  /** The unit-weight backbone (a, b, w = 1): the unweighted Louvain
+    * input. */
+  private def unitBackbone(s: SparkSession, d: String): DataFrame =
+    backboneP(s, d).withColumn("w", lit(1L))
+
+  /** Σw of [[unitBackbone]] (its edge count), memoized. */
+  private def unitW(s: SparkSession, d: String): Long =
+    louvainW(d, "unw", backboneP(s, d).count())
 
   /** One-level Louvain move phase (Blondel et al. 2008, the synchronous
     * variant distributed implementations use): start from singleton
@@ -520,45 +532,34 @@ object Graph {
     * every round references it on both edge endpoints plus the community
     * stats, so materializing beats re-deriving an exponentially growing
     * lazy tree (the labelPropagate precedent; the pagerank
-    * reference-once rule applies only when a round touches state once). */
-  def louvainMoveRounds(edges: DataFrame, rounds: Int,
-      totalW: Long = -1L): DataFrame =
-    louvainMoveRoundsWeighted(edges.withColumn("w", lit(1L)), rounds, totalW)
+    * reference-once rule applies only when a round touches state once).
+    *
+    * `edges` is weighted (a, b, w): W = `totalW` = Σw takes the place of
+    * m, with weighted degrees and weighted v→community edge sums — the
+    * standard weighted-modularity gain, still all-BIGINT (fixture weights
+    * are small integer co-occurrence counts; 4W·k and wdeg products hold
+    * to W ≈ 10⁹). The unweighted query is the w = 1 case. Callers pass
+    * their memoized Σw ([[louvainW]] — the corpusSizeMemo discipline). */
+  def louvainMoveRounds(edges: DataFrame, rounds: Int, totalW: Long): DataFrame =
+    louvainOutput(louvainLabels(edges, rounds, totalW))
 
-  /** Weighted form of the move phase: identical recurrence with W = Σw in
-    * place of m, weighted degrees, and weighted v→community edge sums —
-    * the standard weighted-modularity gain, still all-BIGINT (fixture
-    * weights are small integer co-occurrence counts; 4W·k and wdeg
-    * products hold to W ≈ 10⁹). The unweighted form is the w = 1
-    * special case, so one body serves both declared queries. `totalW`
-    * (≥ 0) supplies the Σw scalar when the caller memoized it
-    * ([[louvainW]] — the corpusSizeMemo discipline); negative recomputes. */
-  def louvainMoveRoundsWeighted(edges: DataFrame, rounds: Int,
-      totalW: Long = -1L): DataFrame = {
-    // one up-front scalar: W = total edge weight, a constant of the data
-    val m = if (totalW >= 0L) totalW
-      else edges.agg(sum(col("w"))).head().getLong(0)
-    val (und, deg) = louvainPrep(edges)
-    louvainOutput(louvainSweep(und, deg, m, rounds))
-  }
-
-  /** The materialized sweep inputs: directed no-self-loop neighbor list
-    * (repartitioned on the probe key — every round's label join is then
-    * exchange-free on that side) and weighted degrees. The singleton
-    * label frame needs no checkpoint of its own: it is a projection of
-    * the deg checkpoint (same vertex set), rebuilt per reference for
-    * free inside [[louvainSweep]]. */
-  private def louvainPrep(edges: DataFrame): (DataFrame, DataFrame) = {
-    val und = edges.select(col("a").as("v"), col("b").as("u"), col("w"))
-      .unionAll(edges.select(col("b").as("v"), col("a").as("u"), col("w")))
+  /** The final (v, c) labels of `rounds` sweeps over a weighted (a, b, w)
+    * edge list with Σw = `mW`. The sweep inputs are materialized once: the
+    * directed no-self-loop neighbor list (repartitioned on the probe key —
+    * every round's label join is then exchange-free on that side) and the
+    * weighted degrees. The singleton label frame needs no checkpoint of
+    * its own: it is a projection of the deg checkpoint (same vertex set),
+    * rebuilt per reference for free inside [[louvainSweep]]. */
+  private def louvainLabels(edges: DataFrame, rounds: Int, mW: Long): DataFrame = {
+    val und = directed(edges, "v", "u", col("w"))
       .repartition(col("v")).localCheckpoint(true)
     val deg = und.groupBy(col("v")).agg(sum(col("w")).as("deg"))
       .localCheckpoint(true)
-    (und, deg)
+    louvainSweep(und, deg, mW, rounds)
   }
 
   /** The synchronous parity-gated best-move sweep engine — shared by the
-    * one-level move queries and both levels of [[louvainTwoLevel]].
+    * move-phase queries and the level-2 sweep of [[louvainContract]].
     * `und` is the directed neighbor list (v, u, w) WITHOUT self-loops,
     * repartition(v)+checkpointed; `deg` maps every labeled vertex to its
     * weighted degree INCLUDING self-loop mass (a self-loop of weight w
@@ -622,25 +623,22 @@ object Graph {
   /** (part, community, community_size) projection of a final label frame
     * — size via groupBy + equi-join back, never a window (a giant
     * community is then an AQE-splittable join key). */
-  private def louvainOutput(labels: DataFrame): DataFrame = {
-    val sizes = labels.groupBy(col("c"))
-      .agg(count(lit(1)).cast("long").as("community_size"))
-    labels.join(sizes, Seq("c"))
+  private def louvainOutput(labels: DataFrame): DataFrame =
+    withGroupSize(labels, "c", "community_size")
       .select(col("v").as("part"), col("c").as("community"),
         col("community_size"))
       .orderBy(col("part").asc)
-  }
 
-  /** TWO-LEVEL Louvain (Blondel et al. 2008, one full outer iteration):
-    * the move phase from singletons, then the AGGREGATION phase — contract
-    * the moved partition into a community super-graph (Σ intra-community
-    * weight as self-loops, Σ cross-community weight as super-edges — one
-    * groupBy each) — then a second move sweep ON the super-graph, with
-    * the final labels projected back onto the original vertices. This is
-    * what completes the algorithm the one-level queries start: merges the
-    * move phase cannot see (whole community A absorbing whole community
-    * B) become single-vertex moves at level 2. Everything stays exact
-    * BIGINT over the SAME total weight W (contraction conserves Σw), so
+  /** TWO-LEVEL Louvain (Blondel et al. 2008, one full outer iteration)
+    * from the level-1 move-phase labels `l1`: the AGGREGATION phase —
+    * contract the moved partition into a community super-graph (Σ
+    * intra-community weight as self-loops, Σ cross-community weight as
+    * super-edges) — then a second move sweep ON the super-graph, with the
+    * final labels projected back onto the original vertices. This is what
+    * completes the algorithm the one-level queries start: merges the move
+    * phase cannot see (whole community A absorbing whole community B)
+    * become single-vertex moves at level 2. Everything stays exact BIGINT
+    * over the SAME total weight W = `mW` (contraction conserves Σw), so
     * the whole two-level pipeline unrolls as chained MATERIALIZED CTEs in
     * the DuckDB oracle — the one-level discipline extended one level.
     *
@@ -651,28 +649,17 @@ object Graph {
     * — so the sweep engine takes self-loop-free edges plus a degree table
     * that already carries the 2·sloop term.
     *
-    * Scale shape: level 1 is the move phase's shape; contraction is two
-    * map-side-combinable groupBys over the (already materialized) edge
-    * list; level 2 runs on the contracted graph — communities × cross
-    * edges, orders of magnitude smaller than the input (the whole point
-    * of aggregation: at 100 TB the expensive sweeps run once, and each
-    * further level shrinks geometrically). */
-  def louvainTwoLevel(edges: DataFrame, rounds1: Int, rounds2: Int,
-      totalW: Long = -1L): DataFrame = {
-    val mW = if (totalW >= 0L) totalW
-      else edges.agg(sum(col("w"))).head().getLong(0)
-    val (und, deg) = louvainPrep(edges)
-    val l1 = louvainSweep(und, deg, mW, rounds1)
-    louvainOutput(louvainContract(edges, l1, mW, rounds2))
-  }
-
-  /** The aggregation phase + level-2 sweep + projection of
-    * [[louvainTwoLevel]], split out so the declared query can feed it the
-    * PERSISTED level-1 labels ([[louvainL1P]]) instead of re-running the
-    * sweep graph_louvain_step already embodies. `l1` must be materialized
-    * (checkpoint or parquet — it is referenced four times) and carry
-    * exactly one (v, c) row per edge-incident vertex of `edges`. Returns
-    * the final (v, c) labels. */
+    * Scale shape: contraction is one map-side-combinable groupBy over the
+    * (already materialized) edge list; level 2 runs on the contracted
+    * graph — communities × cross edges, orders of magnitude smaller than
+    * the input (the whole point of aggregation: at 100 TB the expensive
+    * sweeps run once, and each further level shrinks geometrically).
+    *
+    * The declared query feeds the PERSISTED level-1 labels
+    * ([[louvainL1P]]) instead of re-running the sweep graph_louvain_step
+    * already embodies. `l1` must be materialized (checkpoint or parquet —
+    * it is referenced four times) and carry exactly one (v, c) row per
+    * edge-incident vertex of `edges`. Returns the final (v, c) labels. */
   private[ops] def louvainContract(edges: DataFrame, l1: DataFrame,
       mW: Long, rounds2: Int): DataFrame = {
     // ONE canonical-pair aggregate hosts the whole contraction (round-18,
@@ -696,8 +683,7 @@ object Graph {
       .groupBy(col("a"), col("b")).agg(sum(col("w")).as("w"))
       .localCheckpoint(true)
     val cross = cgrp.filter(col("a") =!= col("b"))
-    val und2 = cross.select(col("a").as("v"), col("b").as("u"), col("w"))
-      .unionAll(cross.select(col("b").as("v"), col("a").as("u"), col("w")))
+    val und2 = directed(cross, "v", "u", col("w"))
       .repartition(col("v")).localCheckpoint(true)
     val deg2 = cgrp
       .select(col("a").as("v"),
@@ -724,13 +710,7 @@ object Graph {
     * graph_louvain_step already prices fresh on every invocation (the
     * move-phase query IS the retrain sibling carrying the cold cost). */
   private[ops] def louvainL1P(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(SigStore.getOrBuild(d, "lineitem", "louvl1") { dir =>
-      val edges = backboneP(s, d).withColumn("w", lit(1L))
-      val mW = louvainW(d, "unw", backboneP(s, d).count())
-      val (und, deg) = louvainPrep(edges)
-      louvainSweep(und, deg, mW, 4)
-        .write.mode("overwrite").parquet(dir)
-    })
+    louvainStore(s, d, "louvl1", unitBackbone(s, d), _ => unitW(s, d))
 
   /** Persisted WEIGHTED move-phase labels (v, c) on the w ≥ 2 weighted
     * backbone — the [[louvainL1P]] discipline applied to the weighted
@@ -745,12 +725,17 @@ object Graph {
     * stays fresh-priced every run in graph_louvain_step, which remains
     * the honest cost representative of the move phase. */
   private[ops] def louvainWL1P(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(SigStore.getOrBuild(d, "lineitem", "louvwl1") { dir =>
-      val wb = coEdgesWeightedP(s, d).filter(col("w") >= 2)
-      val mW = louvainW(d, "w", wb.agg(sum(col("w"))).head().getLong(0))
-      val (und, deg) = louvainPrep(wb)
-      louvainSweep(und, deg, mW, 4)
-        .write.mode("overwrite").parquet(dir)
+    louvainStore(s, d, "louvwl1", coEdgesWeightedP(s, d).filter(col("w") >= 2),
+      wb => louvainW(d, "w", wb.agg(sum(col("w"))).head().getLong(0)))
+
+  /** The one body of the persisted 4-round move-phase label stores: the
+    * (v, c) sweep labels of `edges` (built only when the store is absent),
+    * with Σw from `mW`. */
+  private def louvainStore(s: SparkSession, d: String, name: String,
+      edges: => DataFrame, mW: DataFrame => Long): DataFrame =
+    s.read.parquet(SigStore.getOrBuild(d, "lineitem", name) { dir =>
+      val e = edges
+      louvainLabels(e, 4, mW(e)).write.mode("overwrite").parquet(dir)
     })
 
   /** Memoized Σw scalars for the louvain queries (`variant` = unw | w),
@@ -765,32 +750,180 @@ object Graph {
 
   /** Connected components of an undirected (a < b) edge list: every
     * edge-incident vertex labeled with the smallest vertex id reachable
-    * from it, plus its component size. Delegates to the shared
-    * min-label-propagation-with-pointer-jumping engine
-    * ([[LlmOps.labelPropagate]] — O(log diameter) rounds, driver reads
-    * only a scalar convergence count per round); component size is a
-    * groupBy + equi-join back, not a window, so a giant component is an
-    * AQE-splittable join key rather than one pinned window partition. */
-  def components(edges: DataFrame): DataFrame = {
-    val verts = edges.select(col("a").as("doc_id"))
-      .unionAll(edges.select(col("b").as("doc_id")))
-      .distinct()
-    val labels = LlmOps.labelPropagate(
-        verts, edges.select(col("a").as("doc_a"), col("b").as("doc_b")))
-      .localCheckpoint(true)
-    val sizes = labels.groupBy(col("cluster_id"))
-      .agg(count(lit(1)).cast("long").as("comp_size"))
-    labels.join(sizes, Seq("cluster_id"))
+    * from it, plus its component size ([[componentLabels]] materialized
+    * once — the table is read twice — then [[withGroupSize]]). */
+  def components(edges: DataFrame): DataFrame =
+    componentTable(componentLabels(edges, "components", eager = true))
+
+  /** (part, component, comp_size) of a (doc_id, cluster_id) label table. */
+  private def componentTable(labels: DataFrame): DataFrame =
+    withGroupSize(labels, "cluster_id", "comp_size")
       .select(col("doc_id").as("part"), col("cluster_id").as("component"),
         col("comp_size"))
       .orderBy(col("part").asc)
+
+  /** Min-id component labels (doc_id, cluster_id) of the edge-incident
+    * vertices of an (a, b) edge list — [[labelPropagate]] over its
+    * distinct endpoints. */
+  private def componentLabels(edges: DataFrame, parkTag: String,
+      eager: Boolean): DataFrame =
+    labelPropagate(endpoints(edges, "doc_id").distinct(), edges, parkTag, eager)
+
+  /** `labels` with the size of its `key` group attached as `size`: a
+    * groupBy + equi-join back, never a window, so a giant group is an
+    * AQE-splittable join key rather than one pinned window partition
+    * (plan-tested in ScaleSpec). */
+  private[ops] def withGroupSize(labels: DataFrame, key: String, size: String): DataFrame =
+    labels.join(labels.groupBy(col(key)).agg(count(lit(1)).cast("long").as(size)), Seq(key))
+
+  /** Connected components by min-label propagation WITH pointer jumping
+    * (the shortcutting step of Shiloach–Vishkin): each round
+    *   L(v) := min( L(v),  min_{(v,u)∈E} L(u),  L(L(v)) )
+    * to a fixed point. The L(L(v)) shortcut lets a label travel twice as
+    * far each round, so rounds = O(log diameter) instead of diameter —
+    * on the worst-case chain the propagated distance doubles per round
+    * (1, 2, 4, 8, …), which LlmOpsSpec pins at rounds ≤ 2·⌈log₂ n⌉ + 2
+    * where plain neighbor-min needs diameter rounds. Correctness: every
+    * label is always the id of a vertex in the same component (induction —
+    * a neighbor's label and the label's own label both stay in-component),
+    * labels only decrease, and a fixed point means L(v) ≤ L(u) across every
+    * symmetrized edge, which forces L constant per component = the
+    * component minimum. `vertices` is one doc_id column; `edges` are
+    * unordered (a, b) pairs — both orientations generated here. Returns
+    * (doc_id, cluster_id) for every vertex.
+    *
+    * Each round is two equi-joins (neighbor labels, label-of-label) feeding
+    * ONE map-side-combined min aggregate; lineage is truncated per round by
+    * an eager localCheckpoint, and the retired round's checkpoint blocks
+    * are unpersisted explicitly right after the convergence count() —
+    * bounded memory with no reliance on GC timing. The ONLY driver-side
+    * value per round is the single changed-row count deciding termination;
+    * row data never leaves the executors.
+    *
+    * The returned frame reads the last round's checkpoint, which parks
+    * under the caller's `parkTag` ([[CheckpointPark]]: the previous call's
+    * copy retires). A caller that reads the result twice asks for it
+    * `eager`: the result is materialized once, the last round is released
+    * and the materialized copy parks instead. */
+  private[ops] def labelPropagate(vertices: DataFrame, edges: DataFrame,
+      parkTag: String, eager: Boolean): DataFrame =
+    labelPropagateCounted(vertices, edges, parkTag, eager)._1
+
+  /** [[labelPropagate]] plus the number of rounds executed (the final
+    * no-change round included) — exposed so the convergence-rate bound is
+    * testable, not just the fixed-point answer. */
+  private[ops] def labelPropagateCounted(vertices: DataFrame, edges0: DataFrame,
+      parkTag: String, eager: Boolean): (DataFrame, Int) = {
+    // The RDDs of one propagation carry its caller's tag as their call
+    // site (Spark UI, RDD listings): the shared body would otherwise show
+    // every caller's rounds and parked labels at the same source line.
+    val sc = vertices.sparkSession.sparkContext
+    val outerSite = sc.getLocalProperty("callSite.short")
+    sc.setCallSite(s"Graph.labelPropagate($parkTag)")
+    try {
+      // (The union references edges0 — the full pair-generation pipeline —
+      // twice, but ReuseExchange dedups the identical shuffle subtrees
+      // inside the one checkpoint job, so pre-materializing edges0 buys
+      // nothing: measured neutral-to-slightly-worse at sf0.1.)
+      val edges = directed(edges0, "doc_a", "doc_b").localCheckpoint(true)
+      // Iterate ONLY over edge-incident vertices: a vertex with no edges can
+      // never receive a candidate (viaEdges misses it, viaJump maps its
+      // identity label to itself), so looping it through every round just
+      // inflates each shuffle from |incident| to |V|. In a near-dup corpus
+      // |incident| ≪ |V| — at 100 TB this is the difference between
+      // propagating over the duplicate subgraph and re-shuffling the whole
+      // corpus every round. Singletons rejoin as their own cluster at the end.
+      // (vertices is a cheap id projection in every caller — re-scanning it
+      // for the final singleton anti-join beats holding one more checkpoint.)
+      val incident = edges.select(col("doc_a").as("doc_id")).distinct()
+      var labels = vertices.join(incident, Seq("doc_id"), "left_semi")
+        .select(col("doc_id"), col("doc_id").as("cluster_id"))
+        .localCheckpoint(true)
+      var changed = 1L
+      var rounds = 0
+      // (A fused two-steps-per-checkpoint variant was measured in round 17:
+      // it halves the round count (13 → 7 on the sf0.1 dup graph) but the
+      // deeper per-round plan costs what the saved round did — net flat —
+      // so the simpler one-step loop stays.)
+      while (changed > 0) {
+        // Candidate union per round (round-18 restructure): the previous
+        // label travels as a TAGGED SELF ROW inside the same min-aggregate
+        // instead of a left join back onto the label table — every incident
+        // vertex has exactly one self row, so min(cluster_id) over
+        // {neighbors ∪ jump ∪ self} ≡ least(prev, coalesce(cand_min, prev))
+        // and max(when(self)) recovers prev for the change count. That
+        // removes one join + one broadcast build per round, and the fused
+        // checkpoint-count shim below removes the separate count job — the
+        // loop is per-JOB-latency-bound at fixture scale (profiled: 120
+        // jobs / 2.8 s stage time / 4.9 s wall on llm_dedup_semantic).
+        val viaEdges = edges.join(labels, col("doc_b") === col("doc_id"))
+          .select(col("doc_a").as("doc_id"), col("cluster_id"),
+            lit(false).as("self"))
+        // pointer jump: resolve each vertex's label THROUGH the label table
+        // again (cluster_id is always a vertex id, so the self-join hits).
+        // Skipped on the first round, where L = identity makes L(L(v)) = L(v)
+        // — the self-join would be a pure no-op shuffle. (A quartic L⁴ jump
+        // was tried in round 10 and reverted: on the fixture's dup graphs
+        // the tail rounds are edge-propagation-bound, so the extra
+        // composition bought no rounds while deepening the per-round join
+        // tree — see the stats-reset note below for why tree depth is not
+        // free even on tiny frames.) The probe side renames and the build
+        // side stays the BARE labels frame, so this broadcast exchange is
+        // canonically identical to viaEdges' and ReuseExchange serves both
+        // from one build.
+        val viaJump = labels.as("lx")
+          .join(labels.as("ly"), col("lx.cluster_id") === col("ly.doc_id"))
+          .select(col("lx.doc_id").as("doc_id"),
+            col("ly.cluster_id").as("cluster_id"), lit(false).as("self"))
+        val selfRows = labels.select(col("doc_id"), col("cluster_id"),
+          lit(true).as("self"))
+        val cand = (if (rounds == 0) viaEdges.union(selfRows)
+                    else viaEdges.union(viaJump).union(selfRows))
+          .groupBy(col("doc_id"))
+          .agg(min(col("cluster_id")).as("next_cid"),
+            max(when(col("self"), col("cluster_id"))).as("prev_cid"))
+        // Fused materialization + convergence count (ONE job), with the
+        // TrueStats contract: a plain localCheckpoint carries the origin
+        // plan's ESTIMATED statistics into the new LogicalRDD, and because
+        // the size-only estimator multiplies sizes at every join, a loop
+        // that references its own previous checkpoint k times per round
+        // compounds the estimate's bit-length k× per round — by round ~10
+        // the driver spends minutes in BigInteger.multiply just planning
+        // (the round-10 L⁴ experiment hit 72 s for one round). The shim
+        // replaces the estimate with the materialized blocks' true size:
+        // truthful, broadcast-friendly, and constant-depth forever.
+        // (next_cid/prev_cid are non-null by construction — every group
+        // has its self row — which the shim's getLong pass requires.)
+        val (next, nChanged) = org.apache.spark.sql.graftshim.PlanBridge
+          .checkpointTrueStatsCountLt(cand, "next_cid", "prev_cid")
+        changed = nChanged
+        LlmOps.releaseCheckpoint(labels)
+        labels = next.select(col("doc_id"), col("next_cid").as("cluster_id"))
+        rounds += 1
+      }
+      LlmOps.releaseCheckpoint(edges)
+      // Singletons (vertices with no incident edge) are their own cluster;
+      // anti-join against the small converged label table restores them.
+      val all = vertices.join(labels, Seq("doc_id"), "left_anti")
+        .select(col("doc_id"), col("doc_id").as("cluster_id"))
+        .unionAll(labels)
+      if (!eager) {
+        CheckpointPark.park(parkTag, labels)
+        (all, rounds)
+      } else {
+        val copy = all.localCheckpoint(true)
+        LlmOps.releaseCheckpoint(labels)
+        CheckpointPark.park(parkTag, copy)
+        (copy, rounds)
+      }
+    } finally sc.setLocalProperty("callSite.short", outerSite)
   }
 
   /** Common-neighbor link prediction over an undirected (a < b) edge list:
     * every NON-adjacent pair with at least one common neighbor, scored by
     * the common-neighbor count — the classic link-prediction baseline
     * (Liben-Nowell & Kleinberg). Wedges are generated IN-ROW from each
-    * vertex's sorted neighbor array (the [[coEdges]] pair fan-out idiom):
+    * vertex's sorted neighbor array ([[pairFanOut]]):
     * one groupBy(u) builds adjacency, one explode emits each wedge once
     * (pairs are in sorted order, so a < b by construction), one count
     * aggregate scores pairs, and a left-anti join against the edge list
@@ -804,14 +937,9 @@ object Graph {
   /** Unordered non-adjacent (a, b, cn) pairs — the shared body of
     * [[commonNeighborPairs]] and [[jaccardLink]]. */
   private def cnPairs(edges: DataFrame): DataFrame = {
-    val und = edges.select(col("a").as("u"), col("b").as("v"))
-      .unionAll(edges.select(col("b").as("u"), col("a").as("v")))
-    val adj = und.groupBy(col("u"))
+    val adj = directed(edges, "u", "v").groupBy(col("u"))
       .agg(sort_array(collect_set(col("v"))).as("nbrs"))
-    val pairs = adj.select(explode(expr(
-        "flatten(transform(nbrs, (x, i) -> " +
-          "transform(slice(nbrs, i + 2, size(nbrs)), y -> struct(x AS a, y AS b))))"))
-        .as("e"))
+    val pairs = adj.select(explode(pairFanOut("nbrs")).as("e"))
       .groupBy(col("e.a").as("a"), col("e.b").as("b"))
       .agg(count(lit(1)).cast("long").as("cn"))
     pairs.join(edges, Seq("a", "b"), "left_anti")
@@ -825,20 +953,13 @@ object Graph {
     * hub-to-hub pairs raw counts over-rank). Same wedge fan-out + two
     * broadcast degree joins; ordering is (jac desc, a, b) — a different
     * ranking than the raw-count query, which is the point. */
-  def jaccardLink(edges: DataFrame): DataFrame = {
-    val deg = edges.select(col("a").as("v"))
-      .unionAll(edges.select(col("b").as("v")))
-      .groupBy(col("v")).agg(count(lit(1)).cast("long").as("deg"))
-    val da = deg.select(col("v").as("a"), col("deg").as("da"))
-    val db = deg.select(col("v").as("b"), col("deg").as("db"))
-    cnPairs(edges)
-      .join(broadcast(da), Seq("a")).join(broadcast(db), Seq("b"))
+  def jaccardLink(edges: DataFrame): DataFrame =
+    endpointDegrees(cnPairs(edges), degrees(edges, "deg"))
       .select(col("a"), col("b"), col("cn"),
         (col("da") + col("db") - col("cn")).as("union_size"),
         (col("cn").cast("double") /
           (col("da") + col("db") - col("cn")).cast("double")).as("jac"))
       .orderBy(col("jac").desc, col("a").asc, col("b").asc)
-  }
 
   /** Per-seed distinct 1-hop / ≤2-hop reachability counts (seed itself
     * excluded) over a canonical (a < b) edge list: (seed_part, reach1,
@@ -849,10 +970,7 @@ object Graph {
     // vertex, and the canonical a<b list stores each edge once. Partition
     // by the probe key once and checkpoint — BOTH hop joins then probe it
     // exchange-free (same bucketed-by-source rationale as pagerank).
-    val und = edges.select(col("a").as("u"), col("b").as("v"))
-      .unionAll(edges.select(col("b").as("u"), col("a").as("v")))
-      .repartition(col("u"))
-      .localCheckpoint(true)
+    val und = directed(edges, "u", "v").repartition(col("u")).localCheckpoint(true)
     // Seeds are a filtered dimension slice — broadcast; the frontier
     // joins key on the edge source vertex. h1 feeds BOTH the hop union
     // and the h2 expansion — checkpoint it so the und join + distinct
@@ -892,11 +1010,9 @@ object Graph {
     // the orientation-free a<b<c three-way join — census is
     // orientation-invariant.
     "graph_triangle_count" -> { (s, d) =>
-      // Edge list feeds degrees, orientation, adjacency, and the final
-      // edge scan — eager localCheckpoint once instead of recomputing the
-      // groupBy+explode+distinct pipeline four times (repo materialization
-      // rule; declared closures keep the blocks alive for the driver's
-      // later execution, matching the LlmOps pattern).
+      // No checkpoint: degrees, orientation, adjacency and the edge count
+      // each re-scan the small persisted edge parquet, so the edge scan
+      // stays visible in this query's plan (GraphSpec asserts it).
       triangleCensus(coEdgesP(s, d))
     },
 
@@ -943,13 +1059,7 @@ object Graph {
     // propagation loop runs once per dataset, not once per query
     // (5.5 -> ~1 s at sf0.1; graph_modularity shares the same table).
     "graph_components" -> { (s, d) =>
-      val labels = componentLabelsP(s, d)
-      val sizes = labels.groupBy(col("cluster_id"))
-        .agg(count(lit(1)).cast("long").as("comp_size"))
-      labels.join(sizes, Seq("cluster_id"))
-        .select(col("doc_id").as("part"), col("cluster_id").as("component"),
-          col("comp_size"))
-        .orderBy(col("part").asc)
+      componentTable(componentLabelsP(s, d))
     },
 
     // Newman modularity Q of the connected-component partition over the
@@ -974,9 +1084,7 @@ object Graph {
       val ec = bb
         .join(lab.select(col("doc_id").as("a"), col("cluster_id").as("c")), Seq("a"))
         .groupBy(col("c")).agg(count(lit(1)).as("e_c"))
-      val deg = bb.select(col("a").as("v")).unionAll(bb.select(col("b").as("v")))
-        .groupBy(col("v")).agg(count(lit(1)).as("deg"))
-      val dc = deg
+      val dc = degrees(bb, "deg")
         .join(lab.select(col("doc_id").as("v"), col("cluster_id").as("c")), Seq("v"))
         .groupBy(col("c")).agg(sum(col("deg")).as("deg_c"))
       dc.join(ec, Seq("c"))
@@ -1001,8 +1109,7 @@ object Graph {
     // chained CTEs (the pagerank discipline); GraphSpec pins the
     // modularity of the resulting partition against the CC partition's.
     "graph_louvain_step" -> { (s, d) =>
-      louvainMoveRounds(backboneP(s, d), rounds = 4,
-        totalW = louvainW(d, "unw", backboneP(s, d).count()))
+      louvainMoveRounds(unitBackbone(s, d), rounds = 4, totalW = unitW(s, d))
     },
 
     // Weighted Louvain move phase on the weighted backbone (w ≥ 2 edges
@@ -1035,10 +1142,8 @@ object Graph {
     // projection; the move-phase cost stays honestly visible in
     // graph_louvain_step every run.
     "graph_louvain_full" -> { (s, d) =>
-      louvainOutput(louvainContract(
-        backboneP(s, d).withColumn("w", lit(1L)), louvainL1P(s, d),
-        mW = louvainW(d, "unw", backboneP(s, d).count()),
-        rounds2 = 4))
+      louvainOutput(louvainContract(unitBackbone(s, d), louvainL1P(s, d),
+        mW = unitW(s, d), rounds2 = 4))
     },
 
     // Common-neighbor link prediction on the backbone: non-adjacent pairs
@@ -1070,12 +1175,9 @@ object Graph {
     // map-side-combinable groupBys; the share is one double division of
     // exact integers against the broadcast vertex total.
     "graph_degree_hist" -> { (s, d) =>
-      // one checkpoint each: the edge list feeds both union arms, and the
-      // degree table feeds both the histogram and the total
-      val e = coEdgesP(s, d)
-      val deg = e.select(col("a").as("v")).unionAll(e.select(col("b").as("v")))
-        .groupBy(col("v")).agg(count(lit(1)).as("deg"))
-        .localCheckpoint(true)
+      // the degree table feeds both the histogram and the total:
+      // checkpoint it once
+      val deg = degrees(coEdgesP(s, d), "deg").localCheckpoint(true)
       val hist = deg.groupBy(col("deg")).agg(count(lit(1)).as("n_vertices"))
       val tot = deg.agg(count(lit(1)).as("n_total"))
       hist.crossJoin(broadcast(tot))
@@ -1167,9 +1269,7 @@ object Graph {
     // count is over exactly the frame the old probe filtered.
     var (deg, nBelow) = org.apache.spark.sql.graftshim.PlanBridge
       .checkpointTrueStatsCountLtConst(
-        e.select(col("a").as("v")).unionAll(e.select(col("b").as("v")))
-          .groupBy(col("v")).agg(count(lit(1)).as("dg")),
-        "dg", k.toLong)
+        degrees(e, "dg"), "dg", k.toLong)
     var done = false
     var round = 0
     while (round < rounds && !done) {
@@ -1243,8 +1343,7 @@ object Graph {
     * declared-query / spec caller collects immediately). */
   def ktrussPeel(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     def support(e: DataFrame): DataFrame = {
-      val adj = e.select(col("a").as("u"), col("b").as("v"))
-        .unionAll(e.select(col("b").as("u"), col("a").as("v")))
+      val adj = directed(e, "u", "v")
         .groupBy(col("u")).agg(sort_array(collect_list(col("v"))).as("nb"))
       e.join(adj.select(col("u").as("a"), col("nb").as("nb_a")), "a")
         .join(adj.select(col("u").as("b"), col("nb").as("nb_b")), "b")
@@ -1284,24 +1383,80 @@ object Graph {
     support(e).orderBy(col("a").asc, col("b").asc)
   }
 
-  private val edgeCte =
-    """WITH items AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
-      |e AS (SELECT DISTINCT x.pk AS a, y.pk AS b
-      |      FROM items x JOIN items y ON x.ok = y.ok AND x.pk < y.pk)""".stripMargin
+  /** The co-occurrence edge CTEs every graph oracle starts from: `items`
+    * (order, part) and the weighted `we` (a < b, w = the number of orders
+    * containing both parts). `mat` is "" or " MATERIALIZED" (the Louvain
+    * unrolls; the plain form also runs verbatim through spark.sql). */
+  private def duckWe(mat: String): String =
+    s"""items AS$mat (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
+       |we AS$mat (SELECT x.pk AS a, y.pk AS b, count(*) AS w
+       |       FROM items x JOIN items y ON x.ok = y.ok AND x.pk < y.pk
+       |       GROUP BY x.pk, y.pk)""".stripMargin
 
-  /** Weighted edge CTE: w = number of orders containing both parts. */
-  private val wedgeCte =
-    """WITH items AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
-      |we AS (SELECT x.pk AS a, y.pk AS b, count(*) AS w
-      |       FROM items x JOIN items y ON x.ok = y.ok AND x.pk < y.pk
-      |       GROUP BY x.pk, y.pk)""".stripMargin
+  /** The w ≥ 2 backbone `bb` (a, b, w) of [[duckWe]]. */
+  private def duckBb(mat: String): String =
+    s"bb AS$mat (SELECT a, b, w FROM we WHERE w >= 2)"
+
+  /** Both orientations `und` (u, v`w`) of the (a, b`w`) CTE `src`; `w` is
+    * "" or ", w". */
+  private def duckUnd(src: String, mat: String, w: String): String =
+    s"und AS$mat (SELECT a AS u, b AS v$w FROM $src UNION ALL SELECT b, a$w FROM $src)"
+
+  /** The unweighted edge list `e` (a < b). */
+  private val edgeCte = s"WITH ${duckWe("")},\ne AS (SELECT a, b FROM we)"
+
+  /** The weighted edge list `we`. */
+  private val wedgeCte = s"WITH ${duckWe("")}"
+
+  /** Exact component labels: `und` over the (a, b) CTE `pairs`, the
+    * recursive transitive closure `reach` from every vertex of `verts` (a
+    * query with one column `v`), then `lab` (v, c = the min reachable id) —
+    * the fixed point label propagation converges to. The recursive term
+    * needs no aggregation, so a plain UNION closure is legal SQL (the
+    * caller opens WITH RECURSIVE), and UNION (not ALL) dedups the reach set
+    * so the recursion terminates on cycles. Closure size is Σ |component|²,
+    * so it runs only on thresholded graphs. */
+  private[ops] def duckMinLabel(pairs: String, verts: String): String =
+    s"""${duckUnd(pairs, "", "")},
+       |reach(v, r) AS (
+       |  SELECT v, v FROM ($verts)
+       |  UNION
+       |  SELECT und.v, reach.r FROM reach JOIN und ON und.u = reach.v),
+       |lab AS (SELECT v, min(r) AS c FROM reach GROUP BY v)""".stripMargin
+
+  /** The Louvain oracles' preamble through the 4-round sweep `l1` … `l4`:
+    * the MATERIALIZED backbone, its `und`, degrees `dg`, Σw `m`, singleton
+    * labels `l0` and the rounds. `agg` is the weight aggregate — count(*)
+    * for unit weights, CAST(sum(w) AS BIGINT) weighted — used for the
+    * degrees, Σw and the v→community sums alike. */
+  private def duckLouvain(agg: String): String =
+    s"""WITH
+       |${duckWe(" MATERIALIZED")},
+       |${duckBb(" MATERIALIZED")},
+       |${duckUnd("bb", " MATERIALIZED", ", w")},
+       |dg AS MATERIALIZED (SELECT u, $agg AS deg FROM und GROUP BY u),
+       |m AS MATERIALIZED (SELECT $agg AS m FROM bb),
+       |l0 AS MATERIALIZED (SELECT u AS v, u AS c FROM (SELECT DISTINCT u FROM und)),
+       |${louvainRoundCtes(4, "und", "dg", "l", agg)}""".stripMargin
+
+  /** The (part, community, community_size) tail over the final (v, c)
+    * label CTE `lab`. */
+  private def duckCommunities(lab: String): String =
+    s"""sz AS (SELECT c, CAST(count(*) AS BIGINT) AS community_size
+       |       FROM $lab GROUP BY c)
+       |SELECT $lab.v AS part, $lab.c AS community, sz.community_size
+       |FROM $lab JOIN sz USING (c)
+       |ORDER BY part ASC NULLS FIRST""".stripMargin
+
+  /** The weighted Louvain oracles' weight aggregate. */
+  private val weightSum = "CAST(sum(w) AS BIGINT)"
 
   /** One parity-gated synchronous move round chain, unrolled as
     * MATERIALIZED chained CTEs (DuckDB inlines CTEs by default — each
     * round references its predecessor 4×, so an un-materialized unroll
     * expands exponentially; measured: "Too many open files" from hundreds
     * of duplicated base scans). `kvc` is the v→community edge aggregate
-    * (`count(*)` unweighted, `CAST(sum(<und>.w) AS BIGINT)` weighted);
+    * (`count(*)` unweighted, [[weightSum]] weighted);
     * `und`/`dg` name the neighbor-list (u = neighbor, v = self) and
     * degree (u, deg) CTEs; `lp` prefixes every per-round CTE so two sweep
     * chains can share one WITH clause (the two-level oracle). Expects a
@@ -1348,7 +1503,7 @@ object Graph {
 
     "graph_khop_reach" ->
       s"""$edgeCte,
-        |und AS (SELECT a AS u, b AS v FROM e UNION ALL SELECT b, a FROM e),
+        |${duckUnd("e", "", "")},
         |seeds AS (SELECT p_partkey AS seed FROM part WHERE p_size = 25),
         |h1 AS (SELECT DISTINCT seed, und.v FROM seeds JOIN und ON und.u = seed),
         |h2 AS (SELECT DISTINCT h1.seed, u2.v FROM h1 JOIN und u2 ON u2.u = h1.v),
@@ -1377,7 +1532,7 @@ object Graph {
            |        GROUP BY und.v) s ON s.v = d.v)""".stripMargin
       }
       s"""$edgeCte,
-         |und AS (SELECT a AS u, b AS v FROM e UNION ALL SELECT b, a FROM e),
+         |${duckUnd("e", "", "")},
          |dg AS (SELECT u AS v, count(*) AS deg FROM und GROUP BY u),
          |r0 AS (SELECT v, CAST(1000000000000 AS BIGINT) AS r, deg FROM dg),
          |${rounds.mkString(",\n")}
@@ -1400,7 +1555,7 @@ object Graph {
            |        GROUP BY und.v) s ON s.v = d.v)""".stripMargin
       }
       s"""$wedgeCte,
-         |und AS (SELECT a AS u, b AS v, w FROM we UNION ALL SELECT b, a, w FROM we),
+         |${duckUnd("we", "", ", w")},
          |wd AS (SELECT u AS v, sum(w) AS wdeg FROM und GROUP BY u),
          |r0 AS (SELECT v, CAST(1000000000000 AS BIGINT) AS r, wdeg FROM wd),
          |${rounds.mkString(",\n")}
@@ -1446,48 +1601,28 @@ object Graph {
          |ORDER BY part ASC NULLS FIRST""".stripMargin
     },
 
-    // Exact components via recursive transitive closure (the recursive
-    // term needs no aggregation, so a plain UNION closure is legal SQL),
-    // then component = min reachable id — the same fixed point the
-    // Spark-side label propagation converges to. Closure size is
-    // Σ |component|² over the BACKBONE's communities (≤ ~3.5M pairs at
-    // sf0.01), which is exactly why the query runs on the thresholded
-    // graph.
+    // Exact components via the recursive closure (duckMinLabel) over the
+    // BACKBONE, whose closure is ≤ ~3.5M pairs at sf0.01 — exactly why the
+    // query runs on the thresholded graph.
     "graph_components" ->
-      """WITH RECURSIVE
-        |items AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
-        |we AS (SELECT x.pk AS a, y.pk AS b, count(*) AS w
-        |       FROM items x JOIN items y ON x.ok = y.ok AND x.pk < y.pk
-        |       GROUP BY x.pk, y.pk),
-        |bb AS (SELECT a, b FROM we WHERE w >= 2),
-        |und AS (SELECT a AS u, b AS v FROM bb UNION ALL SELECT b, a FROM bb),
-        |reach(v, r) AS (
-        |  SELECT u, u FROM (SELECT DISTINCT u FROM und)
-        |  UNION
-        |  SELECT und.v, reach.r FROM reach JOIN und ON und.u = reach.v),
-        |lab AS (SELECT v, min(r) AS component FROM reach GROUP BY v),
-        |sz AS (SELECT component, count(*) AS comp_size FROM lab GROUP BY component)
-        |SELECT lab.v AS part, lab.component AS component,
+      s"""WITH RECURSIVE
+        |${duckWe("")},
+        |${duckBb("")},
+        |${duckMinLabel("bb", "SELECT DISTINCT u AS v FROM und")},
+        |sz AS (SELECT c, count(*) AS comp_size FROM lab GROUP BY c)
+        |SELECT lab.v AS part, lab.c AS component,
         |       CAST(sz.comp_size AS BIGINT) AS comp_size
-        |FROM lab JOIN sz USING (component)
+        |FROM lab JOIN sz USING (c)
         |ORDER BY part ASC NULLS FIRST""".stripMargin,
 
     // Same transitive-closure labels; modularity aggregates AFTER the
     // recursive closure (the round-7 rule), entirely in exact integers —
     // the only double is the final q_num/q_den division.
     "graph_modularity" ->
-      """WITH RECURSIVE
-        |items AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
-        |we AS (SELECT x.pk AS a, y.pk AS b, count(*) AS w
-        |       FROM items x JOIN items y ON x.ok = y.ok AND x.pk < y.pk
-        |       GROUP BY x.pk, y.pk),
-        |bb AS (SELECT a, b FROM we WHERE w >= 2),
-        |und AS (SELECT a AS u, b AS v FROM bb UNION ALL SELECT b, a FROM bb),
-        |reach(v, r) AS (
-        |  SELECT u, u FROM (SELECT DISTINCT u FROM und)
-        |  UNION
-        |  SELECT und.v, reach.r FROM reach JOIN und ON und.u = reach.v),
-        |lab AS (SELECT v, min(r) AS c FROM reach GROUP BY v),
+      s"""WITH RECURSIVE
+        |${duckWe("")},
+        |${duckBb("")},
+        |${duckMinLabel("bb", "SELECT DISTINCT u AS v FROM und")},
         |m AS (SELECT count(*) AS m FROM bb),
         |ec AS (SELECT lab.c, count(*) AS e_c FROM bb JOIN lab ON lab.v = bb.a GROUP BY lab.c),
         |dg AS (SELECT u, count(*) AS deg FROM und GROUP BY u),
@@ -1508,44 +1643,15 @@ object Graph {
     // argmax window, and the parity-gated label update — every value a
     // BIGINT, so the only cross-engine surface is integer arithmetic.
     "graph_louvain_step" ->
-      s"""WITH
-         |items AS MATERIALIZED (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
-         |we AS MATERIALIZED (SELECT x.pk AS a, y.pk AS b, count(*) AS w
-         |       FROM items x JOIN items y ON x.ok = y.ok AND x.pk < y.pk
-         |       GROUP BY x.pk, y.pk),
-         |bb AS MATERIALIZED (SELECT a, b FROM we WHERE w >= 2),
-         |und AS MATERIALIZED (SELECT a AS u, b AS v FROM bb UNION ALL SELECT b, a FROM bb),
-         |dg AS MATERIALIZED (SELECT u, count(*) AS deg FROM und GROUP BY u),
-         |m AS MATERIALIZED (SELECT count(*) AS m FROM bb),
-         |l0 AS MATERIALIZED (SELECT u AS v, u AS c FROM (SELECT DISTINCT u FROM und)),
-         |${louvainRoundCtes(4, "und", "dg", "l", "count(*)")},
-         |sz AS (SELECT c, CAST(count(*) AS BIGINT) AS community_size
-         |       FROM l4 GROUP BY c)
-         |SELECT l4.v AS part, l4.c AS community, sz.community_size
-         |FROM l4 JOIN sz USING (c)
-         |ORDER BY part ASC NULLS FIRST""".stripMargin,
+      s"""${duckLouvain("count(*)")},
+         |${duckCommunities("l4")}""".stripMargin,
 
     // The weighted recurrence: identical unroll with W = Σw, weighted
     // degrees, and weighted v→community sums (k_vc = Σ w over edges into
     // the community). Same MATERIALIZED discipline.
     "graph_louvain_weighted" ->
-      s"""WITH
-         |items AS MATERIALIZED (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
-         |we AS MATERIALIZED (SELECT x.pk AS a, y.pk AS b, count(*) AS w
-         |       FROM items x JOIN items y ON x.ok = y.ok AND x.pk < y.pk
-         |       GROUP BY x.pk, y.pk),
-         |bb AS MATERIALIZED (SELECT a, b, w FROM we WHERE w >= 2),
-         |und AS MATERIALIZED (SELECT a AS u, b AS v, w FROM bb
-         |       UNION ALL SELECT b, a, w FROM bb),
-         |dg AS MATERIALIZED (SELECT u, CAST(sum(w) AS BIGINT) AS deg FROM und GROUP BY u),
-         |m AS MATERIALIZED (SELECT CAST(sum(w) AS BIGINT) AS m FROM bb),
-         |l0 AS MATERIALIZED (SELECT u AS v, u AS c FROM (SELECT DISTINCT u FROM und)),
-         |${louvainRoundCtes(4, "und", "dg", "l", "CAST(sum(und.w) AS BIGINT)")},
-         |sz AS (SELECT c, CAST(count(*) AS BIGINT) AS community_size
-         |       FROM l4 GROUP BY c)
-         |SELECT l4.v AS part, l4.c AS community, sz.community_size
-         |FROM l4 JOIN sz USING (c)
-         |ORDER BY part ASC NULLS FIRST""".stripMargin,
+      s"""${duckLouvain(weightSum)},
+         |${duckCommunities("l4")}""".stripMargin,
 
     // TWO-LEVEL Louvain: the step oracle's 4-round chain, then the
     // aggregation phase as three plain aggregates (intra self-loops,
@@ -1555,17 +1661,7 @@ object Graph {
     // projection of level-2 labels back through level-1's. The one-row
     // `m` total is shared: contraction conserves Σw.
     "graph_louvain_full" ->
-      s"""WITH
-         |items AS MATERIALIZED (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
-         |we AS MATERIALIZED (SELECT x.pk AS a, y.pk AS b, count(*) AS w
-         |       FROM items x JOIN items y ON x.ok = y.ok AND x.pk < y.pk
-         |       GROUP BY x.pk, y.pk),
-         |bb AS MATERIALIZED (SELECT a, b FROM we WHERE w >= 2),
-         |und AS MATERIALIZED (SELECT a AS u, b AS v FROM bb UNION ALL SELECT b, a FROM bb),
-         |dg AS MATERIALIZED (SELECT u, count(*) AS deg FROM und GROUP BY u),
-         |m AS MATERIALIZED (SELECT count(*) AS m FROM bb),
-         |l0 AS MATERIALIZED (SELECT u AS v, u AS c FROM (SELECT DISTINCT u FROM und)),
-         |${louvainRoundCtes(4, "und", "dg", "l", "count(*)")},
+      s"""${duckLouvain("count(*)")},
          |me AS MATERIALIZED (SELECT la.c AS ca, lb.c AS cb
          |       FROM bb JOIN l4 la ON la.v = bb.a JOIN l4 lb ON lb.v = bb.b),
          |sl AS MATERIALIZED (SELECT ca AS v, CAST(count(*) AS BIGINT) AS sw
@@ -1581,21 +1677,17 @@ object Graph {
          |         CAST(coalesce(zx.xw, 0) + 2 * coalesce(sl.sw, 0) AS BIGINT) AS deg
          |       FROM sv LEFT JOIN zx ON zx.v = sv.v LEFT JOIN sl ON sl.v = sv.v),
          |zl0 AS MATERIALIZED (SELECT v, v AS c FROM sv),
-         |${louvainRoundCtes(4, "u2", "dg2", "zl", "CAST(sum(u2.w) AS BIGINT)")},
+         |${louvainRoundCtes(4, "u2", "dg2", "zl", weightSum)},
          |proj AS MATERIALIZED (SELECT l4.v, zl4.c FROM l4 JOIN zl4 ON zl4.v = l4.c),
-         |sz AS (SELECT c, CAST(count(*) AS BIGINT) AS community_size
-         |       FROM proj GROUP BY c)
-         |SELECT proj.v AS part, proj.c AS community, sz.community_size
-         |FROM proj JOIN sz USING (c)
-         |ORDER BY part ASC NULLS FIRST""".stripMargin,
+         |${duckCommunities("proj")}""".stripMargin,
 
     // Wedge join (x.u = y.u, x.v < y.v) counts each unordered
     // common-neighbor pair once per shared neighbor; the left anti join
     // removes pairs that are already backbone edges.
     "graph_common_neighbors" ->
       s"""$wedgeCte,
-        |bb AS (SELECT a, b FROM we WHERE w >= 2),
-        |und AS (SELECT a AS u, b AS v FROM bb UNION ALL SELECT b, a FROM bb),
+        |${duckBb("")},
+        |${duckUnd("bb", "", "")},
         |w2 AS (SELECT x.v AS a, y.v AS b, count(*) AS cn
         |       FROM und x JOIN und y ON x.u = y.u AND x.v < y.v
         |       GROUP BY x.v, y.v)
@@ -1608,8 +1700,8 @@ object Graph {
     // the one double division of exact integers matches bit-for-bit.
     "graph_jaccard_link" ->
       s"""$wedgeCte,
-        |bb AS (SELECT a, b FROM we WHERE w >= 2),
-        |und AS (SELECT a AS u, b AS v FROM bb UNION ALL SELECT b, a FROM bb),
+        |${duckBb("")},
+        |${duckUnd("bb", "", "")},
         |dg AS (SELECT u, count(*) AS deg FROM und GROUP BY u),
         |w2 AS (SELECT x.v AS a, y.v AS b, count(*) AS cn
         |       FROM und x JOIN und y ON x.u = y.u AND x.v < y.v
@@ -1652,7 +1744,7 @@ object Graph {
     // each of its three corners once; cc is one rounded double division.
     "graph_clustering_coeff" ->
       s"""$edgeCte,
-        |und AS (SELECT a AS u, b AS v FROM e UNION ALL SELECT b, a FROM e),
+        |${duckUnd("e", "", "")},
         |dg AS (SELECT u AS v, count(*) AS deg FROM und GROUP BY u),
         |corners AS (
         |  SELECT e1.a AS v FROM e e1 JOIN e e2 ON e1.b = e2.a
@@ -1676,7 +1768,7 @@ object Graph {
 
     "graph_degree_hist" ->
       s"""$edgeCte,
-        |und AS (SELECT a AS u FROM e UNION ALL SELECT b FROM e),
+        |${duckUnd("e", "", "")},
         |dg AS (SELECT u, CAST(count(*) AS BIGINT) AS deg FROM und GROUP BY u),
         |h AS (SELECT deg, CAST(count(*) AS BIGINT) AS n_vertices
         |      FROM dg GROUP BY deg),

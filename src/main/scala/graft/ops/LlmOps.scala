@@ -278,127 +278,6 @@ object LlmOps {
       case _ => ()
     }
 
-  /** Connected components by min-label propagation WITH pointer jumping
-    * (the shortcutting step of Shiloach–Vishkin): each round
-    *   L(v) := min( L(v),  min_{(v,u)∈E} L(u),  L(L(v)) )
-    * to a fixed point. The L(L(v)) shortcut lets a label travel twice as
-    * far each round, so rounds = O(log diameter) instead of diameter —
-    * on the worst-case chain the propagated distance doubles per round
-    * (1, 2, 4, 8, …), which LlmOpsSpec pins at rounds ≤ 2·⌈log₂ n⌉ + 2
-    * where plain neighbor-min needs diameter rounds. Correctness: every
-    * label is always the id of a vertex in the same component (induction —
-    * a neighbor's label and the label's own label both stay in-component),
-    * labels only decrease, and a fixed point means L(v) ≤ L(u) across every
-    * symmetrized edge, which forces L constant per component = the
-    * component minimum. `vertices` is one doc_id column; `edges0` are
-    * unordered pairs (doc_a, doc_b) — both orientations generated here.
-    *
-    * Each round is two equi-joins (neighbor labels, label-of-label) feeding
-    * ONE map-side-combined min aggregate; lineage is truncated per round by
-    * an eager localCheckpoint, and the retired round's checkpoint blocks
-    * are unpersisted explicitly right after the convergence count() —
-    * bounded memory with no reliance on GC timing. The ONLY driver-side
-    * value per round is the single changed-row count deciding termination;
-    * row data never leaves the executors. */
-  private[ops] def labelPropagate(vertices: DataFrame, edges0: DataFrame): DataFrame =
-    labelPropagateCounted(vertices, edges0)._1
-
-  /** [[labelPropagate]] plus the number of rounds executed (the final
-    * no-change round included) — exposed so the convergence-rate bound is
-    * testable, not just the fixed-point answer. */
-  private[ops] def labelPropagateCounted(vertices: DataFrame,
-      edges0: DataFrame): (DataFrame, Int) = {
-    // (The union references edges0 — the full pair-generation pipeline —
-    // twice, but ReuseExchange dedups the identical shuffle subtrees
-    // inside the one checkpoint job, so pre-materializing edges0 buys
-    // nothing: measured neutral-to-slightly-worse at sf0.1.)
-    val edges = edges0
-      .union(edges0.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-      .localCheckpoint(true)
-    // Iterate ONLY over edge-incident vertices: a vertex with no edges can
-    // never receive a candidate (viaEdges misses it, viaJump maps its
-    // identity label to itself), so looping it through every round just
-    // inflates each shuffle from |incident| to |V|. In a near-dup corpus
-    // |incident| ≪ |V| — at 100 TB this is the difference between
-    // propagating over the duplicate subgraph and re-shuffling the whole
-    // corpus every round. Singletons rejoin as their own cluster at the end.
-    // (vertices is a cheap id projection in every caller — re-scanning it
-    // for the final singleton anti-join beats holding one more checkpoint.)
-    val incident = edges.select(col("doc_a").as("doc_id")).distinct()
-    var labels = vertices.join(incident, Seq("doc_id"), "left_semi")
-      .select(col("doc_id"), col("doc_id").as("cluster_id"))
-      .localCheckpoint(true)
-    var changed = 1L
-    var rounds = 0
-    // (A fused two-steps-per-checkpoint variant was measured in round 17:
-    // it halves the round count (13 → 7 on the sf0.1 dup graph) but the
-    // deeper per-round plan costs what the saved round did — net flat —
-    // so the simpler one-step loop stays.)
-    while (changed > 0) {
-      // Candidate union per round (round-18 restructure): the previous
-      // label travels as a TAGGED SELF ROW inside the same min-aggregate
-      // instead of a left join back onto the label table — every incident
-      // vertex has exactly one self row, so min(cluster_id) over
-      // {neighbors ∪ jump ∪ self} ≡ least(prev, coalesce(cand_min, prev))
-      // and max(when(self)) recovers prev for the change count. That
-      // removes one join + one broadcast build per round, and the fused
-      // checkpoint-count shim below removes the separate count job — the
-      // loop is per-JOB-latency-bound at fixture scale (profiled: 120
-      // jobs / 2.8 s stage time / 4.9 s wall on llm_dedup_semantic).
-      val viaEdges = edges.join(labels, col("doc_b") === col("doc_id"))
-        .select(col("doc_a").as("doc_id"), col("cluster_id"),
-          lit(false).as("self"))
-      // pointer jump: resolve each vertex's label THROUGH the label table
-      // again (cluster_id is always a vertex id, so the self-join hits).
-      // Skipped on the first round, where L = identity makes L(L(v)) = L(v)
-      // — the self-join would be a pure no-op shuffle. (A quartic L⁴ jump
-      // was tried in round 10 and reverted: on the fixture's dup graphs
-      // the tail rounds are edge-propagation-bound, so the extra
-      // composition bought no rounds while deepening the per-round join
-      // tree — see the stats-reset note below for why tree depth is not
-      // free even on tiny frames.) The probe side renames and the build
-      // side stays the BARE labels frame, so this broadcast exchange is
-      // canonically identical to viaEdges' and ReuseExchange serves both
-      // from one build.
-      val viaJump = labels.as("lx")
-        .join(labels.as("ly"), col("lx.cluster_id") === col("ly.doc_id"))
-        .select(col("lx.doc_id").as("doc_id"),
-          col("ly.cluster_id").as("cluster_id"), lit(false).as("self"))
-      val selfRows = labels.select(col("doc_id"), col("cluster_id"),
-        lit(true).as("self"))
-      val cand = (if (rounds == 0) viaEdges.union(selfRows)
-                  else viaEdges.union(viaJump).union(selfRows))
-        .groupBy(col("doc_id"))
-        .agg(min(col("cluster_id")).as("next_cid"),
-          max(when(col("self"), col("cluster_id"))).as("prev_cid"))
-      // Fused materialization + convergence count (ONE job), with the
-      // TrueStats contract: a plain localCheckpoint carries the origin
-      // plan's ESTIMATED statistics into the new LogicalRDD, and because
-      // the size-only estimator multiplies sizes at every join, a loop
-      // that references its own previous checkpoint k times per round
-      // compounds the estimate's bit-length k× per round — by round ~10
-      // the driver spends minutes in BigInteger.multiply just planning
-      // (the round-10 L⁴ experiment hit 72 s for one round). The shim
-      // replaces the estimate with the materialized blocks' true size:
-      // truthful, broadcast-friendly, and constant-depth forever.
-      // (next_cid/prev_cid are non-null by construction — every group
-      // has its self row — which the shim's getLong pass requires.)
-      val (next, nChanged) = org.apache.spark.sql.graftshim.PlanBridge
-        .checkpointTrueStatsCountLt(cand, "next_cid", "prev_cid")
-      changed = nChanged
-      releaseCheckpoint(labels)
-      labels = next.select(col("doc_id"), col("next_cid").as("cluster_id"))
-      rounds += 1
-    }
-    releaseCheckpoint(edges)
-    // Singletons (vertices with no incident edge) are their own cluster;
-    // anti-join against the small converged label table restores them.
-    val all = vertices.join(labels, Seq("doc_id"), "left_anti")
-      .select(col("doc_id"), col("doc_id").as("cluster_id"))
-      .unionAll(labels)
-    (all, rounds)
-  }
-
   /** The BPE merge budget — k sequential merges, each a (pair histogram →
     * deterministic top-1 → anchored replace) round over the word-count
     * histogram. 8 is a genuine multi-merge tokenizer on the fixture while
@@ -501,23 +380,14 @@ object LlmOps {
     // cluster size — the keep-one-representative-per-group step of a
     // curation pipeline, where pair listings alone under-merge (A~B, B~C
     // but A!~C must still collapse to ONE representative). Algorithm and
-    // scale notes: labelPropagate above.
+    // scale notes: Graph.labelPropagate; the labels are read twice, so
+    // they are materialized once (eager).
     "llm_dedup_clusters" -> { (s, d) =>
-      val converged = labelPropagate(
+      val labels = Graph.labelPropagate(
         Tables.documents(s, d).select(col("doc_id")),
-        minhashDupPairs(s, d).select(col("doc_a"), col("doc_b")))
-      val labels = converged.localCheckpoint(true)
-      // the eager copy is all the plan reads: retire the propagation's
-      // last round now, and park the copy for the next call to retire
-      releaseCheckpoint(converged)
-      CheckpointPark.park("llm_dedup_clusters", labels)
-      // cluster_size via groupBy + equi-join, NOT a window over
-      // cluster_id: a mega-cluster would pin one window partition (no
-      // sort needed for a bare count anyway), while a skewed join key is
-      // exactly what AQE's skew split handles (plan-tested in ScaleSpec).
-      val sizes = labels.groupBy(col("cluster_id"))
-        .agg(count(lit(1)).cast("long").as("cluster_size"))
-      labels.join(sizes, Seq("cluster_id"))
+        minhashDupPairs(s, d).select(col("doc_a").as("a"), col("doc_b").as("b")),
+        "llm_dedup_clusters", eager = true)
+      Graph.withGroupSize(labels, "cluster_id", "cluster_size")
         .select(col("doc_id"), col("cluster_id"), col("cluster_size"))
         .orderBy(col("doc_id").asc)
     },
@@ -963,16 +833,17 @@ object LlmOps {
       // The repartition is a PARALLELISM restore, not a semantic step: the
       // index's inverted file is a few MB at fixture scale, so its scan
       // coalesces to 1-2 tasks, and the broadcast-join pair pipeline —
-      // and then labelPropagate's checkpointed edge frame, which inherits
+      // and then Graph.labelPropagate's checkpointed edge frame, which inherits
       // the pipeline's partitioning — would run every propagation round
       // on those 1-2 tasks (measured: 9.6 s vs 5.4 s at sf0.1). One cheap
       // shuffle of the pair set restores the session's parallelism for
       // the whole loop; the single-pass consumers (threshold join,
       // embcos, topk) don't need it — they end in their own shuffles.
       val pairs = exactPairsVia(cells, 0.4)
-        .select(col("va").as("doc_a"), col("vb").as("doc_b"))
-        .repartition(col("doc_a"))
-      labelPropagate(exactVerticesVia(cells).select(col("vec_id").as("doc_id")), pairs)
+        .select(col("va").as("a"), col("vb").as("b"))
+        .repartition(col("a"))
+      Graph.labelPropagate(exactVerticesVia(cells).select(col("vec_id").as("doc_id")),
+          pairs, "llm_dedup_semantic", eager = false)
         .select(col("doc_id").as("vec_id"), col("cluster_id"),
           (col("doc_id") === col("cluster_id")).as("kept"))
         .orderBy(col("vec_id").asc)
@@ -1607,7 +1478,7 @@ object LlmOps {
     // the score is ONE double division of exact integers (SURVEY §5.3's
     // transcendental-free ratio rule). The top-k cut bounds the per-doc
     // pair fan-out at C(50,2): pairs are generated IN-ROW from each doc's
-    // sorted present-top-word array (the Graph.coEdges HOF slice/transform
+    // sorted present-top-word array (the Graph.pairFanOut HOF slice/transform
     // trick — no token-table self-join, which would fan out on common
     // words quadratically). The top-50 cut is orderBy+limit — a
     // distributed TakeOrderedAndProject over the |vocab|-sized df
@@ -1642,10 +1513,7 @@ object LlmOps {
         .groupBy(col("doc_id"))
         .agg(sort_array(collect_set(col("term"))).as("ws"))
         .repartitionByRange(s.sparkContext.defaultParallelism, col("doc_id"))
-      val pairs = present.select(explode(expr(
-          "flatten(transform(ws, (x, i) -> " +
-            "transform(slice(ws, i + 2, size(ws)), y -> struct(x AS a, y AS b))))"))
-          .as("e"))
+      val pairs = present.select(explode(Graph.pairFanOut("ws")).as("e"))
         .groupBy(col("e.a").as("w_a"), col("e.b").as("w_b"))
         .agg(count(lit(1)).as("c_ab"))
         .filter(col("c_ab") >= 5)
@@ -2889,24 +2757,14 @@ object LlmOps {
          |ORDER BY doc_a ASC NULLS FIRST, doc_b ASC NULLS FIRST""".stripMargin,
 
     // Transitive closure over the same pair predicate: min reachable id
-    // per doc through bidirectional jac >= 0.5 edges. UNION (not ALL)
-    // dedups the reach set so the recursion terminates on cycles.
+    // per doc through bidirectional jac >= 0.5 edges (Graph.duckMinLabel).
     "llm_dedup_clusters" ->
-      s"""WITH RECURSIVE t AS (SELECT doc_id, $duckShingles AS sh FROM documents),
-         |p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-         |      FROM t a JOIN t b ON a.doc_id < b.doc_id
-         |      WHERE len(list_intersect(a.sh, b.sh))::DOUBLE /
-         |            len(list_distinct(a.sh || b.sh))::DOUBLE >= 0.5),
-         |e AS (SELECT doc_a AS a, doc_b AS b FROM p
-         |      UNION ALL SELECT doc_b, doc_a FROM p),
-         |reach(id, r) AS (
-         |  SELECT doc_id, doc_id FROM documents
-         |  UNION
-         |  SELECT e.b, reach.r FROM reach JOIN e ON reach.id = e.a),
-         |c AS (SELECT id AS doc_id, min(r) AS cluster_id FROM reach GROUP BY id)
-         |SELECT doc_id, cluster_id,
-         |       CAST(count(*) OVER (PARTITION BY cluster_id) AS BIGINT) AS cluster_size
-         |FROM c
+      s"""${duckJaccardPairs("").replaceFirst("WITH ", "WITH RECURSIVE ")},
+         |p2 AS (SELECT doc_a AS a, doc_b AS b FROM p WHERE j >= 0.5),
+         |${Graph.duckMinLabel("p2", "SELECT doc_id AS v FROM documents")}
+         |SELECT v AS doc_id, c AS cluster_id,
+         |       CAST(count(*) OVER (PARTITION BY c) AS BIGINT) AS cluster_size
+         |FROM lab
          |ORDER BY doc_id ASC NULLS FIRST""".stripMargin,
 
     "llm_dedup_ngram_jaccard" ->
@@ -3125,14 +2983,9 @@ object LlmOps {
 
     "llm_dedup_semantic" ->
       s"""${duckCosPairs.replaceFirst("WITH ", "WITH RECURSIVE ")},
-         |p2 AS (SELECT va, vb FROM p WHERE cos_sim >= 0.4),
-         |ed AS (SELECT va AS a, vb AS b FROM p2 UNION ALL SELECT vb, va FROM p2),
-         |reach(id, r) AS (
-         |  SELECT vec_id, vec_id FROM embeddings
-         |  UNION
-         |  SELECT ed.b, reach.r FROM reach JOIN ed ON reach.id = ed.a),
-         |c AS (SELECT id AS vec_id, min(r) AS cluster_id FROM reach GROUP BY id)
-         |SELECT vec_id, cluster_id, vec_id = cluster_id AS kept FROM c
+         |p2 AS (SELECT va AS a, vb AS b FROM p WHERE cos_sim >= 0.4),
+         |${Graph.duckMinLabel("p2", "SELECT vec_id AS v FROM embeddings")}
+         |SELECT v AS vec_id, c AS cluster_id, v = c AS kept FROM lab
          |ORDER BY vec_id ASC NULLS FIRST""".stripMargin,
 
     // Brute-force directed twin of the exact threshold search: every

@@ -138,12 +138,8 @@ object TextDedup {
       .groupBy(col("band_idx"), col("band_hash"))
       .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
       .filter(size(col("ids")) > 1)
-      .select(explode(expr(
-        """flatten(transform(ids, (a, i) ->
-          | transform(slice(ids, i + 2, size(ids)), b ->
-          |   named_struct('doc_a', a, 'doc_b', b))))"""
-          .stripMargin.replace("\n", " "))).as("p"))
-      .select(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
+      .select(explode(Graph.pairFanOut("ids")).as("p"))
+      .select(col("p.a").as("doc_a"), col("p.b").as("doc_b"))
       .distinct()
 
   /** The probe side of a verify join over a (doc_id, hs) frame:

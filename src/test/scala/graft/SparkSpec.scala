@@ -6,7 +6,9 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all specs (one JVM-wide session — sbt runs
-  * suites sequentially in the forked test JVM). */
+  * suites sequentially in the forked test JVM). It keeps its own
+  * `local[4]` / 4-partition shape rather than `Harness.session`'s
+  * `SPARK_GRAFT_CPUS` one, and takes Harness's log levels. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   def sf: String = "/root/testdata/sf0.001"
@@ -35,7 +37,7 @@ object SparkSpec {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    Harness.logLevels(s)
     s
   }
 }

@@ -43,10 +43,14 @@ class CheckpointParkSpec extends SparkSpec {
   test("repeated calls leave at most one checkpoint per call site persisted") {
     // The exact-search geometry (hybridVectorTop, once per hybrid-sink
     // micro-batch), the containment prefix filter's posting list, the
-    // cluster labels and the simhash bands are eager checkpoints that the
-    // returned frame still reads; each call site parks them, so three
-    // calls keep at most the newest. A checkpoint RDD's name ends with its
-    // call site ("... at localCheckpoint at AnnIndex.scala:1147").
+    // label propagation's last round or materialized labels (dedup
+    // clusters, semantic dedup, graph components) and the simhash bands
+    // are eager checkpoints that the returned frame still reads; each call
+    // site parks them, so three calls keep at most the newest. A
+    // checkpoint RDD's name ends with its call site ("... at
+    // localCheckpoint at AnnIndex.scala:1147").
+    import spark.implicits._
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (7L, 8L), (8L, 9L)).toDF("a", "b")
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
     // The persistent-RDD map holds its values weakly: a leaked checkpoint
@@ -60,8 +64,10 @@ class CheckpointParkSpec extends SparkSpec {
     watcher.start()
     try for (_ <- 1 to 3) {
       LlmOps.hybridVectorTop(spark, sf).collect()
-      for (q <- Seq("llm_dedup_containment_lsh", "llm_dedup_clusters", "llm_dedup_simhash"))
+      for (q <- Seq("llm_dedup_containment_lsh", "llm_dedup_clusters", "llm_dedup_simhash",
+          "llm_dedup_semantic"))
         queries(q)(spark, sf).collect()
+      Graph.components(edges).collect()
     } finally {
       running = false
       watcher.join()

@@ -573,8 +573,9 @@ class GraphSpec extends SparkSpec {
     // purity pin for the persisted weighted sweep table the declared query
     // rides (the louvainL1P discipline): it must equal a FRESH 4-round
     // weighted sweep, or the persistence would be a semantic fork
-    val wFresh = Graph.louvainMoveRoundsWeighted(
-        Graph.coEdgesWeightedP(spark, sf).filter(col("w") >= 2), rounds = 4)
+    val wFresh = Graph.louvainMoveRounds(
+        Graph.coEdgesWeightedP(spark, sf).filter(col("w") >= 2), rounds = 4,
+        totalW = bigW.toLong)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(wl === wFresh,
       "persisted weighted sweep labels diverged from the fresh sweep")

@@ -1083,8 +1083,9 @@ class LlmOpsSpec extends SparkSpec {
     val cycle = Seq((200L, 201L), (201L, 202L), (202L, 200L))
     val vertices = ((0L until n) ++ (100L to 104L) ++ Seq(150L) ++ (200L to 202L))
       .toDF("doc_id")
-    val edges = (chain ++ clique ++ cycle).toDF("doc_a", "doc_b")
-    val (labels, rounds) = LlmOps.labelPropagateCounted(vertices, edges)
+    val edges = (chain ++ clique ++ cycle).toDF("a", "b")
+    val (labels, rounds) = Graph.labelPropagateCounted(vertices, edges,
+      "label-propagation-spec", eager = false)
     val got = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     (0L until n).foreach(v => assert(got(v) === 0L, s"chain node $v"))
     (100L to 104L).foreach(v => assert(got(v) === 100L, s"clique node $v"))

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.PlanBridge
 
 /** Pins the round-18 fused checkpoint+count shim
-  * (PlanBridge.checkpointTrueStatsCountLt): the labelPropagate loop's
+  * (PlanBridge.checkpointTrueStatsCountLt): the Graph.labelPropagate loop's
   * convergence count must equal the filter count the old two-job form
   * computed, the returned frame must carry the exact same rows as the
   * input plan, and the checkpoint must be a real materialization (usable
