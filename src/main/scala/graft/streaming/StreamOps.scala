@@ -1,8 +1,7 @@
 package graft.streaming
 
 import graft.ops.TextDedup
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
@@ -17,8 +16,9 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateT
   * stateful op here requires one, so the state store evicts closed windows
   * instead of growing forever. Keys partition the state store (user_id /
   * event_type), so a 1000-executor cluster shards state horizontally.
-  * Sinks are idempotent: partitioned Parquet + checkpointed offsets give
-  * exactly-once end-to-end.
+  * Sinks are exactly-once: the Parquet sink through Spark's file-sink
+  * commit log, every foreachBatch sink through [[BatchStore]]'s replay
+  * contract.
   */
 object StreamOps {
 
@@ -181,23 +181,10 @@ object StreamOps {
     df.writeStream.option("checkpointLocation", checkpoint)
   }
 
-  /** Ids of the `<prefix><id>` dirs under `storePath` that hold a
-    * committed write (`_SUCCESS`), in no particular order; none while
-    * `storePath` does not exist. */
-  private def storeDirs(spark: SparkSession, storePath: String, prefix: String): Seq[Long] = {
-    val root = new Path(storePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).toSeq.map(_.getPath)
-      .filter(d => d.getName.matches(s"$prefix\\d+") && fs.exists(new Path(d, "_SUCCESS")))
-      .map(_.getName.drop(prefix.length).toLong)
-  }
-
   /** Merge-style sink via foreachBatch: upsert each micro-batch into the
-    * target by key, keeping the row with the highest version column. The
-    * read-union-dedup cycle is idempotent per batch (re-running a batch
-    * converges to the same state), which is what foreachBatch needs since
-    * its exactly-once guarantee is at-least-once + idempotence.
+    * target by key, keeping the row with the highest version column.
+    * Exactly-once through [[BatchStore]] (see its replay contract): the
+    * max-version merge makes a re-run batch converge to the same target.
     *
     * Scale notes: the full-target rewrite here is the local stand-in for a
     * real table format's MERGE (partition-scoped rewrites); the dedup
@@ -210,37 +197,19 @@ object StreamOps {
       }
       .start()
 
-  /** One micro-batch of [[startMergeSink]]. The merged target never
-    * passes through a moment where it exists nowhere on disk: it is
-    * written to `<out>.writing`, renamed atomically to `<out>.staged`,
-    * and only then does the old `out` go and `<out>.staged` take its name.
-    * A crash anywhere in that swap leaves a complete `<out>.staged`, so
-    * each batch first finishes a swap a crash left half done — a replayed
-    * batch then merges into the full target, and the max-version merge
-    * makes the replay converge. (A plain overwrite would delete `out`
-    * before its write job commits, leaving a crash in between no target
-    * to merge the replay into.) */
+  /** One micro-batch of [[startMergeSink]]: the target is swapped through
+    * [[BatchStore.replace]], so a batch replayed after a crash mid-swap
+    * merges into the full target and the max-version merge converges. */
   private[graft] def mergeBatch(batch: DataFrame, outPath: String,
       key: String, version: String): Unit = {
-    val spark = batch.sparkSession
-    val out = new Path(outPath)
-    val fs = out.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def move(from: String, to: String): Unit =
-      if (!fs.rename(new Path(from), new Path(to)))
-        sys.error(s"merge sink: cannot rename $from to $to")
-    def publish(): Unit = { fs.delete(out, true); move(s"$outPath.staged", outPath) }
-    if (fs.exists(new Path(s"$outPath.staged"))) publish()
-    val all =
-      if (fs.exists(out)) spark.read.parquet(outPath).unionByName(batch)
-      else batch
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col(key))
       .orderBy(col(version).desc, col(key).asc)
-    all.withColumn("_rn", org.apache.spark.sql.functions.row_number().over(w))
-      .filter(col("_rn") === 1).drop("_rn")
-      .write.mode("overwrite").parquet(s"$outPath.writing")
-    move(s"$outPath.writing", s"$outPath.staged")
-    publish()
+    BatchStore.replace(outPath) { published =>
+      published.fold(batch)(batch.sparkSession.read.parquet(_).unionByName(batch))
+        .withColumn("_rn", org.apache.spark.sql.functions.row_number().over(w))
+        .filter(col("_rn") === 1).drop("_rn")
+    }
   }
 
   /** Streaming near-duplicate document filter — the incremental form of
@@ -253,13 +222,10 @@ object StreamOps {
     * dropped — a future doc similar only to a dropped one must still be
     * caught) append to the store under `storePath/b<batchId>`.
     *
-    * Idempotence (foreachBatch is at-least-once + idempotent writes): both
-    * writes overwrite their own batch-scoped directory, and the store read
-    * takes only the committed (`_SUCCESS`) `b<k>` dirs with k < the
-    * current batch, so a half-written replay partition can never mask or
-    * duplicate its own originals. Before the first commit the store is
-    * empty; any other read failure fails the batch instead of letting
-    * its duplicates through.
+    * Exactly-once through [[BatchStore]] (see its replay contract); the
+    * store is read with `readBefore`. Before the first batch the store is
+    * empty; any read failure fails the batch instead of letting its
+    * duplicates through.
     *
     * Scale notes: the per-batch work is bands(batch) ⋈ bands(store) — an
     * equi-join on (band_idx, band_hash) whose probe side is ONE
@@ -273,17 +239,12 @@ object StreamOps {
       storePath: String, checkpoint: String, tau: Double = 0.5): StreamingQuery =
     checkpointed(docs, checkpoint)
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
         val b = batch.persist()
         try {
           val sigs = TextDedup.signaturesOf(TextDedup.shinglesOf(b))
             .withColumn("batch_id", lit(id))
             .persist()
-          val parts = storeDirs(spark, storePath, "b").filter(_ < id)
-          val store =
-            if (parts.isEmpty) spark.emptyDataFrame
-            else spark.read.parquet(parts.map(k => s"$storePath/b$k"): _*)
-          val all = if (store.columns.isEmpty) sigs else sigs.unionByName(store)
+          val all = BatchStore.readBefore(storePath, id).fold(sigs)(sigs.unionByName(_))
           // new docs are the a side, every seen doc the b side
           val nb = TextDedup.bandHashes(sigs)
             .select(col("doc_id").as("doc_a"), col("band_idx"), col("band_hash"))
@@ -300,9 +261,8 @@ object StreamOps {
             .withColumn("common", TextDedup.common)
             .filter(TextDedup.jaccard >= tau)
             .select(col("doc_a").as("doc_id")).distinct()
-          b.join(dups, Seq("doc_id"), "left_anti")
-            .write.mode("overwrite").parquet(s"$outPath/b$id")
-          sigs.write.mode("overwrite").parquet(s"$storePath/b$id")
+          BatchStore.append(outPath, "b", id)(b.join(dups, Seq("doc_id"), "left_anti"))
+          BatchStore.append(storePath, "b", id)(sigs)
           sigs.unpersist()
         } finally b.unpersist()
         ()
@@ -326,10 +286,9 @@ object StreamOps {
     * output is bit-identical to the batch query on the same documents
     * (StreamingSpec pins it, including across a kill/restart).
     *
-    * Idempotence (foreachBatch is at-least-once + idempotent writes):
-    * stats land in batch-scoped directories (`b<id>` overwrite), the
-    * standings read filters batch_id <= current, and the standings
-    * rewrite is a full overwrite — a replayed batch converges.
+    * Exactly-once through [[BatchStore]] (see its replay contract): the
+    * standings read the stats stored before this batch plus its own
+    * in-memory delta, and `current` is swapped with `replace`.
     *
     * Scale notes (100 TB stream): per batch, the stats append is map-only
     * over the batch (the token stream is filtered to the |q| query terms
@@ -347,27 +306,24 @@ object StreamOps {
       .foreachBatch { (batch: DataFrame, id: Long) =>
         val spark = batch.sparkSession
         val b = batch.persist()
+        val (tf, dl) = graft.ops.LlmOps.bm25Stats(b, qTerms)
+        // this batch's stats, cached: each is stored once and scored once
+        val tfB = tf.withColumn("batch_id", lit(id)).persist()
+        val dlB = dl.withColumn("batch_id", lit(id)).persist()
         try {
-          val (tf, dl) = graft.ops.LlmOps.bm25Stats(b, qTerms)
-          dl.withColumn("batch_id", lit(id))
-            .write.mode("overwrite").parquet(s"$statsPath/docs/b$id")
-          tf.withColumn("batch_id", lit(id))
-            .write.mode("overwrite").parquet(s"$statsPath/terms/b$id")
-          // standings from the ACCUMULATED stats (this batch included);
-          // the <= filter keeps a replay from seeing a later half-written
-          // batch directory
-          val dlAll = spark.read.parquet(s"$statsPath/docs/b*")
-            .filter(col("batch_id") <= id).select(col("doc_id"), col("dl"))
-          val tfAll = spark.read.parquet(s"$statsPath/terms/b*")
-            .filter(col("batch_id") <= id)
+          // standings from the ACCUMULATED stats, this batch included
+          def accumulated(delta: DataFrame, dir: String): DataFrame = {
+            BatchStore.append(dir, "b", id)(delta)
+            BatchStore.readBefore(dir, id).fold(delta)(delta.unionByName(_))
+          }
+          val dlAll = accumulated(dlB, s"$statsPath/docs")
+            .select(col("doc_id"), col("dl"))
+          val tfAll = accumulated(tfB, s"$statsPath/terms")
             .select(col("doc_id"), col("term"), col("tf"))
-          val standings = graft.ops.LlmOps.rrfFuse(
+          BatchStore.replace(s"$outPath/current")(_ => graft.ops.LlmOps.rrfFuse(
             graft.ops.LlmOps.bm25FromStats(tfAll, dlAll),
-            graft.ops.LlmOps.hybridVectorTop(spark, sfDir))
-          // stage then overwrite: the standings read nothing from
-          // outPath, so a plain overwrite is safe and idempotent
-          standings.write.mode("overwrite").parquet(s"$outPath/current")
-        } finally b.unpersist()
+            graft.ops.LlmOps.hybridVectorTop(spark, sfDir)))
+        } finally Seq(tfB, dlB, b).foreach(_.unpersist())
         ()
       }
       .start()
@@ -382,11 +338,9 @@ object StreamOps {
     * adds zero shuffles (both splits are map-only filters over the
     * batch).
     *
-    * Idempotence (foreachBatch is at-least-once + idempotent writes):
-    * both writes overwrite their own batch-scoped directory and the
-    * split is a pure function of the batch, so a replayed batch rewrites
-    * identical bytes. `constraints` are (name, violated-predicate)
-    * pairs, evaluated once per row via one array projection.
+    * Exactly-once through [[BatchStore]] (see its replay contract).
+    * `constraints` are (name, violated-predicate) pairs, evaluated once
+    * per row via one array projection.
     *
     * NULL semantics (three-valued, SAME as the batch `dq_constraint_check`
     * twin and its SQL oracle): a NULL in a gated column makes a
@@ -411,11 +365,11 @@ object StreamOps {
           org.apache.spark.sql.functions.filter(failed, c => c.isNotNull))
           .persist()
         try {
-          tagged.filter(size(col("dq_failed")) === 0).drop("dq_failed")
-            .write.mode("overwrite").parquet(s"$outPath/b$id")
-          tagged.filter(size(col("dq_failed")) > 0)
-            .withColumn("dq_failed", array_join(col("dq_failed"), ","))
-            .write.mode("overwrite").parquet(s"$quarantinePath/b$id")
+          BatchStore.append(outPath, "b", id)(
+            tagged.filter(size(col("dq_failed")) === 0).drop("dq_failed"))
+          BatchStore.append(quarantinePath, "b", id)(
+            tagged.filter(size(col("dq_failed")) > 0)
+              .withColumn("dq_failed", array_join(col("dq_failed"), ",")))
         } finally tagged.unpersist()
         ()
       }
@@ -429,14 +383,12 @@ object StreamOps {
     * against the PERSISTED codebook at `centroidsPath` (never retrained —
     * the upsert staleness contract: the codebook affects efficiency only,
     * never answers, on the exact cell-routed paths) and its posting rows
-    * land batch-scoped under `storePath/b<id>`. Reading
-    * `storePath/b*` ∪ the base index's assign table IS the upsert view;
-    * compaction (`llm_sim_ann_ivf_compact`) later folds the deltas in.
+    * land batch-scoped under `storePath/b<id>`. The published `b<id>`
+    * dirs ∪ the base index's assign table IS the upsert view; compaction
+    * (`llm_sim_ann_ivf_compact`) later folds the deltas in.
     *
-    * Idempotence (foreachBatch is at-least-once + idempotent writes): the
-    * only write is an overwrite of the batch's own directory, and
-    * encoding is a pure function of (batch, codebook) — a replayed batch
-    * rewrites identical bytes. Batch-equivalence is STRUCTURAL: the
+    * Exactly-once through [[BatchStore]] (see its replay contract).
+    * Batch-equivalence is STRUCTURAL: the
     * encode body is AnnIndex.encodeAgainstCodebook, the same seam the
     * batch upsert runs, so the accumulated store equals the one-shot
     * encode row-for-row however arrival slices the stream.
@@ -451,12 +403,10 @@ object StreamOps {
       storePath: String, checkpoint: String): StreamingQuery =
     checkpointed(vectors, checkpoint)
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
-        val centroids = spark.read.parquet(centroidsPath)
-        graft.ops.AnnIndex.encodeAgainstCodebook(batch, centroids)
-          .withColumn("batch_id", lit(id))
-          .write.mode("overwrite").parquet(s"$storePath/b$id")
-        ()
+        BatchStore.append(storePath, "b", id)(
+          graft.ops.AnnIndex.encodeAgainstCodebook(batch,
+            batch.sparkSession.read.parquet(centroidsPath))
+            .withColumn("batch_id", lit(id)))
       }
       .start()
 
@@ -471,9 +421,8 @@ object StreamOps {
     * deterministic, so arrival slicing is unobservable) and answers any
     * percentile from the counters.
     *
-    * Exactly-once: each batch overwrites its OWN directory and the
-    * histogram is a pure function of the batch, so a replayed batch
-    * rewrites identical bytes. Scale: a batch shuffles only its
+    * Exactly-once through [[BatchStore]] (see its replay contract).
+    * Scale: a batch shuffles only its
     * (segment, bucket) partial counts — a few KB per segment regardless
     * of batch row count; the store grows by buckets, never rows, and a
     * periodic compaction (sum into one file) is the same fold as the
@@ -482,12 +431,10 @@ object StreamOps {
       checkpoint: String): StreamingQuery =
     checkpointed(values, checkpoint)
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        batch.select(col("p"), col("v"))
+        BatchStore.append(storePath, "b", id)(batch.select(col("p"), col("v"))
           .withColumn("bkt", expr(graft.functions.HdrHistogram.bucketSql("v")))
           .groupBy(col("p"), col("bkt")).agg(count(lit(1)).as("cnt"))
-          .withColumn("batch_id", lit(id))
-          .write.mode("overwrite").parquet(s"$storePath/b$id")
-        ()
+          .withColumn("batch_id", lit(id)))
       }
       .start()
 
@@ -504,9 +451,8 @@ object StreamOps {
     * |A\B| questions from the merged blobs without ever rejoining raw
     * rows.
     *
-    * Exactly-once: each batch overwrites its OWN directory and the
-    * per-segment sketch is a pure function of the batch, so a replayed
-    * batch rewrites identical bytes. Scale: a batch shuffles one
+    * Exactly-once through [[BatchStore]] (see its replay contract).
+    * Scale: a batch shuffles one
     * ≈8 B/retained-key blob per (segment, batch) — bounded by the lgK
     * nominal regardless of batch row count; the store grows by
     * segments × batches, never rows, and periodic compaction is the same
@@ -515,12 +461,10 @@ object StreamOps {
       checkpoint: String): StreamingQuery =
     checkpointed(keys, checkpoint)
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        batch.select(col("p"), col("k"))
+        BatchStore.append(storePath, "b", id)(batch.select(col("p"), col("k"))
           .groupBy(col("p"))
           .agg(graft.functions.ThetaSketch.thetaSketchAgg(col("k")).as("sk"))
-          .withColumn("batch_id", lit(id))
-          .write.mode("overwrite").parquet(s"$storePath/b$id")
-        ()
+          .withColumn("batch_id", lit(id)))
       }
       .start()
 
@@ -559,17 +503,15 @@ object StreamOps {
     * then ≤ 1 compacted dir + compactEvery deltas, O(1) in stream
     * lifetime instead of O(batches).
     *
-    * Idempotence (foreachBatch is at-least-once + idempotent writes):
-    * both writes overwrite their own batch-scoped directory and the store
-    * read filters batch_id < current. A replay of a COMPACTING batch
-    * (crash after the body, before the offset commit) finds its own
-    * committed c<id> as the read set — the fold is then SKIPPED, not
-    * re-run (re-folding would read-and-overwrite c<id>), and the replay's
-    * dedup decisions are unchanged because c<id> filtered to
-    * batch_id < id is exactly the pre-batch world (min-per-signature
-    * keeps the earliest occurrence, and first-seen rows from the replayed
-    * batch carry its own id). StreamingSpec exercises this replay
-    * directly by invoking [[mediaDedupBatch]] twice at a compaction id.
+    * Exactly-once through [[BatchStore]] (see its replay contract). The
+    * store read keeps a `batch_id < id` filter: a replay of a COMPACTING
+    * batch (crash after the body, before the offset commit) reads its own
+    * published c<id>, and c<id> filtered to batch_id < id is exactly the
+    * pre-batch world (min-per-signature keeps the earliest occurrence, and
+    * first-seen rows from the replayed batch carry its own id), so the
+    * replay's dedup decisions are unchanged and its fold is skipped.
+    * StreamingSpec exercises this replay directly by invoking
+    * [[mediaDedupBatch]] twice at a compaction id.
     *
     * Scale notes (100 TB media lake): signature extraction is a
     * partition-preserving decode map — payloads never shuffle; the store
@@ -595,11 +537,6 @@ object StreamOps {
       outPath: String, storePath: String, compactEvery: Int): Unit = {
     val spark = batch.sparkSession
     import spark.implicits._
-    def rmDir(p: String): Unit = {
-      val loc = new org.apache.hadoop.fs.Path(p)
-      val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(loc)) fs.delete(loc, true)
-    }
     val b = batch.persist()
     try {
       val rows = b.select(col("media_id"), col("media_type"), col("payload"))
@@ -614,22 +551,8 @@ object StreamOps {
       val sigs = au.unionByName(vi)
         .withColumn("batch_id", lit(id))
         .persist()
-      // read set: the newest compacted fold at-or-below this batch,
-      // plus the un-folded deltas after it (strictly before this one).
-      // cj == id happens ONLY on a replay of a batch whose compaction
-      // already committed — c<id> then holds min(batch_id, media_id) per
-      // signature over the pre-batch world PLUS this very batch, and the
-      // batch_id < id filter below restores exactly the pre-batch world
-      // (first-seen rows from the replayed batch carry batch_id == id).
-      val cj = storeDirs(spark, storePath, "c").filter(_ <= id).sorted.lastOption
-      val bks = storeDirs(spark, storePath, "b")
-        .filter(k => k < id && cj.forall(_ < k)).sorted
-      val parts = cj.map(j => s"$storePath/c$j").toSeq ++
-        bks.map(k => s"$storePath/b$k")
-      val store =
-        if (parts.isEmpty) spark.emptyDataFrame
-        else spark.read.parquet(parts: _*).filter(col("batch_id") < id)
-      val all = if (store.columns.isEmpty) sigs else sigs.unionByName(store)
+      val before = BatchStore.readBefore(storePath, id)
+      val all = before.fold(sigs)(s => sigs.unionByName(s.filter(col("batch_id") < id)))
       val dups = sigs.select(col("media_id").as("new_id"), col("sig"))
         .join(all.select(col("media_id").as("old_id"), col("sig"),
           col("batch_id").as("old_batch")), Seq("sig"))
@@ -637,41 +560,19 @@ object StreamOps {
         .filter(col("old_batch") < id ||
           (col("old_batch") === id && col("old_id") < col("new_id")))
         .select(col("new_id").as("media_id")).distinct()
-      b.join(dups, Seq("media_id"), "left_anti")
-        .write.mode("overwrite").parquet(s"$outPath/b$id")
-      sigs.write.mode("overwrite").parquet(s"$storePath/b$id")
-      sigs.unpersist()
+      BatchStore.append(outPath, "b", id)(b.join(dups, Seq("media_id"), "left_anti"))
+      BatchStore.append(storePath, "b", id)(sigs)
       if (compactEvery > 0 && id > 0 && id % compactEvery == 0) {
-        if (cj.contains(id)) {
-          // replay of a batch whose compaction already committed: c<id>
-          // is the deterministic fold of the SAME inputs this replay just
-          // re-derived (same offsets → same rows → same signatures), so
-          // re-folding would read-and-overwrite c<id> (Spark forbids it)
-          // and deleting it would destroy the store. Skip the fold and
-          // retire everything c<id> subsumes: any older fold, any delta
-          // at-or-below id (including the delta this replay just
-          // re-wrote) — covers a crash mid-retirement too.
-          (storeDirs(spark, storePath, "c").filter(_ < id).map(j => s"$storePath/c$j") ++
-            storeDirs(spark, storePath, "b").filter(_ <= id).map(k => s"$storePath/b$k"))
-            .foreach(rmDir)
-        } else {
-          // fold read set + this batch's delta into one deduped store:
-          // one groupBy over signature rows (metadata-sized — payloads
-          // never enter the store), idempotent overwrite
-          spark.read.parquet((parts :+ s"$storePath/b$id"): _*)
-            .groupBy(col("sig"))
-            .agg(min(struct(col("batch_id"), col("media_id"))).as("m"))
-            .select(col("m.media_id").as("media_id"), col("sig"),
-              col("m.batch_id").as("batch_id"))
-            .write.mode("overwrite").parquet(s"$storePath/c$id")
-          // retire the folded inputs (replay-safe: only THIS batch can
-          // replay, and its re-read resolves to c<id> filtered
-          // batch_id < id — the same pre-batch world; cj < id here, so
-          // c<id> itself is never in the retirement set)
-          (cj.map(j => s"$storePath/c$j").toSeq ++
-            (bks :+ id).map(k => s"$storePath/b$k")).foreach(rmDir)
-        }
+        // fold the read set + this batch's delta: one groupBy over
+        // signature rows (payloads never enter the store)
+        BatchStore.append(storePath, "c", id)(before.fold(sigs)(sigs.unionByName(_))
+          .groupBy(col("sig"))
+          .agg(min(struct(col("batch_id"), col("media_id"))).as("m"))
+          .select(col("m.media_id").as("media_id"), col("sig"),
+            col("m.batch_id").as("batch_id")))
+        BatchStore.retire(storePath, id)
       }
+      sigs.unpersist()
     } finally b.unpersist()
     ()
   }
@@ -693,10 +594,9 @@ object StreamOps {
     * bit-identical to the batch query on the same rows (StreamingSpec
     * pins it, including across a kill/restart).
     *
-    * Idempotence (foreachBatch is at-least-once + idempotent writes):
-    * deltas land in batch-scoped directories (`b<id>` overwrite), the
-    * plan recompute reads batch_id <= current, and the plan rewrite is a
-    * full overwrite — a replayed batch converges.
+    * Exactly-once through [[BatchStore]] (see its replay contract): the
+    * plan reads the deltas stored before this batch plus its own in-memory
+    * delta, and `current` is swapped with `replace`.
     *
     * Scale notes (100 TB lake): the per-batch append shuffles only the
     * batch's (dt, hr) partials — bounded by slots touched, never batch
@@ -709,17 +609,19 @@ object StreamOps {
       outPath: String, checkpoint: String, target: Long = 16384L): StreamingQuery =
     checkpointed(events, checkpoint)
       .foreachBatch { (batch: DataFrame, id: Long) =>
-        val spark = batch.sparkSession
-        graft.ops.Basics.fileInventory(batch)
-          .withColumn("batch_id", lit(id))
-          .write.mode("overwrite").parquet(s"$storePath/b$id")
-        val inventory = spark.read.parquet(s"$storePath/b*")
-          .filter(col("batch_id") <= id)
-          .groupBy(col("dt"), col("hr"))
-          .agg(sum(col("file_rows")).as("file_rows"),
-            sum(col("file_bytes")).as("file_bytes"))
-        graft.ops.Basics.compactionPlanFromInventory(inventory, target)
-          .write.mode("overwrite").parquet(s"$outPath/current")
+        // cached: the delta is stored once and planned once
+        val delta = graft.ops.Basics.fileInventory(batch)
+          .withColumn("batch_id", lit(id)).persist()
+        try {
+          BatchStore.append(storePath, "b", id)(delta)
+          val inventory = BatchStore.readBefore(storePath, id)
+            .fold(delta)(delta.unionByName(_))
+            .groupBy(col("dt"), col("hr"))
+            .agg(sum(col("file_rows")).as("file_rows"),
+              sum(col("file_bytes")).as("file_bytes"))
+          BatchStore.replace(s"$outPath/current")(_ =>
+            graft.ops.Basics.compactionPlanFromInventory(inventory, target))
+        } finally delta.unpersist()
         ()
       }
       .start()

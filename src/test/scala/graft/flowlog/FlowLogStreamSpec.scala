@@ -63,6 +63,49 @@ class FlowLogStreamSpec extends SparkSpec {
     assert(back.select("dt").distinct().head.get(0).toString === "2023-12-31")
   }
 
+  test("dt/hr envelope sink: a batch whose part files landed before a crash is read back once") {
+    // Spark's file sink logs a batch in _spark_metadata/<n>, then the query
+    // commits it in commits/<n>. A crash after the part files landed but
+    // before both log entries leaves them on disk as orphans; the restarted
+    // query re-runs the batch, and the table read back (through the sink's
+    // log) must hold every envelope's rows exactly once.
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val dir = tempDir("flowlog_crash")
+    val out = s"$dir/out"; val ckpt = s"$dir/ckpt"
+    val chunks = fixtureEnvelopeChunks(3)
+    val mem = MemoryStream[Array[Byte]]
+    def start() = graft.streaming.StreamOps.startParquetSink(
+      FlowLog.withDatePartitions(FlowLog.parseFlowLogs(FlowLog.decodeEnvelopes(mem.toDF()))),
+      out, ckpt, Seq("dt", "hr"))
+    def partFiles: Int = {
+      val s = java.nio.file.Files.walk(java.nio.file.Paths.get(out))
+      try s.filter(_.getFileName.toString.matches("part-.*\\.parquet")).count().toInt
+      finally s.close()
+    }
+    val q1 = start()
+    try chunks.foreach { c => mem.addData(c); q1.processAllAvailable() } finally q1.stop()
+    val n = chunks.size - 1
+    val before = partFiles
+    Seq(s"$ckpt/commits/$n", s"$ckpt/commits/.$n.crc",
+      s"$out/_spark_metadata/$n", s"$out/_spark_metadata/.$n.crc")
+      .foreach(f => new java.io.File(f).delete())
+    val q2 = start()
+    try {
+      q2.processAllAvailable()
+      assert(q2.recentProgress.exists(_.batchId == n), s"batch $n was not replayed")
+    } finally q2.stop()
+    assert(partFiles > before, "vacuous: the replay wrote no part files beside the orphans")
+    val static = FlowLog.parseFlowLogs(FlowLog.decodeEnvelopes(chunks.toDF("value")))
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.select(to_json(struct(static.columns.sorted.map(col).toSeq: _*)))
+        .as[String].collect().sorted.toSeq
+    val want = rows(static)
+    assert(want.nonEmpty)
+    assert(rows(spark.read.parquet(out)) === want,
+      "the crashed batch's rows are missing or duplicated")
+  }
+
   // ---- streaming security detectors (VERDICT r14 #1) ----
 
   /** Chronological line chunks of the whole sf fixture (forward + mirror

@@ -18,6 +18,26 @@ class StreamingSpec extends SparkSpec {
 
   private def t(s: String): Timestamp = Timestamp.valueOf(s)
 
+  // Media dedup fixtures. Block-structured audio: 64 constant blocks; the
+  // half-rate rendition decimates each block exactly, so the energy
+  // fingerprint is invariant.
+  private def audioClip(codes: Seq[Int], rate: Int, perBlock: Int) =
+    graft.multimodal.Multimodal.encodeWav(rate,
+      codes.flatMap(c => Seq.fill(perBlock)(((c - 96) * 128).toShort)).toArray)
+  private val codesA = (0 until 64).map(i => 97 + (i * 7) % 26)
+  private val codesC = (0 until 64).map(i => 97 + (i * 11 + 3) % 26)
+  // parity-grid video frames through the real JPEG codec
+  private def frame(seed: Int): Array[Byte] = {
+    val px = new Array[Byte](64 * 64)
+    var i = 0
+    while (i < px.length) {
+      val j = (i / 64 / 8) * 8 + (i % 64) / 8
+      px(i) = if ((j + seed) % 3 == 0) 48.toByte else 112.toByte
+      i += 1
+    }
+    graft.multimodal.Jpeg.encodeGray(64, 64, px)
+  }
+
   private val batch1 = Seq(
     Ev(1, t("2024-01-01 00:00:10"), 1, "click", 1.0),
     Ev(2, t("2024-01-01 00:00:40"), 1, "view", 2.0),
@@ -432,7 +452,7 @@ class StreamingSpec extends SparkSpec {
     // query (signatures come from the parquet store, not query state),
     // and the survivor set must equal the one-shot batch dedup
     // (keep-lowest-media-id-per-signature is slicing-invariant).
-    import graft.multimodal.{Jpeg, Multimodal}
+    import graft.multimodal.Multimodal
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val dir = tempDir("graft_mediadedup")
@@ -440,24 +460,6 @@ class StreamingSpec extends SparkSpec {
     def start() = StreamOps.startMediaDedupSink(
       mem.toDF().toDF("media_id", "media_type", "payload"),
       s"$dir/out", s"$dir/store", s"$dir/ckpt")
-    // block-structured audio: 64 constant blocks; the half-rate rendition
-    // decimates each block exactly, so the energy fingerprint is invariant
-    def audioClip(codes: Seq[Int], rate: Int, perBlock: Int) =
-      Multimodal.encodeWav(rate,
-        codes.flatMap(c => Seq.fill(perBlock)(((c - 96) * 128).toShort)).toArray)
-    val codesA = (0 until 64).map(i => 97 + (i * 7) % 26)
-    val codesC = (0 until 64).map(i => 97 + (i * 11 + 3) % 26)
-    // parity-grid video frames through the real JPEG codec
-    def frame(seed: Int): Array[Byte] = {
-      val px = new Array[Byte](64 * 64)
-      var i = 0
-      while (i < px.length) {
-        val j = (i / 64 / 8) * 8 + (i % 64) / 8
-        px(i) = if ((j + seed) % 3 == 0) 48.toByte else 112.toByte
-        i += 1
-      }
-      Jpeg.encodeGray(64, 64, px)
-    }
     val f0 = frame(0); val f1 = frame(1)
     val batch1 = Seq(
       (1L, "audio", audioClip(codesA, 8000, 16)),
@@ -499,7 +501,7 @@ class StreamingSpec extends SparkSpec {
     // equal the one-shot keep-lowest-id dedup exactly as in the
     // uncompacted test, including when the compaction boundary sits
     // before a kill/restart.
-    import graft.multimodal.{Jpeg, Multimodal}
+    import graft.multimodal.Multimodal
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val dir = tempDir("graft_mediacompact")
@@ -507,21 +509,6 @@ class StreamingSpec extends SparkSpec {
     def start() = StreamOps.startMediaDedupSink(
       mem.toDF().toDF("media_id", "media_type", "payload"),
       s"$dir/out", s"$dir/store", s"$dir/ckpt", compactEvery = 2)
-    def audioClip(codes: Seq[Int], rate: Int, perBlock: Int) =
-      Multimodal.encodeWav(rate,
-        codes.flatMap(c => Seq.fill(perBlock)(((c - 96) * 128).toShort)).toArray)
-    val codesA = (0 until 64).map(i => 97 + (i * 7) % 26)
-    val codesC = (0 until 64).map(i => 97 + (i * 11 + 3) % 26)
-    def frame(seed: Int): Array[Byte] = {
-      val px = new Array[Byte](64 * 64)
-      var i = 0
-      while (i < px.length) {
-        val j = (i / 64 / 8) * 8 + (i % 64) / 8
-        px(i) = if ((j + seed) % 3 == 0) 48.toByte else 112.toByte
-        i += 1
-      }
-      Jpeg.encodeGray(64, 64, px)
-    }
     val f0 = frame(0); val f1 = frame(1)
     val batches = Seq(
       Seq((1L, "audio", audioClip(codesA, 8000, 16)),
@@ -584,24 +571,9 @@ class StreamingSpec extends SparkSpec {
     // deterministically by invoking the batch body twice at the
     // compaction id — the crash window a kill/restart of the query can't
     // hit on purpose.
-    import graft.multimodal.{Jpeg, Multimodal}
+    import graft.multimodal.Multimodal
     import spark.implicits._
     val dir = tempDir("graft_mediareplay")
-    def audioClip(codes: Seq[Int], rate: Int, perBlock: Int) =
-      Multimodal.encodeWav(rate,
-        codes.flatMap(c => Seq.fill(perBlock)(((c - 96) * 128).toShort)).toArray)
-    val codesA = (0 until 64).map(i => 97 + (i * 7) % 26)
-    val codesC = (0 until 64).map(i => 97 + (i * 11 + 3) % 26)
-    def frame(seed: Int): Array[Byte] = {
-      val px = new Array[Byte](64 * 64)
-      var i = 0
-      while (i < px.length) {
-        val j = (i / 64 / 8) * 8 + (i % 64) / 8
-        px(i) = if ((j + seed) % 3 == 0) 48.toByte else 112.toByte
-        i += 1
-      }
-      Jpeg.encodeGray(64, 64, px)
-    }
     val f0 = frame(0); val f1 = frame(1)
     val batches = Seq(
       Seq((1L, "audio", audioClip(codesA, 8000, 16)),
@@ -1907,5 +1879,200 @@ class StreamingSpec extends SparkSpec {
       assert(ThetaSketch.intersectEst(merged("a"), merged("b")) === 300L)
       assert(ThetaSketch.aNotBEst(merged("a"), merged("b")) === 300L)
     } finally q2.stop()
+  }
+
+  // ---- one replay harness over the nine foreachBatch sinks ----
+
+  /** A foreachBatch sink under the replay harness. `start(input, dir)`
+    * starts it with its checkpoint at `dir/ckpt`; `dirs` hold its
+    * `b<id>` / `c<id>` dirs and `tables` are the dirs it swaps whole (the
+    * merge target, `current`), all relative to `dir`. */
+  private case class SinkCase(batches: Seq[DataFrame],
+      start: (DataFrame, String) => org.apache.spark.sql.streaming.StreamingQuery,
+      dirs: Seq[String], tables: Seq[String] = Nil)
+
+  /** The published contents of every `b<id>` / `c<id>` dir and table of
+    * `c` under `dir`, as sorted JSON rows keyed by relative path. */
+  private def published(c: SinkCase, dir: String): Map[String, Seq[String]] = {
+    import spark.implicits._
+    def rows(path: String): Seq[String] = {
+      val df = spark.read.parquet(path)
+      df.select(to_json(struct(df.columns.sorted.map(col).toSeq: _*)))
+        .as[String].collect().sorted.toSeq
+    }
+    val deltas = for {
+      d <- c.dirs
+      f <- Option(new java.io.File(s"$dir/$d").listFiles()).toSeq.flatten
+      if f.getName.matches("[bc]\\d+")
+    } yield s"$d/${f.getName}" -> rows(f.getPath)
+    (deltas ++ c.tables.map(t => t -> rows(s"$dir/$t"))).toMap
+  }
+
+  /** Runs `c`'s batches uninterrupted, then again with two crash windows
+    * before the last batch: the batch before it finished its body but not
+    * its offset commit (its `commits/<n>` is deleted, so the restarted
+    * query replays it), and a killed attempt left a half-written staging
+    * dir beside every published dir. Both runs must publish the same. */
+  private def checkReplay(c: SinkCase): Unit = {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val rows = c.batches.zipWithIndex
+      .map { case (df, i) => df.withColumn("_batch", lit(i)) }.reduce(_ unionByName _)
+    val last = c.batches.size - 1
+    def corrupt(dir: String): Unit = {
+      new java.io.File(dir).mkdirs()
+      java.nio.file.Files.write(java.nio.file.Paths.get(s"$dir/part-00000.parquet"),
+        "not parquet".getBytes)
+    }
+    def run(crash: Boolean): Map[String, Seq[String]] = {
+      val dir = tempDir("graft_replay")
+      val mem = MemoryStream[Int]
+      def start() =
+        c.start(mem.toDF().toDF("_batch").join(rows, "_batch").drop("_batch"), dir)
+      var q = start()
+      try {
+        for (i <- 0 to last) {
+          if (crash && i == last) {
+            q.stop()
+            val n = last - 1
+            Seq(s"commits/$n", s"commits/.$n.crc")
+              .foreach(f => new java.io.File(s"$dir/ckpt/$f").delete())
+            for (d <- c.dirs; p <- Seq("b", "c")) corrupt(s"$dir/$d/_$p$last.tmp-killed")
+            c.tables.foreach(t => corrupt(s"$dir/$t.writing"))
+            q = start()
+            q.processAllAvailable()
+            assert(q.recentProgress.exists(_.batchId == n), s"batch $n was not replayed")
+          }
+          mem.addData(i); q.processAllAvailable()
+        }
+      } finally q.stop()
+      published(c, dir)
+    }
+    val clean = run(crash = false)
+    assert(clean.nonEmpty && clean.values.exists(_.nonEmpty), "vacuous: nothing published")
+    val crashed = run(crash = true)
+    assert(crashed.keySet === clean.keySet, "the replayed run published other dirs")
+    for ((path, want) <- clean)
+      assert(crashed(path) === want, s"$path differs after the replay")
+  }
+
+  private def replayTest(sink: String)(c: => SinkCase): Unit =
+    test(s"foreachBatch replay: the $sink sink publishes the same after a replayed batch and a half-written attempt") {
+      checkReplay(c)
+    }
+
+  replayTest("merge") {
+    import spark.implicits._
+    SinkCase(Seq(Seq((10L, 1L, 1.0), (20L, 2L, 2.0)), Seq((10L, 3L, 9.0), (30L, 4L, 4.0)),
+        Seq((20L, 5L, 5.0), (40L, 6L, 6.0))).map(_.toDF("user_id", "event_id", "value")),
+      (in, d) => StreamOps.startMergeSink(in, s"$d/out", s"$d/ckpt", "user_id", "event_id"),
+      dirs = Nil, tables = Seq("out"))
+  }
+
+  replayTest("near-dup") {
+    import spark.implicits._
+    val base = "the quick brown fox jumps over the lazy dog again and again " +
+      "and then rests quietly under the old oak tree"
+    val third = "rows columns pages buffers caches spill files and shuffle " +
+      "partitions make a distributed engine go fast at scale"
+    SinkCase(Seq(
+        Seq((1L, base), (2L, "completely different content about spark catalyst " +
+          "optimizer internals and whole stage code generation pipelines")),
+        Seq((10L, base.replace("quietly", "noisily")), (11L, third), (12L, third)),
+        Seq((20L, third), (21L, "a brand new document about partition pruning and " +
+          "column statistics for scans"))).map(_.toDF("doc_id", "text")),
+      (in, d) => StreamOps.startNearDupFilterSink(in, s"$d/out", s"$d/store", s"$d/ckpt"),
+      dirs = Seq("out", "store"))
+  }
+
+  replayTest("hybrid search") {
+    import spark.implicits._
+    val docs = graft.Tables.documents(spark, sf)
+      .select(col("doc_id"), col("text")).as[(Long, String)]
+      .collect().sortBy(_._1).take(90).toSeq
+    SinkCase(docs.grouped(30).map(_.toDF("doc_id", "text")).toSeq,
+      (in, d) => StreamOps.startHybridSearchSink(in, sf, s"$d/out", s"$d/stats", s"$d/ckpt"),
+      dirs = Seq("stats/docs", "stats/terms"), tables = Seq("out/current"))
+  }
+
+  replayTest("DQ gate") {
+    import spark.implicits._
+    val constraints = Seq(
+      "domain_status" -> !col("status").isInCollection(Seq("F", "O", "P")),
+      "nonneg_price" -> (col("price") < 0.0))
+    SinkCase(Seq(Seq((1L, "F", 10.0), (2L, "X", 5.0), (3L, "O", -1.0)),
+        Seq((4L, "P", 7.0), (5L, "Z", -2.0)), Seq((6L, "F", 1.0), (7L, "Q", 3.0)))
+        .map(_.toDF("id", "status", "price")),
+      (in, d) => StreamOps.startDqGateSink(in, constraints, s"$d/out",
+        s"$d/quarantine", s"$d/ckpt"),
+      dirs = Seq("out", "quarantine"))
+  }
+
+  replayTest("IVF upsert") {
+    import spark.implicits._
+    graft.functions.VectorFunctions.register(spark)
+    val idx = s"${tempDir("graft_replay_ivf")}/idx"
+    val e = graft.Tables.embeddings(spark, sf)
+    val base = e.filter(col("vec_id") % 10 =!= 0)
+      .select(col("vec_id"), col("label"),
+        expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("emb"))
+      .withColumn("ssq", expr("graft_dot(emb, emb)")).localCheckpoint(true)
+    graft.ops.AnnIndex.writeIvfIndex(base, idx,
+      nlist = graft.ops.AnnIndex.ivfNlist(base.count()), iters = 2)
+    val delta = e.filter(col("vec_id") % 10 === 0)
+      .select(col("vec_id"), col("label"), col("embedding"))
+      .as[(Long, Int, Array[Float])].collect().sortBy(_._1).toSeq
+    SinkCase(delta.grouped((delta.size + 2) / 3).map(_.toDF("vec_id", "label", "embedding")).toSeq,
+      (in, d) => StreamOps.startIvfUpsertSink(in, s"$idx/centroids", s"$d/store", s"$d/ckpt"),
+      dirs = Seq("store"))
+  }
+
+  replayTest("HDR histogram") {
+    import spark.implicits._
+    SinkCase((1L to 300L).map(i => (if (i % 2 == 0) "a" else "b", i * 37 % 3000 + 1))
+        .grouped(100).map(_.toDF("p", "v")).toSeq,
+      (in, d) => StreamOps.startHdrHistogramSink(in, s"$d/store", s"$d/ckpt"),
+      dirs = Seq("store"))
+  }
+
+  replayTest("theta sketch") {
+    import spark.implicits._
+    SinkCase(((0L until 300L).map("a" -> _) ++ (150L until 450L).map("b" -> _))
+        .grouped(200).map(_.toDF("p", "k")).toSeq,
+      (in, d) => StreamOps.startThetaSketchSink(in, s"$d/store", s"$d/ckpt"),
+      dirs = Seq("store"))
+  }
+
+  replayTest("media dedup") {
+    import graft.multimodal.Multimodal
+    import spark.implicits._
+    val f0 = frame(0); val f1 = frame(1)
+    // compactEvery = 1: the replayed batch is a folding one
+    SinkCase(Seq(
+        Seq((1L, "audio", audioClip(codesA, 8000, 16)),
+          (2L, "video", Multimodal.encodeVideo(Seq(f0, f1)))),
+        Seq((10L, "audio", audioClip(codesA, 4000, 8)),
+          (12L, "audio", audioClip(codesC, 8000, 16))),
+        Seq((20L, "video", Multimodal.encodeVideo(Seq(f0, f0, f1, f1))),
+          (21L, "video", Multimodal.encodeVideo(Seq(f1, f0)))))
+        .map(_.toDF("media_id", "media_type", "payload")),
+      (in, d) => StreamOps.startMediaDedupSink(in, s"$d/out", s"$d/store", s"$d/ckpt",
+        compactEvery = 1),
+      dirs = Seq("out", "store"))
+  }
+
+  replayTest("compaction plan") {
+    import spark.implicits._
+    def slot(tag: String, day: Int, hr: Int, n: Int): Seq[(Timestamp, String, String)] =
+      (0 until n).map { i =>
+        (Timestamp.valueOf(f"2024-01-0$day $hr%02d:0${i % 6}:1${i % 10}"),
+          s"ev$tag", "p" * (10 + i % 3))
+      }
+    SinkCase(Seq(slot("a", 1, 0, 4) ++ slot("b", 1, 1, 5),
+        slot("d", 1, 0, 2) ++ slot("e", 1, 5, 6), slot("f", 2, 3, 4) ++ slot("g", 2, 7, 2))
+        .map(_.toDF("ts", "event_type", "props")),
+      (in, d) => StreamOps.startCompactionPlanSink(in, s"$d/store", s"$d/out", s"$d/ckpt",
+        target = 200L),
+      dirs = Seq("store"), tables = Seq("out/current"))
   }
 }
